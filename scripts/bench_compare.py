@@ -3,7 +3,7 @@
 
 Usage: bench_compare.py A.json B.json [min_sec]
 
-Prints per-query B/A ratios (queries below min_sec in BOTH records are
+Prints per-query A/B ratios (queries below min_sec in BOTH records are
 summarized, not listed), plus totals. Used for the r15 scaling
 artifact (8-core vs 32-core at sf0.3: a data-bound row should speed up
 toward 4x with cores; a fixed-cadence/fixpoint row will not, and the

@@ -13,6 +13,12 @@ import graft.model.{InvalidTimeInterval, RetentionPolicy}
   * Both endpoints are aligned and then advanced one step
   * (whisper.py:970-972); a zero-length range yields exactly one slot
   * (whisper.py:974-976).
+  *
+  * Two spellings of that contract share [[planFetch]] and [[gridBounds]].
+  * `MetricStore.fetch` scans only the metric's (pb, tb) directories and
+  * fills the vector on the driver, the way whisper returns a driver-side
+  * list (whisper.py:1032-1034). [[fetchGrid]] is the distributed dense
+  * grid, for `MetricStore.fetchFrame` and the query oracles.
   */
 object Fetch {
 

@@ -4898,6 +4898,10 @@ object ExtQueries {
       // stages and convict at the span check before near-dup runs);
       // the oracle models all five active stages, with d29's
       // sampled-gram diagonal-run CTEs for the contamination step.
+      // ipairs is AS MATERIALIZED: DuckDB 1.0 otherwise re-inlines the
+      // whole CTE chain into every step of the recursive reach closure
+      // and runs out of memory on a 10-row pair table (same semantics;
+      // the d69 precedent).
       (s, dir) => {
         val (fpPath, mhPath, spPath, vPath) = spanGauntletPathsFor(s, dir)
         val d = docs(s, dir)
@@ -5038,7 +5042,7 @@ object ExtQueries {
          |  FROM rtri x JOIN rtri y
          |    ON x.shingle = y.shingle AND x.doc_id < y.doc_id
          |  GROUP BY 1, 2
-         |), ipairs AS (
+         |), ipairs AS MATERIALIZED (
          |  SELECT a, b
          |  FROM iinter JOIN bsz na ON na.doc_id = a JOIN bsz nb ON nb.doc_id = b
          |  WHERE CAST(c AS DOUBLE) / CAST(na.sz + nb.sz - c AS DOUBLE) >= 0.5

@@ -1,7 +1,10 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model._
 import graft.ops._
@@ -397,6 +400,33 @@ final class MetricStore(val spark: SparkSession, val root: String,
     df.withColumn("pb", pmod(hash(col("metric")), lit(effectiveBuckets)))
       .withColumn("tb", expr(s"interval div ${bucketSeconds(step)}"))
 
+  /** The metric's partition bucket computed on the driver: the one twin
+    * of the writer's `pmod(hash(metric), effectiveBuckets)` above
+    * (`functions.hash` is Murmur3 with seed 42). Every read that prunes
+    * pb directories by metric name goes through here.
+    */
+  private[graft] def pbOf(metric: String): Int = {
+    val h = Murmur3Hash(Seq(Literal(UTF8String.fromString(metric), StringType)), 42)
+      .eval(null).asInstanceOf[Int]
+    Math.floorMod(h, effectiveBuckets)
+  }
+
+  /** Level i's stored rows for `metrics` whose intervals can fall in
+    * [fromInterval, untilInterval): only the metrics' pb directories
+    * crossed with the range's tb directories are listed and read, never
+    * the level root. The tb bound is conservative by one bucket below
+    * the range.
+    */
+  private def rangeRows(i: Int, step: Int, metrics: Seq[String],
+                        fromInterval: Long, untilInterval: Long): DataFrame = {
+    val bs = bucketSeconds(step)
+    val touched = for {
+      p <- metrics.map(pbOf).distinct
+      t <- fromInterval / bs - 1 to untilInterval / bs
+    } yield (p, t)
+    existingTouched(i, touched.toSet)
+  }
+
   /** Merge `incoming` (metric, interval, value, prio) into level i:
     * read ONLY the touched (pb, tb) partitions, last-write-wins by prio
     * (existing rows get prio -1), dynamically overwrite those partitions.
@@ -596,6 +626,12 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * would list the entire level (every pb/tb directory) just to prune
     * it again — at scale that listing alone dwarfs the actual work of a
     * small batch. basePath keeps pb/tb as partition columns.
+    *
+    * Past `parallelPartitionDiscovery.threshold` paths, one read lists
+    * them in a Spark job with a task per path — dearer than the scan
+    * itself on a local store — so the directories are read in groups of
+    * at most that many and unioned: the listing stays on the driver and
+    * the scans still run in one job.
     */
   private def existingTouched(i: Int, touched: Set[(Int, Long)]): DataFrame = {
     val dirs = touched.toSeq
@@ -603,9 +639,11 @@ final class MetricStore(val spark: SparkSession, val root: String,
       .filter(d => new java.io.File(d).exists())
     if (dirs.isEmpty) emptyLevel(i)
     else
-      spark.read.option("basePath", levelPath(i))
-        .schema(levelSchema(i)) // skip the schema-inference job
-        .parquet(dirs: _*)
+      dirs.grouped(math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
+        .map(group => spark.read.option("basePath", levelPath(i))
+          .schema(levelSchema(i)) // skip the schema-inference job
+          .parquet(group: _*))
+        .reduce(_ union _)
   }
 
   /** Post-upsert content of level i's touched partitions — existing rows
@@ -1070,8 +1108,13 @@ final class MetricStore(val spark: SparkSession, val root: String,
 
   // ---- read path ------------------------------------------------------
 
-  /** whisper fetch (whisper.py:892-959): range-normalize, pick the level,
-    * dense-grid materialize, collect the slot vector.
+  /** whisper fetch (whisper.py:892-1034): range-normalize, pick the
+    * level, then one pruned scan — only the metric's (pb, tb) directories
+    * over the range are read, filtered to the metric and the grid, and
+    * the sparse (interval, value) rows collected in one job. The dense
+    * slot vector is filled on the driver, as whisper builds its value
+    * list in memory (whisper.py:1032-1034). [[fetchFrame]] is the
+    * distributed dense-grid path.
     */
   def fetch(metric: String, fromTime: Long, untilTime: Long, now: Long,
             archiveToSelect: Option[Int] = None): Option[FetchResult] = {
@@ -1081,20 +1124,21 @@ final class MetricStore(val spark: SparkSession, val root: String,
       case (level, from, until) =>
         val step = policy.levels(level).secondsPerPoint
         val (fromInterval, untilInterval) = Fetch.gridBounds(from, until, step)
-        // explicit partition pruning: pb from the metric hash (constant-
-        // folded), tb from the interval range — the Spark replacement for
-        // whisper's ring-offset arithmetic (only touched buckets are read)
-        val bs = bucketSeconds(step)
-        val pruned = levelData(level)
-          .where(col("pb") === pmod(hash(lit(metric)), lit(effectiveBuckets)) &&
-            col("tb") >= fromInterval / bs - 1 && col("tb") <= untilInterval / bs)
-          .select("metric", "interval", "value")
-        val rows = Fetch
-          .fetchGrid(spark, pruned, Seq(metric), from, until, step)
-          .orderBy("interval")
+        val values = Array.fill[Option[Double]](
+          ((untilInterval - fromInterval) / step).toInt)(None)
+        rangeRows(level, step, Seq(metric), fromInterval, untilInterval)
+          .where(col("metric") === metric &&
+            col("interval") >= fromInterval && col("interval") < untilInterval)
+          .select("interval", "value")
           .collect()
-        val values = rows.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))).toSeq
-        FetchResult(fromInterval, untilInterval, step, values)
+          .foreach { r =>
+            val off = r.getLong(0) - fromInterval
+            // upsertRollups stores external intervals unaligned; an
+            // off-grid row is no slot of the grid contract
+            if (off % step == 0 && !r.isNullAt(1))
+              values((off / step).toInt) = Some(r.getDouble(1))
+          }
+        FetchResult(fromInterval, untilInterval, step, values.toSeq)
     }
   }
 
@@ -1471,17 +1515,10 @@ final class MetricStore(val spark: SparkSession, val root: String,
     Fetch.planFetch(policy, fromTime, untilTime, now, archiveToSelect).map {
       case (level, from, until) =>
         val step = policy.levels(level).secondsPerPoint
-        val bs = bucketSeconds(step)
         val (fromInterval, untilInterval) = Fetch.gridBounds(from, until, step)
-        // prune hash buckets from the requested metric set (constant-
-        // folded per metric) as well as the time range — a k-metric fetch
-        // reads at most k buckets per time bucket
-        val pbFilter = metrics
-          .map(m => col("pb") === pmod(hash(lit(m)), lit(effectiveBuckets)))
-          .reduce(_ || _)
-        val pruned = levelData(level)
-          .where(pbFilter &&
-            col("tb") >= fromInterval / bs - 1 && col("tb") <= untilInterval / bs)
+        // the same directory pruning as fetch: a k-metric fetch reads at
+        // most k buckets per time bucket
+        val pruned = rangeRows(level, step, metrics, fromInterval, untilInterval)
           .select("metric", "interval", "value")
         Fetch.fetchGrid(spark, pruned, metrics, from, until, step)
     }

@@ -2,12 +2,16 @@ package graft.plans
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.model._
-import graft.ops.Rollup
+import graft.ops.{Fetch, Rollup}
 import graft.store.MetricStore
 
 /** Physical-plan audit: the scale properties the 100 TB design depends on
@@ -31,15 +35,36 @@ class PlanAuditSpec extends AnyFunSuite {
     store
   }
 
+  /** Directories a plan's file scans list and read. */
+  private def scannedDirs(plan: LogicalPlan): Seq[String] = plan.collect {
+    case l: LogicalRelation => l.relation match {
+      case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+      case _ => Nil
+    }
+  }.flatten
+
+  /** Each scanned directory must be one of the metric's pb directories at
+    * level 0 with its tb inside the fetch's bound, never the level root.
+    */
+  private def assertPrunedDirs(store: MetricStore, plan: LogicalPlan,
+                               from: Long, until: Long): Unit = {
+    val dirs = scannedDirs(plan)
+    val bs = store.bucketSeconds(60)
+    val (fi, ui) = Fetch.gridBounds(from, until, 60)
+    val allowed = (fi / bs - 1 to ui / bs)
+      .map(t => s"/level_0/pb=${store.pbOf("m")}/tb=$t").toSet
+    assert(dirs.nonEmpty && dirs.forall(d => allowed.exists(d.endsWith)),
+      s"scan reads $dirs, allowed $allowed")
+  }
+
   test("fetch reads with partition pruning (pb/tb) and parquet pushdown on interval") {
     val store = seededStore()
     val Some(df) = store.fetchFrame(Seq("m"), Now - 3600, Now, Now)
-    val scan = df.queryExecution.executedPlan.toString
-    // tb range must reach the partition filters (the ring-offset analog)…
-    assert(scan.contains("PartitionFilters: [") &&
-      scan.split("PartitionFilters: ", 2)(1).takeWhile(_ != ']').contains("tb"),
-      s"no tb partition filter in:\n$scan")
+    // the metric's pb and the range's tb pick the directories the scan
+    // lists (the ring-offset analog)…
+    assertPrunedDirs(store, df.queryExecution.optimizedPlan, Now - 3600, Now)
     // …and the interval predicate must reach the parquet scan
+    val scan = df.queryExecution.executedPlan.toString
     assert(scan.contains("PushedFilters: [") &&
       scan.split("PushedFilters: ", 2)(1).takeWhile(_ != ']').contains("interval"),
       s"no interval pushdown in:\n$scan")
@@ -47,15 +72,31 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("single-point fetch prunes on the metric hash bucket too") {
     val store = seededStore()
-    // fetch() collects, so audit the pruned frame the same way it builds it:
-    // pb literal from the metric hash must constant-fold into the filters
-    val bs = 60L * 1024
-    val pruned = store.levelData(0)
-      .where(col("pb") === pmod(hash(lit("m")), lit(4)) &&
-        col("tb") >= (Now - 3600) / bs - 1 && col("tb") <= Now / bs)
-    val scan = pruned.queryExecution.executedPlan.toString
-    val pf = scan.split("PartitionFilters: ", 2)(1).takeWhile(_ != ']')
-    assert(pf.contains("pb") && pf.contains("tb"), s"missing pb/tb pruning: $pf")
+    // fetch() collects, so audit the plan its action ran, taken from a
+    // query-execution listener; the listener bus delivers in order, so
+    // the sentinel action's event means the fetch's has arrived
+    val sentinel = "plan_audit_sentinel"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(sentinel)) drained.countDown()
+        else plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    store.fetch("m", Now - 86400, Now, Now) // warm the count-column probe
+    spark.listenerManager.register(listener)
+    try {
+      val Some(res) = store.fetch("m", Now - 36000, Now, Now)
+      assert(res.values.flatten.size == 599)
+      spark.range(1).toDF(sentinel).collect()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val Seq(plan) = plans.asScala.toSeq
+      .filter(p => scannedDirs(p).exists(_.contains(store.root)))
+    assertPrunedDirs(store, plan, Now - 36000, Now)
+    assert(plan.collect { case j: Join => j }.isEmpty, s"fetch plans a join:\n$plan")
   }
 
   test("incremental cascade uses a broadcast semi join against the change set") {

@@ -2,10 +2,13 @@ package graft.store
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.model._
+import graft.ops.Fetch
 
 /** End-to-end store semantics: the ScalaTest port of the reference
   * round-trip/exception tests (/root/reference/test_whisper.py:286-376,
@@ -284,5 +287,226 @@ class MetricStoreSpec extends AnyFunSuite {
     // far future: everything gone, including partitions left empty
     store.vacuum(Now + 200000)
     assert(store.levelData(0).count() == 0)
+  }
+
+  // ---- fetch: single pruned scan vs the dense-grid spelling ----------
+
+  /** The grid-based fetch, kept as the reference: the level read through
+    * its root, pruned by the metric's pb and the range's tb, joined onto
+    * the dense grid and collected in interval order.
+    */
+  private def gridFetch(store: MetricStore, metric: String, fromTime: Long,
+                        untilTime: Long, now: Long,
+                        archiveToSelect: Option[Int]): Option[FetchResult] = {
+    val policy = store.policies()(metric)
+    Fetch.planFetch(policy, fromTime, untilTime, now, archiveToSelect).map {
+      case (level, from, until) =>
+        val step = policy.levels(level).secondsPerPoint
+        val (fromInterval, untilInterval) = Fetch.gridBounds(from, until, step)
+        val bs = store.bucketSeconds(step)
+        val pruned = store.levelData(level)
+          .where(col("pb") === pmod(hash(lit(metric)), lit(store.effectiveBuckets)) &&
+            col("tb") >= fromInterval / bs - 1 && col("tb") <= untilInterval / bs)
+          .select("metric", "interval", "value")
+        val rows = Fetch.fetchGrid(spark, pruned, Seq(metric), from, until, step)
+          .orderBy("interval").collect()
+        FetchResult(fromInterval, untilInterval, step,
+          rows.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))).toSeq)
+    }
+  }
+
+  private def assertFetchAgrees(store: MetricStore, metric: String, from: Long,
+                                until: Long, now: Long, sel: Option[Int],
+                                clue: String): Option[FetchResult] = {
+    val got = store.fetch(metric, from, until, now, sel)
+    assert(got == gridFetch(store, metric, from, until, now, sel),
+      s"$clue: fetch($metric, $from, $until, now=$now, $sel)")
+    got
+  }
+
+  /** Seeded random ranges on every level (precision override) starting
+    * up to 1.25 × `span` back, where the data is; every fourth is
+    * zero-length. Returns how many ranges found data.
+    */
+  private def randomRangesAgree(store: MetricStore, metrics: Seq[String],
+                                now: Long, span: Long, rnd: scala.util.Random,
+                                perLevel: Int, clue: String): Int = {
+    val policy = store.policies()(metrics.head)
+    var nonEmpty = 0
+    for (lvl <- policy.levels; k <- 0 until perLevel) {
+      val from = now - (rnd.nextDouble() * (span + span / 4)).toLong
+      val len =
+        if (k % 4 == 0) 0L else (rnd.nextDouble() * math.min(span, lvl.retention)).toLong
+      val until = from + len
+      val got = assertFetchAgrees(store, metrics(rnd.nextInt(metrics.size)), from, until,
+        now, Some(lvl.secondsPerPoint), s"$clue step ${lvl.secondsPerPoint} #$k")
+      if (got.exists(_.values.exists(_.nonEmpty))) nonEmpty += 1
+    }
+    nonEmpty
+  }
+
+  private val eqPolicy = RetentionPolicy(
+    Seq(ArchiveInfo(10, 8640), ArchiveInfo(60, 4320), ArchiveInfo(600, 2016)), xff = 0f)
+  private val eqMetrics = Seq("web.a", "web.b", "db.c", "db.d", "q.e", "q.f")
+
+  private def randomPoints(rnd: scala.util.Random, n: Int, now: Long,
+                           span: Long, seq0: Long) =
+    (0 until n).map { i =>
+      (eqMetrics(rnd.nextInt(eqMetrics.size)), now - (rnd.nextDouble() * span).toLong,
+        math.floor(rnd.nextDouble() * 200) / 2 - 50, seq0 + i)
+    }.toDF("metric", "ts", "value", "seq")
+
+  test("fetch == grid reference: random ranges on every level, before and after a per-pb incremental write") {
+    val store = freshStore()
+    store.createAll(eqMetrics, eqPolicy)
+    val rnd = new scala.util.Random(7)
+    store.updateMany(randomPoints(rnd, 3000, Now, 4 * 86400L, 0L), Now)
+    assert(randomRangesAgree(store, eqMetrics, Now, 4 * 86400L, rnd, 8, "bulk") > 12)
+
+    // zero-length range: exactly one slot (whisper.py:974-976)
+    val Some(zero) = assertFetchAgrees(store, "web.a", Now - 500, Now - 500, Now,
+      Some(10), "zero-length")
+    assert(zero.values.size == 1)
+
+    // a level-0 range straddling several 10240 s time buckets
+    val bs0 = store.bucketSeconds(10)
+    val Some(wide) = assertFetchAgrees(store, "db.c", Now - 3 * bs0, Now, Now,
+      Some(10), "multi-tb")
+    val tbsWithData = wide.values.zipWithIndex.collect {
+      case (Some(_), j) => (wide.fromInterval + j * 10L) / bs0
+    }.toSet
+    assert(tbsWithData.size >= 3, s"data in tb buckets $tbsWithData")
+
+    // the incremental batch touches several pbs of every level, so each
+    // level's write fans out one job per pb; fetch right after it must see
+    // the new files, not a listing cached by the reads above
+    assert(eqMetrics.map(store.pbOf).distinct.size >= 2)
+    val before = store.fetch("q.e", Now - 3600, Now, Now, Some(10)).get
+    val inc = (0 until 40).map(i =>
+      (eqMetrics(i % eqMetrics.size), Now - 30 - i * 60L, 1000.0 + i, 10000L + i))
+    store.updateMany(inc.toDF("metric", "ts", "value", "seq"), Now)
+    val Some(after) = assertFetchAgrees(store, "q.e", Now - 3600, Now, Now,
+      Some(10), "after incremental")
+    assert(after != before && after.values.flatten.exists(_ >= 1000.0))
+    assert(randomRangesAgree(store, eqMetrics, Now, 4 * 86400L, rnd, 4, "incremental") > 2)
+  }
+
+  test("fetch == grid reference: missing level directory, vacuumed buckets, pre-epoch store") {
+    // cascade = false writes level 0 only; levels 1-2 have no directory
+    val flat = freshStore()
+    flat.createAll(eqMetrics, eqPolicy)
+    val rnd = new scala.util.Random(11)
+    flat.updateMany(randomPoints(rnd, 500, Now, 86400L, 0L), Now, cascade = false)
+    assert(!new java.io.File(s"${flat.root}/level_1").exists())
+    val Some(none) = assertFetchAgrees(flat, "web.b", Now - 86400, Now, Now,
+      Some(60), "absent level")
+    assert(none.values.forall(_.isEmpty) && none.values.size == 1440)
+    assert(randomRangesAgree(flat, eqMetrics, Now, 86400L, rnd, 4, "absent levels") > 1)
+
+    // vacuum far enough ahead to drop the oldest level-0 time buckets
+    val store = freshStore()
+    store.createAll(eqMetrics, eqPolicy)
+    store.updateMany(randomPoints(rnd, 1500, Now, 86400L, 0L), Now)
+    def tbDirs(i: Int) = new java.io.File(s"${store.root}/level_$i").listFiles()
+      .filter(_.getName.startsWith("pb=")).flatMap(_.listFiles()).length
+    val tbBefore = tbDirs(0)
+    val later = Now + 86400L / 2
+    store.vacuum(later)
+    assert(tbDirs(0) < tbBefore, "vacuum dropped level-0 buckets")
+    assert(randomRangesAgree(store, eqMetrics, later, 86400L, rnd, 6, "vacuumed") > 6)
+
+    // small clock: now < retention, so stored intervals are negative and
+    // tb = interval div bucket truncates toward zero
+    val preNow = 3000L
+    val pre = freshStore()
+    pre.createAll(eqMetrics, eqPolicy)
+    pre.updateMany(randomPoints(rnd, 1500, preNow, 86400L, 0L), preNow)
+    assert(pre.levelData(0).where(col("interval") < -pre.bucketSeconds(10)).count() > 0)
+    assert(pre.levelData(1).where(col("interval") < 0).count() > 0)
+    assert(randomRangesAgree(pre, eqMetrics, preNow, 86400L, rnd, 8, "pre-epoch") > 12)
+    val Some(straddle) = assertFetchAgrees(pre, "q.f", -3 * pre.bucketSeconds(10),
+      preNow, preNow, Some(10), "pre-epoch across tb 0")
+    assert(straddle.values.flatten.nonEmpty)
+  }
+
+  /** `body`'s result and the number of Spark jobs it submitted, counted
+    * by a test-local listener on a job group of its own.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      // listener events arrive in submission order: once the sentinel
+      // job's start is seen, every measured job's start has been too
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a warm single-metric fetch submits exactly one Spark job") {
+    val store = freshStore()
+    store.createAll(eqMetrics, eqPolicy)
+    store.updateMany(randomPoints(new scala.util.Random(3), 1000, Now, 86400L, 0L), Now)
+    // a one-day level-0 range: three time-bucket directories
+    def fetchDay() = store.fetch("web.a", Now - 86400, Now, Now, Some(10))
+    fetchDay() // warm: count-column probe
+    val (got, jobs) = jobsOf(fetchDay())
+    assert(got.exists(_.values.flatten.nonEmpty))
+    assert(jobs == 1, s"fetch submitted $jobs jobs")
+    // more directories than the parallel-listing threshold: still one
+    // job (no listing job), same result
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, "1")
+    val (grouped, groupedJobs) = try jobsOf(fetchDay()) finally spark.conf.unset(key)
+    assert(grouped == got)
+    assert(groupedJobs == 1, s"fetch over grouped reads submitted $groupedJobs jobs")
+  }
+
+  test("pbOf equals the writer's pb for ~500 names on a reopened num_buckets=8 store") {
+    val rnd = new scala.util.Random(5)
+    // printable code points from several scripts, incl. supplementary
+    // (surrogate-pair) ones; no tab or newline, which the catalog splits on
+    val alphabet = (('a' to 'z').map(_.toInt) ++ Seq('.'.toInt, '_'.toInt, '-'.toInt, ' '.toInt) ++
+      (0xe0 to 0xff) ++ (0x430 to 0x44f) ++ (0x4e00 to 0x4e40) ++ (0x1f600 to 0x1f640)).toIndexedSeq
+    def randomName() = {
+      val sb = new java.lang.StringBuilder
+      (0 until 1 + rnd.nextInt(12)).foreach(_ => sb.appendCodePoint(alphabet(rnd.nextInt(alphabet.size))))
+      sb.toString
+    }
+    val names = (Seq("", "é", "指标.cpu", "\ud83d\udcc8.load", "a\u0301", "servers.host-01.cpu") ++
+      Seq.fill(600)(randomName())).distinct.take(500)
+    assert(names.size == 500)
+    val root = Files.createTempDirectory("ms-pb").toString
+    val first = new MetricStore(spark, root, numBuckets = 8)
+    first.createAll(names, RetentionPolicy(Seq(ArchiveInfo(60, 60))))
+    first.updateMany(names.zipWithIndex.map { case (m, i) => (m, Now - 60, i.toDouble, i.toLong) }
+      .toDF("metric", "ts", "value", "seq"), Now)
+
+    val reopened = new MetricStore(spark, root) // constructor default: 32
+    assert(reopened.effectiveBuckets == 8)
+    val written = reopened.levelData(0).select("metric", "pb").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(written.keySet == names.toSet)
+    names.foreach(m => assert(reopened.pbOf(m) == written(m), s"pbOf(${m.codePoints.toArray.mkString(",")})"))
+    assert(written.values.toSet == (0 until 8).toSet)
+    // the persisted count is what matters: a 32-bucket store disagrees
+    val fresh32 = new MetricStore(spark, Files.createTempDirectory("ms-pb32").toString)
+    assert(names.exists(m => fresh32.pbOf(m) != written(m)))
   }
 }
