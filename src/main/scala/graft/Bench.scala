@@ -17,26 +17,13 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // job counter for the ingest-evidence section below: JobStart events
-    // land on the async listener bus, so reads are taken after a short
-    // drain sleep OUTSIDE the timed windows
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger
-    // store writes self-tag their job description (MetricStore.taggedWrite),
-    // so the ingest evidence can split per-pb write/commit jobs from
-    // cascade+planning jobs — the x00/x01 job asymmetry is unreadable
-    // from a single total (see the ingestEvidence comment)
-    val writeJobCount = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet()
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-        if (desc.exists(_.startsWith("graft.store.write")))
-          writeJobCount.incrementAndGet()
-        ()
-      }
-    })
+    // job counters for the ingest-evidence section below, split into
+    // the store's tagged write jobs and the rest — the x00/x01 job
+    // asymmetry is unreadable from a single total (see the
+    // ingestEvidence comment). JobStart events land on the async
+    // listener bus, so reads are taken after a short drain sleep
+    // OUTSIDE the timed windows
+    graft.ops.Debug.enableDebug(spark)
     // ---- noise instrumentation -----------------------------------------
     // This machine is co-tenant: two full rounds of perf numbers were
     // swamped by load the artifact could not see (r4 misattribution, r5
@@ -181,7 +168,7 @@ object Bench {
       s"benchSkip names not in SparkEntry.queries: ${unknownSkips.toSeq.sorted.mkString(", ")}")
     val benched = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => benchSkip.contains(name) }
-    graft.queries.Warm.times.clear() // price THIS run's memo builds only
+    graft.ops.Debug.warm.clear() // price THIS run's memo builds only
     val warmT0 = System.nanoTime()
     try {
       spark.range(1000000).selectExpr("sum(id)", "avg(id)").collect()
@@ -197,15 +184,10 @@ object Bench {
     // UNTIMED warmup by declared convention (steady-state read-path
     // timing), and that set has been growing — so the record now carries
     // what warmup cost and holds: per-memo one-time build seconds (the
-    // Warm ledger, self-time attributed), total warmup wall, and the
-    // bytes the materialized warm set pins in the block-manager cache.
+    // Debug.warm ledger, self-time attributed), total warmup wall, and
+    // the bytes the materialized warm set pins in the block-manager cache.
     val warmWall = (System.nanoTime() - warmT0) / 1e9
-    val warmPer: Map[String, Double] = {
-      val it = graft.queries.Warm.times.entrySet().iterator()
-      val b = Map.newBuilder[String, Double]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
+    val warmPer: Map[String, Double] = graft.ops.Debug.warm.snapshot().toMap
     val warmBytes = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
     // intended steady-state cache set = whatever warmup materialized
     // (memoized indexes, level-0, cluster closures). Anything cached on
@@ -221,13 +203,12 @@ object Bench {
     val errors = scala.collection.mutable.Buffer.empty[String]
     // per-stage attribution for the composed gauntlet rows (r8 verdict
     // #6): the 4 most expensive bench rows are multi-stage composites —
-    // a one-stage regression hides inside a noisy total. The pipeline's
-    // StageTimer forces each stage's cached frame and accumulates its
-    // seconds — an extra count() action per stage, measured ~+60% on
-    // d45/d49 — so it must NEVER run inside a timed sample: the timed
-    // median runs un-instrumented, and each gauntlet row pays ONE
-    // separate instrumented run afterwards purely to harvest the map.
-    graft.streaming.StreamingCorpusPipeline.StageTimer.enabled = false
+    // a one-stage regression hides inside a noisy total.
+    // Debug.recordStages forces each stage boundary and accumulates its
+    // seconds — an extra action per stage, measured ~+60% on d45/d49 —
+    // so it must NEVER wrap a timed sample: the timed median runs
+    // un-instrumented, and each harvested row pays ONE separate
+    // instrumented run afterwards purely to read the stage ledger.
     // every gauntlet-FAMILY composite is harvested (r10 verdict #8):
     // d46's bootstrap and d68's NFC run were the two rows still opaque
     // when d46's 4× spread needed adjudicating
@@ -238,16 +219,14 @@ object Bench {
     // the exact-span family gets the same treatment (r11 verdict #1:
     // d29/d34/d36-d39 were the round's only unexplained bench movers
     // and, as opaque composites, could not be adjudicated from the
-    // record) — Dedup.SpanTimer attributes candidate-gen / exactify /
+    // record) — the span family attributes candidate-gen / exactify /
     // closure / splice / reduce, harvested in one separate
     // instrumented run exactly like the gauntlet rows
     val spanRows = Set("d29_decontaminate_spans", "d30_span_removal",
       "d34_span_removal_global", "d36_span_exactify",
       "d37_decontaminate_exact", "d38_decontaminate_exact_indexed",
       "d39_span_removal_exact_global")
-    graft.ext.Dedup.SpanTimer.enabled = false
     val stageMaps = scala.collection.mutable.Map.empty[String, Seq[(String, Double)]]
-    val spanMaps = scala.collection.mutable.Map.empty[String, Seq[(String, Double)]]
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -260,27 +239,10 @@ object Bench {
       if (!ok) { if (!errors.contains(name)) errors += name; -1.0 } else dt
     }
     def harvestStages(name: String,
-                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      val timer = graft.streaming.StreamingCorpusPipeline.StageTimer
-      timer.enabled = true
-      timer.last.synchronized(timer.last.clear())
-      try {
-        fn(spark, sfDir).count()
-        stageMaps(name) = timer.last.synchronized(timer.last.toSeq)
-      } catch { case _: Throwable => () }
-      finally { timer.enabled = false; dropStrayCaches() }
-    }
-    def harvestSpanStages(name: String,
-                          fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      val timer = graft.ext.Dedup.SpanTimer
-      timer.enabled = true
-      timer.last.synchronized(timer.last.clear())
-      try {
-        fn(spark, sfDir).count()
-        spanMaps(name) = timer.last.synchronized(timer.last.toSeq)
-      } catch { case _: Throwable => () }
-      finally { timer.enabled = false; dropStrayCaches() }
-    }
+                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+      try stageMaps(name) = graft.ops.Debug.recordStages(fn(spark, sfDir).count())._2
+      catch { case _: Throwable => () }
+      finally dropStrayCaches()
     // median-of-3 per query: single timings carry ±50% noise here that
     // reads as phantom regressions round-over-round. A median over three
     // runs collapses most of it; a failing query aborts its repeats and
@@ -306,8 +268,8 @@ object Bench {
           else {
             val sorted = Seq(t1, t2, t3).sorted
             spreads(name) = sorted
-            if (gauntletRows.contains(name)) harvestStages(name, fn)
-            if (spanRows.contains(name)) harvestSpanStages(name, fn)
+            if (gauntletRows.contains(name) || spanRows.contains(name))
+              harvestStages(name, fn)
             sorted(1)
           }
         }
@@ -367,8 +329,8 @@ object Bench {
         .select(col("metric"), col("tsec").as("ts"), col("value"), col("seq"))
       val lastDay = 1706486400L // 2024-01-29T00:00:00Z
       val now = graft.queries.WhisperQueries.Now
-      def drainedJobCounts(): (Int, Int) =
-        { Thread.sleep(300); (jobCount.get, writeJobCount.get) }
+      def drainedJobCounts(): (Long, Long) =
+        { Thread.sleep(300); (graft.ops.Debug.jobs(), graft.ops.Debug.writeJobs()) }
       val (j0, w0) = drainedJobCounts()
       val t0 = System.nanoTime()
       store.updateMany(ev.where(col("ts") < lastDay), now)
@@ -526,41 +488,41 @@ object Bench {
         }.mkString(",")
         s""","spread_n":${flagged.size},"spread":{$body}"""
       }
-    // per-stage gauntlet breakdown (r8 verdict #6) as a compact field:
-    // fixed stage order declared once in "gsts", one seconds-array per
-    // gauntlet row keyed by its d-number — a one-stage regression is
-    // attributable from the record alone
+    // per-stage breakdowns (r8 verdict #6 for the gauntlet, r11 verdict
+    // #1 for the span family) as compact fields: a fixed stage order
+    // declared once in "gsts"/"ssts", one seconds-array per harvested row
+    // keyed by its d-number — a one-stage regression is attributable
+    // from the record alone. A row carries a vector for each vocabulary
+    // its ledger touches (d49's contam stage runs the span family, so
+    // d49 lands in both).
     // "build" is bootstrap's index-build stage (d46); appendFp/appendMh
     // fold into "append" so every timed second lands in some slot
     val stageOrder = Seq("normalize", "quality", "line", "exact", "contam",
       "near", "winnow", "semantic", "append", "verdict", "build", "cleanup")
-    val gstField =
-      if (stageMaps.isEmpty) ""
-      else {
-        val body = stageMaps.toSeq.sortBy(_._1).map { case (n, m) =>
-          val mm = m.groupMapReduce {
+    val spanStageOrder = Seq("candidates", "exactify", "closure", "splice", "reduce")
+    def rowsFor(order: Seq[String]): Seq[(String, Map[String, Double])] =
+      stageMaps.toSeq.sortBy(_._1)
+        .map { case (n, m) =>
+          n -> m.groupMapReduce {
             case (s, _) => if (s.startsWith("append")) "append" else s
           }(_._2)(_ + _)
-          "\"" + n.take(3) + "\":[" +
-            stageOrder.map(s => f(mm.getOrElse(s, 0.0))).mkString(",") + "]"
-        }.mkString(",")
-        s""","gsts":[${stageOrder.map("\"" + _ + "\"").mkString(",")}],"gst":{$body}"""
-      }
-    // per-stage span-family breakdown (r11 verdict #1), same shape:
-    // fixed stage order in "ssts", one seconds-array per span row keyed
-    // by its d-number — the d46 adjudication protocol now covers the
-    // bench's other opaque composites
-    val spanStageOrder = Seq("candidates", "exactify", "closure", "splice", "reduce")
-    val sstField =
-      if (spanMaps.isEmpty) ""
+        }
+        .filter { case (_, mm) => order.exists(mm.contains) }
+    def orderField(orderTag: String, order: Seq[String]): String =
+      s""","$orderTag":[${order.map("\"" + _ + "\"").mkString(",")}]"""
+    def vectorField(tag: String, orderTag: String, order: Seq[String]): String = {
+      val rows = rowsFor(order)
+      if (rows.isEmpty) ""
       else {
-        val body = spanMaps.toSeq.sortBy(_._1).map { case (n, m) =>
-          val mm = m.toMap
+        val body = rows.map { case (n, mm) =>
           "\"" + n.take(3) + "\":[" +
-            spanStageOrder.map(s => f(mm.getOrElse(s, 0.0))).mkString(",") + "]"
+            order.map(s => f(mm.getOrElse(s, 0.0))).mkString(",") + "]"
         }.mkString(",")
-        s""","ssts":[${spanStageOrder.map("\"" + _ + "\"").mkString(",")}],"sst":{$body}"""
+        orderField(orderTag, order) + s""","$tag":{$body}"""
       }
+    }
+    val gstField = vectorField("gst", "gsts", stageOrder)
+    val sstField = vectorField("sst", "ssts", spanStageOrder)
     // Sparse stage vectors (r12 verdict #7): when the FULL gst/sst
     // arrays don't fit the tail budget, a sparse form — only the top
     // rows by total, only nonzero slots, 1dp, encoded "slotIdx:sec" —
@@ -568,17 +530,11 @@ object Bench {
     // line instead of shedding it entirely. bench_full.json remains the
     // channel of record for the complete vectors either way.
     def sparseField(tag: String, orderTag: String, order: Seq[String],
-                    maps: Map[String, Seq[(String, Double)]],
-                    top: Int): String =
-      if (maps.isEmpty) ""
+                    top: Int): String = {
+      val rows = rowsFor(order).sortBy(-_._2.values.sum).take(top).sortBy(_._1)
+      if (rows.isEmpty) ""
       else {
-        val rows = maps.toSeq
-          .map { case (n, m) => (n, m, m.map(_._2).sum) }
-          .sortBy(-_._3).take(top).sortBy(_._1)
-        val body = rows.map { case (n, m, _) =>
-          val mm = m.groupMapReduce {
-            case (s, _) => if (s.startsWith("append")) "append" else s
-          }(_._2)(_ + _)
+        val body = rows.map { case (n, mm) =>
           val pairs = order.zipWithIndex
             .flatMap { case (s, i) =>
               val v = mm.getOrElse(s, 0.0)
@@ -587,8 +543,9 @@ object Bench {
             }
           "\"" + n.take(3) + "\":\"" + pairs.mkString(",") + "\""
         }.mkString(",")
-        s""","$orderTag":[${order.map("\"" + _ + "\"").mkString(",")}],"$tag":{$body}"""
+        orderField(orderTag, order) + s""","$tag":{$body}"""
       }
+    }
     // Mechanical budget guard (replaces hand-tuned row math, which went
     // stale every time a query joined the bench): if the assembled line
     // would risk FRONT truncation under the ~2000-char capture tail,
@@ -618,10 +575,8 @@ object Bench {
           // slots only) before dropping; span before gauntlet (both
           // survive whole in the side file — bench_full.json is the
           // adjudication channel of record)
-          val gstSparse = sparseField("gst", "gsts", stageOrder,
-            stageMaps.toMap, top = 4)
-          val sstSparse = sparseField("sst", "ssts", spanStageOrder,
-            spanMaps.toMap, top = 4)
+          val gstSparse = sparseField("gst", "gsts", stageOrder, top = 4)
+          val sstSparse = sparseField("sst", "ssts", spanStageOrder, top = 4)
           val bothSparse = assemble(spreadCount, gstSparse, sstSparse, noiseField, xwField)
           if (bothSparse.length <= budget) bothSparse
           else {

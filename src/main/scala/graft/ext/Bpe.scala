@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * see [[selectBatch]]), the batch applies in one pass over only the
   * words containing a picked pair, and the pair table updates by delta —
   * per-round shuffle is bounded by the perturbed mass, never the
-  * dictionary re-exploded (measured in tools/BpeScale, tables in
+  * dictionary re-exploded (BpeScale probe at 4eef7ee, tables in
   * TOKENIZER.md). Exact-sequential batching is width-limited by symbol
   * collisions in the head of the pair distribution (frequent subwords
   * share letters — measured ≈1.3 merges/round on a Zipfian corpus);

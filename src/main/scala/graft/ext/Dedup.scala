@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Debug
+
 /** Deduplication operators for training-data pipelines, in increasing
   * sophistication: exact, n-gram Jaccard, MinHash+LSH, SimHash,
   * embedding-cosine. All scale-first designs:
@@ -14,50 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Opt-in per-stage wall-clock attribution for the SPAN family
-    * ([[charGramRuns]] / [[exactifyRuns]] / [[removeSharedSpansGlobal]]
-    * / [[exciseIntervals]]) — the gauntlet StageTimer's pattern applied
-    * to the bench's other opaque composites (r11 verdict #1: the span
-    * rows were the only unexplained bench movers, and without stage
-    * vectors a one-stage regression hides inside a noisy total until a
-    * judge burns hardware adjudicating it). When enabled, each stage
-    * boundary is FORCED with an eager localCheckpoint — downstream
-    * consumers then read the materialized blocks, so no stage's work is
-    * double-counted into a later label — and its seconds accumulate
-    * under a fixed stage name. Disabled by default: production runs
-    * must not pay a materialization per stage. Single-writer use
-    * (graft.Bench harvests it in ONE separate instrumented run, never
-    * inside a timed sample); `last` holds the most recent run's map.
-    *
-    * Stage vocabulary: `candidates` (gram join + diagonal-run window),
-    * `exactify` (the filter-verify char-compare loop), `closure`
-    * (interval graph build + connected components + keeper election),
-    * `splice` (interval union + complement + reassembly), `reduce`
-    * (per-pair max aggregation of runs).
-    */
-  object SpanTimer {
-    @volatile var enabled = false
-    val last = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    private[graft] def time[T](stage: String)(thunk: => T): T =
-      if (!enabled) thunk
-      else {
-        val t0 = System.nanoTime()
-        val r = thunk
-        last.synchronized {
-          last(stage) = last.getOrElse(stage, 0.0) + (System.nanoTime() - t0) / 1e9
-        }
-        r
-      }
-    private[graft] def force(stage: String, df: DataFrame): DataFrame =
-      if (!enabled) df else time(stage) { df.localCheckpoint() }
-    // manual accumulate — for driver loops whose eager work spans many
-    // statements (exactifyRuns), where a wrapping time{} block would
-    // double-count the nested force() calls
-    private[graft] def add(stage: String, sec: Double): Unit =
-      if (enabled) last.synchronized {
-        last(stage) = last.getOrElse(stage, 0.0) + sec
-      }
-  }
+  // The SPAN family ([[charGramRuns]] / [[exactifyRuns]] /
+  // [[removeSharedSpansGlobal]] / [[exciseIntervals]]) attributes its
+  // stages to the graft.ops.Debug stage ledger: `candidates` (gram join
+  // + diagonal-run window), `exactify` (the filter-verify char-compare
+  // loop), `closure` (interval graph build + connected components +
+  // keeper election), `splice` (interval union + complement +
+  // reassembly), `reduce` (per-pair max aggregation of runs).
 
   // ---- exact ----------------------------------------------------------
 
@@ -391,7 +356,7 @@ object Dedup {
                     positions: Option[DataFrame] = None,
                     maxOccur: Int = 8,
                     runs: Option[DataFrame] = None): DataFrame =
-    SpanTimer.force("reduce",
+    Debug.force("reduce",
       runs.getOrElse(charGramRuns(docs, k, prefix, minShared, maxGramFreq,
           maxGap, idCol, textCol, positions, maxOccur))
         .groupBy("a", "b")
@@ -431,7 +396,7 @@ object Dedup {
         col("x.g") === col("y.g") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         (col("x.i") - col("y.i")).as("d"), col("x.i").as("pos"))
-    SpanTimer.force("candidates", diagonalRuns(m, k, minShared, maxGap))
+    Debug.force("candidates", diagonalRuns(m, k, minShared, maxGap))
   }
 
   /** EXACT-substring spans — [[charGramRuns]] at Lee et al. 2021's
@@ -545,135 +510,134 @@ object Dedup {
     // Without the anchor, a neighboring run that never intersected any
     // candidate region could ride in on a widened window, making the
     // output depend on extension accidents instead of the contract.
-    val exactifyT0 = System.nanoTime()
-    var pending = runs
-      .select(col("a"), col("b"), col("d"),
-        (col("sa") - slack).as("rs"),
-        (col("sa") + col("ext") + slack).as("re"),
-        lit(null).cast("long").as("anc"))
-      .localCheckpoint()
-    val emptyRuns = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      new org.apache.spark.sql.types.StructType()
-        .add("a", "long").add("b", "long").add("d", "long")
-        .add("s", "long").add("e", "long"))
-    var done = emptyRuns
-    var it = 0
-    var growth = slack
-    var converged = pending.isEmpty
-    while (!converged && it < maxIter) {
-      val anchored = it > 0
-      // Round fusion (r15): rounds 2+ carry (ta, tb) through the
-      // per-round checkpoint, so ONLY round 1 resolves text by joining
-      // `docs` — previously every round re-joined docs twice (slice +
-      // grow test), and at fixture scale those per-round scan jobs, not
-      // data, dominated the loop (the d38/d39 anti-scaling cluster).
-      // Extendable runs are few by construction, so the text the
-      // checkpoint ships is bounded by the still-growing run set, never
-      // the candidate set.
-      val withText =
-        if (anchored) pending
-        else pending
-          .join(docsSel.as("da"), col("a") === col("da.id"))
-          .join(bSel.as("db"), col("b") === col("db.id"))
-          .select(pending.columns.map(col) :+
-            col("da.t").as("ta") :+ col("db.t").as("tb"): _*)
-      val anchors = withText.where(col("anc").isNotNull)
-        .select(col("a"), col("b"), col("d"), col("anc"),
-          col("ta"), col("tb"))
-        .dropDuplicates("a", "b", "d", "anc")
-      // clamp to both texts (b's bounds shifted by d), slice once per
-      // region, then aligned per-char equality — w rows per region, 1:1
-      val sliced = withText
+    Debug.time("exactify") {
+      var pending = runs
         .select(col("a"), col("b"), col("d"),
-          greatest(col("rs"), lit(1L), col("d") + 1L).as("lo"),
-          least(col("re"), length(col("ta")) + 1L,
-            length(col("tb")) + 1L + col("d")).as("hi"),
-          col("ta"), col("tb"))
-        .where(col("hi") > col("lo"))
-        .select(col("a"), col("b"), col("d"), col("lo"), col("hi"),
-          col("ta").substr(col("lo").cast("int"),
-            (col("hi") - col("lo")).cast("int")).as("xa"),
-          col("tb").substr((col("lo") - col("d")).cast("int"),
-            (col("hi") - col("lo")).cast("int")).as("xb"))
-      val matched = sliced
-        .select(col("a"), col("b"), col("d"), col("lo"),
-          explode(filter(
-            sequence(lit(1L), length(col("xa")).cast("long")),
-            i => col("xa").substr(i.cast("int"), lit(1)) ===
-              col("xb").substr(i.cast("int"), lit(1)))).as("off"))
-        .select(col("a"), col("b"), col("d"),
-          (col("off") + col("lo") - 1L).as("pos"))
-        .dropDuplicates("a", "b", "d", "pos")
-      val w = Window.partitionBy("a", "b", "d").orderBy("pos")
-      val allRuns = matched
-        .withColumn("brk",
-          when(col("pos") - lag(col("pos"), 1).over(w) > 1L, 1).otherwise(0))
-        .withColumn("run", sum(col("brk")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("a", "b", "d", "run")
-        .agg(min(col("pos")).as("s"), (max(col("pos")) + 1L).as("e"))
-        .drop("run")
-      // anchored rounds take their texts from the anchor rows (same
-      // (a, b) pair → identical text; dropDuplicates keys exclude the
-      // text columns so no string compare rides the dedup); round 1
-      // re-joins docs for the grow test exactly as before
-      val exact =
-        if (!anchored) allRuns
-          .join(docsSel.as("da"), col("a") === col("da.id"))
-          .join(bSel.as("db"), col("b") === col("db.id"))
-          .select(col("a"), col("b"), col("d"), col("s"), col("e"),
-            col("da.t").as("ta"), col("db.t").as("tb"))
-        else allRuns.join(anchors, Seq("a", "b", "d"))
-          .where(col("s") <= col("anc") && col("anc") < col("e"))
-          .select(col("a"), col("b"), col("d"), col("s"), col("e"),
+          (col("sa") - slack).as("rs"),
+          (col("sa") + col("ext") + slack).as("re"),
+          lit(null).cast("long").as("anc"))
+        .localCheckpoint()
+      val emptyRuns = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        new org.apache.spark.sql.types.StructType()
+          .add("a", "long").add("b", "long").add("d", "long")
+          .add("s", "long").add("e", "long"))
+      var done = emptyRuns
+      var it = 0
+      var growth = slack
+      var converged = pending.isEmpty
+      while (!converged && it < maxIter) {
+        val anchored = it > 0
+        // Round fusion (r15): rounds 2+ carry (ta, tb) through the
+        // per-round checkpoint, so ONLY round 1 resolves text by joining
+        // `docs` — previously every round re-joined docs twice (slice +
+        // grow test), and at fixture scale those per-round scan jobs, not
+        // data, dominated the loop (the d38/d39 anti-scaling cluster).
+        // Extendable runs are few by construction, so the text the
+        // checkpoint ships is bounded by the still-growing run set, never
+        // the candidate set.
+        val withText =
+          if (anchored) pending
+          else pending
+            .join(docsSel.as("da"), col("a") === col("da.id"))
+            .join(bSel.as("db"), col("b") === col("db.id"))
+            .select(pending.columns.map(col) :+
+              col("da.t").as("ta") :+ col("db.t").as("tb"): _*)
+        val anchors = withText.where(col("anc").isNotNull)
+          .select(col("a"), col("b"), col("d"), col("anc"),
             col("ta"), col("tb"))
-          .dropDuplicates("a", "b", "d", "s", "e")
-      // exact local extension test: can the run grow past its searched
-      // window? (The char before s / at e exists in both docs and
-      // matches.) Extendable runs re-region with doubled slack; the
-      // rest are maximal — keep those long enough. Only extendable rows
-      // carry their texts into the checkpoint (settled rows store NULL).
-      val tested = exact
-        .select(col("a"), col("b"), col("d"), col("s"), col("e"),
-          (col("s") > 1L && col("s") - col("d") > 1L &&
-            col("ta").substr((col("s") - 1L).cast("int"), lit(1)) ===
-            col("tb").substr((col("s") - 1L - col("d")).cast("int"), lit(1)))
-            .as("growL"),
-          (col("e") <= length(col("ta")) &&
-            col("e") - col("d") <= length(col("tb")) &&
-            col("ta").substr(col("e").cast("int"), lit(1)) ===
-            col("tb").substr((col("e") - col("d")).cast("int"), lit(1)))
-            .as("growR"),
-          col("ta"), col("tb"))
-        .select(col("a"), col("b"), col("d"), col("s"), col("e"),
-          col("growL"), col("growR"),
-          when(col("growL") || col("growR"), col("ta")).as("ta"),
-          when(col("growL") || col("growR"), col("tb")).as("tb"))
-        .localCheckpoint()
-      growth = growth * 2
-      pending = tested.where(col("growL") || col("growR"))
-        .select(col("a"), col("b"), col("d"),
-          (col("s") - growth).as("rs"), (col("e") + growth).as("re"),
-          col("s").as("anc"), col("ta"), col("tb"))
-        .localCheckpoint()
-      done = done.unionByName(
-        tested.where(!col("growL") && !col("growR"))
-          .select("a", "b", "d", "s", "e")).localCheckpoint()
-      converged = pending.isEmpty
-      it += 1
+          .dropDuplicates("a", "b", "d", "anc")
+        // clamp to both texts (b's bounds shifted by d), slice once per
+        // region, then aligned per-char equality — w rows per region, 1:1
+        val sliced = withText
+          .select(col("a"), col("b"), col("d"),
+            greatest(col("rs"), lit(1L), col("d") + 1L).as("lo"),
+            least(col("re"), length(col("ta")) + 1L,
+              length(col("tb")) + 1L + col("d")).as("hi"),
+            col("ta"), col("tb"))
+          .where(col("hi") > col("lo"))
+          .select(col("a"), col("b"), col("d"), col("lo"), col("hi"),
+            col("ta").substr(col("lo").cast("int"),
+              (col("hi") - col("lo")).cast("int")).as("xa"),
+            col("tb").substr((col("lo") - col("d")).cast("int"),
+              (col("hi") - col("lo")).cast("int")).as("xb"))
+        val matched = sliced
+          .select(col("a"), col("b"), col("d"), col("lo"),
+            explode(filter(
+              sequence(lit(1L), length(col("xa")).cast("long")),
+              i => col("xa").substr(i.cast("int"), lit(1)) ===
+                col("xb").substr(i.cast("int"), lit(1)))).as("off"))
+          .select(col("a"), col("b"), col("d"),
+            (col("off") + col("lo") - 1L).as("pos"))
+          .dropDuplicates("a", "b", "d", "pos")
+        val w = Window.partitionBy("a", "b", "d").orderBy("pos")
+        val allRuns = matched
+          .withColumn("brk",
+            when(col("pos") - lag(col("pos"), 1).over(w) > 1L, 1).otherwise(0))
+          .withColumn("run", sum(col("brk")).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .groupBy("a", "b", "d", "run")
+          .agg(min(col("pos")).as("s"), (max(col("pos")) + 1L).as("e"))
+          .drop("run")
+        // anchored rounds take their texts from the anchor rows (same
+        // (a, b) pair → identical text; dropDuplicates keys exclude the
+        // text columns so no string compare rides the dedup); round 1
+        // re-joins docs for the grow test exactly as before
+        val exact =
+          if (!anchored) allRuns
+            .join(docsSel.as("da"), col("a") === col("da.id"))
+            .join(bSel.as("db"), col("b") === col("db.id"))
+            .select(col("a"), col("b"), col("d"), col("s"), col("e"),
+              col("da.t").as("ta"), col("db.t").as("tb"))
+          else allRuns.join(anchors, Seq("a", "b", "d"))
+            .where(col("s") <= col("anc") && col("anc") < col("e"))
+            .select(col("a"), col("b"), col("d"), col("s"), col("e"),
+              col("ta"), col("tb"))
+            .dropDuplicates("a", "b", "d", "s", "e")
+        // exact local extension test: can the run grow past its searched
+        // window? (The char before s / at e exists in both docs and
+        // matches.) Extendable runs re-region with doubled slack; the
+        // rest are maximal — keep those long enough. Only extendable rows
+        // carry their texts into the checkpoint (settled rows store NULL).
+        val tested = exact
+          .select(col("a"), col("b"), col("d"), col("s"), col("e"),
+            (col("s") > 1L && col("s") - col("d") > 1L &&
+              col("ta").substr((col("s") - 1L).cast("int"), lit(1)) ===
+              col("tb").substr((col("s") - 1L - col("d")).cast("int"), lit(1)))
+              .as("growL"),
+            (col("e") <= length(col("ta")) &&
+              col("e") - col("d") <= length(col("tb")) &&
+              col("ta").substr(col("e").cast("int"), lit(1)) ===
+              col("tb").substr((col("e") - col("d")).cast("int"), lit(1)))
+              .as("growR"),
+            col("ta"), col("tb"))
+          .select(col("a"), col("b"), col("d"), col("s"), col("e"),
+            col("growL"), col("growR"),
+            when(col("growL") || col("growR"), col("ta")).as("ta"),
+            when(col("growL") || col("growR"), col("tb")).as("tb"))
+          .localCheckpoint()
+        growth = growth * 2
+        pending = tested.where(col("growL") || col("growR"))
+          .select(col("a"), col("b"), col("d"),
+            (col("s") - growth).as("rs"), (col("e") + growth).as("re"),
+            col("s").as("anc"), col("ta"), col("tb"))
+          .localCheckpoint()
+        done = done.unionByName(
+          tested.where(!col("growL") && !col("growR"))
+            .select("a", "b", "d", "s", "e")).localCheckpoint()
+        converged = pending.isEmpty
+        it += 1
+      }
+      require(converged, s"exactifyRuns did not converge in $maxIter rounds")
+      // the nested force bills its own seconds to the same label, so the
+      // label sums to the loop-plus-force wall
+      Debug.force("exactify",
+        done
+          .where(col("e") - col("s") >= minKeep)
+          .select(col("a"), col("b"), col("d"), col("s").as("sa"),
+            (col("e") - col("s")).as("ext"))
+          .distinct())
     }
-    require(converged, s"exactifyRuns did not converge in $maxIter rounds")
-    // the loop's per-round eager checkpoints are the stage's cost; the
-    // manual add (not a wrapping time{}) avoids double-counting the
-    // final force below
-    SpanTimer.add("exactify", (System.nanoTime() - exactifyT0) / 1e9)
-    SpanTimer.force("exactify",
-      done
-        .where(col("e") - col("s") >= minKeep)
-        .select(col("a"), col("b"), col("d"), col("s").as("sa"),
-          (col("e") - col("s")).as("ext"))
-        .distinct())
   }
 
   /** Cross-table twin of [[charGramSpans]]: longest contiguously-shared
@@ -704,7 +668,7 @@ object Dedup {
                            benchPositions: Option[DataFrame] = None,
                            maxOccur: Int = 8,
                            runs: Option[DataFrame] = None): DataFrame =
-    SpanTimer.force("reduce",
+    Debug.force("reduce",
       runs.getOrElse(
           charGramRunsAgainst(train, bench, k, prefix, minShared,
             maxGramFreq, maxGap, idCol, textCol, trainPositions,
@@ -740,7 +704,7 @@ object Dedup {
       .join(broadcast(bp.as("y")), col("x.g") === col("y.g"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         (col("x.i") - col("y.i")).as("d"), col("x.i").as("pos"))
-    SpanTimer.force("candidates", diagonalRuns(m, k, minShared, maxGap))
+    Debug.force("candidates", diagonalRuns(m, k, minShared, maxGap))
   }
 
   /** SPAN REMOVAL — the [[charGramSpans]] signal applied: excise every
@@ -844,7 +808,7 @@ object Dedup {
     val untouched = docsSel
       .join(merged.select("id").distinct(), Seq("id"), "left_anti")
       .select(col("id").as(idCol), col("t").as(textCol))
-    SpanTimer.force("splice", affected.unionByName(untouched))
+    Debug.force("splice", affected.unionByName(untouched))
   }
 
   /** CLUSTER-GLOBAL span removal — [[removeSharedSpans]] with Lee et
@@ -927,7 +891,7 @@ object Dedup {
       .where(col("s") =!= col("f.s") || col("e") =!= col("f.e"))
       .select(nid(col("id"), col("s"), col("e")).as("a"),
         nid(col("id"), col("f.s"), col("f.e")).as("b"))
-    val comp = SpanTimer.time("closure")(
+    val comp = Debug.time("closure")(
       connectedComponents(runEdges.unionByName(overlapEdges)))
       .withColumnRenamed("id", "nid")
     val labeled = nodes
@@ -937,7 +901,7 @@ object Dedup {
       .agg(min(struct(col("id"), col("s"), col("e"))).as("kp"))
     // the closure force also bills the lazy edge construction and
     // keeper election here — everything between candidates and splice
-    val losers = SpanTimer.force("closure",
+    val losers = Debug.force("closure",
       labeled.join(keepers, "root")
         .where(col("id") =!= col("kp.id") || col("s") =!= col("kp.s") ||
           col("e") =!= col("kp.e"))
@@ -1178,7 +1142,7 @@ object Dedup {
     * (the densified estimator is unbiased), so [[bandHashes]]/
     * [[lshCandidates]] and the downstream pipeline work unchanged.
     *
-    * Measured honestly (tools/OphScale, table in DEDUP.md): in THIS
+    * Measured (OphScale probe at 5cbde10, table in DEDUP.md): in THIS
     * engine the classic builder WINS at k=128 — [[hashShingles]] has
     * already reduced shingles to 8-byte longs, so its k rehashes are
     * codegen'd long hashes inside one map-side-combined aggregate

@@ -709,8 +709,11 @@ object Similarity {
     }
     val seeds = rows.take(nlist)
     val seedNorms = seeds.map { case (_, v) => normGuard(v) }
+    // per cell: dim sums and per-dim counts, sized by the cell's longest
+    // vector — a ragged cell averages each dim over the vectors that
+    // have it, exactly like the distributed per-(cell, pos) avg
     val sums = scala.collection.mutable.LinkedHashMap
-      .empty[Long, (Array[Double], Long)]
+      .empty[Long, (Array[Double], Array[Long])]
     rows.foreach { case (_, vec) =>
       val nv = normGuard(vec)
       // cosineSafe's exact op order: (a·b / n(a)) / n(b), a = the vector
@@ -725,15 +728,20 @@ object Similarity {
         j += 1
       }
       val cell = seeds(bestIdx)._1
-      val (acc, n) = sums.getOrElseUpdate(cell,
-        (new Array[Double](vec.length), 0L))
+      val (acc0, n0) =
+        sums.getOrElse(cell, (Array.emptyDoubleArray, Array.emptyLongArray))
+      val (acc, n) =
+        if (acc0.length >= vec.length) (acc0, n0)
+        else (java.util.Arrays.copyOf(acc0, vec.length),
+          java.util.Arrays.copyOf(n0, vec.length))
       var p = 0
-      while (p < vec.length) { acc(p) += vec(p); p += 1 }
-      sums(cell) = (acc, n + 1)
+      while (p < vec.length) { acc(p) += vec(p); n(p) += 1; p += 1 }
+      sums(cell) = (acc, n)
     }
-    // empty cells drop out, exactly like the distributed groupBy
-    sums.toSeq.sortBy(_._1).map { case (cell, (acc, n)) =>
-      (cell, acc.map(_ / n).toSeq)
+    // empty cells (and cells of empty vectors) drop out, exactly like
+    // the distributed groupBy over exploded dims
+    sums.toSeq.sortBy(_._1).collect { case (cell, (acc, n)) if acc.nonEmpty =>
+      (cell, acc.zip(n).map { case (s, c) => s / c }.toSeq)
     }.toDF("cid", "cvec")
   }
 

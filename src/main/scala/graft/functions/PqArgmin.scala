@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructType}
 
 /** PQ code assignment as ONE whole-stage-codegen expression: argmin over
   * a cid-sorted candidate array of `d2 = −2·(sub·cvec) + ‖cvec‖²`, ties
@@ -37,6 +39,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * null-intolerance); an EMPTY cands array → null, matching the fold's
   * `element_at(cands, 1)` null seed. Struct elements and cvec arrays are
   * codebook-built and never null.
+  *
+  * The candidate struct is read by POSITION, so [[checkInputDataTypes]]
+  * pins both input types at analysis time: a `long` cid or a missing or
+  * reordered field fails the query instead of reading wrong bytes.
   */
 case class PqArgmin(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -45,6 +51,26 @@ case class PqArgmin(left: Expression, right: Expression)
 
   // an empty candidate array yields null even for non-null inputs
   override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def doubles(t: DataType) = t match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }
+    val candsOk = right.dataType match {
+      case ArrayType(StructType(Array(cid, cvec, cn)), _) =>
+        cid.dataType == IntegerType && doubles(cvec.dataType) &&
+          cn.dataType == DoubleType
+      case _ => false
+    }
+    if (!doubles(left.dataType))
+      TypeCheckFailure(
+        s"pq_argmin sub must be array<double>, got ${left.dataType.simpleString}")
+    else if (!candsOk)
+      TypeCheckFailure("pq_argmin cands must be array<struct<cid: int, " +
+        s"cvec: array<double>, cn: double>>, got ${right.dataType.simpleString}")
+    else TypeCheckSuccess
+  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val sub = a.asInstanceOf[ArrayData]

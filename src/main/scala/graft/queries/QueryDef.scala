@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.ops.Debug
+
 /** One driver-verifiable operator: a Spark implementation plus (when
   * SQL-expressible) an equivalent DuckDB oracle run on the same parquet
   * tables. Column names/types must line up exactly — the driver sorts
@@ -19,42 +21,18 @@ object QueryDef {
     QueryDef(name, fn, Some(oracle))
 }
 
-/** Build-cost ledger for the memoized warm set (r12 verdict #1): every
-  * `computeIfAbsent` body in the query registries reports its one-time
-  * build seconds here, so the bench record can PRICE the untimed warmup
-  * instead of letting memoization silently move cost out of the timed
-  * rows. Bench empties it before warmup and emits it as the `warm` field
-  * of bench_full.json (total + per-memo) next to the cached-bytes figure.
-  */
-object Warm {
-  val times = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-
-  // SELF-time attribution: memo builds compose (the persisted-PQ build
-  // calls the PQ build; gauntlet variants share the base corpus memo) —
-  // a naive wall sum would double-count nested builds, so each frame
-  // subtracts its children and the ledger's sum equals true warmup wall
-  private val childTime = ThreadLocal.withInitial[java.lang.Double](() => 0.0)
-
-  def timed[T](name: String)(body: => T): T = {
-    val saved = childTime.get()
-    childTime.set(0.0)
-    val t0 = System.nanoTime()
-    val r = body
-    val full = (System.nanoTime() - t0) / 1e9
-    // a memo rebuilt per (session, dir) accumulates — the ledger prices
-    // the whole warm set, not one representative build
-    times.merge(name, full - childTime.get(), (a, b) => a + b)
-    childTime.set(saved + full)
-    r
-  }
-}
-
-/** A `ConcurrentHashMap`-shaped memo whose builds self-report to the
-  * [[Warm]] ledger. Drop-in for the registries' memo maps: same
-  * `computeIfAbsent(key, fn)` call shape, String keys.
+/** A `ConcurrentHashMap`-shaped memo whose builds report their
+  * one-time seconds to the [[Debug.warm]] ledger, self-time
+  * attributed: memo builds compose (the persisted-PQ build calls the PQ
+  * build), and each second lands under exactly one memo name. Bench
+  * empties the ledger before its untimed warmup and emits it as the
+  * `warm` field of bench_full.json, so memoization cannot silently move
+  * cost out of the timed rows. Drop-in for the registries' memo maps:
+  * same `computeIfAbsent(key, fn)` call shape, String keys. A memo
+  * rebuilt per (session, dir) accumulates under its name.
   */
 final class Memo[V](name: String) {
   private val m = new java.util.concurrent.ConcurrentHashMap[String, V]()
   def computeIfAbsent(key: String, f: String => V): V =
-    m.computeIfAbsent(key, k => Warm.timed(name)(f(k)))
+    m.computeIfAbsent(key, k => Debug.timed(Debug.warm, name)(f(k)))
 }

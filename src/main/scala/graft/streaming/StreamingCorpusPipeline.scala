@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.ext.{Dedup, FingerprintIndex, LineIndex, MinHashIndex, NgramIndex, SemanticIndex, Similarity, SpanIndex, TextAnalysis, WinnowIndex}
+import graft.ops.Debug
 
 /** The turnkey continuous corpus constructor: every delivery flows
   * through the full curation gauntlet — quality rules → exact dedup →
@@ -56,34 +57,6 @@ import graft.ext.{Dedup, FingerprintIndex, LineIndex, MinHashIndex, NgramIndex, 
   * segment count bounded over stream age.
   */
 object StreamingCorpusPipeline {
-
-  /** Opt-in per-stage wall-clock attribution for [[processBatch]] (the
-    * r8 verdict's ask: the gauntlet bench rows are the most expensive
-    * queries and were opaque composites — a one-stage regression hid
-    * inside a noisy total). When enabled, each stage's cached frame is
-    * FORCED (one count() per stage — the frames are cached and reused
-    * downstream, so the extra cost is one cache materialization that the
-    * next consumer would have paid anyway) and its seconds accumulate
-    * under a fixed stage label. Disabled by default: streaming soaks
-    * must not pay a forcing job per stage per micro-batch. Single-writer
-    * use (graft.Bench); `last` holds the most recent batch's map.
-    */
-  object StageTimer {
-    @volatile var enabled = false
-    val last = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    private[streaming] def time[T](stage: String)(thunk: => T): T =
-      if (!enabled) thunk
-      else {
-        val t0 = System.nanoTime()
-        val r = thunk
-        last.synchronized {
-          last(stage) = last.getOrElse(stage, 0.0) + (System.nanoTime() - t0) / 1e9
-        }
-        r
-      }
-    private[streaming] def force(stage: String, df: DataFrame): DataFrame =
-      if (!enabled) df else time(stage) { df.count(); df }
-  }
 
   /** Run independent effect tasks concurrently from a small thread pool
     * (the overlap-independent-jobs pattern): Spark's scheduler runs the
@@ -249,7 +222,6 @@ object StreamingCorpusPipeline {
     val docs = corpus.select(col("doc_id"), col("text"))
     def minus(from: DataFrame, dropped: DataFrame): DataFrame =
       from.join(dropped.select("doc_id"), Seq("doc_id"), "left_anti")
-    if (StageTimer.enabled) StageTimer.last.synchronized(StageTimer.last.clear())
     // Every verdict frame is localCheckpoint'd (eager) as it is
     // produced: each stage's work runs exactly once, inside its own
     // attribution window. Without the cuts, the CALLER's first action
@@ -258,7 +230,7 @@ object StreamingCorpusPipeline {
     // finally block — the silent-recompute suspect behind r10's 4×
     // d46 bench spread. The frames are verdict-sized (3 columns,
     // bounded by the corpus's drop counts), so the cut is cheap.
-    val qDrops = StageTimer.time("quality")(docs
+    val qDrops = Debug.time("quality")(docs
       .join(cfg.quality(docs).where(col("keep") === 0), Seq("doc_id"),
         "left_semi")
       .select(col("doc_id"), lit("drop_quality").as("verdict"),
@@ -266,7 +238,7 @@ object StreamingCorpusPipeline {
       .localCheckpoint())
     val afterQ = minus(docs, qDrops)
     val wFp = Window.partitionBy("fp")
-    val exDrops = StageTimer.time("exact")(afterQ
+    val exDrops = Debug.time("exact")(afterQ
       .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
       .withColumn("keeper", min("doc_id").over(wFp))
       .where(col("doc_id") =!= col("keeper"))
@@ -274,12 +246,12 @@ object StreamingCorpusPipeline {
         col("keeper").as("ref_id"))
       .localCheckpoint())
     // lineage cut before the pair search, as in processBatch
-    val afterEx = StageTimer.time("exact")(minus(afterQ, exDrops)
+    val afterEx = Debug.time("exact")(minus(afterQ, exDrops)
       .select(col("doc_id"), col("text")).localCheckpoint())
     val sh = Dedup.hashShingles(Dedup.shingles(afterEx, n)).cache()
     val sigs = Dedup.minhashSignatures(sh, k).cache()
     try {
-      val nearDrops = StageTimer.time("near") {
+      val nearDrops = Debug.time("near") {
         val pairs = Dedup.minhashDuplicates(afterEx, n = n, tau = cfg.tau,
           k = k, bands = bands, shingled = Some(sh), signatures = Some(sigs))
         Dedup.connectedComponents(pairs)
@@ -288,12 +260,12 @@ object StreamingCorpusPipeline {
             col("root").as("ref_id"))
           .localCheckpoint()
       }
-      val survivors = StageTimer.time("near")(minus(afterEx, nearDrops)
+      val survivors = Debug.time("near")(minus(afterEx, nearDrops)
         .select(col("doc_id"), col("text")).localCheckpoint())
       // the two seed builds write disjoint directories from the same
       // checkpointed survivor frame — independent jobs, overlapped
       // ([[inParallel]], same reasoning as processBatch's appends)
-      StageTimer.time("build")(inParallel(Seq(
+      Debug.time("build")(inParallel(Seq(
         "fpBuild" -> (() => { FingerprintIndex.build(survivors, fpPath): Unit }),
         "mhBuild" -> (() => {
           MinHashIndex.build(survivors, mhPath, n = n, k = k,
@@ -360,7 +332,9 @@ object StreamingCorpusPipeline {
   }
 
   /** One batch of the gauntlet — public so a batch backfill applies
-    * IDENTICAL semantics outside a stream.
+    * IDENTICAL semantics outside a stream. Each stage's seconds go to
+    * the [[graft.ops.Debug.stages]] ledger under a fixed label while
+    * [[graft.ops.Debug.forceStages]] is on.
     */
   def processBatch(batch: DataFrame, batchId: Long, fpPath: String,
                    mhPath: String, spanPath: Option[String],
@@ -402,14 +376,13 @@ object StreamingCorpusPipeline {
     def keep(df: DataFrame): DataFrame = { caches += df.cache(); df }
     def minus(from: DataFrame, dropped: DataFrame): DataFrame =
       from.join(dropped.select("doc_id"), Seq("doc_id"), "left_anti")
-    if (StageTimer.enabled) StageTimer.last.synchronized(StageTimer.last.clear())
     try {
       // attribution: when stage 0 is configured, materialize the docs
       // cache under its own label — otherwise the normalization pass
       // bills to whichever stage forces the cache first ("quality")
-      cfg.normalizeForm.foreach(_ => StageTimer.force("normalize", docs): Unit)
+      cfg.normalizeForm.foreach(_ => Debug.force("normalize", docs): Unit)
       // 1. quality: anything the gate does not keep drops first
-      val qDrops = StageTimer.force("quality", keep(docs
+      val qDrops = Debug.force("quality", keep(docs
         .join(cfg.quality(docs).where(col("keep") === 0), Seq("doc_id"),
           "left_semi")
         .select(col("doc_id"), lit("drop_quality").as("verdict"),
@@ -435,7 +408,7 @@ object StreamingCorpusPipeline {
                 cfg.prioCol.map(col).toSeq: _*),
               excludeSeg = Some(seg), prioCol = cfg.prioCol)
           val extras = afterQ0.columns.filter(c => c != "doc_id" && c != "text")
-          StageTimer.force("line", keep(
+          Debug.force("line", keep(
             if (extras.isEmpty) cleaned
             else cleaned.join(
               afterQ0.select("doc_id", extras.toIndexedSeq: _*), Seq("doc_id"))))
@@ -465,14 +438,14 @@ object StreamingCorpusPipeline {
       val exPairs =
         if (cfg.bloomGate) fpIdx.dedupBatchBloom(afterQ, excludeSeg = Some(seg))
         else fpIdx.dedupBatch(afterQ, excludeSeg = Some(seg))
-      val exCross = StageTimer.force("exact", keep(
+      val exCross = Debug.force("exact", keep(
         electCross(exPairs, fpIdx.priorities(excludeSeg = Some(seg)))
           .select(col("doc_id"), lit("dup_exact").as("verdict"), col("ref_id"))))
       val afterExC = minus(afterQ, exCross)
       // 2b. exact within the batch: the (priority, id)-minimum
       // occurrence kept — first (smallest-id) without prioCol
       val wFp = Window.partitionBy("fp")
-      val exBatch = StageTimer.force("exact", keep(cfg.prioCol match {
+      val exBatch = Debug.force("exact", keep(cfg.prioCol match {
         case Some(pc) =>
           afterExC
             .select(col("doc_id"),
@@ -497,7 +470,7 @@ object StreamingCorpusPipeline {
 
       // 3. decontamination: any run of ≥ minLeak shared sampled grams
       // with any indexed eval doc convicts
-      val contam = StageTimer.force("contam", keep(spanPath match {
+      val contam = Debug.force("contam", keep(spanPath match {
         case Some(p) => SpanIndex.load(spark, p)
           .check(afterEx, minShared = cfg.minLeak)
           .groupBy("doc_id").agg(min("bench_id").as("ref_id"))
@@ -512,7 +485,7 @@ object StreamingCorpusPipeline {
       // ~40% of the batch wall. The checkpointed frame is batch-sized
       // by construction (micro-batches are bounded), so materializing
       // it is cheap and every downstream plan starts from an RDD scan.
-      val afterC = StageTimer.time("near")(
+      val afterC = Debug.time("near")(
         minus(afterEx, contam).select(carried: _*).localCheckpoint())
 
       // 4. near-dup: cross vs the index, then in-batch components
@@ -544,23 +517,23 @@ object StreamingCorpusPipeline {
       // chain's first consumer and materializes this cache inside its
       // own job — a separate count() here would add one job per batch
       // for no work saved (job cadence is the fixture-scale wall)
-      val nearPairs = keep(StageTimer.time("near")(
+      val nearPairs = keep(Debug.time("near")(
         mhIdx.nearPairsUnion(afterC, cfg.tau, excludeSeg = Some(seg),
           shingled = Some(shAll), signatures = Some(sigsAll))))
-      val nearCross = StageTimer.force("near", keep(
+      val nearCross = Debug.force("near", keep(
         electCross(
           nearPairs.where(col("cross"))
             .select(col("a").as("doc_id"), col("b").as("dup_of"),
               col("jaccard")),
           mhIdx.priorities(excludeSeg = Some(seg)))
           .select(col("doc_id"), lit("dup_index").as("verdict"), col("ref_id"))))
-      val afterNc = StageTimer.time("near")(
+      val afterNc = Debug.time("near")(
         minus(afterC, nearCross).select(carried: _*).localCheckpoint())
       val pairs = nearPairs.where(!col("cross"))
         .join(afterNc.select(col("doc_id").as("a")), Seq("a"), "left_semi")
         .join(afterNc.select(col("doc_id").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"), col("jaccard"))
-      val nearBatch = StageTimer.force("near", keep(cfg.prioCol match {
+      val nearBatch = Debug.force("near", keep(cfg.prioCol match {
         case Some(pc) =>
           Dedup.clusterKeepersPriority(pairs, afterNc,
               idCol = "doc_id", prioCol = pc)
@@ -588,7 +561,7 @@ object StreamingCorpusPipeline {
           cfg.prioCol.foreach(_ => require(winIdx.hasPriorities,
             s"Config.prioCol is set but the winnow index at $p was " +
               "built without priorities (WinnowIndex.build prioCol)"))
-          val wCross = StageTimer.force("winnow", keep(
+          val wCross = Debug.force("winnow", keep(
             electCross(
               winIdx.dedupBatch(afterNear0, cfg.winTau, cfg.winMaxDf,
                 excludeSeg = Some(seg)),
@@ -598,7 +571,7 @@ object StreamingCorpusPipeline {
           val afterWc = minus(afterNear0, wCross)
           val wPairs = Dedup.winnowPairs(afterWc, k = winIdx.k, w = winIdx.w,
             tau = cfg.winTau, maxHashFreq = cfg.winMaxDf)
-          val wBatch = StageTimer.force("winnow", keep(cfg.prioCol match {
+          val wBatch = Debug.force("winnow", keep(cfg.prioCol match {
             case Some(pc) =>
               Dedup.clusterKeepersPriority(wPairs.select("a", "b"), afterWc,
                   idCol = "doc_id", prioCol = pc)
@@ -628,7 +601,7 @@ object StreamingCorpusPipeline {
           val semIdx = SemanticIndex.load(spark, p)
           val assigned = keep(semIdx.assign(afterNear, idCol = "doc_id",
             vecCol = "embedding"))
-          val sCross = StageTimer.force("semantic", keep(semIdx
+          val sCross = Debug.force("semantic", keep(semIdx
             .dedupAssigned(assigned, cfg.semTau, excludeSeg = Some(seg))
             .groupBy("vec_id").agg(min("dup_of").as("ref_id"))
             .select(col("vec_id").as("doc_id"),
@@ -637,7 +610,7 @@ object StreamingCorpusPipeline {
             sCross.select(col("doc_id").as("id")), Seq("id"), "left_anti"))
           val sim = Similarity.pairSim(semIdx.normalized,
             col("x.vec"), col("y.vec"))
-          val sBatch = StageTimer.force("semantic", keep(remaining.as("x")
+          val sBatch = Debug.force("semantic", keep(remaining.as("x")
             .join(remaining.as("y"),
               col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
             .where(sim >= cfg.semTau)
@@ -649,7 +622,7 @@ object StreamingCorpusPipeline {
           // the append is DEFERRED until after the verdict write (see
           // the ordering note below) — appendAssigned refreshes the
           // semantic index path, invalidating these very frames' caches
-          val doAppend = () => StageTimer.time("append")(
+          val doAppend = () => Debug.time("append")(
             semIdx.appendAssigned(remaining.join(
               surv.select(col("doc_id").as("id")), Seq("id"), "left_semi"),
               seg = seg))
@@ -682,8 +655,8 @@ object StreamingCorpusPipeline {
       // append). One batch-bounded lineage cut makes append order
       // irrelevant; the cut is billed to the verdict stage it
       // materializes.
-      val survCut = StageTimer.time("verdict")(survivors.localCheckpoint())
-      StageTimer.time("verdict")(qDrops
+      val survCut = Debug.time("verdict")(survivors.localCheckpoint())
+      Debug.time("verdict")(qDrops
         .unionByName(exCross).unionByName(exBatch).unionByName(contam)
         .unionByName(nearCross).unionByName(nearBatch)
         .unionByName(winCross).unionByName(winBatch)
@@ -702,30 +675,30 @@ object StreamingCorpusPipeline {
       // refresh tail while 31 cores idled. Only two orderings ever
       // mattered and both are preserved: verdict before any append
       // (cache invalidation, above) and the semantic append before any
-      // other append's refresh. StageTimer slots are per-thread elapsed,
-      // so concurrent append seconds overlap (their sum bounds the wall
+      // other append's refresh. Stage seconds are per-thread elapsed, so
+      // concurrent append seconds overlap (their sum bounds the wall
       // from above).
       inParallel(Seq[(String, () => Unit)](
-        "appendFp" -> (() => StageTimer.time("appendFp")(
+        "appendFp" -> (() => Debug.time("appendFp")(
           fpIdx.append(survCut, seg = seg, prioCol = cfg.prioCol)))
-      ) ++ lnPath.map(p => "appendLn" -> (() => StageTimer.time("append")(
+      ) ++ lnPath.map(p => "appendLn" -> (() => Debug.time("append")(
         LineIndex.load(spark, p).append(survCut, seg = seg)))
-      ) ++ winPath.map(p => "appendWin" -> (() => StageTimer.time("append")(
+      ) ++ winPath.map(p => "appendWin" -> (() => Debug.time("append")(
         WinnowIndex.load(spark, p).append(survCut, seg = seg,
           prioCol = cfg.prioCol)))
       // survivor n-gram statistics, when configured: the heavy-hitter
       // report tracks the corpus AS CONSTRUCTED (post-cleaning text,
       // drops excluded) — exactly-once by the same
       // overwrite-per-segment contract as every other append here
-      ) ++ ngPath.map(p => "appendNg" -> (() => StageTimer.time("append")(
+      ) ++ ngPath.map(p => "appendNg" -> (() => Debug.time("append")(
         NgramIndex.load(spark, p).append(survCut, seg = seg)))
-      ) :+ ("appendMh" -> (() => StageTimer.time("appendMh") {
+      ) :+ ("appendMh" -> (() => Debug.time("appendMh") {
         mhIdx.append(survCut, seg = seg,
           shingled = Some(idsOf(survCut)(shAll)),
           signatures = Some(idsOf(survCut)(sigsAll)),
           prioCol = cfg.prioCol)
       })))
-    } finally StageTimer.time("cleanup")(
+    } finally Debug.time("cleanup")(
       // REVERSE registration order — dependents before dependencies.
       // Dataset.unpersist is non-cascading: dropping an entry other
       // live entries' plans reference makes the CacheManager rebuild

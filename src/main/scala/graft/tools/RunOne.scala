@@ -8,8 +8,11 @@ import org.apache.spark.sql.SparkSession
   *
   * {{{ sbt "runMain graft.tools.RunOne d11_contamination /root/testdata/sf0.1 [explain] [gst] [xN]" }}}
   *
-  * `gst` enables the gauntlet StageTimer and prints its per-stage map
-  * after each run; `xN` (e.g. x3) repeats the timed run N times.
+  * `gst` runs each timed run inside [[graft.ops.Debug.recordStages]]
+  * and prints its stage ledger (gauntlet and span-family labels,
+  * self-time seconds, in first-recorded order); a forced run's wall
+  * includes the per-stage materializations. `xN` (e.g. x3) repeats the
+  * timed run N times.
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -30,16 +33,14 @@ object RunOne {
     val fn = graft.SparkEntry.queries(name)
     if (explain) fn(spark, sfDir).explain("formatted")
     fn(spark, sfDir).count() // warmup (codegen + JIT + parquet footers)
-    if (gst) graft.streaming.StreamingCorpusPipeline.StageTimer.enabled = true
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      val (n, stages) =
+        if (gst) graft.ops.Debug.recordStages(fn(spark, sfDir).count())
+        else (fn(spark, sfDir).count(), Nil)
       println(f"[runone] $name#$i: ${(System.nanoTime() - t0) / 1e9}%.3f s, $n rows")
-      if (gst) {
-        val st = graft.streaming.StreamingCorpusPipeline.StageTimer.last
-        println("[runone] gst " + st.synchronized(
-          st.map { case (s, v) => f"$s=$v%.2f" }.mkString(" ")))
-      }
+      if (gst)
+        println("[runone] gst " + stages.map { case (s, v) => f"$s=$v%.2f" }.mkString(" "))
     }
     spark.stop()
   }

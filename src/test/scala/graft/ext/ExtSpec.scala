@@ -1253,6 +1253,52 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF local path matches the distributed step on ragged vectors") {
+    // lengths cycle 3, 5, 2, 4: within a cell, later vectors are both
+    // longer and shorter than the first one assigned to it
+    val rnd = new scala.util.Random(17)
+    val n = 40
+    val lens = Seq(3, 5, 2, 4)
+    val c = (0 until n).map(i =>
+        (i.toLong, Seq.fill(lens(i % lens.size))(rnd.nextGaussian())))
+      .toDF("id", "vec")
+    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    // the threshold probe reads the first row's dim (3): n·3 doubles is
+    // the largest local corpus
+    val local = asMap(Similarity.ivfCentroids(c, nlist = 4, driverThreshold = 3L * n))
+    val dist = asMap(Similarity.ivfCentroids(c, nlist = 4, driverThreshold = 3L * n - 1))
+    assert(local.keySet == dist.keySet)
+    assert(local.values.map(_.size).toSet.size > 1, s"cells must stay ragged: $local")
+    local.foreach { case (cell, lv) =>
+      val dv = dist(cell)
+      assert(lv.size == dv.size, s"cell $cell: $lv vs $dv")
+      lv.zip(dv).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-9, s"cell $cell: $a vs $b")
+      }
+    }
+  }
+
+  test("pq_argmin rejects malformed input at analysis time") {
+    import org.apache.spark.sql.Column
+    val one = spark.range(1).toDF()
+    val sub = array(lit(1.0), lit(0.0))
+    val cvec = array(lit(1.0), lit(0.0))
+    def cands(fields: Column*): Column = array(struct(fields: _*))
+    val good = cands(lit(7).as("cid"), cvec.as("cvec"), lit(1.0).as("cn"))
+    assert(one.select(graft.functions.pq_argmin(sub, good)).head().getInt(0) == 7)
+    val bad = Seq(
+      "long cid" -> (sub, cands(lit(7L).as("cid"), cvec.as("cvec"), lit(1.0).as("cn"))),
+      "missing cn" -> (sub, cands(lit(7).as("cid"), cvec.as("cvec"))),
+      "reordered" -> (sub, cands(cvec.as("cvec"), lit(7).as("cid"), lit(1.0).as("cn"))),
+      "float sub" -> (array(lit(1.0f), lit(0.0f)), good))
+    bad.foreach { case (what, (s, c)) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        one.select(graft.functions.pq_argmin(s, c)).collect())
+      assert(e.getMessage.contains("pq_argmin"), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("PqArgmin codegen expression matches the interpreted fold bit-for-bit") {
     val c = Similarity.corpus(emb)
     val books = Similarity.pqCodebooks(c, m = 8, k = 16)

@@ -735,4 +735,19 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(!e.getMessage.contains("fast") && !e.getMessage.contains("quick"),
       s"finished tasks must not be blamed: ${e.getMessage}")
   }
+
+  test("inParallel: stage labels record per thread; a task's nested label " +
+    "is not billed to it") {
+    import graft.ops.Debug
+    val (_, stages) = Debug.recordStages(
+      Debug.time("outer")(StreamingCorpusPipeline.inParallel(Seq(
+        "x" -> (() => Debug.time("x")(Thread.sleep(50))),
+        "y" -> (() => Debug.time("y")(Debug.time("z")(Thread.sleep(40))))))))
+    val m = stages.toMap
+    assert(m.keySet == Set("outer", "x", "y", "z"))
+    assert(m("x") >= 0.05 && m("z") >= 0.04, m)
+    assert(m("y") < 0.03, s"y's self time must exclude z: $m")
+    // pool-thread seconds overlap the caller's: "outer" keeps its wall
+    assert(m("outer") >= 0.05, m)
+  }
 }
