@@ -56,11 +56,18 @@ object Dedup {
                           textCol: String = "text"): DataFrame =
     docs
       .select(TextAnalysis.fingerprint(col(textCol)).as("fp"), col(idCol),
-        coalesce(col(prioCol).cast("double"), lit(Double.MaxValue))
-          .as("__prio"))
+        prioRank(col(prioCol)).as("__prio"))
       .groupBy("fp")
       .agg(min_by(col(idCol), struct(col("__prio"), col(idCol))).as("keeper"),
         count(lit(1)).as("n"))
+
+  /** A priority as the keeper elections compare it: a double, lower
+    * wins, and a NULL / unparseable priority ranks last — the one
+    * spelling of "a missing priority loses" that every election and the
+    * indexes' stored priority tables share.
+    */
+  def prioRank(prio: Column): Column =
+    coalesce(prio.cast("double"), lit(Double.MaxValue))
 
   // ---- word n-gram shingles ------------------------------------------
 
@@ -1614,51 +1621,75 @@ object Dedup {
     val comp = connectedComponents(pairs.select("a", "b"))
     val withP = comp.join(
       prio.select(col(idCol).cast("long").as("id"),
-        coalesce(col(prioCol).cast("double"), lit(Double.MaxValue))
-          .as("__prio")), "id")
+        prioRank(col(prioCol)).as("__prio")), "id")
     val keepers = withP.groupBy("root")
       .agg(min_by(col("id"), struct(col("__prio"), col("id"))).as("keeper"))
     withP.join(keepers, "root").select(col("id"), col("root"), col("keeper"))
   }
 
-  /** The CROSS-INDEX (priority, id) election every streaming dedup face
-    * shares ([[graft.streaming.StreamingDedup]] /
+  /** The CROSS-INDEX keeper rule every streaming dedup face shares
+    * ([[graft.streaming.StreamingDedup]] /
     * [[graft.streaming.StreamingWinnowDedup]] / the gauntlet's exact,
-    * near, and winnow stages) — ONE definition point for the
-    * exactly-once keeper rule: a batch doc DROPS iff some indexed match
-    * is at least as trusted (its `dup_of` = the (priority, id)-minimum
-    * match — the most trusted copy, id breaking ties); a doc strictly
-    * more trusted than every indexed match falls through to survive and
-    * become keeper for its batch forward. NULL priorities compare as
-    * Double.MaxValue (lose), [[exactGroupsPriority]]'s convention.
+    * near, and winnow stages): which batch docs drop against the index,
+    * and which indexed match each one names.
+    *
+    * Without `prioCol`, every matched doc drops and names its
+    * smallest-id match. With it, the exactly-once (priority, id)
+    * election: a batch doc DROPS iff some indexed match is at least as
+    * trusted (its `dup_of` = the (priority, id)-minimum match — the most
+    * trusted copy, id breaking ties); a doc strictly more trusted than
+    * every indexed match falls through to survive and become keeper for
+    * its batch forward. Priorities compare through [[prioRank]].
     *
     * Scale shape: one equi-join of the batch's candidate pairs against
     * the index's (id, prio) table — the same cost class as the pairing
     * join that produced them (batch-side small, nothing quadratic) —
     * and the election itself is a map-side `min_by` partial aggregate.
     *
-    * @param pairs cross-dedup candidates (idCol, refCol, ...) — a
+    * @param pairs cross-dedup candidates (doc_id, dup_of, ...) — a
     *        dedupBatch output
     * @param batch the delivery frame carrying `prioCol` (joined on
-    *        idCol; extra columns ignored)
+    *        doc_id; extra columns ignored)
     * @param idxPrios the index's (id, prio) table, replay-excluded by
-    *        the caller
-    * @return (idCol, refCol) — the dropped docs with elected refs
+    *        the caller; read only when `prioCol` is set
+    * @return (doc_id, dup_of) — the dropped docs with elected refs
     */
-  def electCrossKeepers(pairs: DataFrame, batch: DataFrame, prioCol: String,
-                        idxPrios: DataFrame, idCol: String = "doc_id",
-                        refCol: String = "dup_of"): DataFrame = {
-    val bp = batch.select(col(idCol),
-      coalesce(col(prioCol).cast("double"), lit(Double.MaxValue)).as("__bp"))
-    val ip = idxPrios.select(col("id").as(refCol),
-      coalesce(col("prio"), lit(Double.MaxValue)).as("__ip"))
-    pairs.join(bp, idCol).join(ip, refCol)
-      .groupBy(idCol)
-      .agg(
-        min_by(col(refCol), struct(col("__ip"), col(refCol))).as(refCol),
-        min(col("__ip")).as("__minip"), min(col("__bp")).as("__bp"))
-      .where(col("__minip") <= col("__bp"))
-      .select(idCol, refCol)
+  def crossKeepers(pairs: DataFrame, batch: DataFrame, prioCol: Option[String],
+                   idxPrios: => DataFrame): DataFrame = prioCol match {
+    case None =>
+      pairs.groupBy("doc_id").agg(min(col("dup_of")).as("dup_of"))
+    case Some(pc) =>
+      val bp = batch.select(col("doc_id"), prioRank(col(pc)).as("__bp"))
+      val ip = idxPrios.select(col("id").as("dup_of"),
+        prioRank(col("prio")).as("__ip"))
+      pairs.join(bp, "doc_id").join(ip, "dup_of")
+        .groupBy("doc_id")
+        .agg(
+          min_by(col("dup_of"), struct(col("__ip"), col("dup_of"))).as("dup_of"),
+          min(col("__ip")).as("__minip"), min(col("__bp")).as("__bp"))
+        .where(col("__minip") <= col("__bp"))
+        .select("doc_id", "dup_of")
+  }
+
+  /** The IN-BATCH component keeper rule the streaming faces share:
+    * verified pairs → connected components → one keeper per component —
+    * the min id (the root), or with `prioCol` the (priority, id)-minimum
+    * member ([[clusterKeepersPriority]]).
+    *
+    * @param pairs verified in-batch pairs (a, b, ...)
+    * @param docs the frame the pairs came from, carrying `prioCol`
+    * @return (doc_id, dup_of) — every clustered non-keeper with its keeper
+    */
+  def batchKeepers(pairs: DataFrame, docs: DataFrame,
+                   prioCol: Option[String]): DataFrame = prioCol match {
+    case Some(pc) =>
+      clusterKeepersPriority(pairs, docs, idCol = "doc_id", prioCol = pc)
+        .where(col("id") =!= col("keeper"))
+        .select(col("id").as("doc_id"), col("keeper").as("dup_of"))
+    case None =>
+      connectedComponents(pairs)
+        .where(col("id") =!= col("root"))
+        .select(col("id").as("doc_id"), col("root").as("dup_of"))
   }
 
   /** The full near-dup curation pipeline: cluster transitively-connected
@@ -1807,6 +1838,27 @@ object Dedup {
       .select(col("y.id").as("id"))
       .distinct()
     assigned.select("id", "cell").join(dropped, Seq("id"), "left_anti")
+  }
+
+  /** The in-batch SemDeDup keeper rule of the streaming semantic faces:
+    * within each cell of an assigned (id, vec, cell) frame, a vector
+    * with a SMALLER-id cell-mate at similarity >= tau drops and names
+    * the smallest such id — [[semanticDedup]]'s rule with the keeper
+    * recorded. Batch-sized input, so the cell join is unsalted
+    * ([[graft.streaming.StreamingCorpusPipeline.bootstrapSemantic]]
+    * salts the same rule for a whole corpus).
+    *
+    * @return (id, dup_of)
+    */
+  def cellKeepers(assigned: DataFrame, tau: Double,
+                  normalized: Boolean): DataFrame = {
+    val sim = Similarity.pairSim(normalized, col("x.vec"), col("y.vec"))
+    assigned.as("x")
+      .join(assigned.as("y"),
+        col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
+      .where(sim >= tau)
+      .groupBy(col("y.id").as("id"))
+      .agg(min(col("x.id")).as("dup_of"))
   }
 
   /** D4-style prototype pruning (Tirumala et al. 2023, "D4: Improving

@@ -55,29 +55,13 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 final class FingerprintIndex private[ext] (val spark: SparkSession,
                                            val path: String,
-                                           val fpp: Double = 0.01) {
+                                           val fpp: Double = 0.01)
+    extends PrioritizedIndex {
 
   private def fps(excludeSeg: Option[String]): DataFrame = {
     val raw = spark.read.parquet(s"$path/fps")
     excludeSeg.fold(raw)(s => raw.where(col("seg") =!= s))
       .select(col("id"), col("fp"))
-  }
-
-  /** Whether this index carries per-document priorities (built with
-    * `prioCol`) — the gate for the streaming (priority, id) keeper
-    * election ([[MinHashIndex.hasPriorities]]'s contract verbatim;
-    * directory presence is the marker, the Bloom-sidecar lifecycle).
-    */
-  def hasPriorities: Boolean = new File(path, "prio").isDirectory
-
-  /** The indexed documents' priorities (id, prio) — lower wins, NULL
-    * was stored as Double.MaxValue. Only meaningful when
-    * [[hasPriorities]]; same per-segment exclusion contract as fps.
-    */
-  def priorities(excludeSeg: Option[String] = None): DataFrame = {
-    val raw = spark.read.parquet(s"$path/prio")
-    excludeSeg.fold(raw)(s => raw.where(col("seg") =!= s))
-      .select(col("id"), col("prio"))
   }
 
   private def fingerprints(docs: DataFrame, idCol: String,
@@ -149,17 +133,7 @@ final class FingerprintIndex private[ext] (val spark: SparkSession,
     val fpDf = fingerprints(newDocs, idCol, textCol)
     fpDf.write.mode("overwrite").parquet(s"$path/fps/seg=$seg")
     SegmentedTable.refreshParent(spark, s"$path/fps")
-    // prio lifecycle mirrors fps exactly (overwrite-per-segment,
-    // folded by compact); a priority-less append into a prioritized
-    // index stores MaxValue — those docs lose every future election
-    if (hasPriorities) {
-      newDocs.select(col(idCol).as("id"),
-          coalesce(prioCol.map(c => col(c).cast("double"))
-            .getOrElse(lit(null).cast("double")), lit(Double.MaxValue))
-            .as("prio"))
-        .write.mode("overwrite").parquet(s"$path/prio/seg=$seg")
-      SegmentedTable.refreshParent(spark, s"$path/prio")
-    }
+    appendPriorities(newDocs, seg, idCol, prioCol)
     if (new File(path, "bloom").isDirectory) writeBloom(seg)
   }
 
@@ -171,9 +145,7 @@ final class FingerprintIndex private[ext] (val spark: SparkSession,
   def compact(folds: Seq[String]): Seq[String] = {
     val folded = SegmentedTable.compact(spark, s"$path/fps", "seg", "base",
       folds, Seq("id", "fp"))
-    if (hasPriorities)
-      SegmentedTable.compact(spark, s"$path/prio", "seg", "base",
-        folds, Seq("id", "prio"))
+    compactPriorities(folds)
     if (folded.nonEmpty && new File(path, "bloom").isDirectory) {
       // rebuild base FIRST, then delete the folded sidecars: a crash (or
       // concurrent reader) between the two steps must only ever see
@@ -185,15 +157,6 @@ final class FingerprintIndex private[ext] (val spark: SparkSession,
       folded.foreach(s => new File(path, s"bloom/seg=$s.bf").delete(): Unit)
     }
     folded
-  }
-
-  /** Fold every `b<batchId>` segment strictly older than the
-    * checkpoint's newest committed batch (replay-safe boundary).
-    */
-  def compactCommitted(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil
-    else compact(committed.init.map(b => s"b$b"))
   }
 
   /** Build segment `seg`'s Bloom sidecar from its persisted fps (sized

@@ -30,7 +30,8 @@ import org.apache.spark.sql.functions._
   * hold raw.
   */
 final class LineIndex private[ext] (val spark: SparkSession, val path: String,
-                                    val sep: String, val minLen: Int) {
+                                    val sep: String, val minLen: Int)
+    extends SegmentedIndex {
 
   private def indexed(excludeSeg: Option[String]): DataFrame = {
     val raw = spark.read.parquet(s"$path/lines")
@@ -117,15 +118,6 @@ final class LineIndex private[ext] (val spark: SparkSession, val path: String,
   def compact(folds: Seq[String]): Seq[String] =
     SegmentedTable.compact(spark, s"$path/lines", "seg", "base", folds,
       Seq("lh"))
-
-  /** Fold every `b<batchId>` segment strictly older than the
-    * checkpoint's newest committed batch (replay-safe boundary).
-    */
-  def compactCommitted(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil
-    else compact(committed.init.map(b => s"b$b"))
-  }
 }
 
 object LineIndex {

@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
   */
 final class MinHashIndex private[ext] (val spark: SparkSession, val path: String,
                                        val n: Int, val k: Int, val bands: Int,
-                                       val sigMode: String = "classic") {
+                                       val sigMode: String = "classic")
+    extends PrioritizedIndex {
 
   /** The index's signature builder — `classic` ([[Dedup.minhashSignatures]],
     * k rehashes per shingle; the measured default — see that method's
@@ -64,22 +65,6 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
   def shingleTable: DataFrame = table("shingles", Seq("id", "h"), None)
   def signatures: DataFrame = table("sigs", Seq("id", "sig"), None)
   def bandBuckets: DataFrame = table("bands", Seq("id", "band", "bh"), None)
-
-  /** Whether this index carries per-document priorities (built with
-    * `prioCol`) — the gate for the streaming (priority, id) keeper
-    * election. Directory presence is the marker, the Bloom-sidecar
-    * lifecycle precedent ([[FingerprintIndex]]).
-    */
-  def hasPriorities: Boolean = new java.io.File(path, "prio").isDirectory
-
-  /** The indexed documents' priorities (id, prio) — lower wins, NULL
-    * was stored as Double.MaxValue (loses every election,
-    * [[Dedup.exactGroupsPriority]]'s convention). Only meaningful when
-    * [[hasPriorities]]; same per-segment exclusion contract as the
-    * other tables.
-    */
-  def priorities(excludeSeg: Option[String] = None): DataFrame =
-    table("prio", Seq("id", "prio"), excludeSeg)
 
   /** One index table, optionally excluding a segment — the exclusion is
     * a partition filter on `seg`, so the skipped segment's files are
@@ -219,18 +204,8 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
         sigs.write.mode("overwrite").parquet(s"$path/sigs/seg=$seg")
         Dedup.bandHashes(sigs, k, bands)
           .write.mode("overwrite").parquet(s"$path/bands/seg=$seg")
-        // the prio table's lifecycle mirrors the others exactly
-        // (overwrite-per-segment, folded by compact); a priority-less
-        // append into a prioritized index stores MaxValue — those docs
-        // lose every future election rather than silently winning
-        if (hasPriorities)
-          newDocs.select(col(idCol).as("id"),
-              coalesce(prioCol.map(c => col(c).cast("double"))
-                .getOrElse(lit(null).cast("double")), lit(Double.MaxValue))
-                .as("prio"))
-            .write.mode("overwrite").parquet(s"$path/prio/seg=$seg")
-        (Seq("shingles", "sigs", "bands") ++
-          (if (hasPriorities) Seq("prio") else Nil)).foreach(t =>
+        appendPriorities(newDocs, seg, idCol, prioCol)
+        Seq("shingles", "sigs", "bands").foreach(t =>
           SegmentedTable.refreshParent(spark, s"$path/$t"))
       } finally if (signatures.isEmpty) sigs.unpersist(blocking = true): Unit
     } finally if (shingled.isEmpty) sh.unpersist(blocking = true): Unit
@@ -258,22 +233,8 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
       folds, Seq("id", "sig"))
     SegmentedTable.compact(spark, s"$path/bands", "seg", "base",
       folds, Seq("id", "band", "bh"))
-    if (hasPriorities)
-      SegmentedTable.compact(spark, s"$path/prio", "seg", "base",
-        folds, Seq("id", "prio"))
+    compactPriorities(folds)
     done
-  }
-
-  /** Compact every `b<batchId>` segment STRICTLY OLDER than the
-    * checkpoint's newest committed batch. The newest commit's segment is
-    * deliberately left unfolded as insurance, and any batch after it may
-    * still be replayed (its replay excludes its own segment — which must
-    * therefore still exist as a segment, not as folded base rows).
-    */
-  def compactCommitted(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil
-    else compact(committed.init.map(b => s"b$b"))
   }
 }
 
@@ -281,10 +242,7 @@ object MinHashIndex {
 
   /** Build and persist the index over a corpus, replacing whatever lived
     * at `path` (stale segments from an older index must not survive into
-    * the new hash space).
-    */
-  /** Build and persist the index over a corpus, replacing whatever lived
-    * at `path`. `prioCol = Some(c)` turns the priority table on for this
+    * the new hash space). `prioCol = Some(c)` turns the priority table on for this
     * index's lifetime: every append stores (id, prio) alongside the
     * derived tables and [[MinHashIndex.priorities]] feeds the streaming
     * (priority, id) keeper election ([[graft.streaming.StreamingDedup]]).
@@ -295,7 +253,7 @@ object MinHashIndex {
             prioCol: Option[String] = None): MinHashIndex = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     require(sig == "classic" || sig == "oph", s"unknown signature mode: $sig")
-    deleteRecursively(new java.io.File(path))
+    SegmentedTable.deleteRecursively(new java.io.File(path))
     Files.createDirectories(Paths.get(path))
     if (prioCol.isDefined) Files.createDirectories(Paths.get(path, "prio"))
     val idx = new MinHashIndex(docs.sparkSession, path, n, k, bands, sig)
@@ -319,10 +277,5 @@ object MinHashIndex {
     require(sig == "classic" || sig == "oph", s"unknown signature mode: $sig")
     new MinHashIndex(spark, path, params("n").toInt, params("k").toInt,
       params("bands").toInt, sig)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

@@ -39,7 +39,8 @@ import org.apache.spark.sql.functions._
   * a reader must never mix orders.
   */
 final class NgramIndex private[ext] (val spark: SparkSession,
-                                     val path: String, val n: Int) {
+                                     val path: String, val n: Int)
+    extends SegmentedIndex {
 
   private def gramStats(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame =
@@ -82,15 +83,6 @@ final class NgramIndex private[ext] (val spark: SparkSession,
   def compact(folds: Seq[String]): Seq[String] =
     SegmentedTable.compact(spark, s"$path/grams", "seg", "base", folds,
       Seq("gram", "tf", "df"))
-
-  /** Fold every `b<batchId>` segment strictly older than the
-    * checkpoint's newest committed batch (replay-safe boundary).
-    */
-  def compactCommitted(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil
-    else compact(committed.init.map(b => s"b$b"))
-  }
 }
 
 object NgramIndex {

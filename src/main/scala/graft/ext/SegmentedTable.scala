@@ -3,8 +3,8 @@ package graft.ext
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Compaction for the `seg=`-partitioned parquet tables the incremental
   * indexes accrete ([[MinHashIndex.append]], [[Similarity.appendIvfIndex]],
@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions.col
   *
   * Replay safety is the CALLER's contract: never fold a segment a
   * restarted stream could replay (fold only batches strictly older than
-  * the checkpoint's newest commit — [[MinHashIndex.compactCommitted]]
-  * encodes that rule). A replayed batch excludes its OWN segment when it
-  * re-reads the index; folding that segment into base would un-hide it
-  * and flip the replay's verdicts.
+  * the checkpoint's newest commit — [[foldable]] is that rule, and
+  * [[SegmentedIndex.compactCommitted]] applies it). A replayed batch
+  * excludes its OWN segment when it re-reads the index; folding that
+  * segment into base would un-hide it and flip the replay's verdicts.
   */
 private[graft] object SegmentedTable {
 
@@ -102,6 +102,17 @@ private[graft] object SegmentedTable {
       .sorted
       .toSeq
 
+  /** The replay-safe fold boundary: every `b<batchId>` segment strictly
+    * older than the checkpoint's newest commit. The newest commit's
+    * segment stays unfolded as insurance, and any batch after it may
+    * still be replayed (its replay excludes its own segment — which must
+    * therefore still exist as a segment, not as folded base rows).
+    */
+  def foldable(checkpoint: String): Seq[String] = {
+    val committed = committedBatches(checkpoint)
+    if (committed.size < 2) Nil else committed.init.map(b => s"b$b")
+  }
+
   def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
@@ -117,4 +128,74 @@ private[graft] object SegmentedTable {
       .linesIterator.filter(_.contains("="))
       .map { l => val Array(a, b) = l.split("=", 2); (a.trim, b.trim) }
       .toMap
+}
+
+/** An index persisted as `seg=`-partitioned tables under `path`, whose
+  * [[compact]] folds named segments into `base` — every streaming dedup
+  * index. Its stream-side fold is [[compactCommitted]], defined once here
+  * over the [[SegmentedTable.foldable]] boundary.
+  */
+trait SegmentedIndex {
+  def spark: SparkSession
+  def path: String
+
+  /** Fold appended segments into `base`; returns the segments folded. */
+  def compact(folds: Seq[String]): Seq[String]
+
+  /** Fold every `b<batchId>` segment strictly older than the checkpoint's
+    * newest committed batch ([[SegmentedTable.foldable]]).
+    */
+  def compactCommitted(checkpoint: String): Seq[String] =
+    compact(SegmentedTable.foldable(checkpoint))
+}
+
+/** A [[SegmentedIndex]] that can carry per-document priorities: a
+  * `prio/seg=<s>/` (id, prio) table whose lifecycle mirrors the index's
+  * other tables (overwrite-per-segment appends, folded by compact). The
+  * priority table feeds the streaming (priority, id) keeper election
+  * ([[Dedup.crossKeepers]]); lower wins, and a missing priority is
+  * stored as [[Dedup.prioRank]]'s loser value.
+  */
+trait PrioritizedIndex extends SegmentedIndex {
+
+  /** Whether this index carries priorities (built with `prioCol`).
+    * Directory presence is the marker, the Bloom-sidecar lifecycle
+    * precedent ([[FingerprintIndex]]).
+    */
+  def hasPriorities: Boolean = new File(path, "prio").isDirectory
+
+  /** The indexed documents' priorities (id, prio). Only meaningful when
+    * [[hasPriorities]]; a replaying batch passes its own segment as
+    * `excludeSeg`, like every other index read.
+    */
+  def priorities(excludeSeg: Option[String] = None): DataFrame = {
+    val raw = spark.read.parquet(s"$path/prio")
+    excludeSeg.fold(raw)(s => raw.where(col("seg") =!= s))
+      .select(col("id"), col("prio"))
+  }
+
+  /** A stream that elects by priority needs an index built with them. */
+  def requirePriorities(prioCol: Option[String]): Unit =
+    prioCol.foreach(_ => require(hasPriorities,
+      s"prioCol is set but the index at $path was built without " +
+        s"priorities (${getClass.getSimpleName}.build prioCol)"))
+
+  /** Write segment `seg` of the priority table when the index carries
+    * one. A priority-less append into a prioritized index stores the
+    * loser value — those docs lose every future election rather than
+    * silently winning.
+    */
+  protected def appendPriorities(docs: DataFrame, seg: String, idCol: String,
+                                 prioCol: Option[String]): Unit =
+    if (hasPriorities) {
+      docs.select(col(idCol).as("id"),
+          Dedup.prioRank(prioCol.fold(lit(null))(col)).as("prio"))
+        .write.mode("overwrite").parquet(s"$path/prio/seg=$seg")
+      SegmentedTable.refreshParent(spark, s"$path/prio")
+    }
+
+  protected def compactPriorities(folds: Seq[String]): Unit =
+    if (hasPriorities)
+      SegmentedTable.compact(spark, s"$path/prio", "seg", "base", folds,
+        Seq("id", "prio")): Unit
 }

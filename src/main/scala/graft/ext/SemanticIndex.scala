@@ -39,7 +39,8 @@ import org.apache.spark.sql.functions._
   */
 final class SemanticIndex private[ext] (val spark: SparkSession,
                                         val path: String, val nlist: Int,
-                                        val normalized: Boolean) {
+                                        val normalized: Boolean)
+    extends SegmentedIndex {
 
   private def prepare(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     if (normalized) Similarity.corpusNormalized(emb, idCol, vecCol)
@@ -146,18 +147,6 @@ final class SemanticIndex private[ext] (val spark: SparkSession,
   def compact(folds: Seq[String]): Seq[String] =
     SegmentedTable.compact(spark, s"$path/members", "seg", "base", folds,
       Seq("id", "cell", "vec"), subPartition = Seq("cell"))
-
-  /** Fold every `b<batchId>` segment STRICTLY OLDER than the
-    * checkpoint's newest committed batch ([[MinHashIndex.compactCommitted]]
-    * boundary — the newest commit stays unfolded as insurance, and a
-    * replayable batch's own segment must survive as a segment for its
-    * exclusion read).
-    */
-  def compactCommitted(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil
-    else compact(committed.init.map(b => s"b$b"))
-  }
 }
 
 object SemanticIndex {

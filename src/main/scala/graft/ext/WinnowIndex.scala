@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   * `shingleIntersections` convention, mirrored by the oracle).
   */
 final class WinnowIndex private[ext] (val spark: SparkSession, val path: String,
-                                      val k: Int, val w: Int) {
+                                      val k: Int, val w: Int)
+    extends PrioritizedIndex {
 
   private def table(name: String, cols: Seq[String],
                     excludeSeg: Option[String]): DataFrame = {
@@ -43,17 +44,6 @@ final class WinnowIndex private[ext] (val spark: SparkSession, val path: String,
 
   def fingerprints: DataFrame = table("fps", Seq("id", "h"), None)
   def sizes: DataFrame = table("sizes", Seq("id", "sz"), None)
-
-  /** Whether this index carries per-document priorities (built with
-    * `prioCol`) — [[MinHashIndex.hasPriorities]]'s contract verbatim.
-    */
-  def hasPriorities: Boolean = new java.io.File(path, "prio").isDirectory
-
-  /** The indexed documents' priorities (id, prio) — lower wins, NULL
-    * stored as Double.MaxValue; same exclusion contract as fps.
-    */
-  def priorities(excludeSeg: Option[String] = None): DataFrame =
-    table("prio", Seq("id", "prio"), excludeSeg)
 
   private def fpOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     TextAnalysis.winnowFingerprints(docs, k = k, w = w,
@@ -112,26 +102,10 @@ final class WinnowIndex private[ext] (val spark: SparkSession, val path: String,
       fp.write.mode("overwrite").parquet(s"$path/fps/seg=$seg")
       fp.groupBy("id").agg(count(lit(1)).as("sz"))
         .write.mode("overwrite").parquet(s"$path/sizes/seg=$seg")
-      // the prio lifecycle mirrors fps (MinHashIndex.append's contract)
-      if (hasPriorities)
-        keptDocs.select(col(idCol).as("id"),
-            coalesce(prioCol.map(c => col(c).cast("double"))
-              .getOrElse(lit(null).cast("double")), lit(Double.MaxValue))
-              .as("prio"))
-          .write.mode("overwrite").parquet(s"$path/prio/seg=$seg")
-      (Seq("fps", "sizes") ++
-        (if (hasPriorities) Seq("prio") else Nil)).foreach(t =>
+      appendPriorities(keptDocs, seg, idCol, prioCol)
+      Seq("fps", "sizes").foreach(t =>
         SegmentedTable.refreshParent(spark, s"$path/$t"))
     } finally fp.unpersist(blocking = true): Unit
-  }
-
-  /** Fold every `b<batchId>` segment strictly older than the
-    * checkpoint's newest committed batch (replay-safe boundary).
-    */
-  def compactCommitted(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil
-    else compact(committed.init.map(b => s"b$b"))
   }
 
   /** Fold appended segments into `base` (rows preserved verbatim). */
@@ -141,9 +115,7 @@ final class WinnowIndex private[ext] (val spark: SparkSession, val path: String,
     val b = SegmentedTable.compact(spark, s"$path/sizes", "seg", "base", folds,
       Seq("id", "sz"))
     require(a == b, s"fps/sizes segment sets diverged: $a vs $b")
-    if (hasPriorities)
-      SegmentedTable.compact(spark, s"$path/prio", "seg", "base", folds,
-        Seq("id", "prio"))
+    compactPriorities(folds)
     a
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{SegmentedTable, Similarity}
 
@@ -22,11 +22,11 @@ import graft.ext.{SegmentedTable, Similarity}
   *
   * `compactEvery = K` folds segments strictly older than the
   * checkpoint's newest commit into `base` every K batches
-  * ([[SegmentedTable.committedBatches]] boundary — a replayable batch's
+  * ([[SegmentedTable.foldable]] boundary — a replayable batch's
   * segment is never folded), bounding the index's file and
   * partition-listing footprint by compaction cadence instead of stream
-  * age (tools/DedupSoak quantifies the two regimes for the same
-  * segment layout).
+  * age (`graft.tools.Soak dedup` quantifies the two regimes for the
+  * same segment layout).
   *
   * Drift caveat carried from the append contract: quantization/cell
   * assignment quality degrades only as far as the feed drifts from the
@@ -41,45 +41,21 @@ object StreamingAnnIngest {
   def startIvf(emb: DataFrame, indexPath: String, checkpoint: String,
                idCol: String = "vec_id", vecCol: String = "embedding",
                compactEvery: Int = 0): StreamingQuery =
-    start(emb, checkpoint, idCol, vecCol) { (batch, batchId) =>
-      Similarity.appendIvfIndex(indexPath, batch, seg = s"b$batchId",
-        idCol = idCol, vecCol = vecCol)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        Similarity.compactIvfIndex(batch.sparkSession, indexPath,
-          foldableSegs(checkpoint)): Unit
-    }
+    StreamingDedup.run(emb.select(col(idCol), col(vecCol)), checkpoint,
+        compactEvery)(
+      (batch, batchId) => Similarity.appendIvfIndex(indexPath, batch,
+        seg = s"b$batchId", idCol = idCol, vecCol = vecCol))(
+      s => Similarity.compactIvfIndex(s, indexPath,
+        SegmentedTable.foldable(checkpoint)): Unit)
 
   /** PQ twin of [[startIvf]] ([[Similarity.savePqIndex]] artifact). */
   def startPq(emb: DataFrame, indexPath: String, checkpoint: String,
               idCol: String = "vec_id", vecCol: String = "embedding",
               compactEvery: Int = 0): StreamingQuery =
-    start(emb, checkpoint, idCol, vecCol) { (batch, batchId) =>
-      Similarity.appendPqIndex(indexPath, batch, ixseg = s"b$batchId",
-        idCol = idCol, vecCol = vecCol)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        Similarity.compactPqIndex(batch.sparkSession, indexPath,
-          foldableSegs(checkpoint)): Unit
-    }
-
-  /** Segments safe to fold: batches strictly older than the newest
-    * commit (the newest stays as insurance; later batches may replay).
-    */
-  private def foldableSegs(checkpoint: String): Seq[String] = {
-    val committed = SegmentedTable.committedBatches(checkpoint)
-    if (committed.size < 2) Nil else committed.init.map(b => s"b$b")
-  }
-
-  private def start(emb: DataFrame, checkpoint: String,
-                    idCol: String, vecCol: String)(
-      append: (DataFrame, Long) => Unit): StreamingQuery =
-    emb
-      .select(col(idCol), col(vecCol))
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) append(batch, batchId)
-      }
-      .start()
+    StreamingDedup.run(emb.select(col(idCol), col(vecCol)), checkpoint,
+        compactEvery)(
+      (batch, batchId) => Similarity.appendPqIndex(indexPath, batch,
+        ixseg = s"b$batchId", idCol = idCol, vecCol = vecCol))(
+      s => Similarity.compactPqIndex(s, indexPath,
+        SegmentedTable.foldable(checkpoint)): Unit)
 }

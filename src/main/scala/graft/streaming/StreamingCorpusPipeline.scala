@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ext.{Dedup, FingerprintIndex, LineIndex, MinHashIndex, NgramIndex, SemanticIndex, Similarity, SpanIndex, TextAnalysis, WinnowIndex}
+import graft.ext.{Dedup, FingerprintIndex, LineIndex, MinHashIndex, NgramIndex, PrioritizedIndex, SegmentedIndex, SemanticIndex, Similarity, SpanIndex, TextAnalysis, WinnowIndex}
 import graft.ops.Debug
 
 /** The turnkey continuous corpus constructor: every delivery flows
@@ -69,15 +69,25 @@ object StreamingCorpusPipeline {
     * replayed batch — then the first failure propagates with every
     * LATER failure attached as suppressed (a shared-FS outage fails
     * several appends at once; losing all but one exception hampers
-    * diagnosis). A generous per-call timeout bounds the wait — one hung
-    * append job must not hang the batch forever — and the timeout error
-    * names which tasks were still running.
+    * diagnosis).
+    *
+    * A generous per-call timeout bounds the wait — one hung append job
+    * must not hang the batch forever. Every task's Spark jobs run under
+    * one per-call job tag of the active session, so on timeout the
+    * call cancels those jobs (interrupting their tasks), interrupts the
+    * pool threads and waits (bounded) for them to end BEFORE it throws:
+    * a timed-out append must not keep writing while the replay rewrites
+    * the same `seg=` directory. The timeout error names which tasks
+    * were still running.
     */
   private[streaming] def inParallel(tasks: Seq[(String, () => Unit)],
                                     timeout: scala.concurrent.duration.Duration =
                                       scala.concurrent.duration.Duration(30, "min")): Unit =
     if (tasks.sizeIs <= 1) tasks.foreach(_._2())
     else {
+      val sc = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+      val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -89,15 +99,21 @@ object StreamingCorpusPipeline {
           try scala.concurrent.Await.result(
             scala.concurrent.Future.sequence(
               tasks.map { case (name, t) => scala.concurrent.Future {
-                try scala.util.Try(t())
-                finally { pendingNames.remove(name): Unit }
+                try scala.util.Try {
+                  sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+                  try t() finally sc.foreach(_.removeJobTag(tag))
+                } finally { pendingNames.remove(name): Unit }
               } }),
             timeout)
           catch {
             case e: java.util.concurrent.TimeoutException =>
+              val stuck = pendingNames.toArray.mkString(", ")
+              sc.foreach(_.cancelJobsWithTag(tag))
+              pool.shutdownNow()
+              pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
               throw new java.util.concurrent.TimeoutException(
                 s"inParallel timed out after $timeout; still running: " +
-                  pendingNames.toArray.mkString(", ")).initCause(e)
+                  stuck).initCause(e)
           }
         done.collect { case scala.util.Failure(e) => e } match {
           case Seq() => ()
@@ -170,36 +186,25 @@ object StreamingCorpusPipeline {
             winPath: Option[String] = None,
             lnPath: Option[String] = None,
             ngPath: Option[String] = None): StreamingQuery =
-    docs
-      .select(col("doc_id") +: col("text") +:
-        (semPath.map(_ => col("embedding")).toSeq ++
-          cfg.prioCol.map(col).toSeq): _*)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, fpPath, mhPath, spanPath,
-            verdictPath, cfg, semPath, winPath, lnPath, ngPath)
-          if (cfg.compactEvery > 0 && batchId > 0 &&
-              batchId % cfg.compactEvery == 0) {
-            FingerprintIndex.load(batch.sparkSession, fpPath)
-              .compactCommitted(checkpoint)
-            MinHashIndex.load(batch.sparkSession, mhPath)
-              .compactCommitted(checkpoint)
-            semPath.foreach(p => SemanticIndex.load(batch.sparkSession, p)
-              .compactCommitted(checkpoint))
-            winPath.foreach(p => WinnowIndex.load(batch.sparkSession, p)
-              .compactCommitted(checkpoint))
-            lnPath.foreach(p => LineIndex.load(batch.sparkSession, p)
-              .compactCommitted(checkpoint))
-            ngPath.foreach(p => NgramIndex.load(batch.sparkSession, p)
-              .compactCommitted(checkpoint)): Unit
-          }
-        }
-      }
-      .start()
+    StreamingDedup.run(docs.select(carried(cfg, semPath): _*), checkpoint,
+        cfg.compactEvery)(
+      processBatch(_, _, fpPath, mhPath, spanPath, verdictPath, cfg, semPath,
+        winPath, lnPath, ngPath))(
+      s => (Seq[SegmentedIndex](FingerprintIndex.load(s, fpPath),
+          MinHashIndex.load(s, mhPath)) ++
+        semPath.map(SemanticIndex.load(s, _)) ++
+        winPath.map(WinnowIndex.load(s, _)) ++
+        lnPath.map(LineIndex.load(s, _)) ++
+        ngPath.map(NgramIndex.load(s, _)))
+        .foreach(_.compactCommitted(checkpoint)))
+
+  /** The gauntlet's carried columns: (doc_id, text), plus the embedding
+    * when the semantic stage is on and the priority column when the
+    * election is on.
+    */
+  private def carried(cfg: Config, semPath: Option[String]): Seq[Column] =
+    col("doc_id") +: col("text") +:
+      (semPath.map(_ => col("embedding")).toSeq ++ cfg.prioCol.map(col).toSeq)
 
   /** Cold-start bootstrap: run the gauntlet's BATCH-GLOBAL twin over a
     * historical corpus and seed both dedup indexes from the survivors —
@@ -333,8 +338,8 @@ object StreamingCorpusPipeline {
 
   /** One batch of the gauntlet — public so a batch backfill applies
     * IDENTICAL semantics outside a stream. Each stage's seconds go to
-    * the [[graft.ops.Debug.stages]] ledger under a fixed label while
-    * [[graft.ops.Debug.forceStages]] is on.
+    * the stage ledger under a fixed label while the batch runs inside
+    * [[graft.ops.Debug.recordStages]].
     */
   def processBatch(batch: DataFrame, batchId: Long, fpPath: String,
                    mhPath: String, spanPath: Option[String],
@@ -345,11 +350,7 @@ object StreamingCorpusPipeline {
                    ngPath: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val seg = s"b$batchId"
-    // the embedding column rides along only when the semantic stage is
-    // on; the priority column only when the election is on
-    val carried = col("doc_id") +: col("text") +:
-      (semPath.map(_ => col("embedding")).toSeq ++
-        cfg.prioCol.map(col).toSeq)
+    val carriedCols = carried(cfg, semPath)
     def emptyVerdicts: DataFrame = spark.emptyDataFrame
       .select(lit(0L).as("doc_id"), lit("").as("verdict"),
         lit(null).cast("long").as("ref_id"))
@@ -361,7 +362,7 @@ object StreamingCorpusPipeline {
     // any future carried column) rides through normalizeDocs untouched.
     // Seed/bootstrap corpora must be normalized with the SAME form at
     // index-build time — the index stores post-normalization content.
-    val docs0 = batch.select(carried: _*)
+    val docs0 = batch.select(carriedCols: _*)
     val docs = cfg.normalizeForm.fold(docs0)(fm =>
       TextAnalysis.normalizeDocs(docs0, fm)
         // project docs0's own columns back (text swapped for its
@@ -415,32 +416,30 @@ object StreamingCorpusPipeline {
         case None => afterQ0
       }
 
-      // cross-index (priority, id) election, shared by the exact and
-      // near stages — StreamingDedup's rule verbatim: drop iff some
-      // indexed match is at least as trusted (ref = the (prio, id)-min
-      // match); a strictly more trusted clone survives to become
-      // keeper for its batch forward. Without prioCol: min-id, the
-      // original spelling.
-      def electCross(pairs: DataFrame, idxPrios: => DataFrame): DataFrame =
-        cfg.prioCol match {
-          case Some(pc) =>
-            Dedup.electCrossKeepers(pairs, docs, pc, idxPrios)
-              .withColumnRenamed("dup_of", "ref_id")
-          case None =>
-            pairs.groupBy("doc_id").agg(min("dup_of").as("ref_id"))
-        }
+      // cross-index keeper, shared by the exact, near and winnow stages
+      // (Dedup.crossKeepers — StreamingDedup's rule), as a verdict
+      def crossVerdicts(idx: PrioritizedIndex, pairs: DataFrame,
+                        verdict: String): DataFrame =
+        Dedup.crossKeepers(pairs, docs, cfg.prioCol,
+            idx.priorities(excludeSeg = Some(seg)))
+          .select(col("doc_id"), lit(verdict).as("verdict"),
+            col("dup_of").as("ref_id"))
+      // in-batch component keeper, shared by the near and winnow stages
+      // (Dedup.batchKeepers — StreamingDedup's rule), as a verdict
+      def batchVerdicts(pairs: DataFrame, from: DataFrame,
+                        verdict: String): DataFrame =
+        Dedup.batchKeepers(pairs, from, cfg.prioCol)
+          .select(col("doc_id"), lit(verdict).as("verdict"),
+            col("dup_of").as("ref_id"))
 
       // 2a. exact vs the kept corpus (own segment excluded for replay)
       val fpIdx = FingerprintIndex.load(spark, fpPath)
-      cfg.prioCol.foreach(_ => require(fpIdx.hasPriorities,
-        s"Config.prioCol is set but the fingerprint index at $fpPath " +
-          "was built without priorities (FingerprintIndex.build prioCol)"))
+      fpIdx.requirePriorities(cfg.prioCol)
       val exPairs =
         if (cfg.bloomGate) fpIdx.dedupBatchBloom(afterQ, excludeSeg = Some(seg))
         else fpIdx.dedupBatch(afterQ, excludeSeg = Some(seg))
       val exCross = Debug.force("exact", keep(
-        electCross(exPairs, fpIdx.priorities(excludeSeg = Some(seg)))
-          .select(col("doc_id"), lit("dup_exact").as("verdict"), col("ref_id"))))
+        crossVerdicts(fpIdx, exPairs, "dup_exact")))
       val afterExC = minus(afterQ, exCross)
       // 2b. exact within the batch: the (priority, id)-minimum
       // occurrence kept — first (smallest-id) without prioCol
@@ -450,8 +449,7 @@ object StreamingCorpusPipeline {
           afterExC
             .select(col("doc_id"),
               TextAnalysis.fingerprint(col("text")).as("fp"),
-              coalesce(col(pc).cast("double"), lit(Double.MaxValue))
-                .as("__p"))
+              Dedup.prioRank(col(pc)).as("__p"))
             .withColumn("keeper",
               min(struct(col("__p"), col("doc_id"))).over(wFp)
                 .getField("doc_id"))
@@ -486,7 +484,7 @@ object StreamingCorpusPipeline {
       // by construction (micro-batches are bounded), so materializing
       // it is cheap and every downstream plan starts from an RDD scan.
       val afterC = Debug.time("near")(
-        minus(afterEx, contam).select(carried: _*).localCheckpoint())
+        minus(afterEx, contam).select(carriedCols: _*).localCheckpoint())
 
       // 4. near-dup: cross vs the index, then in-batch components
       // (StreamingDedup's rule). The batch is shingled and signed ONCE
@@ -496,9 +494,7 @@ object StreamingCorpusPipeline {
       // filtered shingles), instead of re-tokenizing the batch three
       // times.
       val mhIdx = MinHashIndex.load(spark, mhPath)
-      cfg.prioCol.foreach(_ => require(mhIdx.hasPriorities,
-        s"Config.prioCol is set but the MinHash index at $mhPath " +
-          "was built without priorities (MinHashIndex.build prioCol)"))
+      mhIdx.requirePriorities(cfg.prioCol)
       def idsOf(d: DataFrame)(t: DataFrame): DataFrame =
         t.join(d.select(col("doc_id").as("id")), Seq("id"), "left_semi")
       val shAll = keep(Dedup.hashShingles(Dedup.shingles(afterC, mhIdx.n)))
@@ -521,31 +517,19 @@ object StreamingCorpusPipeline {
         mhIdx.nearPairsUnion(afterC, cfg.tau, excludeSeg = Some(seg),
           shingled = Some(shAll), signatures = Some(sigsAll))))
       val nearCross = Debug.force("near", keep(
-        electCross(
+        crossVerdicts(mhIdx,
           nearPairs.where(col("cross"))
             .select(col("a").as("doc_id"), col("b").as("dup_of"),
               col("jaccard")),
-          mhIdx.priorities(excludeSeg = Some(seg)))
-          .select(col("doc_id"), lit("dup_index").as("verdict"), col("ref_id"))))
+          "dup_index")))
       val afterNc = Debug.time("near")(
-        minus(afterC, nearCross).select(carried: _*).localCheckpoint())
+        minus(afterC, nearCross).select(carriedCols: _*).localCheckpoint())
       val pairs = nearPairs.where(!col("cross"))
         .join(afterNc.select(col("doc_id").as("a")), Seq("a"), "left_semi")
         .join(afterNc.select(col("doc_id").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"), col("jaccard"))
-      val nearBatch = Debug.force("near", keep(cfg.prioCol match {
-        case Some(pc) =>
-          Dedup.clusterKeepersPriority(pairs, afterNc,
-              idCol = "doc_id", prioCol = pc)
-            .where(col("id") =!= col("keeper"))
-            .select(col("id").as("doc_id"), lit("dup_batch").as("verdict"),
-              col("keeper").as("ref_id"))
-        case None =>
-          Dedup.connectedComponents(pairs)
-            .where(col("id") =!= col("root"))
-            .select(col("id").as("doc_id"), lit("dup_batch").as("verdict"),
-              col("root").as("ref_id"))
-      }))
+      val nearBatch = Debug.force("near", keep(
+        batchVerdicts(pairs, afterNc, "dup_batch")))
       val afterNear0 = minus(afterNc, nearBatch)
 
       // 4b. winnow stage, when an index is configured: the positional
@@ -558,34 +542,17 @@ object StreamingCorpusPipeline {
       val (winCross, winBatch, afterNear) = winPath match {
         case Some(p) =>
           val winIdx = WinnowIndex.load(spark, p)
-          cfg.prioCol.foreach(_ => require(winIdx.hasPriorities,
-            s"Config.prioCol is set but the winnow index at $p was " +
-              "built without priorities (WinnowIndex.build prioCol)"))
+          winIdx.requirePriorities(cfg.prioCol)
           val wCross = Debug.force("winnow", keep(
-            electCross(
+            crossVerdicts(winIdx,
               winIdx.dedupBatch(afterNear0, cfg.winTau, cfg.winMaxDf,
                 excludeSeg = Some(seg)),
-              winIdx.priorities(excludeSeg = Some(seg)))
-              .select(col("doc_id"), lit("dup_winnow").as("verdict"),
-                col("ref_id"))))
+              "dup_winnow")))
           val afterWc = minus(afterNear0, wCross)
           val wPairs = Dedup.winnowPairs(afterWc, k = winIdx.k, w = winIdx.w,
             tau = cfg.winTau, maxHashFreq = cfg.winMaxDf)
-          val wBatch = Debug.force("winnow", keep(cfg.prioCol match {
-            case Some(pc) =>
-              Dedup.clusterKeepersPriority(wPairs.select("a", "b"), afterWc,
-                  idCol = "doc_id", prioCol = pc)
-                .where(col("id") =!= col("keeper"))
-                .select(col("id").as("doc_id"),
-                  lit("dup_winnow_batch").as("verdict"),
-                  col("keeper").as("ref_id"))
-            case None =>
-              Dedup.connectedComponents(wPairs.select("a", "b"))
-                .where(col("id") =!= col("root"))
-                .select(col("id").as("doc_id"),
-                  lit("dup_winnow_batch").as("verdict"),
-                  col("root").as("ref_id"))
-          }))
+          val wBatch = Debug.force("winnow", keep(
+            batchVerdicts(wPairs, afterWc, "dup_winnow_batch")))
           (wCross, wBatch, keep(minus(afterWc, wBatch)))
         case None =>
           (emptyVerdicts, emptyVerdicts, afterNear0)
@@ -608,16 +575,11 @@ object StreamingCorpusPipeline {
               lit("dup_semantic").as("verdict"), col("ref_id"))))
           val remaining = keep(assigned.join(
             sCross.select(col("doc_id").as("id")), Seq("id"), "left_anti"))
-          val sim = Similarity.pairSim(semIdx.normalized,
-            col("x.vec"), col("y.vec"))
-          val sBatch = Debug.force("semantic", keep(remaining.as("x")
-            .join(remaining.as("y"),
-              col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
-            .where(sim >= cfg.semTau)
-            .groupBy(col("y.id").as("doc_id"))
-            .agg(min(col("x.id")).as("ref_id"))
-            .select(col("doc_id"), lit("dup_semantic_batch").as("verdict"),
-              col("ref_id"))))
+          val sBatch = Debug.force("semantic", keep(
+            Dedup.cellKeepers(remaining, cfg.semTau, semIdx.normalized)
+              .select(col("id").as("doc_id"),
+                lit("dup_semantic_batch").as("verdict"),
+                col("dup_of").as("ref_id"))))
           val surv = keep(minus(minus(afterNear, sCross), sBatch))
           // the append is DEFERRED until after the verdict write (see
           // the ordering note below) — appendAssigned refreshes the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
@@ -47,32 +47,48 @@ object StreamingDedup {
     *        commit, so replay safety is preserved). 0 disables; without
     *        it a long-lived stream accretes one segment directory per
     *        micro-batch per table and listing cost grows with stream
-    *        AGE (tools/DedupSoak measures both regimes). The fold runs
-    *        inside foreachBatch, i.e. quiesced: no concurrent reader of
-    *        the index exists between batches.
+    *        AGE (`graft.tools.Soak dedup` measures both regimes). The fold
+    *        runs inside foreachBatch ([[run]]).
     */
   def start(docs: DataFrame, indexPath: String, verdictPath: String,
             checkpoint: String, tau: Double = 0.5,
             compactEvery: Int = 0,
             prioCol: Option[String] = None): StreamingQuery =
-    docs
-      .select(col("doc_id") +: col("text") +: prioCol.map(col).toSeq: _*)
-      .writeStream
+    run(docs.select(docCols(prioCol): _*), checkpoint, compactEvery)(
+      processBatch(_, _, indexPath, verdictPath, tau, prioCol))(
+      s => MinHashIndex.load(s, indexPath).compactCommitted(checkpoint): Unit)
+
+  /** The one stream runner of the streaming dedup family: an
+    * `AvailableNow` foreachBatch query in `Update` mode on `checkpoint`
+    * that skips empty micro-batches, runs `process` on the rest, and
+    * every `compactEvery`-th batch (0 disables) runs `compact` AFTER the
+    * batch's own append. That batch's segment is then the newest and is
+    * never in the [[graft.ext.SegmentedTable.foldable]] set, because the
+    * checkpoint has not committed the batch yet. The fold runs quiesced:
+    * no concurrent reader of the index exists between batches.
+    */
+  private[streaming] def run(frame: DataFrame, checkpoint: String,
+                             compactEvery: Int)(
+      process: (DataFrame, Long) => Unit)(
+      compact: SparkSession => Unit): StreamingQuery =
+    frame.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          processBatch(batch, batchId, indexPath, verdictPath, tau, prioCol)
-          // runs AFTER the batch's own append: its segment is the
-          // newest and never in compactCommitted's fold set (the
-          // checkpoint hasn't committed this batch yet)
+          process(batch, batchId)
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            MinHashIndex.load(batch.sparkSession, indexPath)
-              .compactCommitted(checkpoint): Unit
+            compact(batch.sparkSession)
         }
       }
       .start()
+
+  /** The text faces' input columns: (doc_id, text) plus the priority
+    * column when the election is on.
+    */
+  private[streaming] def docCols(prioCol: Option[String]): Seq[Column] =
+    col("doc_id") +: col("text") +: prioCol.map(col).toSeq
 
   /** One batch of the rule above — public so a batch backfill can apply
     * the IDENTICAL keeper semantics outside a stream (segment and
@@ -119,12 +135,8 @@ object StreamingDedup {
                    prioCol: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val idx = MinHashIndex.load(spark, indexPath)
-    prioCol.foreach(_ => require(idx.hasPriorities,
-      s"prioCol is set but the index at $indexPath was built without " +
-        "priorities (MinHashIndex.build prioCol)"))
-    val docs = batch
-      .select(col("doc_id") +: col("text") +: prioCol.map(col).toSeq: _*)
-      .cache()
+    idx.requirePriorities(prioCol)
+    val docs = batch.select(docCols(prioCol): _*).cache()
     try {
       // The batch is shingled and signed ONCE, and ONE fused
       // candidates-union pass ([[MinHashIndex.nearPairsUnion]], r15)
@@ -149,16 +161,8 @@ object StreamingDedup {
       // and the rewrite empties the segment.
       val rawCross = nearPairs.where(col("cross"))
         .select(col("a").as("doc_id"), col("b").as("dup_of"), col("jaccard"))
-      val cross = (prioCol match {
-        case Some(pc) =>
-          // drop iff some indexed match is at least as trusted; the
-          // strictly-more-trusted clone falls through to survive
-          // (Dedup.electCrossKeepers — the faces' shared election)
-          Dedup.electCrossKeepers(rawCross, docs, pc,
-            idx.priorities(excludeSeg = Some(s"b$batchId")))
-        case None =>
-          rawCross.groupBy("doc_id").agg(min(col("dup_of")).as("dup_of"))
-      }).cache()
+      val cross = Dedup.crossKeepers(rawCross, docs, prioCol,
+        idx.priorities(excludeSeg = Some(s"b$batchId"))).cache()
       val remaining = docs.join(cross.select("doc_id"), Seq("doc_id"), "left_anti")
 
       // 2. in-batch: exact-verified pairs → components → keep the
@@ -171,17 +175,7 @@ object StreamingDedup {
         .join(remaining.select(col("doc_id").as("a")), Seq("a"), "left_semi")
         .join(remaining.select(col("doc_id").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"), col("jaccard"))
-      val batchDups = (prioCol match {
-        case Some(pc) =>
-          Dedup.clusterKeepersPriority(pairs, remaining,
-              idCol = "doc_id", prioCol = pc)
-            .where(col("id") =!= col("keeper"))
-            .select(col("id").as("doc_id"), col("keeper").as("dup_of"))
-        case None =>
-          Dedup.connectedComponents(pairs)
-            .where(col("id") =!= col("root"))
-            .select(col("id").as("doc_id"), col("root").as("dup_of"))
-      }).cache()
+      val batchDups = Dedup.batchKeepers(pairs, remaining, prioCol).cache()
       val survivors = remaining
         .join(batchDups.select("doc_id"), Seq("doc_id"), "left_anti")
         .cache()

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.LineIndex
 
@@ -54,21 +53,10 @@ object StreamingLineDedup {
   def start(docs: DataFrame, indexPath: String, outPath: String,
             checkpoint: String, compactEvery: Int = 0,
             prioCol: Option[String] = None): StreamingQuery =
-    docs
-      .select(col("doc_id") +: col("text") +: prioCol.map(col).toSeq: _*)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, indexPath, outPath, prioCol)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            LineIndex.load(batch.sparkSession, indexPath)
-              .compactCommitted(checkpoint): Unit
-        }
-      }
-      .start()
+    StreamingDedup.run(docs.select(StreamingDedup.docCols(prioCol): _*),
+        checkpoint, compactEvery)(
+      processBatch(_, _, indexPath, outPath, prioCol))(
+      s => LineIndex.load(s, indexPath).compactCommitted(checkpoint): Unit)
 
   /** One batch of the rule above — public so a batch backfill can apply
     * the IDENTICAL cleaning outside a stream.
@@ -78,9 +66,7 @@ object StreamingLineDedup {
     val spark = batch.sparkSession
     val idx = LineIndex.load(spark, indexPath)
     val clean = idx
-      .dedupLinesBatch(
-        batch.select(
-          col("doc_id") +: col("text") +: prioCol.map(col).toSeq: _*),
+      .dedupLinesBatch(batch.select(StreamingDedup.docCols(prioCol): _*),
         excludeSeg = Some(s"b$batchId"), prioCol = prioCol)
       .cache()
     try {

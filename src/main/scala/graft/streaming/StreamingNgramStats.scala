@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.NgramIndex
 
@@ -51,21 +51,10 @@ object StreamingNgramStats {
   def start(docs: DataFrame, indexPath: String, checkpoint: String,
             snapshotPath: Option[String] = None, k: Int = 50,
             compactEvery: Int = 0): StreamingQuery =
-    docs
-      .selectExpr("doc_id", "text")
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, indexPath, snapshotPath, k)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            NgramIndex.load(batch.sparkSession, indexPath)
-              .compactCommitted(checkpoint): Unit
-        }
-      }
-      .start()
+    StreamingDedup.run(docs.selectExpr("doc_id", "text"), checkpoint,
+        compactEvery)(
+      processBatch(_, _, indexPath, snapshotPath, k))(
+      s => NgramIndex.load(s, indexPath).compactCommitted(checkpoint): Unit)
 
   /** One delivery of the rule above — public so a batch backfill can
     * apply the IDENTICAL accumulation outside a stream.

@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ext.{SemanticIndex, Similarity}
+import graft.ext.{Dedup, SemanticIndex}
 
 /** Streaming semantic corpus construction: continuous SemDeDup-style
   * filtering of an embedding stream against a persisted
@@ -54,21 +54,10 @@ object StreamingSemanticDedup {
   def start(emb: DataFrame, indexPath: String, verdictPath: String,
             checkpoint: String, tau: Double = 0.35,
             compactEvery: Int = 0): StreamingQuery =
-    emb
-      .select(col("vec_id"), col("embedding"))
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, indexPath, verdictPath, tau)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            SemanticIndex.load(batch.sparkSession, indexPath)
-              .compactCommitted(checkpoint): Unit
-        }
-      }
-      .start()
+    StreamingDedup.run(emb.select(col("vec_id"), col("embedding")),
+        checkpoint, compactEvery)(
+      processBatch(_, _, indexPath, verdictPath, tau))(
+      s => SemanticIndex.load(s, indexPath).compactCommitted(checkpoint): Unit)
 
   /** One batch of the rule above — public so a batch backfill can apply
     * the IDENTICAL keeper semantics outside a stream.
@@ -101,13 +90,8 @@ object StreamingSemanticDedup {
       // 2. in-batch: the semanticDedup smaller-id keeper rule within the
       // remainder's cells (the index's frozen centroid space, so batch
       // and index agree on cells)
-      val sim = Similarity.pairSim(idx.normalized, col("x.vec"), col("y.vec"))
-      val batchDups = remaining.as("x")
-        .join(remaining.as("y"),
-          col("x.cell") === col("y.cell") && col("x.id") < col("y.id"))
-        .where(sim >= tau)
-        .groupBy(col("y.id").as("vec_id"))
-        .agg(min(col("x.id")).as("dup_of"))
+      val batchDups = Dedup.cellKeepers(remaining, tau, idx.normalized)
+        .select(col("id").as("vec_id"), col("dup_of"))
         .cache()
       val survivors = remaining
         .join(batchDups.select(col("vec_id").as("id")), Seq("id"), "left_anti")

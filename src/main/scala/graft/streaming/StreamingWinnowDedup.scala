@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Dedup, WinnowIndex}
 
@@ -35,22 +35,10 @@ object StreamingWinnowDedup {
             checkpoint: String, tau: Double = 0.5,
             maxHashFreq: Long = 64, compactEvery: Int = 0,
             prioCol: Option[String] = None): StreamingQuery =
-    docs
-      .select(col("doc_id") +: col("text") +: prioCol.map(col).toSeq: _*)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processBatch(batch, batchId, indexPath, verdictPath, tau,
-            maxHashFreq, prioCol)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            WinnowIndex.load(batch.sparkSession, indexPath)
-              .compactCommitted(checkpoint): Unit
-        }
-      }
-      .start()
+    StreamingDedup.run(docs.select(StreamingDedup.docCols(prioCol): _*),
+        checkpoint, compactEvery)(
+      processBatch(_, _, indexPath, verdictPath, tau, maxHashFreq, prioCol))(
+      s => WinnowIndex.load(s, indexPath).compactCommitted(checkpoint): Unit)
 
   /** One batch of the rule — public so a batch backfill can apply the
     * IDENTICAL keeper semantics outside a stream.
@@ -60,7 +48,8 @@ object StreamingWinnowDedup {
     * (indexed survivor stays keeper against equal-or-lower priority; a
     * strictly more trusted late clone is kept and becomes keeper for
     * its batch forward, no index rewrite; in-batch components elect
-    * the (priority, id)-minimum via [[Dedup.clusterKeepersPriority]]).
+    * the (priority, id)-minimum — [[Dedup.crossKeepers]] and
+    * [[Dedup.batchKeepers]], the rules every face shares).
     * The index must carry priorities ([[WinnowIndex.build]] `prioCol`).
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
@@ -69,36 +58,17 @@ object StreamingWinnowDedup {
                    prioCol: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val idx = WinnowIndex.load(spark, indexPath)
-    prioCol.foreach(_ => require(idx.hasPriorities,
-      s"prioCol is set but the index at $indexPath was built without " +
-        "priorities (WinnowIndex.build prioCol)"))
-    val docs = batch
-      .select(col("doc_id") +: col("text") +: prioCol.map(col).toSeq: _*)
-      .cache()
+    idx.requirePriorities(prioCol)
+    val docs = batch.select(StreamingDedup.docCols(prioCol): _*).cache()
     try {
       val rawCross = idx.dedupBatch(docs, tau, maxHashFreq,
         excludeSeg = Some(s"b$batchId"))
-      val cross = (prioCol match {
-        case Some(pc) =>
-          Dedup.electCrossKeepers(rawCross, docs, pc,
-            idx.priorities(excludeSeg = Some(s"b$batchId")))
-        case None =>
-          rawCross.groupBy("doc_id").agg(min(col("dup_of")).as("dup_of"))
-      }).cache()
+      val cross = Dedup.crossKeepers(rawCross, docs, prioCol,
+        idx.priorities(excludeSeg = Some(s"b$batchId"))).cache()
       val remaining = docs.join(cross.select("doc_id"), Seq("doc_id"), "left_anti")
       val pairs = Dedup.winnowPairs(remaining, k = idx.k, w = idx.w,
         tau = tau, maxHashFreq = maxHashFreq)
-      val batchDups = (prioCol match {
-        case Some(pc) =>
-          Dedup.clusterKeepersPriority(pairs.select("a", "b"), remaining,
-              idCol = "doc_id", prioCol = pc)
-            .where(col("id") =!= col("keeper"))
-            .select(col("id").as("doc_id"), col("keeper").as("dup_of"))
-        case None =>
-          Dedup.connectedComponents(pairs.select("a", "b"))
-            .where(col("id") =!= col("root"))
-            .select(col("id").as("doc_id"), col("root").as("dup_of"))
-      }).cache()
+      val batchDups = Dedup.batchKeepers(pairs, remaining, prioCol).cache()
       val survivors = remaining
         .join(batchDups.select("doc_id"), Seq("doc_id"), "left_anti")
         .cache()

@@ -736,6 +736,50 @@ class StreamingPipelineSpec extends AnyFunSuite {
       s"finished tasks must not be blamed: ${e.getMessage}")
   }
 
+  test("inParallel: a timed-out call returns only after its stuck task saw " +
+    "the interrupt and its Spark job ended as failed") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+    val sc = spark.sparkContext
+    val interrupted = new AtomicBoolean(false)
+    val job = new AtomicReference[String]("not started")
+    StuckExecutorTask.interrupted.set(false)
+    val t0 = System.nanoTime()
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      StreamingCorpusPipeline.inParallel(Seq(
+        "sleeper" -> (() =>
+          try Thread.sleep(120000)
+          catch { case _: InterruptedException => interrupted.set(true) }),
+        "writer" -> (() => {
+          sc.addJobTag("inParallel-spec-writer")
+          job.set("running")
+          try {
+            spark.range(0, 1, 1, 1).foreach(_ => StuckExecutorTask.sleep())
+            job.set("succeeded")
+          } catch { case t: Throwable => job.set("failed"); throw t }
+        })),
+        timeout = scala.concurrent.duration.Duration(3, "s"))
+    }
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("sleeper") && e.getMessage.contains("writer"),
+      e.getMessage)
+    // the call waited for its pool: both tasks had finished by now
+    assert(interrupted.get, "the stuck task must have seen its interrupt")
+    assert(job.get == "failed", s"the Spark job must have failed: ${job.get}")
+    assert(waited < 60, s"cancellation must not wait out the job: $waited s")
+    // the status store and the executor task catch up asynchronously
+    def within(sec: Int)(ok: => Boolean): Boolean = {
+      val end = System.nanoTime() + sec * 1000000000L
+      while (!ok && System.nanoTime() < end) Thread.sleep(100)
+      ok
+    }
+    val ids = sc.statusTracker.getJobIdsForTag("inParallel-spec-writer")
+    assert(ids.length == 1, ids.toSeq)
+    assert(within(30)(sc.statusTracker.getJobInfo(ids.head)
+      .exists(_.status == org.apache.spark.JobExecutionStatus.FAILED)))
+    assert(within(30)(StuckExecutorTask.interrupted.get),
+      "the cancelled job's executor task must be interrupted")
+  }
+
   test("inParallel: stage labels record per thread; a task's nested label " +
     "is not billed to it") {
     import graft.ops.Debug
@@ -750,4 +794,16 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // pool-thread seconds overlap the caller's: "outer" keeps its wall
     assert(m("outer") >= 0.05, m)
   }
+}
+
+/** Executor-side body of the inParallel cancellation spec: a task that
+  * sleeps until interrupted, recording the interrupt where the driver
+  * can see it (local mode, one JVM).
+  */
+object StuckExecutorTask {
+  val interrupted = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  def sleep(): Unit =
+    try Thread.sleep(120000)
+    catch { case _: InterruptedException => interrupted.set(true) }
 }
