@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Debug
+import graft.ops.{Debug, Frames}
 
 /** Deduplication operators for training-data pipelines, in increasing
   * sophistication: exact, n-gram Jaccard, MinHash+LSH, SimHash,
@@ -1511,9 +1511,18 @@ object Dedup {
     // job overhead (2 shuffles + convergence check × O(log² n) rounds)
     // only pays for itself when edges exceed driver memory. The loop
     // below is the at-scale path (forced in tests via driverThreshold=0).
-    if (edgeCount > 0 && edgeCount <= driverThreshold)
-      return driverUnionFind(e)
-    var converged = edgeCount == 0L
+    // Both driver-side answers are local frames, so the edge cut is
+    // released before returning.
+    if (edgeCount == 0L || edgeCount <= driverThreshold)
+      return Frames.scoped { frames =>
+        frames.hold(e)
+        if (edgeCount == 0L) {
+          val spark = e.sparkSession
+          import spark.implicits._
+          Seq.empty[(Long, Long)].toDF("id", "root")
+        } else driverUnionFind(e)
+      }
+    var converged = false
     var it = 0
     while (!converged && it < maxIter) {
       val next = smallStar(largeStar(e)).localCheckpoint()

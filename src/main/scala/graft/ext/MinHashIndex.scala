@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Frames
+
 /** Persisted MinHash-LSH corpus index + incremental dedup against it —
   * the operation a continuously-growing training corpus runs on every
   * delivery: "is anything in this batch a near-dup of what we already
@@ -146,12 +148,14 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
     * The candidates union is localCheckpoint'd (eager, batch-bounded:
     * |batch| × collided buckets): the verify chain AND the b-side size
     * aggregate's candidate prune both consume it, and an uncached
-    * candidate plan would re-run the band joins once per consumer.
+    * candidate plan would re-run the band joins once per consumer. The
+    * cut is held by `frames`, so the caller's scope must outlive every
+    * read of the returned frame.
     *
     * @return (a, b, cross, jaccard) — a always from the batch; b from
     *         the index when cross, from the batch (with a < b) when not
     */
-  def nearPairsUnion(newDocs: DataFrame, tau: Double,
+  def nearPairsUnion(newDocs: DataFrame, tau: Double, frames: Frames.Scope,
                      idCol: String = "doc_id", textCol: String = "text",
                      excludeSeg: Option[String] = None,
                      shingled: Option[DataFrame] = None,
@@ -169,7 +173,7 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"), lit(false).as("cross"))
-    val cands = crossCands.unionByName(batchCands).distinct().localCheckpoint()
+    val cands = frames.hold(crossCands.unionByName(batchCands).distinct().localCheckpoint())
     val sigsB = newSigs.select(col("id"), col("sig"), lit(false).as("cross"))
       .unionByName(table("sigs", Seq("id", "sig"), excludeSeg)
         .select(col("id"), col("sig"), lit(true).as("cross")))
@@ -194,21 +198,19 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
              signatures: Option[DataFrame] = None,
              prioCol: Option[String] = None): Unit = {
     // precomputed-table contract as in [[dedupBatch]]; caller owns the
-    // lifecycle of injected tables (they are not unpersisted here)
-    val sh = shingled.getOrElse(
-      Dedup.hashShingles(Dedup.shingles(newDocs, n, idCol, textCol)).cache())
-    try {
-      val sigs = signatures.getOrElse(signaturesOf(sh).cache())
-      try {
-        sh.write.mode("overwrite").parquet(s"$path/shingles/seg=$seg")
-        sigs.write.mode("overwrite").parquet(s"$path/sigs/seg=$seg")
-        Dedup.bandHashes(sigs, k, bands)
-          .write.mode("overwrite").parquet(s"$path/bands/seg=$seg")
-        appendPriorities(newDocs, seg, idCol, prioCol)
-        Seq("shingles", "sigs", "bands").foreach(t =>
-          SegmentedTable.refreshParent(spark, s"$path/$t"))
-      } finally if (signatures.isEmpty) sigs.unpersist(blocking = true): Unit
-    } finally if (shingled.isEmpty) sh.unpersist(blocking = true): Unit
+    // lifecycle of injected tables (they are not released here)
+    Frames.scoped { frames =>
+      val sh = shingled.getOrElse(frames.hold(
+        Dedup.hashShingles(Dedup.shingles(newDocs, n, idCol, textCol)).cache()))
+      val sigs = signatures.getOrElse(frames.hold(signaturesOf(sh).cache()))
+      sh.write.mode("overwrite").parquet(s"$path/shingles/seg=$seg")
+      sigs.write.mode("overwrite").parquet(s"$path/sigs/seg=$seg")
+      Dedup.bandHashes(sigs, k, bands)
+        .write.mode("overwrite").parquet(s"$path/bands/seg=$seg")
+      appendPriorities(newDocs, seg, idCol, prioCol)
+      Seq("shingles", "sigs", "bands").foreach(t =>
+        SegmentedTable.refreshParent(spark, s"$path/$t"))
+    }
   }
 
   /** Fold appended segments into `base` across all three tables, so the

@@ -86,9 +86,7 @@ final class SemanticIndex private[ext] (val spark: SparkSession,
   def dedupBatch(newEmb: DataFrame, tau: Double,
                  idCol: String = "vec_id", vecCol: String = "embedding",
                  excludeSeg: Option[String] = None): DataFrame = {
-    val b = assign(newEmb, idCol, vecCol).cache()
-    try dedupAssigned(b, tau, excludeSeg)
-    finally { b.unpersist(blocking = true); () }
+    dedupAssigned(assign(newEmb, idCol, vecCol), tau, excludeSeg)
   }
 
   /** [[dedupBatch]] over a PRE-ASSIGNED (id, vec, cell) frame — the

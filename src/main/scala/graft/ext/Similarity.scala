@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Frames
+
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Baseline: brute-force cosine top-k (broadcast the query set, scan the
@@ -304,10 +306,10 @@ object Similarity {
     if (driverThreshold > 0 && c.limit(probe).count() <= maxRows)
       return pqCodebooksLocal(c, m, k, iters, dim)
     val subd = dim / m
-    val subs = c.select(col("id"),
-      posexplode(array((0 until m).map(s =>
-        slice(col("vec"), s * subd + 1, subd)): _*)).as(Seq("seg", "sub"))).cache()
-    try {
+    Frames.scoped { frames =>
+      val subs = frames.hold(c.select(col("id"),
+        posexplode(array((0 until m).map(s =>
+          slice(col("vec"), s * subd + 1, subd)): _*)).as(Seq("seg", "sub"))).cache())
       // seed from the k lowest ids (NOT `id < k`: ids may be offset or
       // sparse), re-labelled densely 0..k-1 as code ids
       val seedIds = c.select(col("id")).orderBy("id").limit(k)
@@ -338,7 +340,7 @@ object Similarity {
           .toSeq.sortBy(b => (b._1, b._2))
       }
       books.toDF("seg", "cid", "cvec")
-    } finally subs.unpersist(blocking = true)
+    }
   }
 
   /** Driver-side Lloyd for [[pqCodebooks]]' small-corpus regime: same
@@ -439,13 +441,13 @@ object Similarity {
     // crowd out true neighbors no matter how fine the codebooks are
     // (measured: recall@10 0.87 -> >=0.9 at slf=8). The exact rerank
     // reads the RAW vectors, so exact-mode results are unchanged.
-    val c = corpusNormalized(emb, idCol, vecCol).cache()
-    try {
+    Frames.scoped { frames =>
+      val c = frames.hold(corpusNormalized(emb, idCol, vecCol).cache())
       val books = pqCodebooks(c, m, codes)
       val encoded = pqEncode(c, books, m).cache()
       encoded.count() // materialize while the corpus cache is alive
       (books, encoded)
-    } finally c.unpersist(blocking = true)
+    }
   }
 
   /** PQ top-k (asymmetric distance): approx dot(q, x) = Σ_seg
@@ -463,8 +465,8 @@ object Similarity {
              index: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val c = corpus(emb, idCol, vecCol).cache()
-    try {
+    Frames.scoped { frames =>
+      val c = frames.hold(corpus(emb, idCol, vecCol).cache())
       val (books, encoded) = index.getOrElse {
         // ad-hoc index: same normalized-space training as [[pqIndex]]
         val cn = corpusNormalized(emb, idCol, vecCol)
@@ -506,7 +508,7 @@ object Similarity {
         .withColumn("rank", row_number().over(wr))
         .where(col("rank") <= k)
         .select(col("qid"), col("rank"), col("nid"), col("cos"))
-    } finally c.unpersist(blocking = true)
+    }
   }
 
   /** IVF×PQ: the standard billion-scale composition — IVF probing cuts
@@ -524,18 +526,18 @@ object Similarity {
                 ivfIndex: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val c = corpus(emb, idCol, vecCol).cache()
-    val (cents, assigned) = ivfIndex match {
-      case Some((ce, membership)) =>
-        // no cache: the prebuilt index frames are the caller's to manage
-        (ce,
-          c.join(membership.select("id", "cell"), "id")
-            .select(col("id"), col("vec"), col("cell")))
-      case None =>
-        val ce = ivfCentroids(c, nlist).cache()
-        (ce, assignToNearest(c, ce).cache())
-    }
-    try {
+    Frames.scoped { frames =>
+      val c = frames.hold(corpus(emb, idCol, vecCol).cache())
+      val (cents, assigned) = ivfIndex match {
+        case Some((ce, membership)) =>
+          // no cache: the prebuilt index frames are the caller's to manage
+          (ce,
+            c.join(membership.select("id", "cell"), "id")
+              .select(col("id"), col("vec"), col("cell")))
+        case None =>
+          val ce = frames.hold(ivfCentroids(c, nlist).cache())
+          (ce, frames.hold(assignToNearest(c, ce).cache()))
+      }
       val membership = assigned.select("id", "cell")
       // Residual PQ (the FAISS-style default): codebooks quantize
       // vec − centroid(cell), so codes spend their bits on the
@@ -621,12 +623,6 @@ object Similarity {
         .withColumn("rank", row_number().over(wr))
         .where(col("rank") <= k)
         .select(col("qid"), col("rank"), col("nid"), col("cos"))
-    } finally {
-      if (ivfIndex.isEmpty) { // a prebuilt index's caches are the caller's
-        assigned.unpersist(blocking = true)
-        cents.unpersist(blocking = true)
-      }
-      c.unpersist(blocking = true)
     }
   }
 
@@ -807,11 +803,11 @@ object Similarity {
     val spark = newEmb.sparkSession
     val books = spark.read.parquet(s"$path/pq_books")
     val m = books.agg(countDistinct(col("seg"))).head().getLong(0).toInt
-    val c = corpusNormalized(newEmb, idCol, vecCol).cache()
-    try
+    Frames.scoped { frames =>
+      val c = frames.hold(corpusNormalized(newEmb, idCol, vecCol).cache())
       pqEncode(c, books, m)
         .write.mode("overwrite").parquet(s"$path/pq_codes/ixseg=$ixseg")
-    finally c.unpersist(blocking = true)
+    }
     SegmentedTable.refreshParent(spark, s"$path/pq_codes")
   }
 

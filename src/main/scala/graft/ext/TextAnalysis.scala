@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Frames
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, content fingerprinting.
   *
@@ -922,13 +924,13 @@ object TextAnalysis {
                   hasher: Column => Column = xxhash64(_),
                   idCol: String = "doc_id", textCol: String = "text",
                   ordered: Boolean = false): LinearModel = {
-    val feats = hashedTf(pos, dim, hasher, idCol, textCol)
-      .withColumn("y", lit(1.0))
-      .unionByName(hashedTf(neg, dim, hasher, idCol, textCol)
-        .withColumn("y", lit(0.0)))
-      .repartition(col("y"), col("doc_id"))
-      .persist()
-    try {
+    Frames.scoped { frames =>
+      val feats = frames.hold(hashedTf(pos, dim, hasher, idCol, textCol)
+        .withColumn("y", lit(1.0))
+        .unionByName(hashedTf(neg, dim, hasher, idCol, textCol)
+          .withColumn("y", lit(0.0)))
+        .repartition(col("y"), col("doc_id"))
+        .persist())
       val n = feats.select("y", "doc_id").distinct().count().toDouble
       require(n > 0, "trainLinear: no training document carried a token")
       var w = IndexedSeq.fill(dim)(0.0)
@@ -960,7 +962,7 @@ object TextAnalysis {
         b = b - lr * grads.getOrElse(-1L, 0.0) / n
       }
       LinearModel(w, b, n.toLong)
-    } finally { feats.unpersist(blocking = true): Unit }
+    }
   }
 
   /** Persist a trained [[LinearModel]] as a one-row parquet artifact —

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Frames
+
 /** Persisted winnow-fingerprint index + incremental near-dup against it —
   * [[Dedup.winnowPairs]]' continuously-growing-corpus face, completing
   * the {batch, incremental} pair for the positional sub-token signal the
@@ -94,18 +96,16 @@ final class WinnowIndex private[ext] (val spark: SparkSession, val path: String,
              textCol: String = "text",
              prioCol: Option[String] = None): Unit = {
     // cache (not localCheckpoint): both writes share one fingerprint
-    // computation, and the unpersist below releases the blocks
-    // deterministically — a long-running stream appends thousands of
-    // times (MinHashIndex.append's lifecycle reasoning)
-    val fp = fpOf(keptDocs, idCol, textCol).cache()
-    try {
+    // computation
+    Frames.scoped { frames =>
+      val fp = frames.hold(fpOf(keptDocs, idCol, textCol).cache())
       fp.write.mode("overwrite").parquet(s"$path/fps/seg=$seg")
       fp.groupBy("id").agg(count(lit(1)).as("sz"))
         .write.mode("overwrite").parquet(s"$path/sizes/seg=$seg")
       appendPriorities(keptDocs, seg, idCol, prioCol)
       Seq("fps", "sizes").foreach(t =>
         SegmentedTable.refreshParent(spark, s"$path/$t"))
-    } finally fp.unpersist(blocking = true): Unit
+    }
   }
 
   /** Fold appended segments into `base` (rows preserved verbatim). */

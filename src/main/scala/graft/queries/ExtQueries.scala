@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.ext._
-import graft.ops.Io
+import graft.ops.{Frames, Io}
 
 /** Driver-verifiable queries for the training-data-pipeline extensions
   * (SURVEY.md §7.1 ext/): dedup, similarity search, text analysis,
@@ -619,7 +619,7 @@ object ExtQueries {
             maxGramFreq = 200, capped = Some(capped))
           .cache()
         df.count()
-        capped.unpersist()
+        Frames.release(capped)
         df
       })
 

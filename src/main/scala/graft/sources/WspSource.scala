@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.RetentionPolicy
+import graft.ops.Frames
 import graft.store.MetricStore
 
 /** Spark-side .wsp connectors: distributed import of a whisper storage
@@ -73,8 +74,8 @@ object WspSource {
     * upsertRollups): one distributed parse, one upsert per level.
     */
   def importTree(store: MetricStore, dir: String): Seq[String] = {
-    val pts = readTree(store.spark, dir).cache()
-    try {
+    Frames.scoped { frames =>
+      val pts = frames.hold(readTree(store.spark, dir).cache())
       val metrics = pts.select("metric").distinct().collect()
         .map(_.getString(0)).toSeq.sorted
       val levels = pts.select("level").distinct().collect().map(_.getInt(0)).sorted
@@ -89,7 +90,7 @@ object WspSource {
           pts.where(col("level") === i).select("metric", "interval", "value"))
       }
       metrics
-    } finally pts.unpersist(blocking = true)
+    }
   }
 
   private def firstFileBytes(dir: String, metric: String): Array[Byte] = {

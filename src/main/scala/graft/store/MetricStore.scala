@@ -51,24 +51,6 @@ final class MetricStore(val spark: SparkSession, val root: String,
   private def policiesPath = s"$root/policies.tsv"
   private def levelPath(i: Int) = s"$root/level_$i"
 
-  /** Frees a `localCheckpoint`'s storage blocks once nothing can read
-    * the frame again. `Dataset.unpersist` is a no-op on a
-    * checkpoint-backed frame (the persistence lives on the internal
-    * RDD, not in the relation cache), and waiting for the
-    * ContextCleaner means blocks accumulate per level per batch until
-    * the next driver GC — unbounded for large mirrors between GCs. The
-    * checkpointed RDD sits directly under the frame's `LogicalRDD`
-    * plan node; unpersisting it makes the frame uncomputable (the
-    * lineage was severed by design), so callers must release only
-    * after every reader — deferred writes included — has completed.
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = true)
-      case _ => ()
-    }
-
   // ---- policy catalog -------------------------------------------------
 
   /** Seconds of data per time-bucket partition at a given step:
@@ -739,357 +721,335 @@ final class MetricStore(val spark: SparkSession, val root: String,
     }
   }
 
+  // The routed cache and the mirror/propagated cuts are released
+  // ([[Frames]]) after the finally below has awaited every write.
   private def updateManyForPolicy(batch: DataFrame, policy: RetentionPolicy,
-                                  now: Long, cascade: Boolean = true): Unit = {
-    val routed = Ingest.routeAndDedup(batch, policy, now).cache()
-    // Writes are taken off the cascade's critical path:
-    //  - FRESH levels (bulk load): the cascade reads the in-memory
-    //    prevContent mirror, never the just-written files, so their
-    //    writes go straight to the background pool;
-    //  - NON-FRESH levels (incremental): the next step reads this
-    //    level's post-upsert state through a merged MIRROR (pre-write
-    //    disk rows LWW incoming) plus the untouched hull partitions, so
-    //    the write is deferred one cascade step and launched in the
-    //    background once that reader has materialized (it must see the
-    //    PRE-write files).
-    // Everything is awaited before updateMany returns.
-    val pendingWrites = scala.collection.mutable.Buffer.empty[scala.concurrent.Future[Unit]]
-    // deferred-write slot (at most one held back at a time — the previous
-    // level's); declared here so the finally block can land it even when
-    // the cascade throws mid-loop (otherwise that level's upsert would be
-    // silently dropped while earlier levels committed)
-    var deferred: Option[() => Unit] = None
-    // (level, post-upsert mirror of touched partitions, touched set)
-    var deferredMirror: Option[(Int, DataFrame, Set[(Int, Long)])] = None
-    // The per-level mirror/propagated frames are localCheckpoints (see
-    // runUpsert / the cascade loop), not caches. Their blocks are
-    // released EXPLICITLY in the finally block below, after every
-    // deferred write has been awaited — relying on the ContextCleaner
-    // alone lets MEMORY_AND_DISK checkpoint blocks accumulate per
-    // level per batch between driver GCs, eviction pressure that grows
-    // with mirror size (round-11 advisor finding).
-    val checkpoints = scala.collection.mutable.Buffer.empty[DataFrame]
-    var bodyFailure: Throwable = null
-    try {
-      val steps = policy.levels.map(_.secondsPerPoint)
-
-      // ONE pass over the routed cache, at (level, pb, tb) granularity,
-      // yields everything the whole ingest needs to plan: which levels
-      // have direct writes, their touched partitions (for the upsert
-      // reads), and their interval bounds (for the cascade's pruning) —
-      // one driver job where a naive version runs count/touched/isEmpty
-      // jobs per level.
-      val tbForLevel: Column =
-        steps.zipWithIndex.foldRight(lit(null).cast("long")) {
-          case ((st, i), e) =>
-            when(col("level") === i,
-              expr(s"interval div ${bucketSeconds(st)}")).otherwise(e)
-        }
-      val partStats: Seq[(Int, Int, Long, Long, Long, Long)] = routed
-        .withColumn("pb", pmod(hash(col("metric")), lit(effectiveBuckets)))
-        .withColumn("tb", tbForLevel)
-        .groupBy("level", "pb", "tb")
-        .agg(count(lit(1)).as("n"), min("interval").as("lo"), max("interval").as("hi"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5))).toSeq
-      val directStats: Map[Int, (Long, Long, Long)] = partStats
-        .groupBy(_._1)
-        .map { case (lvl, rows) =>
-          lvl -> ((rows.map(_._4).sum, rows.map(_._5).min, rows.map(_._6).max))
-        }
-      // see the public overload's contract: coarse-routed points need the
-      // very cascade being skipped — fail-stop BEFORE any side effect
-      // (marking diverged for a batch that then writes nothing would
-      // permanently disable substitution on an untouched store)
-      if (!cascade && directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 })
-        throw new IllegalArgumentException(
-          "cascade=false but the batch contains points too old for the " +
-            "finest archive; ingest them through the cascade path")
-      // points landing directly in a coarser archive are invisible to
-      // level-0 aggregations — rollup substitution is no longer sound
-      if (directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 })
-        markRollupsDiverged()
-      if (!cascade && policy.levels.size > 1) markRollupsDiverged()
-      val directTouched: Map[Int, Set[(Int, Long)]] = partStats
-        .groupBy(_._1)
-        .map { case (lvl, rows) => lvl -> rows.map(r => (r._2, r._3)).toSet }
-      val directCounts: Map[Int, Long] = directStats.map { case (k, v) => k -> v._1 }
-
-      // levels that did not exist before this batch: after their writes,
-      // the on-disk content IS the in-memory frame we are holding, so the
-      // cascade can skip the parquet round trip (the initial-bulk-load
-      // case — w20/x00 — where every level is fresh)
-      val freshLevels: Set[Int] =
-        steps.indices.filterNot(i => new java.io.File(levelPath(i)).exists()).toSet
-
-      // deferred-write dispatcher. `launchDeferred` releases the held
-      // write to the background pool once its pre-write state has been
-      // read, `flushDeferred` runs it inline when a reader needs the
-      // POST-write files on disk (mirror unavailable).
-      def launchDeferred(): Unit = {
-        deferred.foreach(t =>
-          pendingWrites += scala.concurrent.Future(t())(MetricStore.writeEc))
-        deferred = None
-      }
-      def flushDeferred(): Unit = { deferred.foreach(_()); deferred = None }
-      def runUpsert(i: Int, step: Int, incoming: DataFrame,
-                    touchedPre: Option[Set[(Int, Long)]]): Unit =
-        if (freshLevels.contains(i))
-          pendingWrites += scala.concurrent.Future(
-            upsertLevel(i, step, incoming, touchedPre))(MetricStore.writeEc)
-        else touchedPre match {
-          case Some(t) if t.nonEmpty =>
-            // build the post-upsert mirror ONCE and share it between the
-            // cascade's deferred-write reader and the write itself:
-            // upsertLevel would re-read and re-merge the same touched
-            // partitions the mirror already merged — the incremental
-            // path paid that twice per level.
-            //
-            // localCheckpoint, NOT cache: the mirror's lineage reads the
-            // level's pre-write partition directories, and every
-            // insert-overwrite commit auto-recaches (RE-EXECUTES,
-            // re-LISTS) cached plans matching the written path — with
-            // the per-pb write futures running concurrently, one pb
-            // job's post-commit recache could re-list a SIBLING pb's
-            // directory mid-overwrite and fail-stop the batch ("Invalid
-            // directory or I/O error", one-in-N under the full-surface
-            // run; w22's streaming ingest surfaced it). The eager
-            // checkpoint cuts the disk lineage on the main thread
-            // BEFORE any write launches, so no cached plan references
-            // level paths during the writes: the recache storm, the
-            // replaced-file recompute caveat, and the eviction-loss
-            // recompute all become structurally impossible.
-            val newPts =
-              if (incoming.columns.contains("pb")) incoming
-              else withPartitionCols(incoming, step)
-            val mirror = mergedTouched(i, newPts, t).localCheckpoint()
-            checkpoints += mirror
-            deferred = Some(() => overwriteTouched(i, mirror, t.map(_._1)))
-            deferredMirror = Some((i, mirror, t))
-          case _ =>
-            deferred = Some(() => upsertLevel(i, step, incoming, touchedPre))
-            deferredMirror = None
-        }
-
-      // level-0 direct writes (no propagated input at the finest level);
-      // direct writes to coarser levels (points too old for finer levels,
-      // whisper.py:767-784) are FUSED into that level's cascade upsert
-      // below — one dynamic-overwrite commit per level, not two
-      if (directCounts.getOrElse(0, 0L) > 0)
-        runUpsert(0, steps(0),
-          routed.where(col("level") === 0)
-            .select(col("metric"), col("interval"), col("value"), lit(0L).as("prio")),
-          directTouched.get(0))
-
-      // rollup cascade: recompute only touched lower windows from the
-      // (post-upsert) higher level. The change set feeding level i+1 is
-      // propagated windows at i PLUS the batch's DIRECT writes at i —
-      // whisper cascades from every archive that received points, not
-      // just archive 0 (each __archive_update_many call propagates its
-      // own points downward, whisper.py:858-875). Stops when a level
-      // neither propagates nor received direct writes (the bulk early
-      // exit, whisper.py:868-875).
-      var changed = routed.where(col("level") === 0).select("metric", "interval")
-      var changedNonEmpty = directCounts.getOrElse(0, 0L) > 0
-      // conservative hull of the change set's intervals, maintained
-      // WITHOUT extra jobs: propagated intervals are alignments of the
-      // previous hull, direct-write bounds come from the stats pass
-      var bLo = directStats.get(0).map(_._2).getOrElse(Long.MaxValue)
-      var bHi = directStats.get(0).map(_._3).getOrElse(Long.MinValue)
-      // in-memory content of level i-1, kept only while levels are fresh
-      var prevContent: Option[DataFrame] =
-        if (freshLevels.contains(0))
-          Some(routed.where(col("level") === 0).select("metric", "interval", "value"))
-        else None
-      var i = 1
-      // keep cascading while the previous level changed OR any deeper
-      // level still holds unpropagated direct writes — whisper cascades
-      // from EVERY archive that received points (whisper.py:858-875), so
-      // a batch landing only in coarse archives must still roll up
-      while (cascade && i < steps.length &&
-        (changedNonEmpty || directStats.exists { case (l, (n, _, _)) => l >= i && n > 0 })) {
-        // Partition-prune the higher-level read down to the change hull
-        // BEFORE the semi join: an incremental batch reads only the time
-        // buckets it touches — at 100 TB the difference between scanning
-        // gigabytes and the whole table. The interval predicate
-        // additionally reaches parquet row-group min/max pruning inside
-        // each bucket.
-        val lowerMin = bLo - bLo % steps(i)
-        val upper = bHi - bHi % steps(i) + steps(i)
-        val bsHi = bucketSeconds(steps(i - 1))
-        val higher = prevContent.orElse {
-          // level i-1's write is still deferred: read its post-upsert
-          // state as merged-mirror(touched) ∪ disk(untouched ∩ hull) —
-          // the pre-write files stay valid because the write launches
-          // only after this plan materializes
-          deferredMirror.collect { case (lvl, mirror, touched) if lvl == i - 1 =>
-            hullDirCandidates(i - 1, bsHi, lowerMin, upper).map { dirs =>
-              val touchedDirs = touched.map {
-                case (p, t) => s"${levelPath(i - 1)}/pb=$p/tb=$t"
-              }
-              val untouchedDirs = dirs.filterNot(touchedDirs)
-                .filter(d => new java.io.File(d).exists())
-              val m = withCountCols(mirror, i - 1)
-              // common incremental case: the hull is entirely touched —
-              // skip the disk read and the union, read the mirror alone
-              val withUntouched =
-                if (untouchedDirs.isEmpty) m
-                else
-                  m.unionByName(withCountCols(
-                    spark.read.option("basePath", levelPath(i - 1))
-                      .schema(levelSchema(i - 1)) // skip schema inference
-                      .parquet(untouchedDirs: _*), i - 1))
-              withUntouched
-                .where(col("interval") >= lowerMin && col("interval") < upper)
-            }
-          }.flatten
-        }.getOrElse {
-          // no usable mirror (nothing upserted at i-1, or the hull spans
-          // too many directories): land any deferred write inline, then
-          // read the level from disk with partition pruning
-          flushDeferred()
-          withCountCols(
-            levelData(i - 1)
-              .where(col("tb") >= lowerMin / bsHi && col("tb") <= (upper - 1) / bsHi &&
-                col("interval") >= lowerMin && col("interval") < upper), i - 1)
-        }
-        // localCheckpoint, NOT cache — the mirror's reasoning verbatim:
-        // propagated's lineage reads level i-1's pre-write files, and a
-        // cached plan with that lineage is re-executed (re-listed) by
-        // every concurrent write commit's auto-recache and re-read by
-        // any block-loss recompute AFTER the write replaced those files.
-        // The eager checkpoint severs the disk lineage here, on the main
-        // thread, before the deferred write launches.
-        val propagated = withPartitionCols(
-          Rollup
-            .propagateTouchedCounted(higher,
-              changed, steps(i - 1), steps(i), policy.aggregation, policy.xff),
-          steps(i)).localCheckpoint()
-        checkpoints += propagated
-        // one collect gives BOTH the empty check and the touched set the
-        // upsert would otherwise rediscover with its own job
-        val touchedP = propagated.select("pb", "tb").distinct().collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toSet
-        // the propagate (and its read of level i-1's pre-write files) is
-        // materialized in the checkpoint — the deferred write can now
-        // land in the background with nothing left able to re-read the
-        // files it replaces.
-        launchDeferred()
-        deferredMirror = None
-        val propagatedAny = touchedP.nonEmpty
-        val directN = directCounts.getOrElse(i, 0L)
-        // ONE upsert per level: direct writes (prio 2) fused with
-        // propagated windows (prio 1) — DIRECT BEATS PROPAGATED within a
-        // batch: file_update_many commits archives finest-first, so by
-        // the time archive i's own points are written, every
-        // propagation INTO archive i (the finer archives' chains,
-        // whisper.py:858-875) has already landed, and the direct write
-        // physically overwrites the shared slot. (The pre-r13 spelling
-        // had this backwards — caught by tools/DiffFuzz on batches whose
-        // deep-direct points share a window with finer points; the
-        // reference kept the raw point, graft kept the rollup.)
-        // Pre-merged when both exist so the fresh-level fast path
-        // (which skips merging) never sees duplicate slots.
-        if (propagatedAny || directN > 0) {
-          // a direct-written point at level i IS a single raw observation:
-          // known=1, vsum=value
-          def directRows = routed.where(col("level") === i)
-            .select(col("metric"), col("interval"), col("value"),
-              lit(1L).as("known"), col("value").as("vsum"), lit(2L).as("prio"))
-          val incoming =
-            if (directN == 0L) propagated.withColumn("prio", lit(1L))
-            else if (!propagatedAny) directRows
-            else
-              withPartitionCols(directRows, steps(i))
-                .unionByName(propagated.withColumn("prio", lit(1L)))
-                .groupBy("metric", "interval", "pb", "tb")
-                .agg(max_by(struct(col("value"), col("known"), col("vsum")),
-                  col("prio")).as("w"))
-                .select(col("metric"), col("interval"), col("pb"), col("tb"),
-                  col("w.value").as("value"), col("w.known").as("known"),
-                  col("w.vsum").as("vsum"))
-                .withColumn("prio", lit(1L))
-          runUpsert(i, steps(i), incoming,
-            Some(touchedP ++ directTouched.getOrElse(i, Set.empty)))
-        }
-        changed = propagated
-          .select("metric", "interval")
-          .unionByName(routed.where(col("level") === i).select("metric", "interval"))
-        // maintain the in-memory mirror of level i for the next step:
-        // direct writes merged with propagated windows, DIRECT wins —
-        // exactly what the fused upsert just materialized on disk
-        prevContent = {
-          def directMirror = routed.where(col("level") === i)
-            .select(col("metric"), col("interval"), col("value"),
-              lit(1L).as("known"), col("value").as("vsum"))
-          if (!freshLevels.contains(i)) None
-          else if (directCounts.getOrElse(i, 0L) == 0L)
-            Some(propagated.select("metric", "interval", "value", "known", "vsum"))
-          else if (!propagatedAny) Some(directMirror)
-          else
-            Some(
-              directMirror.withColumn("prio", lit(2L))
-                .unionByName(propagated
-                  .select(col("metric"), col("interval"), col("value"),
-                    col("known"), col("vsum"))
-                  .withColumn("prio", lit(1L)))
-                .groupBy("metric", "interval")
-                .agg(max_by(struct(col("value"), col("known"), col("vsum")),
-                  col("prio")).as("w"))
-                .select(col("metric"), col("interval"), col("w.value").as("value"),
-                  col("w.known").as("known"), col("w.vsum").as("vsum")))
-        }
-        // no extra job: nonempty iff something propagated or level i took
-        // direct writes (known from the counts pass); the hull advances
-        // to its alignment merged with level-i direct-write bounds
-        changedNonEmpty = propagatedAny || directCounts.getOrElse(i, 0L) > 0
-        bLo = math.min(lowerMin, directStats.get(i).map(_._2).getOrElse(Long.MaxValue))
-        bHi = math.max(upper - steps(i), directStats.get(i).map(_._3).getOrElse(Long.MinValue))
-        i += 1
-      }
-      // the deepest level's write has no further cascade reader — release
-      // it to the pool (awaited just below)
-      launchDeferred()
-    } catch {
-      case t: Throwable => bodyFailure = t; throw t
-    } finally {
-      // a write still held back when the cascade threw must land (its
-      // level's data is otherwise lost). All failures below are COLLECTED,
-      // never thrown mid-finally: an Await that throws would mask the
-      // body's exception, skip the remaining awaits, and leak the caches.
-      val flushFailure =
-        deferred.flatMap(t => scala.util.Try(t()).failed.toOption)
-      deferred = None
-      // deferred writes must land before callers (or the next policy
-      // group in a heterogeneous batch) can read the store — and before
-      // the caches backing them are released
-      val writeFailures = pendingWrites.flatMap(f =>
-        scala.util.Try(scala.concurrent.Await
-          .result(f, scala.concurrent.duration.Duration.Inf)).failed.toOption)
+                                  now: Long, cascade: Boolean = true): Unit =
+    Frames.scoped { frames =>
+      val routed = frames.hold(Ingest.routeAndDedup(batch, policy, now).cache())
+      // Writes are taken off the cascade's critical path:
+      //  - FRESH levels (bulk load): the cascade reads the in-memory
+      //    prevContent mirror, never the just-written files, so their
+      //    writes go straight to the background pool;
+      //  - NON-FRESH levels (incremental): the next step reads this
+      //    level's post-upsert state through a merged MIRROR (pre-write
+      //    disk rows LWW incoming) plus the untouched hull partitions, so
+      //    the write is deferred one cascade step and launched in the
+      //    background once that reader has materialized (it must see the
+      //    PRE-write files).
+      // Everything is awaited before updateMany returns.
+      val pendingWrites = scala.collection.mutable.Buffer.empty[scala.concurrent.Future[Unit]]
+      // deferred-write slot (at most one held back at a time — the previous
+      // level's); declared here so the finally block can land it even when
+      // the cascade throws mid-loop (otherwise that level's upsert would be
+      // silently dropped while earlier levels committed)
+      var deferred: Option[() => Unit] = None
+      // (level, post-upsert mirror of touched partitions, touched set)
+      var deferredMirror: Option[(Int, DataFrame, Set[(Int, Long)])] = None
+      var bodyFailure: Throwable = null
       try {
+        val steps = policy.levels.map(_.secondsPerPoint)
+
+        // ONE pass over the routed cache, at (level, pb, tb) granularity,
+        // yields everything the whole ingest needs to plan: which levels
+        // have direct writes, their touched partitions (for the upsert
+        // reads), and their interval bounds (for the cascade's pruning) —
+        // one driver job where a naive version runs count/touched/isEmpty
+        // jobs per level.
+        val tbForLevel: Column =
+          steps.zipWithIndex.foldRight(lit(null).cast("long")) {
+            case ((st, i), e) =>
+              when(col("level") === i,
+                expr(s"interval div ${bucketSeconds(st)}")).otherwise(e)
+          }
+        val partStats: Seq[(Int, Int, Long, Long, Long, Long)] = routed
+          .withColumn("pb", pmod(hash(col("metric")), lit(effectiveBuckets)))
+          .withColumn("tb", tbForLevel)
+          .groupBy("level", "pb", "tb")
+          .agg(count(lit(1)).as("n"), min("interval").as("lo"), max("interval").as("hi"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5))).toSeq
+        val directStats: Map[Int, (Long, Long, Long)] = partStats
+          .groupBy(_._1)
+          .map { case (lvl, rows) =>
+            lvl -> ((rows.map(_._4).sum, rows.map(_._5).min, rows.map(_._6).max))
+          }
+        // see the public overload's contract: coarse-routed points need the
+        // very cascade being skipped — fail-stop BEFORE any side effect
+        // (marking diverged for a batch that then writes nothing would
+        // permanently disable substitution on an untouched store)
+        if (!cascade && directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 })
+          throw new IllegalArgumentException(
+            "cascade=false but the batch contains points too old for the " +
+              "finest archive; ingest them through the cascade path")
+        // points landing directly in a coarser archive are invisible to
+        // level-0 aggregations — rollup substitution is no longer sound
+        if (directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 })
+          markRollupsDiverged()
+        if (!cascade && policy.levels.size > 1) markRollupsDiverged()
+        val directTouched: Map[Int, Set[(Int, Long)]] = partStats
+          .groupBy(_._1)
+          .map { case (lvl, rows) => lvl -> rows.map(r => (r._2, r._3)).toSet }
+        val directCounts: Map[Int, Long] = directStats.map { case (k, v) => k -> v._1 }
+
+        // levels that did not exist before this batch: after their writes,
+        // the on-disk content IS the in-memory frame we are holding, so the
+        // cascade can skip the parquet round trip (the initial-bulk-load
+        // case — w20/x00 — where every level is fresh)
+        val freshLevels: Set[Int] =
+          steps.indices.filterNot(i => new java.io.File(levelPath(i)).exists()).toSet
+
+        // deferred-write dispatcher. `launchDeferred` releases the held
+        // write to the background pool once its pre-write state has been
+        // read, `flushDeferred` runs it inline when a reader needs the
+        // POST-write files on disk (mirror unavailable).
+        def launchDeferred(): Unit = {
+          deferred.foreach(t =>
+            pendingWrites += scala.concurrent.Future(t())(MetricStore.writeEc))
+          deferred = None
+        }
+        def flushDeferred(): Unit = { deferred.foreach(_()); deferred = None }
+        def runUpsert(i: Int, step: Int, incoming: DataFrame,
+                      touchedPre: Option[Set[(Int, Long)]]): Unit =
+          if (freshLevels.contains(i))
+            pendingWrites += scala.concurrent.Future(
+              upsertLevel(i, step, incoming, touchedPre))(MetricStore.writeEc)
+          else touchedPre match {
+            case Some(t) if t.nonEmpty =>
+              // build the post-upsert mirror ONCE and share it between the
+              // cascade's deferred-write reader and the write itself:
+              // upsertLevel would re-read and re-merge the same touched
+              // partitions the mirror already merged — the incremental
+              // path paid that twice per level.
+              //
+              // localCheckpoint, NOT cache: the mirror's lineage reads the
+              // level's pre-write partition directories, and every
+              // insert-overwrite commit auto-recaches (RE-EXECUTES,
+              // re-LISTS) cached plans matching the written path — with
+              // the per-pb write futures running concurrently, one pb
+              // job's post-commit recache could re-list a SIBLING pb's
+              // directory mid-overwrite and fail-stop the batch ("Invalid
+              // directory or I/O error", one-in-N under the full-surface
+              // run; w22's streaming ingest surfaced it). The eager
+              // checkpoint cuts the disk lineage on the main thread
+              // BEFORE any write launches, so no cached plan references
+              // level paths during the writes: the recache storm, the
+              // replaced-file recompute caveat, and the eviction-loss
+              // recompute all become structurally impossible.
+              val newPts =
+                if (incoming.columns.contains("pb")) incoming
+                else withPartitionCols(incoming, step)
+              val mirror = frames.hold(mergedTouched(i, newPts, t).localCheckpoint())
+              deferred = Some(() => overwriteTouched(i, mirror, t.map(_._1)))
+              deferredMirror = Some((i, mirror, t))
+            case _ =>
+              deferred = Some(() => upsertLevel(i, step, incoming, touchedPre))
+              deferredMirror = None
+          }
+
+        // level-0 direct writes (no propagated input at the finest level);
+        // direct writes to coarser levels (points too old for finer levels,
+        // whisper.py:767-784) are FUSED into that level's cascade upsert
+        // below — one dynamic-overwrite commit per level, not two
+        if (directCounts.getOrElse(0, 0L) > 0)
+          runUpsert(0, steps(0),
+            routed.where(col("level") === 0)
+              .select(col("metric"), col("interval"), col("value"), lit(0L).as("prio")),
+            directTouched.get(0))
+
+        // rollup cascade: recompute only touched lower windows from the
+        // (post-upsert) higher level. The change set feeding level i+1 is
+        // propagated windows at i PLUS the batch's DIRECT writes at i —
+        // whisper cascades from every archive that received points, not
+        // just archive 0 (each __archive_update_many call propagates its
+        // own points downward, whisper.py:858-875). Stops when a level
+        // neither propagates nor received direct writes (the bulk early
+        // exit, whisper.py:868-875).
+        var changed = routed.where(col("level") === 0).select("metric", "interval")
+        var changedNonEmpty = directCounts.getOrElse(0, 0L) > 0
+        // conservative hull of the change set's intervals, maintained
+        // WITHOUT extra jobs: propagated intervals are alignments of the
+        // previous hull, direct-write bounds come from the stats pass
+        var bLo = directStats.get(0).map(_._2).getOrElse(Long.MaxValue)
+        var bHi = directStats.get(0).map(_._3).getOrElse(Long.MinValue)
+        // in-memory content of level i-1, kept only while levels are fresh
+        var prevContent: Option[DataFrame] =
+          if (freshLevels.contains(0))
+            Some(routed.where(col("level") === 0).select("metric", "interval", "value"))
+          else None
+        var i = 1
+        // keep cascading while the previous level changed OR any deeper
+        // level still holds unpropagated direct writes — whisper cascades
+        // from EVERY archive that received points (whisper.py:858-875), so
+        // a batch landing only in coarse archives must still roll up
+        while (cascade && i < steps.length &&
+          (changedNonEmpty || directStats.exists { case (l, (n, _, _)) => l >= i && n > 0 })) {
+          // Partition-prune the higher-level read down to the change hull
+          // BEFORE the semi join: an incremental batch reads only the time
+          // buckets it touches — at 100 TB the difference between scanning
+          // gigabytes and the whole table. The interval predicate
+          // additionally reaches parquet row-group min/max pruning inside
+          // each bucket.
+          val lowerMin = bLo - bLo % steps(i)
+          val upper = bHi - bHi % steps(i) + steps(i)
+          val bsHi = bucketSeconds(steps(i - 1))
+          val higher = prevContent.orElse {
+            // level i-1's write is still deferred: read its post-upsert
+            // state as merged-mirror(touched) ∪ disk(untouched ∩ hull) —
+            // the pre-write files stay valid because the write launches
+            // only after this plan materializes
+            deferredMirror.collect { case (lvl, mirror, touched) if lvl == i - 1 =>
+              hullDirCandidates(i - 1, bsHi, lowerMin, upper).map { dirs =>
+                val touchedDirs = touched.map {
+                  case (p, t) => s"${levelPath(i - 1)}/pb=$p/tb=$t"
+                }
+                val untouchedDirs = dirs.filterNot(touchedDirs)
+                  .filter(d => new java.io.File(d).exists())
+                val m = withCountCols(mirror, i - 1)
+                // common incremental case: the hull is entirely touched —
+                // skip the disk read and the union, read the mirror alone
+                val withUntouched =
+                  if (untouchedDirs.isEmpty) m
+                  else
+                    m.unionByName(withCountCols(
+                      spark.read.option("basePath", levelPath(i - 1))
+                        .schema(levelSchema(i - 1)) // skip schema inference
+                        .parquet(untouchedDirs: _*), i - 1))
+                withUntouched
+                  .where(col("interval") >= lowerMin && col("interval") < upper)
+              }
+            }.flatten
+          }.getOrElse {
+            // no usable mirror (nothing upserted at i-1, or the hull spans
+            // too many directories): land any deferred write inline, then
+            // read the level from disk with partition pruning
+            flushDeferred()
+            withCountCols(
+              levelData(i - 1)
+                .where(col("tb") >= lowerMin / bsHi && col("tb") <= (upper - 1) / bsHi &&
+                  col("interval") >= lowerMin && col("interval") < upper), i - 1)
+          }
+          // localCheckpoint, NOT cache — the mirror's reasoning verbatim:
+          // propagated's lineage reads level i-1's pre-write files, and a
+          // cached plan with that lineage is re-executed (re-listed) by
+          // every concurrent write commit's auto-recache and re-read by
+          // any block-loss recompute AFTER the write replaced those files.
+          // The eager checkpoint severs the disk lineage here, on the main
+          // thread, before the deferred write launches.
+          val propagated = frames.hold(withPartitionCols(
+            Rollup
+              .propagateTouchedCounted(higher,
+                changed, steps(i - 1), steps(i), policy.aggregation, policy.xff),
+            steps(i)).localCheckpoint())
+          // one collect gives BOTH the empty check and the touched set the
+          // upsert would otherwise rediscover with its own job
+          val touchedP = propagated.select("pb", "tb").distinct().collect()
+            .map(r => (r.getInt(0), r.getLong(1))).toSet
+          // the propagate (and its read of level i-1's pre-write files) is
+          // materialized in the checkpoint — the deferred write can now
+          // land in the background with nothing left able to re-read the
+          // files it replaces.
+          launchDeferred()
+          deferredMirror = None
+          val propagatedAny = touchedP.nonEmpty
+          val directN = directCounts.getOrElse(i, 0L)
+          // ONE upsert per level: direct writes (prio 2) fused with
+          // propagated windows (prio 1) — DIRECT BEATS PROPAGATED within a
+          // batch: file_update_many commits archives finest-first, so by
+          // the time archive i's own points are written, every
+          // propagation INTO archive i (the finer archives' chains,
+          // whisper.py:858-875) has already landed, and the direct write
+          // physically overwrites the shared slot. (The pre-r13 spelling
+          // had this backwards — caught by tools/DiffFuzz on batches whose
+          // deep-direct points share a window with finer points; the
+          // reference kept the raw point, graft kept the rollup.)
+          // Pre-merged when both exist so the fresh-level fast path
+          // (which skips merging) never sees duplicate slots.
+          if (propagatedAny || directN > 0) {
+            // a direct-written point at level i IS a single raw observation:
+            // known=1, vsum=value
+            def directRows = routed.where(col("level") === i)
+              .select(col("metric"), col("interval"), col("value"),
+                lit(1L).as("known"), col("value").as("vsum"), lit(2L).as("prio"))
+            val incoming =
+              if (directN == 0L) propagated.withColumn("prio", lit(1L))
+              else if (!propagatedAny) directRows
+              else
+                withPartitionCols(directRows, steps(i))
+                  .unionByName(propagated.withColumn("prio", lit(1L)))
+                  .groupBy("metric", "interval", "pb", "tb")
+                  .agg(max_by(struct(col("value"), col("known"), col("vsum")),
+                    col("prio")).as("w"))
+                  .select(col("metric"), col("interval"), col("pb"), col("tb"),
+                    col("w.value").as("value"), col("w.known").as("known"),
+                    col("w.vsum").as("vsum"))
+                  .withColumn("prio", lit(1L))
+            runUpsert(i, steps(i), incoming,
+              Some(touchedP ++ directTouched.getOrElse(i, Set.empty)))
+          }
+          changed = propagated
+            .select("metric", "interval")
+            .unionByName(routed.where(col("level") === i).select("metric", "interval"))
+          // maintain the in-memory mirror of level i for the next step:
+          // direct writes merged with propagated windows, DIRECT wins —
+          // exactly what the fused upsert just materialized on disk
+          prevContent = {
+            def directMirror = routed.where(col("level") === i)
+              .select(col("metric"), col("interval"), col("value"),
+                lit(1L).as("known"), col("value").as("vsum"))
+            if (!freshLevels.contains(i)) None
+            else if (directCounts.getOrElse(i, 0L) == 0L)
+              Some(propagated.select("metric", "interval", "value", "known", "vsum"))
+            else if (!propagatedAny) Some(directMirror)
+            else
+              Some(
+                directMirror.withColumn("prio", lit(2L))
+                  .unionByName(propagated
+                    .select(col("metric"), col("interval"), col("value"),
+                      col("known"), col("vsum"))
+                    .withColumn("prio", lit(1L)))
+                  .groupBy("metric", "interval")
+                  .agg(max_by(struct(col("value"), col("known"), col("vsum")),
+                    col("prio")).as("w"))
+                  .select(col("metric"), col("interval"), col("w.value").as("value"),
+                    col("w.known").as("known"), col("w.vsum").as("vsum")))
+          }
+          // no extra job: nonempty iff something propagated or level i took
+          // direct writes (known from the counts pass); the hull advances
+          // to its alignment merged with level-i direct-write bounds
+          changedNonEmpty = propagatedAny || directCounts.getOrElse(i, 0L) > 0
+          bLo = math.min(lowerMin, directStats.get(i).map(_._2).getOrElse(Long.MaxValue))
+          bHi = math.max(upper - steps(i), directStats.get(i).map(_._3).getOrElse(Long.MinValue))
+          i += 1
+        }
+        // the deepest level's write has no further cascade reader — release
+        // it to the pool (awaited just below)
+        launchDeferred()
+      } catch {
+        case t: Throwable => bodyFailure = t; throw t
+      } finally {
+        // a write still held back when the cascade threw must land (its
+        // level's data is otherwise lost). All failures below are COLLECTED,
+        // never thrown mid-finally: an Await that throws would mask the
+        // body's exception and skip the remaining awaits.
+        val flushFailure =
+          deferred.flatMap(t => scala.util.Try(t()).failed.toOption)
+        deferred = None
+        // deferred writes must land before callers (or the next policy
+        // group in a heterogeneous batch) can read the store — and before
+        // the frames backing them are released
+        val writeFailures = pendingWrites.flatMap(f =>
+          scala.util.Try(scala.concurrent.Await
+            .result(f, scala.concurrent.duration.Duration.Inf)).failed.toOption)
         val failures = flushFailure.toSeq ++ writeFailures
         if (bodyFailure != null) failures.foreach(bodyFailure.addSuppressed)
         else failures.headOption.foreach { primary =>
           failures.drop(1).foreach(primary.addSuppressed)
           throw primary
         }
-      } finally {
-        // blocking releases (repo-wide policy): a fire-and-forget
-        // unpersist leaves block removal running asynchronously into
-        // whatever executes next — under full-suite memory pressure that
-        // async removal was the prime suspect for a one-in-N
-        // "Block rdd_*_* does not exist" on a later read (round-8
-        // verdict). Waiting out the removal here costs milliseconds and
-        // serializes the block lifecycle with the job stream.
-        routed.unpersist(blocking = true)
-        // every deferred write has been awaited above — no reader of
-        // the mirror/propagated checkpoints remains, so their blocks
-        // can be freed now instead of at the next driver GC
-        checkpoints.foreach(releaseCheckpoint)
       }
     }
-  }
 
   /** whisper update() single-point semantics: rejects future timestamps
     * and ages ≥ maxRetention (whisper.py:693-696) — unlike updateMany's
@@ -1611,7 +1571,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
           .select("pb", "tb").distinct().collect()
           // tb reads back as int or long depending on partition inference
           .map(r => (r.getInt(0), r.getAs[Number](1).longValue))
-        if (touched.nonEmpty) {
+        if (touched.nonEmpty) Frames.scoped { frames =>
           // same reasoning as the uniform path: evicted level-0 windows
           // survive in coarser archives (defensive — substitution already
           // refuses heterogeneous stores, but the marker is the record)
@@ -1625,13 +1585,13 @@ final class MetricStore(val spark: SparkSession, val root: String,
           // overwrite below replaces, and the commit's auto-recache
           // re-executes any cached plan matching the written path
           // against the replaced files. The eager checkpoint severs the
-          // disk lineage before the write; blocks are released
-          // explicitly once the overwrite lands (below).
-          val kept = data.where(touchedFilter)
+          // disk lineage before the write; the scope releases its
+          // blocks once the overwrite has landed.
+          val kept = frames.hold(data.where(touchedFilter)
             .join(cutoffDf, Seq("metric"))
             .where(col("interval") > col("cutoff"))
             .select(data.columns.map(col): _*) // all data cols incl. counts
-            .localCheckpoint()
+            .localCheckpoint())
           val keptParts = kept.select("pb", "tb").distinct().collect()
             .map(r => (r.getInt(0), r.getAs[Number](1).longValue)).toSet
           if (keptParts.nonEmpty) {
@@ -1648,7 +1608,6 @@ final class MetricStore(val spark: SparkSession, val root: String,
             case (p, t) =>
               deleteRecursively(new java.io.File(s"${levelPath(i)}/pb=$p/tb=$t"))
           }
-          releaseCheckpoint(kept)
         }
       }
     }

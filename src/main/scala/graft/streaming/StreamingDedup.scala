@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.ext.{Dedup, MinHashIndex}
+import graft.ops.Frames
 
 /** Streaming corpus construction: continuous near-dup filtering of a
   * document stream against a persisted [[MinHashIndex]] — the shape a
@@ -132,80 +133,68 @@ object StreamingDedup {
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    verdictPath: String, tau: Double,
-                   prioCol: Option[String] = None): Unit = {
+                   prioCol: Option[String] = None): Unit = Frames.scoped { frames =>
     val spark = batch.sparkSession
     val idx = MinHashIndex.load(spark, indexPath)
     idx.requirePriorities(prioCol)
-    val docs = batch.select(docCols(prioCol): _*).cache()
-    try {
-      // The batch is shingled and signed ONCE, and ONE fused
-      // candidates-union pass ([[MinHashIndex.nearPairsUnion]], r15)
-      // yields both verdict classes' pairs — previously the cross check
-      // re-shingled the batch inside dedupBatch, the in-batch search
-      // re-shingled the remainder, and the append re-shingled the
-      // survivors: three shingle passes and two full verify chains over
-      // one delivery. Shingling is per-document, so filtering the
-      // cached tables per stage is exact.
-      val docSh = Dedup.hashShingles(Dedup.shingles(docs, idx.n)).cache()
-      val docSigs = idx.signaturesOf(docSh).cache()
-      def idsOf(d: DataFrame)(t: DataFrame): DataFrame =
-        t.join(d.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-      val nearPairs = idx.nearPairsUnion(docs, tau,
-        excludeSeg = Some(s"b$batchId"),
-        shingled = Some(docSh), signatures = Some(docSigs)).cache()
-      // 1. cross: smallest indexed match per dropped doc (the
-      // (priority, id)-minimum match under the election). The batch's
-      // own segment is excluded so a replay (at-least-once foreachBatch)
-      // reads the index as it stood BEFORE its first attempt's append —
-      // without this, replayed survivors match their own earlier rows
-      // and the rewrite empties the segment.
-      val rawCross = nearPairs.where(col("cross"))
-        .select(col("a").as("doc_id"), col("b").as("dup_of"), col("jaccard"))
-      val cross = Dedup.crossKeepers(rawCross, docs, prioCol,
-        idx.priorities(excludeSeg = Some(s"b$batchId"))).cache()
-      val remaining = docs.join(cross.select("doc_id"), Seq("doc_id"), "left_anti")
+    val docs = frames.hold(batch.select(docCols(prioCol): _*).cache())
+    // The batch is shingled and signed ONCE, and ONE fused
+    // candidates-union pass ([[MinHashIndex.nearPairsUnion]], r15)
+    // yields both verdict classes' pairs — previously the cross check
+    // re-shingled the batch inside dedupBatch, the in-batch search
+    // re-shingled the remainder, and the append re-shingled the
+    // survivors: three shingle passes and two full verify chains over
+    // one delivery. Shingling is per-document, so filtering the
+    // cached tables per stage is exact.
+    val docSh = frames.hold(Dedup.hashShingles(Dedup.shingles(docs, idx.n)).cache())
+    val docSigs = frames.hold(idx.signaturesOf(docSh).cache())
+    def idsOf(d: DataFrame)(t: DataFrame): DataFrame =
+      t.join(d.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+    val nearPairs = frames.hold(idx.nearPairsUnion(docs, tau, frames,
+      excludeSeg = Some(s"b$batchId"),
+      shingled = Some(docSh), signatures = Some(docSigs)).cache())
+    // 1. cross: smallest indexed match per dropped doc (the
+    // (priority, id)-minimum match under the election). The batch's
+    // own segment is excluded so a replay (at-least-once foreachBatch)
+    // reads the index as it stood BEFORE its first attempt's append —
+    // without this, replayed survivors match their own earlier rows
+    // and the rewrite empties the segment.
+    val rawCross = nearPairs.where(col("cross"))
+      .select(col("a").as("doc_id"), col("b").as("dup_of"), col("jaccard"))
+    val cross = frames.hold(Dedup.crossKeepers(rawCross, docs, prioCol,
+      idx.priorities(excludeSeg = Some(s"b$batchId"))).cache())
+    val remaining = docs.join(cross.select("doc_id"), Seq("doc_id"), "left_anti")
 
-      // 2. in-batch: exact-verified pairs → components → keep the
-      // min id (or the (priority, id)-minimum member under prioCol).
-      // The pair set is the fused pass's in-batch rows with both
-      // endpoints filtered into the remainder — banding/estimate/
-      // Jaccard are per-pair functions, so this equals
-      // minhashDuplicates(remaining) row-for-row.
-      val pairs = nearPairs.where(!col("cross"))
-        .join(remaining.select(col("doc_id").as("a")), Seq("a"), "left_semi")
-        .join(remaining.select(col("doc_id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"), col("jaccard"))
-      val batchDups = Dedup.batchKeepers(pairs, remaining, prioCol).cache()
-      val survivors = remaining
-        .join(batchDups.select("doc_id"), Seq("doc_id"), "left_anti")
-        .cache()
+    // 2. in-batch: exact-verified pairs → components → keep the
+    // min id (or the (priority, id)-minimum member under prioCol).
+    // The pair set is the fused pass's in-batch rows with both
+    // endpoints filtered into the remainder — banding/estimate/
+    // Jaccard are per-pair functions, so this equals
+    // minhashDuplicates(remaining) row-for-row.
+    val pairs = nearPairs.where(!col("cross"))
+      .join(remaining.select(col("doc_id").as("a")), Seq("a"), "left_semi")
+      .join(remaining.select(col("doc_id").as("b")), Seq("b"), "left_semi")
+      .select(col("a"), col("b"), col("jaccard"))
+    val batchDups = frames.hold(Dedup.batchKeepers(pairs, remaining, prioCol).cache())
+    val survivors = frames.hold(remaining
+      .join(batchDups.select("doc_id"), Seq("doc_id"), "left_anti")
+      .cache())
 
-      // 3. exactly-once effects: segment + verdict dirs keyed by
-      // batchId — the VERDICT first: append's refreshByPath invalidates
-      // `cross`'s cache (its plan reads the index tables), so a verdict
-      // write after the append would silently recompute the cross-dedup
-      // chain (the StreamingCorpusPipeline finding); both effects are
-      // overwrite-keyed, so the order is immaterial to replay.
-      cross.withColumn("verdict", lit("dup_index"))
-        .unionByName(batchDups.withColumn("verdict", lit("dup_batch")))
-        .unionByName(survivors.select(col("doc_id"),
-          lit(null).cast("long").as("dup_of"), lit("kept").as("verdict")))
-        .select("doc_id", "verdict", "dup_of")
-        .write.mode("overwrite").parquet(s"$verdictPath/batch=$batchId")
-      idx.append(survivors, seg = s"b$batchId",
-        shingled = Some(idsOf(survivors)(docSh)),
-        signatures = Some(idsOf(survivors)(docSigs)),
-        prioCol = prioCol)
-      // teardown most-derived-first: non-cascading unpersist EAGERLY
-      // rebuilds any live cache whose plan references the dropped one
-      // — dropping `cross` before its dependents would re-run their
-      // chains just to throw them away
-      survivors.unpersist(blocking = true)
-      batchDups.unpersist(blocking = true)
-      cross.unpersist(blocking = true)
-      nearPairs.unpersist(blocking = true)
-      docSigs.unpersist(blocking = true)
-      docSh.unpersist(blocking = true)
-    } finally docs.unpersist(blocking = true)
+    // 3. exactly-once effects: segment + verdict dirs keyed by
+    // batchId — the VERDICT first: append's refreshByPath invalidates
+    // `cross`'s cache (its plan reads the index tables), so a verdict
+    // write after the append would silently recompute the cross-dedup
+    // chain (the StreamingCorpusPipeline finding); both effects are
+    // overwrite-keyed, so the order is immaterial to replay.
+    cross.withColumn("verdict", lit("dup_index"))
+      .unionByName(batchDups.withColumn("verdict", lit("dup_batch")))
+      .unionByName(survivors.select(col("doc_id"),
+        lit(null).cast("long").as("dup_of"), lit("kept").as("verdict")))
+      .select("doc_id", "verdict", "dup_of")
+      .write.mode("overwrite").parquet(s"$verdictPath/batch=$batchId")
+    idx.append(survivors, seg = s"b$batchId",
+      shingled = Some(idsOf(survivors)(docSh)),
+      signatures = Some(idsOf(survivors)(docSigs)),
+      prioCol = prioCol)
   }
 }

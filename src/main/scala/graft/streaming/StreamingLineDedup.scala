@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.LineIndex
+import graft.ops.Frames
 
 /** Streaming C4-style line dedup: continuous boilerplate removal from a
   * document stream against a persisted [[LineIndex]] — every delivery
@@ -62,16 +63,15 @@ object StreamingLineDedup {
     * the IDENTICAL cleaning outside a stream.
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
-                   outPath: String, prioCol: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    val idx = LineIndex.load(spark, indexPath)
-    val clean = idx
-      .dedupLinesBatch(batch.select(StreamingDedup.docCols(prioCol): _*),
-        excludeSeg = Some(s"b$batchId"), prioCol = prioCol)
-      .cache()
-    try {
+                   outPath: String, prioCol: Option[String] = None): Unit =
+    Frames.scoped { frames =>
+      val spark = batch.sparkSession
+      val idx = LineIndex.load(spark, indexPath)
+      val clean = frames.hold(idx
+        .dedupLinesBatch(batch.select(StreamingDedup.docCols(prioCol): _*),
+          excludeSeg = Some(s"b$batchId"), prioCol = prioCol)
+        .cache())
       clean.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       idx.append(clean, seg = s"b$batchId")
-    } finally { clean.unpersist(blocking = true): Unit }
-  }
+    }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Dedup, SemanticIndex}
+import graft.ops.Frames
 
 /** Streaming semantic corpus construction: continuous SemDeDup-style
   * filtering of an embedding stream against a persisted
@@ -63,7 +64,7 @@ object StreamingSemanticDedup {
     * the IDENTICAL keeper semantics outside a stream.
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
-                   verdictPath: String, tau: Double): Unit = {
+                   verdictPath: String, tau: Double): Unit = Frames.scoped { frames =>
     val spark = batch.sparkSession
     val idx = SemanticIndex.load(spark, indexPath)
     // Same vec_id delivered twice inside one batch collapses to one row
@@ -77,42 +78,35 @@ object StreamingSemanticDedup {
     // ONE centroid assignment per micro-batch, threaded through cross
     // dedup, the in-batch rule, and the append (each used to re-assign:
     // three normalize + broadcast-score passes per batch on the hot path)
-    val assigned = idx.assign(vecs).cache()
-    try {
-      // 1. cross: smallest indexed match per dropped vector; own-segment
-      // exclusion so a replay reads the index as of its FIRST attempt
-      val cross = idx.dedupAssigned(assigned, tau, excludeSeg = Some(s"b$batchId"))
-        .groupBy("vec_id").agg(min(col("dup_of")).as("dup_of"))
-        .cache()
-      val remaining = assigned.join(
-        cross.select(col("vec_id").as("id")), Seq("id"), "left_anti")
+    val assigned = frames.hold(idx.assign(vecs).cache())
+    // 1. cross: smallest indexed match per dropped vector; own-segment
+    // exclusion so a replay reads the index as of its FIRST attempt
+    val cross = frames.hold(idx.dedupAssigned(assigned, tau, excludeSeg = Some(s"b$batchId"))
+      .groupBy("vec_id").agg(min(col("dup_of")).as("dup_of"))
+      .cache())
+    val remaining = assigned.join(
+      cross.select(col("vec_id").as("id")), Seq("id"), "left_anti")
 
-      // 2. in-batch: the semanticDedup smaller-id keeper rule within the
-      // remainder's cells (the index's frozen centroid space, so batch
-      // and index agree on cells)
-      val batchDups = Dedup.cellKeepers(remaining, tau, idx.normalized)
-        .select(col("id").as("vec_id"), col("dup_of"))
-        .cache()
-      val survivors = remaining
-        .join(batchDups.select(col("vec_id").as("id")), Seq("id"), "left_anti")
-        .cache()
+    // 2. in-batch: the semanticDedup smaller-id keeper rule within the
+    // remainder's cells (the index's frozen centroid space, so batch
+    // and index agree on cells)
+    val batchDups = frames.hold(Dedup.cellKeepers(remaining, tau, idx.normalized)
+      .select(col("id").as("vec_id"), col("dup_of"))
+      .cache())
+    val survivors = frames.hold(remaining
+      .join(batchDups.select(col("vec_id").as("id")), Seq("id"), "left_anti")
+      .cache())
 
-      // 3. exactly-once effects: segment + verdict dirs keyed by
-      // batchId — verdict BEFORE append (append's refreshByPath
-      // invalidates `cross`'s cache, whose plan reads the index; a
-      // later verdict write would recompute it), teardown
-      // most-derived-first (non-cascading unpersist eagerly rebuilds
-      // live dependents of the dropped entry)
-      cross.withColumn("verdict", lit("dup_index"))
-        .unionByName(batchDups.withColumn("verdict", lit("dup_batch")))
-        .unionByName(survivors.select(col("id").as("vec_id"),
-          lit(null).cast("long").as("dup_of"), lit("kept").as("verdict")))
-        .select("vec_id", "verdict", "dup_of")
-        .write.mode("overwrite").parquet(s"$verdictPath/batch=$batchId")
-      idx.appendAssigned(survivors, seg = s"b$batchId")
-      survivors.unpersist(blocking = true)
-      batchDups.unpersist(blocking = true)
-      cross.unpersist(blocking = true)
-    } finally { assigned.unpersist(blocking = true); () }
+    // 3. exactly-once effects: segment + verdict dirs keyed by
+    // batchId — verdict BEFORE append (append's refreshByPath
+    // invalidates `cross`'s cache, whose plan reads the index; a
+    // later verdict write would recompute it)
+    cross.withColumn("verdict", lit("dup_index"))
+      .unionByName(batchDups.withColumn("verdict", lit("dup_batch")))
+      .unionByName(survivors.select(col("id").as("vec_id"),
+        lit(null).cast("long").as("dup_of"), lit("kept").as("verdict")))
+      .select("vec_id", "verdict", "dup_of")
+      .write.mode("overwrite").parquet(s"$verdictPath/batch=$batchId")
+    idx.appendAssigned(survivors, seg = s"b$batchId")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Dedup, WinnowIndex}
+import graft.ops.Frames
 
 /** Streaming winnow-fingerprint dedup: the [[StreamingDedup]] rule on
   * the positional sub-token signal — a document is kept only if its
@@ -55,37 +56,31 @@ object StreamingWinnowDedup {
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    verdictPath: String, tau: Double,
                    maxHashFreq: Long = 64,
-                   prioCol: Option[String] = None): Unit = {
+                   prioCol: Option[String] = None): Unit = Frames.scoped { frames =>
     val spark = batch.sparkSession
     val idx = WinnowIndex.load(spark, indexPath)
     idx.requirePriorities(prioCol)
-    val docs = batch.select(StreamingDedup.docCols(prioCol): _*).cache()
-    try {
-      val rawCross = idx.dedupBatch(docs, tau, maxHashFreq,
-        excludeSeg = Some(s"b$batchId"))
-      val cross = Dedup.crossKeepers(rawCross, docs, prioCol,
-        idx.priorities(excludeSeg = Some(s"b$batchId"))).cache()
-      val remaining = docs.join(cross.select("doc_id"), Seq("doc_id"), "left_anti")
-      val pairs = Dedup.winnowPairs(remaining, k = idx.k, w = idx.w,
-        tau = tau, maxHashFreq = maxHashFreq)
-      val batchDups = Dedup.batchKeepers(pairs, remaining, prioCol).cache()
-      val survivors = remaining
-        .join(batchDups.select("doc_id"), Seq("doc_id"), "left_anti")
-        .cache()
-      // verdict BEFORE append (append's refreshByPath invalidates
-      // `cross`'s cache, whose plan reads the index; a later verdict
-      // write would recompute it); teardown most-derived-first
-      // (non-cascading unpersist eagerly rebuilds live dependents)
-      cross.withColumn("verdict", lit("dup_index"))
-        .unionByName(batchDups.withColumn("verdict", lit("dup_batch")))
-        .unionByName(survivors.select(col("doc_id"),
-          lit(null).cast("long").as("dup_of"), lit("kept").as("verdict")))
-        .select("doc_id", "verdict", "dup_of")
-        .write.mode("overwrite").parquet(s"$verdictPath/batch=$batchId")
-      idx.append(survivors, seg = s"b$batchId", prioCol = prioCol)
-      survivors.unpersist(blocking = true)
-      batchDups.unpersist(blocking = true)
-      cross.unpersist(blocking = true)
-    } finally docs.unpersist(blocking = true): Unit
+    val docs = frames.hold(batch.select(StreamingDedup.docCols(prioCol): _*).cache())
+    val rawCross = idx.dedupBatch(docs, tau, maxHashFreq,
+      excludeSeg = Some(s"b$batchId"))
+    val cross = frames.hold(Dedup.crossKeepers(rawCross, docs, prioCol,
+      idx.priorities(excludeSeg = Some(s"b$batchId"))).cache())
+    val remaining = docs.join(cross.select("doc_id"), Seq("doc_id"), "left_anti")
+    val pairs = Dedup.winnowPairs(remaining, k = idx.k, w = idx.w,
+      tau = tau, maxHashFreq = maxHashFreq)
+    val batchDups = frames.hold(Dedup.batchKeepers(pairs, remaining, prioCol).cache())
+    val survivors = frames.hold(remaining
+      .join(batchDups.select("doc_id"), Seq("doc_id"), "left_anti")
+      .cache())
+    // verdict BEFORE append (append's refreshByPath invalidates
+    // `cross`'s cache, whose plan reads the index; a later verdict
+    // write would recompute it)
+    cross.withColumn("verdict", lit("dup_index"))
+      .unionByName(batchDups.withColumn("verdict", lit("dup_batch")))
+      .unionByName(survivors.select(col("doc_id"),
+        lit(null).cast("long").as("dup_of"), lit("kept").as("verdict")))
+      .select("doc_id", "verdict", "dup_of")
+      .write.mode("overwrite").parquet(s"$verdictPath/batch=$batchId")
+    idx.append(survivors, seg = s"b$batchId", prioCol = prioCol)
   }
 }

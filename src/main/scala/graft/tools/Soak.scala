@@ -26,23 +26,25 @@ import graft.streaming.{StreamingCorpusPipeline, StreamingDedup, StreamingLineDe
   * wall — stay flat. The fold is timed on its own (`csec`): it costs
   * O(base + folds) every K batches, the LSM-style amortization.
   *
-  * Families (documents; segments counted on):
+  * Files and segments are counted over every index the subject grows:
+  * `files` is the parquet files under each index's directory, `segs`
+  * the distinct `seg=` names across each index's tables, summed.
+  *
+  * Families:
   *
   *   - `dedup`: [[StreamingDedup]] on 12-word docs, 90% fresh / 5%
-  *     seed dups / 5% in-batch dups; the MinHash `bands` table;
-  *   - `winnow`: [[StreamingWinnowDedup]], same mix; the `fps` table;
+  *     seed dups / 5% in-batch dups;
+  *   - `winnow`: [[StreamingWinnowDedup]], same mix;
   *   - `line`: [[StreamingLineDedup]] on 8-line docs (5 fresh lines,
   *     one seed boilerplate line, one in-batch banner, one short exempt
-  *     line); the `lines` table;
+  *     line);
   *   - `ngram`: [[StreamingNgramStats]] with a top-K snapshot per batch,
-  *     docs drawing ~20% of words from a 200-word hot pool; the `grams`
-  *     table;
+  *     docs drawing ~20% of words from a 200-word hot pool;
   *   - `semantic`: [[StreamingSemanticDedup]] on 16-dim vectors, same
-  *     mix, tau 0.95, 16 cells; the `members` table;
+  *     mix, tau 0.95, 16 cells;
   *   - `pipeline`: [[StreamingCorpusPipeline]] — quality → exact →
   *     near-dup, 80% fresh / 10% quality fails / 5% seed dups / 5%
-  *     in-batch dups; files of the fingerprint, MinHash (and line)
-  *     indexes, segments of `bands` + `fps` (+ `lines`).
+  *     in-batch dups.
   *
   * Prints one JSON line per batch:
   *   {"mode":"compact","batch":17,"sec":0.61,"csec":0.00,"files":42,"segs":3}
@@ -57,14 +59,11 @@ import graft.streaming.{StreamingCorpusPipeline, StreamingDedup, StreamingLineDe
 object Soak {
 
   /** One mode's soak subject: the delivery for batch b, the per-batch
-    * work, the indexes a fold compacts, the directories whose parquet
-    * files are counted and the tables whose segments are counted.
+    * work, and the indexes it grows (folded, and counted).
     */
   private final case class Subject(deliver: Int => DataFrame,
                                    process: (DataFrame, Long) => Unit,
-                                   indexes: Seq[SegmentedIndex],
-                                   fileDirs: Seq[String],
-                                   segTables: Seq[String])
+                                   indexes: Seq[SegmentedIndex])
 
   /** Deterministic hashed word stream per (salt, i): no RNG state is
     * carried between calls, so every run sees the same documents.
@@ -139,25 +138,24 @@ object Soak {
         val p = tmp("idx")
         Subject(b => mix(b, perBatch, docText).toDF("doc_id", "text"),
           StreamingDedup.processBatch(_, _, p, out, tau = 0.5),
-          Seq(MinHashIndex.build(seed(docText), p)), Seq(p), Seq(s"$p/bands"))
+          Seq(MinHashIndex.build(seed(docText), p)))
       case "winnow" =>
         val p = tmp("idx")
         Subject(b => mix(b, perBatch, docText).toDF("doc_id", "text"),
           StreamingWinnowDedup.processBatch(_, _, p, out, tau = 0.5),
-          Seq(WinnowIndex.build(seed(docText), p)), Seq(p), Seq(s"$p/fps"))
+          Seq(WinnowIndex.build(seed(docText), p)))
       case "line" =>
         val p = tmp("idx")
         Subject(b => (0 until perBatch)
             .map(i => (b * 100000L + i, lineDoc(b.toLong, i))).toDF("doc_id", "text"),
           StreamingLineDedup.processBatch(_, _, p, out),
-          Seq(LineIndex.build(seed(lineDoc), p)), Seq(p), Seq(s"$p/lines"))
+          Seq(LineIndex.build(seed(lineDoc), p)))
       case "ngram" =>
         val p = tmp("idx")
         Subject(b => (0 until perBatch)
             .map(i => (b * 100000L + i, ngramDoc(b.toLong, i))).toDF("doc_id", "text"),
           StreamingNgramStats.processBatch(_, _, p, snapshotPath = Some(out)),
-          Seq(NgramIndex.build(seed(ngramDoc), p, n = 2)), Seq(p),
-          Seq(s"$p/grams"))
+          Seq(NgramIndex.build(seed(ngramDoc), p, n = 2)))
       case "semantic" =>
         val p = tmp("idx")
         val idx = SemanticIndex.build(
@@ -165,7 +163,7 @@ object Soak {
           p, nlist = 16)
         Subject(b => mix(b, perBatch, vec).toDF("vec_id", "embedding"),
           StreamingSemanticDedup.processBatch(_, _, p, out, tau = 0.95),
-          Seq(idx), Seq(p), Seq(s"$p/members"))
+          Seq(idx))
       case "pipeline" => pipeline(mode, perBatch, spark, tmp, out)
       case other => sys.error(s"unknown soak family: $other")
     }
@@ -244,20 +242,21 @@ object Soak {
       StreamingCorpusPipeline.processBatch(_, _, fp.path, mh.path, sp, out,
         cfg, semPath = sm.map(_.path), winPath = wn.map(_.path),
         lnPath = ln.map(_.path), ngPath = ng.map(_.path)),
-      Seq(fp, mh) ++ ln ++ wn ++ sm ++ ng,
-      Seq(fp.path, mh.path) ++ ln.map(_.path),
-      Seq(s"${mh.path}/bands", s"${fp.path}/fps") ++ ln.map(l => s"${l.path}/lines"))
+      Seq(fp, mh) ++ ln ++ wn ++ sm ++ ng)
   }
 
-  private def countFiles(dir: File): Int = {
-    val kids = Option(dir.listFiles).getOrElse(Array.empty)
-    kids.count(f => f.isFile && f.getName.endsWith(".parquet")) +
-      kids.filter(_.isDirectory).map(countFiles).sum
-  }
+  private def subdirs(dir: File): Seq[File] =
+    Option(dir.listFiles).getOrElse(Array.empty[File]).toSeq.filter(_.isDirectory)
 
-  private def countSegs(table: String): Int =
-    Option(new File(table).listFiles).getOrElse(Array.empty)
-      .count(f => f.isDirectory && f.getName.startsWith("seg="))
+  private def countFiles(dir: File): Int =
+    Option(dir.listFiles).getOrElse(Array.empty[File])
+      .count(f => f.isFile && f.getName.endsWith(".parquet")) +
+      subdirs(dir).map(countFiles).sum
+
+  /** Distinct `seg=` names across an index's tables. */
+  private def countSegs(index: File): Int =
+    subdirs(index).flatMap(subdirs).map(_.getName)
+      .filter(_.startsWith("seg=")).distinct.size
 
   private def soak(mode: String, every: Int, batches: Int, s: Subject): Unit = {
     val walls = (0 until batches).map { b =>
@@ -272,8 +271,9 @@ object Soak {
           s.indexes.foreach(_.compact(folds))
           (System.nanoTime() - tc) / 1e9
         } else 0.0
-      val files = s.fileDirs.map(d => countFiles(new File(d))).sum
-      val segs = s.segTables.map(countSegs).sum
+      val dirs = s.indexes.map(i => new File(i.path))
+      val files = dirs.map(countFiles).sum
+      val segs = dirs.map(countSegs).sum
       println(f"""{"mode":"$mode","batch":$b,"sec":$sec%.2f,"csec":$csec%.2f,"files":$files,"segs":$segs}""")
       sec
     }

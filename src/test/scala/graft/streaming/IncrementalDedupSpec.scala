@@ -340,6 +340,34 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(v == Map(10L -> "kept", 11L -> "dup_batch"))
   }
 
+  /** A verdict path under a regular file: the verdict write fails
+    * after every stage frame has been built and cached.
+    */
+  private def unwritablePath(): String =
+    Files.createTempFile("verdicts", ".file").toString + "/v"
+
+  test("a failing verdict write leaves no StreamingDedup cache behind") {
+    import spark.implicits._
+    val idxPath = Files.createTempDirectory("mhidx-f").toString
+    MinHashIndex.build(Seq((1L, A)).toDF("doc_id", "text"), idxPath)
+    val batch = Seq((10L, A1), (11L, B), (12L, B)).toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    intercept[Exception](
+      StreamingDedup.processBatch(batch, 0L, idxPath, unwritablePath(), tau = 0.5))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a failing verdict write leaves no StreamingWinnowDedup cache behind") {
+    import spark.implicits._
+    val idxPath = Files.createTempDirectory("winidx-f").toString
+    graft.ext.WinnowIndex.build(Seq((1L, A)).toDF("doc_id", "text"), idxPath)
+    val batch = Seq((10L, A1), (11L, B), (12L, B)).toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    intercept[Exception](
+      StreamingWinnowDedup.processBatch(batch, 0L, idxPath, unwritablePath(), tau = 0.5))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("streaming line dedup: history + in-batch repeats shed, replay idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

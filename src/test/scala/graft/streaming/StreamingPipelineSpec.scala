@@ -620,6 +620,37 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(got == Map(101L -> "kept", 102L -> "kept"), s"verdicts: $got")
   }
 
+  test("deliveries with a winnow index leave no cache or persisted RDD behind") {
+    import spark.implicits._
+    val fpPath = Files.createTempDirectory("cpl-fp").toString
+    val mhPath = Files.createTempDirectory("cpl-mh").toString
+    val winPath = Files.createTempDirectory("cpl-win").toString
+    val vPath = Files.createTempDirectory("cpl-v").toString
+    val seed = Seq((1L, A)).toDF("doc_id", "text")
+    FingerprintIndex.build(seed, fpPath)
+    MinHashIndex.build(seed, mhPath)
+    graft.ext.WinnowIndex.build(seed, winPath)
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    // every stage convicts: exact vs the index, in-batch near pair
+    // (a component solved on the driver), near vs the grown index
+    StreamingCorpusPipeline.processBatch(
+      Seq((101L, A), (102L, D), (103L, D1), (104L, E)).toDF("doc_id", "text"),
+      0L, fpPath, mhPath, None, vPath, cfg, winPath = Some(winPath))
+    StreamingCorpusPipeline.processBatch(
+      Seq((201L, E1), (202L, F), (203L, D)).toDF("doc_id", "text"),
+      1L, fpPath, mhPath, None, vPath, cfg, winPath = Some(winPath))
+    val got = spark.read.parquet(vPath).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(101L -> "dup_exact", 102L -> "kept", 103L -> "dup_batch",
+      104L -> "kept", 201L -> "dup_index", 202L -> "kept", 203L -> "dup_exact"),
+      s"verdicts: $got")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val leaked = sc.getPersistentRDDs.keySet -- rddsBefore
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
   test("bloom gate in the exact stage: verdicts identical to the plain run, replay-safe") {
     import spark.implicits._
     val vPlain = Files.createTempDirectory("cpb-vp").toString
