@@ -17,6 +17,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.ops.Frames.quietReleaseWarnings()
     // job counters for the ingest-evidence section below, split into
     // the store's tagged write jobs and the rest — the x00/x01 job
     // asymmetry is unreadable from a single total (see the

@@ -26,6 +26,17 @@ object Frames {
     case _              => df.unpersist(blocking = true): Unit
   }
 
+  /** Raise the logger of a cut's RDD to ERROR. Spark warns on every
+    * [[release]] of a cut that it "was locally checkpointed … cannot be
+    * recomputed after unpersisting" — expected, since a cut is released
+    * only after its last reader — and a `graft.Verify` run would print
+    * dozens to hundreds of those lines. Entry points that log at WARN
+    * call this after `setLogLevel`, which sets only the root logger.
+    */
+  def quietReleaseWarnings(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
+
   /** The frames one [[scoped]] block holds. */
   final class Scope private[Frames] {
     private[Frames] val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

@@ -1,80 +1,65 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, MaxBy, Min, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.SparkSession
 
 import graft.model.AggregationMethod
 import graft.store.MetricStore
 
-/** Whisper's archive selection (/root/reference/whisper.py:947-954) as a
-  * Catalyst optimizer rule: an aggregation that re-derives a coarser
-  * rollup from level-0 points is rewritten to SCAN the store's
-  * precomputed rollup level instead — materialized-view substitution for
-  * the rollup hierarchy.
+/** Whisper's archive selection (whisper.py:947-954) as a Catalyst
+  * optimizer rule: an aggregation that re-derives a coarser rollup from
+  * level-0 points is rewritten to SCAN the store's precomputed rollup
+  * level instead — materialized-view substitution for the rollup
+  * hierarchy. SUBSTITUTION.md is the behaviour map.
   *
-  * Matches plans of the shape
-  *   Aggregate(
-  *     groupBy = [metric, interval - (interval % S)],
-  *     agg     = [kernel(value)],
-  *     child   = <level-0 scan of a registered store>)
-  * where the store's policy has a level with secondsPerPoint == S and the
-  * kernel matches the policy's aggregation method. The rewrite preserves
-  * output attribute ids by aliasing the substituted scan's columns, so
-  * parent operators are untouched.
+  * The decision is made in two steps, each written once:
+  *  1. the time-key match ([[matchTimeKey]]): the Aggregate groups by
+  *     exactly (metric, time key) over a Project/Filter chain down to
+  *     THIS store's level-0 scan. Resolved to the scan's own columns, the
+  *     time key is an alignment `interval - interval % S`, an
+  *     epoch-aligned `date_trunc`, or a tumbling `window(ts, "S
+  *     seconds")`, and every aggregate output takes a role — metric,
+  *     time, kernel, count — by exprId;
+  *  2. the output-role binding ([[substitute]]) at one of three top
+  *     nodes — the Aggregate, a gate Filter over it, or a pass-through
+  *     Project over that Filter — chooses the level with step S and the
+  *     policy's kernel, and rebuilds every output from the level's
+  *     columns under its own name and exprId, so parents are untouched.
   *
   * Correctness note: substitution is semantics-preserving only because
   * the store maintains level-S with EXACTLY this aggregation (same xff
-  * gate, same kernel) — which also means a query whose window matches a
-  * level but whose kernel differs is deliberately NOT rewritten. xff>0
-  * policies additionally gate rollup rows, so substitution is restricted
-  * to xff == 0 policies (where rollup rows = plain window aggregates).
+  * gate, same kernel) — so a query whose step matches a level but whose
+  * kernel differs is deliberately NOT rewritten. An ungated query
+  * substitutes only on an xff == 0 policy (where rollup rows are plain
+  * window aggregates); a query that restates the store's own gate over
+  * its count output substitutes at any xff.
   *
   * Enable per session via `RollupSubstitution.register(spark, store)`
   * (uses `spark.experimental.extraOptimizations`, no session rebuild).
   */
 final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     extends Rule[LogicalPlan] {
-
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+  import RollupSubstitution._
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    // xff-gated shape: the query reproduces the store's gate explicitly
-    //   Project(metric, interval, value,
-    //     Filter(known > 0 && known/slots >= xff,
-    //       Aggregate([metric, align], [metric, interval, kernel, count])))
-    // — sound for ANY policy xff, because level-i rows are exactly the
-    // gated window aggregates.
-    case p @ Project(_, Filter(cond, agg @ Aggregate(groupingExprs, aggExprs, child, _)))
-        if groupingExprs.size == 2 && p.output.size == 3 =>
-      rewriteGated(p, cond, agg, groupingExprs, aggExprs, child)
-        .orElse(rewriteGatedWindow(p, cond, agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteGatedTrunc(p, cond, agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteMultiPolicy(p))
-        .getOrElse(p)
-    // gated shape KEEPING the count output: the passthrough Project is
-    // optimized away, leaving the bare Filter over the 4-output Aggregate
-    // (align-arithmetic and window() spellings)
-    case f @ Filter(cond, agg @ Aggregate(groupingExprs, aggExprs, child, _))
-        if groupingExprs.size == 2 && agg.output.size == 4 =>
-      rewriteGatedKnown(f, cond, agg, groupingExprs, aggExprs, child)
-        .orElse(rewriteGatedKnownWindow(f, cond, agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteGatedKnownTrunc(f, cond, agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteMultiPolicy(f))
-        .getOrElse(f)
-    case agg @ Aggregate(groupingExprs, aggExprs, child, _)
-        if groupingExprs.size == 2 =>
-      rewrite(agg, groupingExprs, aggExprs, child)
-        .orElse(rewriteWindow(agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteTrunc(agg, groupingExprs, aggExprs, child))
-        .orElse(rewritePruned(agg, groupingExprs, aggExprs, child))
-        .orElse(rewritePrunedWindow(agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteKnown(agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteKnownWindow(agg, groupingExprs, aggExprs, child))
-        .orElse(rewriteMultiPolicy(agg))
-        .getOrElse(agg)
+    case node => topOf(node)
+      .flatMap(top => substitute(top).orElse(rewriteMultiPolicy(top)))
+      .getOrElse(node)
+  }
+
+  /** The [[Top]] rooted at `node`, if `node` is one of the three shapes. */
+  private def topOf(node: LogicalPlan): Option[Top] = node match {
+    case a: Aggregate =>
+      Some(Top(a, None, a.output, c => a.copy(child = c)))
+    case f @ Filter(cond, a: Aggregate) =>
+      Some(Top(a, Some(cond), a.output, c => f.copy(child = a.copy(child = c))))
+    case p @ Project(outs, f @ Filter(cond, a: Aggregate)) =>
+      Some(Top(a, Some(cond), outs,
+        c => p.copy(child = f.copy(child = a.copy(child = c)))))
+    case _ => None
   }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -82,17 +67,17 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     case x => Seq(x)
   }
 
-  /** Substitution validates ONE policy's xff/steps/kernel, but the
-    * level_i directories are shared by every metric in the store
-    * (MetricStore.updateMany supports heterogeneous per-metric
-    * policies). Substituting a level scan after checking only one
-    * metric's policy would return wrong grids for metrics with a
-    * different one — so require the store to be policy-uniform,
-    * mirroring upsertRollups' guard; on non-uniform stores
-    * [[pinnedPolicy]] still substitutes queries whose predicates pin
-    * the scan to metrics of a single policy.
-    */
-  /** Also requires the store's levels to still BE the cascade of the
+  /** The one policy of a policy-uniform store, or None. Substitution
+    * validates ONE policy's xff/steps/kernel, but the level_i directories
+    * are shared by every metric in the store (MetricStore.updateMany
+    * supports heterogeneous per-metric policies). Substituting a level
+    * scan after checking only one metric's policy would return wrong
+    * grids for metrics with a different one — so require the store to be
+    * policy-uniform, mirroring upsertRollups' guard; on non-uniform
+    * stores [[pinnedPolicy]] still substitutes queries whose predicates
+    * pin the scan to metrics of a single policy.
+    *
+    * Also requires the store's levels to still BE the cascade of the
     * current level-0 table: points that routed directly into coarser
     * archives (too old for level 0), external rollup upserts, value
     * transforms, per-level merges/fills, and policy edits all make a
@@ -105,20 +90,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     if (ps.size == 1) ps.headOption else None
   }
 
-  /** Heterogeneous stores (whisper's storage-schemas.conf: per-family
-    * retention): substitution is still sound when the query's scan is
-    * PINNED to metrics that all share one policy — the pinning conjunct
-    * (an equality/IN on `metric` with string literals) restricts the
-    * input to a subset of those names, every carried metric predicate is
-    * reapplied on the substituted level scan, and each policy's cascade
-    * writes its metrics' level-i rollups into the shared `level_i`
-    * directory, so the pinned policy's level index + the carried metric
-    * filter read exactly the pinned metrics' rollups. Names the store
-    * never created contribute no rows on either side; at least one
-    * pinned name must resolve to a policy, and all resolving names must
-    * agree on it. OR-arms / IN-lists that mix policies refuse — the
-    * substituted grid would be wrong for one family.
-    */
   /** The metric names a predicate set PINS the scan to: the names of the
     * first conjunct that is an equality / IN / OR-of-equalities on the
     * metric column with string literals (a conjunct restricts the scan
@@ -153,6 +124,20 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     preds.flatMap(names(_)).headOption
   }
 
+  /** Heterogeneous stores (whisper's storage-schemas.conf: per-family
+    * retention): substitution is still sound when the query's scan is
+    * PINNED to metrics that all share one policy — the pinning conjunct
+    * (an equality/IN on `metric` with string literals) restricts the
+    * input to a subset of those names, every carried metric predicate is
+    * reapplied on the substituted level scan, and each policy's cascade
+    * writes its metrics' level-i rollups into the shared `level_i`
+    * directory, so the pinned policy's level index + the carried metric
+    * filter read exactly the pinned metrics' rollups. Names the store
+    * never created contribute no rows on either side; at least one
+    * pinned name must resolve to a policy, and all resolving names must
+    * agree on it. OR-arms / IN-lists that mix policies refuse — the
+    * substituted grid would be wrong for one family.
+    */
   private def pinnedPolicy(preds: Seq[Expression],
                            leaf: LogicalPlan): Option[graft.model.RetentionPolicy] = {
     if (!store.rollupsDerivedFromLevel0) return None
@@ -182,62 +167,36 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     * for N without buying anything. Unpinned heterogeneous reads still
     * refuse: this path only fires on an explicit multi-family pin.
     */
-  private def rewriteMultiPolicy(top: LogicalPlan): Option[LogicalPlan] = {
-    if (!store.rollupsDerivedFromLevel0) return None
-    if (uniformPolicy.isDefined) return None
-    val located: Option[(Aggregate, LogicalPlan => LogicalPlan)] = top match {
-      case a: Aggregate => Some((a, c => a.copy(child = c)))
-      case p @ Project(_, f @ Filter(_, a: Aggregate)) =>
-        Some((a, c => p.copy(child = f.copy(child = a.copy(child = c)))))
-      case f @ Filter(_, a: Aggregate) =>
-        Some((a, c => f.copy(child = a.copy(child = c))))
-      case _ => None
-    }
-    located.flatMap { case (agg, rebuild) =>
-      val child = agg.child
-      matchLevel0ScanFiltered(child).map(s => (s.leaf, s.preds))
-        .orElse(walkWindowChain(child).map(c => (c.leaf, c.resolvedPreds)))
-        .flatMap { case (leaf, preds) =>
-          val metricId = leaf.output.find(_.name == "metric").map(_.exprId)
-          for {
-            ns <- pinnedNames(preds, metricId)
-            m <- child.output.find(_.name == "metric")
-            pols = store.policies()
-            families = ns.distinct
-              .flatMap(n => pols.get(n).map(_ -> n))
-              .groupBy(_._1).toSeq
-              .map { case (p, xs) => (p, xs.map(_._2).sorted) }
-              .sortBy(_._2.head)
-            if families.size >= 2
-            branches = families.map { case (_, names) =>
-              // the narrowing conjunct lands FIRST in the walked preds,
-              // so the branch's pinnedPolicy resolves its one family;
-              // it is metric-only, so commutingPreds carries it onto
-              // the substituted level scan
-              apply(rebuild(Filter(
-                In(m, names.map(Literal.create(_,
-                  org.apache.spark.sql.types.StringType))), child)))
-            }
-            // all-or-nothing: every branch must have dropped its level-0
-            // scan for the union to beat the original plan
-            if branches.forall(_.find(isLevel0Leaf).isEmpty)
-          } yield branches.reduce(
-            org.apache.spark.sql.catalyst.plans.logical.Union(_, _))
-        }
-    }
+  private def rewriteMultiPolicy(top: Top): Option[LogicalPlan] = {
+    val child = top.agg.child
+    for {
+      chain <- walkChain(child)
+      ns <- pinnedNames(chain.preds, chain.col("metric"))
+      // the store lookups read files: only after the plan walk matched
+      if store.rollupsDerivedFromLevel0 && uniformPolicy.isEmpty
+      // the child's own output that IS the leaf's metric column
+      m <- child.output.find(chain.is(_, "metric"))
+      pols = store.policies()
+      families = ns.distinct
+        .flatMap(n => pols.get(n).map(_ -> n))
+        .groupBy(_._1).toSeq
+        .map { case (p, xs) => (p, xs.map(_._2).sorted) }
+        .sortBy(_._2.head)
+      if families.size >= 2
+      branches = families.map { case (_, names) =>
+        // the narrowing conjunct lands FIRST in the walked preds, so the
+        // branch's pinnedPolicy resolves its one family; it is
+        // metric-only, so commutingPreds carries it onto the substituted
+        // level scan
+        apply(top.rebuild(Filter(
+          In(m, names.map(Literal.create(_,
+            org.apache.spark.sql.types.StringType))), child)))
+      }
+      // all-or-nothing: every branch must have dropped its level-0 scan
+      // for the union to beat the original plan
+      if branches.forall(_.find(isLevel0Leaf).isEmpty)
+    } yield branches.reduce(Union(_, _))
   }
-
-  /** Policy governing a matched scan: the store-uniform policy, else the
-    * policy its predicates pin (heterogeneous stores). Re-runs the scan
-    * match the caller already did — plan-walk only, optimizer-time cheap
-    * — to keep the seventeen rewrite sites a one-line change.
-    */
-  private def policyFor(child: LogicalPlan): Option[graft.model.RetentionPolicy] =
-    uniformPolicy.orElse {
-      matchLevel0ScanFiltered(child).map(sm => (sm.preds, sm.leaf))
-        .orElse(walkWindowChain(child).map(c => (c.resolvedPreds, c.leaf)))
-        .flatMap { case (ps, leaf) => pinnedPolicy(ps, leaf) }
-    }
 
   /** The store cascade computes level i from level i-1 (matching
     * whisper.py:858-875), so a level>=2 Average VALUE is an avg-of-avgs —
@@ -300,123 +259,9 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     case _ => None
   }
 
-  /** Substitute a query that restates the store's xff gate over a window
-    * aggregate of level-0. Valid for xff > 0 policies — unlike the bare
-    * Aggregate rule — because the gate in the plan must match the gate
-    * that maintains the level (same slots denominator, same f32-widened
-    * xff threshold, same known>0 clause).
-    */
-  private def rewriteGated(p: Project, cond: Expression, agg: Aggregate,
-                           grouping0: Seq[Expression],
-                           aggExprs: Seq[NamedExpression],
-                           child: LogicalPlan): Option[LogicalPlan] = {
-    // the count(value) output the gate must reference
-    val knownIds = countOfValueIds(aggExprs)
-    // Project must be attribute passthrough; the count output may either
-    // be dropped (3-col shape) or passed through as `known` (4-col shape
-    // — substitutable from the stored counts when they are exact)
-    val projPassthrough = isAttributePassthrough(p.projectList)
-    def refsKnown(ne: NamedExpression): Boolean = ne match {
-      case a: Attribute => knownIds.contains(a.exprId)
-      case Alias(a: Attribute, _) => knownIds.contains(a.exprId)
-      case _ => false
-    }
-    val outputsKnown = p.projectList.exists(refsKnown)
-    // positional output ROLES; the names themselves are free (binding is
-    // by exprId below, re-aliased to the query's names on substitution)
-    val expectedNames =
-      if (outputsKnown) Seq("metric", "interval", "value", "known")
-      else Seq("metric", "interval", "value")
-    for {
-      policy <- policyFor(child)
-      if knownIds.size == 1 && projPassthrough
-      if p.output.size == expectedNames.size
-      sm <- matchLevel0ScanFiltered(child)
-      grouping = resolveGrouping(grouping0, child)
-      (metricExpr, step) <- matchGrouping(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      // output binding: each Project output must reference the aggregate
-      // output of the SAME role — names alone pass under cross-renames
-      (metricIds, alignIds) = groupingOutputIds(aggExprs, child)
-      if p.projectList.zip(expectedNames).forall { case (ne, role) =>
-        underlyingId(ne).exists(id => role match {
-          case "metric"   => metricIds.contains(id)
-          case "interval" => alignIds.contains(id)
-          case "value"    => id == kernelId
-          case "known"    => knownIds.contains(id)
-        })
-      }
-      levelIdx <- matchedLevel(policy, step, kernel)
-      if !outputsKnown || exactCounts(levelIdx)
-      slots = step / policy.levels.head.secondsPerPoint
-      if gateMatches(cond, knownIds.head, slots, policy.xff)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = outputsKnown)
-      Project(positionalAliases(rel, p.output), applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** Gated shape that also RETURNS the window count — output (metric,
-    * interval, value, known). Substitutable from the stored counts when
-    * they are exact: level-i known is by construction the number of
-    * level-0 points in the window, which is what count(value) over the
-    * level-0 scan computes.
-    */
-  private def rewriteGatedKnown(f: Filter, cond: Expression, agg: Aggregate,
-                                grouping0: Seq[Expression],
-                                aggExprs: Seq[NamedExpression],
-                                child: LogicalPlan): Option[LogicalPlan] = {
-    val knownIds = countOfValueIds(aggExprs)
-    for {
-      policy <- policyFor(child)
-      if knownIds.size == 1
-      if agg.output.size == 4 // names free — binding is by exprId role
-      if agg.output(3).exprId == knownIds.head // the kept output IS the count
-      sm <- matchLevel0ScanFiltered(child)
-      grouping = resolveGrouping(grouping0, child)
-      (metricExpr, step) <- matchGrouping(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      // output binding by role, not just name (cross-named agg outputs)
-      (metricIds, alignIds) = groupingOutputIds(aggExprs, child)
-      if metricIds.contains(agg.output(0).exprId) &&
-        alignIds.contains(agg.output(1).exprId) &&
-        agg.output(2).exprId == kernelId
-      levelIdx <- matchedLevel(policy, step, kernel)
-      if exactCounts(levelIdx)
-      slots = step / policy.levels.head.secondsPerPoint
-      if gateMatches(cond, knownIds.head, slots, policy.xff)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = true)
-      Project(positionalAliases(rel, agg.output), applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** Every projection is a bare attribute or a single-attribute alias —
-    * the gated shapes' outer Project must not compute anything.
-    */
-  private def isAttributePassthrough(plist: Seq[NamedExpression]): Boolean =
-    plist.forall {
-      case _: Attribute => true
-      case Alias(_: Attribute, _) => true
-      case _ => false
-    }
-
-  /** Output exprIds of `count(value)` aggregates — the gated shapes'
-    * `known` (shared by every gated rewrite).
-    */
-  private def countOfValueIds(aggExprs: Seq[NamedExpression]): Seq[ExprId] =
-    aggExprs.collect {
-      case a @ Alias(AggregateExpression(
-            org.apache.spark.sql.catalyst.expressions.aggregate.Count(Seq(v: Attribute)),
-            _, false, None, _), _) if v.name == "value" => a.exprId
-    }
-
   /** The substitutable level for a (step, kernel) pair, or None: a level
     * above 0 with that step must exist, the kernel must be the policy's,
-    * and the depth rules must allow it — the guard chain every rewrite
-    * shares.
+    * and the depth rules must allow it.
     */
   private def matchedLevel(policy: graft.model.RetentionPolicy, step: Int,
                            kernel: AggregationMethod): Option[Int] = {
@@ -425,37 +270,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
       Some(idx)
     else None
   }
-
-  /** metric grouping attribute present + epoch-aligned date_trunc step —
-    * the trunc shapes' shared grouping match.
-    */
-  private def truncGroupStep(grouping: Seq[Expression]): Option[Int] =
-    if (grouping.exists {
-      case a: Attribute => a.name == "metric"
-      case _ => false
-    }) grouping.flatMap(truncStep).headOption
-    else None
-
-  /** Rebind a node's outputs onto the substituted scan positionally,
-    * keeping each output's name and exprId so parents are untouched.
-    */
-  private def positionalAliases(rel: LogicalPlan,
-                                outs: Seq[Attribute]): Seq[NamedExpression] =
-    outs.zipWithIndex.map {
-      case (attr, i) => Alias(rel.output(i), attr.name)(exprId = attr.exprId)
-    }
-
-  /** Positional rebinding for the trunc shapes: the middle output is
-    * TimestampType, re-derived as timestamp_seconds(interval) (level
-    * intervals are step-aligned, so truncation is the identity on them).
-    */
-  private def truncOutputAliases(rel: LogicalPlan,
-                                 outs: Seq[Attribute]): Seq[NamedExpression] =
-    outs.zipWithIndex.map {
-      case (attr, 1) =>
-        Alias(SecondsToTimestamp(rel.output(1)), attr.name)(exprId = attr.exprId)
-      case (attr, i) => Alias(rel.output(i), attr.name)(exprId = attr.exprId)
-    }
 
   /** cond must be exactly {known > 0, known/slots >= xff} (any order).
     * EVERY conjunct must be one of those two recognized predicates — a
@@ -484,140 +298,175 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
       cs.forall(c => isPositiveGate(c) || isXffGate(c))
   }
 
-  /** Catalyst's PullOutGroupingExpressions moves grouping arithmetic into
-    * a child Project as `_groupingexpression` aliases — resolve grouping
-    * attributes through those aliases before shape-matching.
+  /** The [[Chain]] below `child`, or None if it does not end at this
+    * store's level-0 scan.
     */
-  private def resolveGrouping(grouping0: Seq[Expression],
-                              child: LogicalPlan): Seq[Expression] = {
-    val aliasMap: Map[ExprId, Expression] = child
-      .collect { case p: Project => p.projectList }
-      .flatten
-      .collect { case a: Alias => a.exprId -> a.child }
-      .toMap
-    grouping0.map {
-      case attr: Attribute => aliasMap.getOrElse(attr.exprId, attr)
-      case other => other
+  private def walkChain(child: LogicalPlan): Option[Chain] = {
+    val aliases = scala.collection.mutable.Map[ExprId, Expression]()
+    val preds = Seq.newBuilder[Expression]
+    def walk(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case Project(plist, c) =>
+        aliases ++= plist.collect { case a: Alias => a.exprId -> a.child }
+        walk(c)
+      case Filter(cond, c) =>
+        preds ++= conjuncts(cond)
+        walk(c)
+      case leaf if isLevel0Leaf(leaf) => Some(leaf)
+      case _ => None
     }
-  }
-
-  private def rewrite(agg: Aggregate, grouping0: Seq[Expression],
-                      aggExprs: Seq[NamedExpression],
-                      child: LogicalPlan): Option[LogicalPlan] = {
-    val grouping = resolveGrouping(grouping0, child)
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // rollup rows == plain window aggregates
-      // outputs are bound by exprId ROLE below, so their NAMES are free
-      // (`avg(value) AS v`, `... AS bucket` substitute the same way — the
-      // rewrite re-aliases the level columns to whatever the query named)
-      if agg.output.size == 3
-      sm <- matchLevel0ScanFiltered(child)
-      (metricExpr, step) <- matchGrouping(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      // output binding by role, not just name (cross-named agg outputs)
-      (metricIds, alignIds) = groupingOutputIds(aggExprs, child)
-      if metricIds.contains(agg.output(0).exprId) &&
-        alignIds.contains(agg.output(1).exprId) &&
-        agg.output(2).exprId == kernelId
-      levelIdx <- matchedLevel(policy, step, kernel)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      Project(positionalAliases(rel, agg.output), applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** The PRUNED fetch-grid shape: when a parent reads only
-    * (interval, value) — whisper's `__archive_fetch` spelled as a dense
-    * slot grid left-joined onto the rollup aggregate — Catalyst's column
-    * pruning drops the metric grouping from the aggregate OUTPUT while
-    * the grouping itself stays (metric, align). One row per
-    * metric×window either way, so the level scan substitutes with its
-    * metric column simply not projected; outputs (in either order) bind
-    * to the align grouping and the kernel by exprId role.
-    */
-  private def rewritePruned(agg: Aggregate, grouping0: Seq[Expression],
-                            aggExprs: Seq[NamedExpression],
-                            child: LogicalPlan): Option[LogicalPlan] = {
-    val grouping = resolveGrouping(grouping0, child)
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // rollup rows == plain window aggregates
-      if agg.output.size == 2
-      sm <- matchLevel0ScanFiltered(child)
-      (metricExpr, step) <- matchGrouping(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      (metricIds, alignIds) = groupingOutputIds(aggExprs, child)
-      // the metric grouping must be PRUNED from the output (the 3-output
-      // shape is [[rewrite]]'s), and the two outputs must be exactly the
-      // align grouping and the kernel, in either order
-      if !agg.output.exists(a => metricIds.contains(a.exprId))
-      if agg.output.count(a => alignIds.contains(a.exprId)) == 1
-      if agg.output.count(_.exprId == kernelId) == 1
-      levelIdx <- matchedLevel(policy, step, kernel)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      val outs = agg.output.map { attr =>
-        val src = if (alignIds.contains(attr.exprId)) rel.output(1) else rel.output(2)
-        Alias(src, attr.name)(exprId = attr.exprId)
+    def resolve(e: Expression): Expression = {
+      var cur = e
+      var prev: Expression = null
+      while (prev == null || !cur.fastEquals(prev)) {
+        prev = cur
+        cur = cur.transformUp {
+          case a: Attribute if aliases.contains(a.exprId) => aliases(a.exprId)
+        }
       }
-      Project(outs, applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
+      cur
+    }
+    walk(child).map(leaf => Chain(leaf, preds.result().map(resolve), resolve))
+  }
+
+  /** Step 1, the time-key match. The Aggregate groups by exactly two keys
+    * over a [[walkChain]] chain: one resolves to the leaf's own `metric`
+    * column, the other is a time key over its own `interval` column
+    * ([[timeKeyOf]]). Every aggregate output must then take a role: the
+    * metric key, the time key or one field of a window struct (the grid
+    * join's `window.start`), the one kernel ([[kernelOf]]), or a
+    * `count(value)`. An output that wraps a kernel (`round(avg(value),
+    * 2)`) or computes anything else takes no role and refuses the match —
+    * substituting the raw rollup value would drop the wrapper.
+    */
+  private def matchTimeKey(agg: Aggregate): Option[KeyMatch] = for {
+    Seq(g1, g2) <- Some(agg.groupingExpressions)
+    chain <- walkChain(agg.child)
+    intervalId <- chain.col("interval")
+    (k1, k2) = (chain.resolve(g1), chain.resolve(g2))
+    (metricKey, timeKey) <- Seq((k1, k2), (k2, k1)).find(k => chain.is(k._1, "metric"))
+    (step, time) <- timeKeyOf(timeKey, intervalId)
+    kernels = agg.aggregateExpressions.flatMap(ne => kernelOf(ne, chain).map(ne.exprId -> _))
+    if kernels.size == 1
+    roles = agg.aggregateExpressions.flatMap { ne =>
+      val e = chain.resolve(ne match { case Alias(c, _) => c; case o => o })
+      (if (ne.exprId == kernels.head._1) Some(KernelRole)
+       else if (isCount(e, chain)) Some(CountRole)
+       else if (e.semanticEquals(metricKey)) Some(MetricRole)
+       else if (e.semanticEquals(timeKey)) Some(Role("time", l => time(l(1))))
+       else e match {
+         // one field of the window struct, e.g. the `window.start` a grid
+         // join reads; only the window key is a struct
+         case GetStructField(s, ord, _) if s.semanticEquals(timeKey) =>
+           Some(Role("time", l => time(l(1)) match {
+             case struct: CreateNamedStruct => struct.valExprs(ord)
+           }))
+         case _ => None
+       }).map(ne.exprId -> _)
+    }
+    if roles.size == agg.aggregateExpressions.size
+    if roles.count(_._2.name == "count") <= 1
+  } yield KeyMatch(chain.leaf, chain.preds, step, kernels.head._2, roles.toMap)
+
+  /** The time key's step, and how it is rebuilt from the level's
+    * `interval` column, or None. Every reference must be the leaf's own
+    * interval attribute. Three spellings:
+    *  - align(S): `interval - interval % S` (or `(interval div S) * S`,
+    *    `floor(interval / S) * S`) — rebuilt as the interval itself;
+    *  - trunc(S): `date_trunc(unit, timestamp_seconds(interval))` for an
+    *    epoch-aligned unit ([[truncStep]]) — rebuilt as
+    *    timestamp_seconds(interval): level intervals are step-aligned, so
+    *    truncation is the identity on them;
+    *  - window(S): `window(ts, "S seconds")` over `ts =
+    *    timestamp_seconds(interval)`, which the analyzer's TimeWindowing
+    *    rewrite turns into a `named_struct(start, …, end, …)` alias in the
+    *    chain ([[windowStructStep]]: tumbling, zero offset — sliding
+    *    windows plan through Expand and never reach this shape) — rebuilt
+    *    as (timestamp_seconds(interval), timestamp_seconds(interval + S)).
+    */
+  private def timeKeyOf(key: Expression,
+                        intervalId: ExprId): Option[(Int, Expression => Expression)] =
+    if (key.references.isEmpty || key.references.exists(_.exprId != intervalId)) None
+    else alignStep(key).map(s => (s.toInt, (iv: Expression) => iv))
+      .orElse(truncStep(key).map(s => (s, (iv: Expression) => SecondsToTimestamp(iv))))
+      .orElse(windowStructStep(key, intervalId)
+        .map(s => (s, (iv: Expression) => windowStructOf(iv, s))))
+
+  private def windowStructOf(iv: Expression, step: Int): Expression =
+    CreateNamedStruct(Seq(
+      Literal("start"), SecondsToTimestamp(iv),
+      Literal("end"), SecondsToTimestamp(Add(iv, Literal(step.toLong)))))
+
+  /** The policy kernel an output computes over the leaf's own `value`
+    * column, untransformed: avg, sum, max, min, or whisper's `last` —
+    * chronologically last known — as max_by(value, interval) or
+    * max_by(value, timestamp_seconds(interval)), both monotone in
+    * interval.
+    */
+  private def kernelOf(ne: NamedExpression, chain: Chain): Option[AggregationMethod] = {
+    def isValue(e: Expression) = chain.is(e, "value")
+    def isTime(e: Expression) = chain.resolve(e) match {
+      case SecondsToTimestamp(a) => chain.is(a, "interval")
+      case a => chain.is(a, "interval")
+    }
+    ne match {
+      case Alias(AggregateExpression(f, _, false, None, _), _) => f match {
+        case Average(v, _) if isValue(v) => Some(AggregationMethod.Average)
+        case Sum(v, _) if isValue(v) => Some(AggregationMethod.Sum)
+        case Max(v) if isValue(v) => Some(AggregationMethod.Max)
+        case Min(v) if isValue(v) => Some(AggregationMethod.Min)
+        case MaxBy(v, ord) if isValue(v) && isTime(ord) => Some(AggregationMethod.Last)
+        case _ => None
+      }
+      case _ => None
     }
   }
 
-  /** The 4-output (metric, time, kernel, known) aggregate on an xff=0
-    * store with exact counts — substituted at the AGGREGATE node, so any
-    * parent (an arbitrary `HAVING known >= k`, `HAVING value > x`, a
-    * join, a sort) rides the substituted scan with its exprIds intact.
-    * This is what makes user-chosen quality gates over rollups cheap:
-    * the gated rewrites only recognize the store's OWN xff gate, but on
-    * an ungated store level rows are exactly the window aggregates with
-    * their true counts, so every output-level predicate commutes by
-    * construction. Align and date_trunc groupings; outputs bind by
-    * exprId role in any order. (xff>0 stores stay with the gated
-    * rewrites: their levels lack sub-gate rows, so an arbitrary HAVING
-    * would see a different input set.)
+  private def isCount(e: Expression, chain: Chain): Boolean = e match {
+    case AggregateExpression(Count(Seq(v)), _, false, None, _) => chain.is(v, "value")
+    case _ => false
+  }
+
+  /** Step 2, the output-role binding at a [[Top]] node. Each output binds
+    * by exprId ([[underlyingId]]: a bare attribute or a single-attribute
+    * alias) to an aggregate output's role, in any order and under any
+    * name — except the name of a DIFFERENT aggregate output: a
+    * cross-renaming Project (metric and interval swapped) is refused
+    * outright. The time key and the kernel appear exactly once, the
+    * metric (which a grid join's column pruning may drop) and the count
+    * at most once. Then:
+    *  - a kept count needs the level's exact counts: level-i `known` is by
+    *    construction the number of level-0 points in the window;
+    *  - with no gate, the policy's xff must be 0 — xff=0 rollup rows are
+    *    plain window aggregates, so every parent predicate sees the same
+    *    input set, while an xff>0 level lacks the sub-gate windows;
+    *  - with a gate, it must restate the store's own ([[gateMatches]]),
+    *    at any xff: level-i rows are exactly the gated window aggregates.
     */
-  private def rewriteKnown(agg: Aggregate, grouping0: Seq[Expression],
-                           aggExprs: Seq[NamedExpression],
-                           child: LogicalPlan): Option[LogicalPlan] = {
-    val knownIds = countOfValueIds(aggExprs)
-    val grouping = resolveGrouping(grouping0, child)
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // rollup rows == plain window aggregates
-      if agg.output.size == 4
-      if knownIds.size == 1
-      sm <- matchLevel0ScanFiltered(child)
-      (step, isTrunc) <- matchGrouping(grouping).map { case (_, s) => (s, false) }
-        .orElse(truncGroupStep(grouping).map(s => (s, true)))
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      (metricIds, alignIds) = groupingOutputIds(aggExprs, child)
-      timeIds = if (isTrunc) outputIdsWhere(aggExprs, child)(e => truncStep(e).nonEmpty)
-                else alignIds
-      // all four roles present exactly once, in any output order
-      if agg.output.count(a => metricIds.contains(a.exprId)) == 1
-      if agg.output.count(a => timeIds.contains(a.exprId)) == 1
-      if agg.output.count(_.exprId == kernelId) == 1
-      if agg.output.count(a => knownIds.contains(a.exprId)) == 1
-      levelIdx <- matchedLevel(policy, step, kernel)
-      if exactCounts(levelIdx)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = true)
-      val outs = agg.output.map { attr =>
-        val src: Expression =
-          if (metricIds.contains(attr.exprId)) rel.output(0)
-          else if (timeIds.contains(attr.exprId))
-            if (isTrunc) SecondsToTimestamp(rel.output(1)) else rel.output(1)
-          else if (attr.exprId == kernelId) rel.output(2)
-          else rel.output(3)
-        Alias(src, attr.name)(exprId = attr.exprId)
-      }
-      Project(outs, applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
+  private def substitute(top: Top): Option[LogicalPlan] = for {
+    km <- matchTimeKey(top.agg)
+    policy <- uniformPolicy.orElse(pinnedPolicy(km.preds, km.leaf))
+    carried <- commutingPreds(km.preds, km.leaf, km.step)
+    roles = top.outs.flatMap(ne => underlyingId(ne)
+      .filter(id => top.agg.output.forall(a => a.name != ne.name || a.exprId == id))
+      .flatMap(km.roles.get))
+    if roles.size == top.outs.size
+    n = (name: String) => roles.count(_.name == name)
+    if n("kernel") == 1 && n("time") == 1 && n("metric") <= 1 && n("count") <= 1
+    withKnown = n("count") == 1
+    levelIdx <- matchedLevel(policy, km.step, km.kernel)
+    if !withKnown || exactCounts(levelIdx)
+    if top.gate.fold(policy.xff == 0f) { cond =>
+      val slots = km.step / policy.levels.head.secondsPerPoint
+      km.countId.exists(gateMatches(cond, _, slots, policy.xff))
     }
+  } yield {
+    val rel = substitutedScan(levelIdx, km.kernel, withKnown)
+    Project(
+      top.outs.zip(roles).map { case (ne, r) =>
+        Alias(r.fromLevel(rel.output), ne.name)(exprId = ne.exprId)
+      },
+      applyCarried(rel, carried, km.leaf,
+        store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
   }
 
   /** Epoch-aligned `date_trunc` units: truncation equals
@@ -666,128 +515,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     case _ => None
   }
 
-  /** `groupBy(metric, date_trunc(unit, timestamp_seconds(interval)))` —
-    * whisper's archive selection for the spelling real dashboards write.
-    * The truncated output is TimestampType, so the substituted scan
-    * re-derives it as timestamp_seconds(level.interval) (level intervals
-    * are step-aligned, so truncation is the identity on them). The middle
-    * output may carry any name ("hour", "bucket"); binding is by exprId.
-    */
-  private def rewriteTrunc(agg: Aggregate, grouping0: Seq[Expression],
-                           aggExprs: Seq[NamedExpression],
-                           child: LogicalPlan): Option[LogicalPlan] = {
-    val grouping = resolveGrouping(grouping0, child)
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // rollup rows == plain window aggregates
-      if agg.output.size == 3 // names free — binding is by exprId role
-      sm <- matchLevel0ScanFiltered(child)
-      step <- truncGroupStep(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      // output binding by role (cross-named agg outputs)
-      (metricIds, _) = groupingOutputIds(aggExprs, child)
-      truncIds = outputIdsWhere(aggExprs, child)(e => truncStep(e).nonEmpty)
-      if metricIds.contains(agg.output(0).exprId) &&
-        truncIds.contains(agg.output(1).exprId) &&
-        agg.output(2).exprId == kernelId
-      levelIdx <- matchedLevel(policy, step, kernel)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      Project(truncOutputAliases(rel, agg.output), applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** Gated date_trunc shape — the xff>0 dashboard spelling:
-    *   groupBy(metric, date_trunc(unit, timestamp_seconds(interval)))
-    *     .agg(kernel(value).as("value"), count(value).as("known"))
-    *     .where(known > 0 && known / slots >= xff)
-    *     .select(metric, <trunc>, value)
-    * Sound for any policy xff like the align/window gated shapes; the
-    * truncated output may carry any name — binding is by exprId role.
-    */
-  private def rewriteGatedTrunc(p: Project, cond: Expression, agg: Aggregate,
-                                grouping0: Seq[Expression],
-                                aggExprs: Seq[NamedExpression],
-                                child: LogicalPlan): Option[LogicalPlan] = {
-    val knownIds = countOfValueIds(aggExprs)
-    val projPassthrough = isAttributePassthrough(p.projectList)
-    val grouping = resolveGrouping(grouping0, child)
-    for {
-      policy <- policyFor(child)
-      if knownIds.size == 1 && projPassthrough
-      if p.output.size == 3 // names free — binding is by exprId role
-      sm <- matchLevel0ScanFiltered(child)
-      step <- truncGroupStep(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      (metricIds, _) = groupingOutputIds(aggExprs, child)
-      truncIds = outputIdsWhere(aggExprs, child)(e => truncStep(e).nonEmpty)
-      // output binding by role; also excludes the gate count from the
-      // output (the 3 slots must be exactly metric/trunc/kernel)
-      if p.projectList.zip(0 until 3).forall { case (ne, i) =>
-        underlyingId(ne).exists(id => i match {
-          case 0 => metricIds.contains(id)
-          case 1 => truncIds.contains(id)
-          case _ => id == kernelId
-        })
-      }
-      levelIdx <- matchedLevel(policy, step, kernel)
-      slots = step / policy.levels.head.secondsPerPoint
-      if gateMatches(cond, knownIds.head, slots, policy.xff)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      Project(truncOutputAliases(rel, p.output), applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** Gated date_trunc shape KEEPING the count output — (metric, <trunc>,
-    * value, known); the passthrough Project is optimized away, leaving
-    * the bare Filter over the 4-output Aggregate. Substitutable from the
-    * stored counts when they are exact, like [[rewriteGatedKnown]].
-    */
-  private def rewriteGatedKnownTrunc(f: Filter, cond: Expression, agg: Aggregate,
-                                     grouping0: Seq[Expression],
-                                     aggExprs: Seq[NamedExpression],
-                                     child: LogicalPlan): Option[LogicalPlan] = {
-    val knownIds = countOfValueIds(aggExprs)
-    val grouping = resolveGrouping(grouping0, child)
-    for {
-      policy <- policyFor(child)
-      if knownIds.size == 1
-      if agg.output.size == 4 // names free — binding is by exprId role
-      if agg.output(3).exprId == knownIds.head // the kept output IS the count
-      sm <- matchLevel0ScanFiltered(child)
-      step <- truncGroupStep(grouping)
-      carried <- commutingPreds(sm.preds, sm.leaf, step)
-      (kernel, kernelId) <- matchKernel(aggExprs)
-      (metricIds, _) = groupingOutputIds(aggExprs, child)
-      truncIds = outputIdsWhere(aggExprs, child)(e => truncStep(e).nonEmpty)
-      if metricIds.contains(agg.output(0).exprId) &&
-        truncIds.contains(agg.output(1).exprId) &&
-        agg.output(2).exprId == kernelId
-      levelIdx <- matchedLevel(policy, step, kernel)
-      if exactCounts(levelIdx)
-      slots = step / policy.levels.head.secondsPerPoint
-      if gateMatches(cond, knownIds.head, slots, policy.xff)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = true)
-      Project(truncOutputAliases(rel, agg.output), applyCarried(rel, carried, sm.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** child must be a parquet scan of the store's level_0 directory with
-    * (metric, interval, value) visible, reached through pass-through
-    * Projects (plain attributes, name-preserving aliases, or Catalyst's
-    * pulled-out `_groupingexpression` aliases) and Filters whose
-    * conjuncts are carried for [[commutingPreds]] to judge: group-key
-    * metric predicates and window-edge-aligned interval bounds commute
-    * with the grouping and move onto the substituted scan (whisper's
-    * fetch shape); anything else — `WHERE value>0`, unaligned bounds —
-    * vetoes the rewrite, because substituting the precomputed level
-    * would silently change the aggregate's input set. A value-rewriting
-    * Project or a join still blocks the match outright.
-    */
   // THIS store's level-0 directory, scheme-normalized. Substituting must
   // never trigger on some OTHER store's level_0 scan — the rewrite would
   // splice this store's rollups into a different table's query.
@@ -803,33 +530,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
         case _ => false
       }
     case _ => false
-  }
-
-  /** A matched level-0 scan plus the Filter conjuncts found between the
-    * Aggregate and the leaf (whisper's fetch shape: metric + time range).
-    */
-  private final case class ScanMatch(leaf: LogicalPlan, preds: Seq[Expression])
-
-  private def matchLevel0ScanFiltered(plan: LogicalPlan): Option[ScanMatch] = {
-    val buf = Seq.newBuilder[Expression]
-    def walk(p: LogicalPlan): Option[LogicalPlan] = p match {
-      case Project(plist, child) =>
-        val passthrough = plist.forall {
-          case _: Attribute => true
-          case a: Alias =>
-            (a.child match {
-              case attr: Attribute => attr.name == a.name
-              case _ => false
-            }) || a.name.startsWith("_groupingexpression")
-          case _ => false
-        }
-        if (passthrough) walk(child) else None
-      case Filter(cond, child) =>
-        buf ++= conjuncts(cond); walk(child)
-      case leaf if isLevel0Leaf(leaf) => Some(leaf)
-      case _ => None
-    }
-    walk(plan).map(ScanMatch(_, buf.result()))
   }
 
   /** Classify carried predicates against the (metric, step-align)
@@ -1051,376 +751,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
       Filter((remapped ++ pbIn ++ tbBounds).reduce(And), rel)
     }
 
-  /** The idiomatic Spark spelling — `groupBy(metric, window(ts, "S
-    * seconds"))` over `ts = timestamp_seconds(interval)` — lands here
-    * after the analyzer's TimeWindowing rewrite as
-    *   Aggregate([metric, window],
-    *     Project(named_struct(start, …ptc(ts)%S·1e6…, end, …) AS window,
-    *       Project(timestamp_seconds(interval) AS ts,
-    *         Filter(isnotnull…, <level-0 scan>))))
-    * Matched when: the chain holds only Projects and IsNotNull-only
-    * Filters; the struct's arithmetic uses one modulus W (micros) with no
-    * other literal than 0 (tumbling, zero offset — sliding windows plan
-    * through Expand and never reach this shape); every timestamp base is
-    * timestamp_seconds over the scan's interval column; and the kernel
-    * consumes the scan's value column untransformed. The substituted
-    * level scan re-derives the struct as
-    * (timestamp_seconds(interval), timestamp_seconds(interval+S)).
-    */
-  /** The Project/IsNotNull-Filter chain between a window()-shape
-    * Aggregate and the level-0 scan, plus an alias resolver through the
-    * chain's Projects (TimeWindowing + ts computation land there).
-    */
-  private final case class WindowChain(leaf: LogicalPlan,
-                                       preds: Seq[Expression],
-                                       resolve: Expression => Expression) {
-    val relOut: Seq[Attribute] = leaf.output
-    val intervalAttrId: Option[ExprId] =
-      relOut.find(_.name == "interval").map(_.exprId)
-    /** Chain predicates resolved to scan terms, for [[commutingPreds]]. */
-    def resolvedPreds: Seq[Expression] = preds.map(resolve)
-  }
-
-  private def walkWindowChain(child: LogicalPlan): Option[WindowChain] = {
-    val aliasBuf = scala.collection.mutable.Map[ExprId, Expression]()
-    val predBuf = Seq.newBuilder[Expression]
-    def walk(p: LogicalPlan): Option[LogicalPlan] = p match {
-      case Project(plist, c2)
-          if plist.forall(e => e.isInstanceOf[Attribute] || e.isInstanceOf[Alias]) =>
-        aliasBuf ++= plist.collect { case a: Alias => a.exprId -> a.child }
-        walk(c2)
-      case Filter(cond, c2) =>
-        // collected, not rejected: commutingPreds decides per rewrite
-        // whether every conjunct provably commutes (or is droppable —
-        // TimeWindowing's isnotnull(ts)) and vetoes otherwise
-        predBuf ++= conjuncts(cond)
-        walk(c2)
-      case leaf if isLevel0Leaf(leaf) => Some(leaf)
-      case _ => None
-    }
-    def resolve(e: Expression): Expression = {
-      var cur = e
-      var prev: Expression = null
-      while (prev == null || !cur.fastEquals(prev)) {
-        prev = cur
-        cur = cur.transformUp {
-          case a: Attribute if aliasBuf.contains(a.exprId) => aliasBuf(a.exprId)
-        }
-      }
-      cur
-    }
-    walk(child).map(WindowChain(_, predBuf.result(), resolve))
-  }
-
-  /** Tumbling step from the window()-grouping — plus the exprIds of the
-    * metric grouping attribute and the window-struct grouping attribute,
-    * for output binding — or None if the shape deviates (offset windows,
-    * non-interval bases, sliding).
-    */
-  private def windowGroupStep(grouping0: Seq[Expression],
-                              chain: WindowChain): Option[(Int, ExprId, ExprId)] =
-    for {
-      intervalId <- chain.intervalAttrId
-      metricId <- grouping0.collectFirst {
-        case a: Attribute
-            if chain.relOut.exists(o => o.exprId == a.exprId && o.name == "metric") =>
-          a.exprId
-      }
-      stepAndWin <- grouping0.collectFirst {
-        case a: Attribute if !chain.relOut.exists(_.exprId == a.exprId) =>
-          windowStructStep(chain.resolve(a), intervalId).map(s => (s, a.exprId))
-      }.flatten
-    } yield (stepAndWin._1, metricId, stepAndWin._2)
-
-  /** Output aliases for a substituted window()-shape plan: re-derives the
-    * window struct from the level's interval column.
-    */
-  private def windowOutputAliases(outAttrs: Seq[Attribute], rel: LogicalPlan,
-                                  step: Int): Seq[NamedExpression] = {
-    val mOut = rel.output(0); val iOut = rel.output(1); val vOut = rel.output(2)
-    val winStruct = windowStructOf(iOut, step)
-    outAttrs.map { attr =>
-      val e: Expression = attr.name match {
-        case "metric" => mOut
-        case "window" => winStruct
-        case "known"  => rel.output(3)
-        case _        => vOut
-      }
-      Alias(e, attr.name)(exprId = attr.exprId)
-    }
-  }
-
-  private def rewriteWindow(agg: Aggregate, grouping0: Seq[Expression],
-                            aggExprs: Seq[NamedExpression],
-                            child: LogicalPlan): Option[LogicalPlan] =
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // rollup rows == plain window aggregates
-      chain <- walkWindowChain(child)
-      intervalId <- chain.intervalAttrId
-      (step, metricId, windowId) <- windowGroupStep(grouping0, chain)
-      carried <- commutingPreds(chain.resolvedPreds, chain.leaf, step)
-      (kernel, kernelId) <- matchKernelWindow(aggExprs, chain.relOut, intervalId, chain.resolve)
-      if agg.output.map(_.name).toSet == Set("metric", "window", "value")
-      // windowOutputAliases wires by name — each output must BE the
-      // grouping/kernel of that name (cross-named agg outputs)
-      if agg.output.forall { attr =>
-        attr.name match {
-          case "metric" => attr.exprId == metricId
-          case "window" => attr.exprId == windowId
-          case _        => attr.exprId == kernelId
-        }
-      }
-      levelIdx <- matchedLevel(policy, step, kernel)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      Project(windowOutputAliases(agg.output, rel, step),
-        applyCarried(rel, carried, chain.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-
-  /** Gated window() shape: the idiomatic streaming-style spelling
-    *   groupBy(metric, window(ts, "S seconds"))
-    *     .agg(kernel(value).as("value"), count(value).as("known"))
-    *     .where(known > 0 && known / slots >= xff)
-    * with the count output dropped by the outer Project. Sound for any
-    * policy xff, like the align-spelling gated shape.
-    */
-  private def rewriteGatedWindow(p: Project, cond: Expression, agg: Aggregate,
-                                 grouping0: Seq[Expression],
-                                 aggExprs: Seq[NamedExpression],
-                                 child: LogicalPlan): Option[LogicalPlan] = {
-    val projPassthrough = isAttributePassthrough(p.projectList)
-    for {
-      policy <- policyFor(child)
-      if projPassthrough
-      if p.output.map(_.name) == Seq("metric", "window", "value")
-      chain <- walkWindowChain(child)
-      intervalId <- chain.intervalAttrId
-      (step, metricId, windowId) <- windowGroupStep(grouping0, chain)
-      carried <- commutingPreds(chain.resolvedPreds, chain.leaf, step)
-      knownId <- countAggId(aggExprs, chain, intervalId)
-      (kernel, kernelId) <- matchKernelWindow(aggExprs, chain.relOut, intervalId, chain.resolve)
-      // output binding by role: also excludes the gate count from the
-      // output (the 3 slots must be exactly metric/window/kernel)
-      if p.projectList.zip(Seq("metric", "window", "value")).forall {
-        case (ne, role) =>
-          underlyingId(ne).exists(id => role match {
-            case "metric" => id == metricId
-            case "window" => id == windowId
-            case _        => id == kernelId
-          })
-      }
-      levelIdx <- matchedLevel(policy, step, kernel)
-      slots = step / policy.levels.head.secondsPerPoint
-      if gateMatches(cond, knownId, slots, policy.xff)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      Project(windowOutputAliases(p.output, rel, step),
-        applyCarried(rel, carried, chain.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** Gated window() shape that also RETURNS the window count — output
-    * (metric, window, value, known), the streaming-style spelling of
-    * [[rewriteGatedKnown]]. The passthrough Project is optimized away,
-    * leaving the bare Filter over the 4-output Aggregate. Substitutable
-    * from the stored counts when they are exact.
-    */
-  private def rewriteGatedKnownWindow(f: Filter, cond: Expression, agg: Aggregate,
-                                      grouping0: Seq[Expression],
-                                      aggExprs: Seq[NamedExpression],
-                                      child: LogicalPlan): Option[LogicalPlan] =
-    for {
-      policy <- policyFor(child)
-      if agg.output.map(_.name) == Seq("metric", "window", "value", "known")
-      chain <- walkWindowChain(child)
-      intervalId <- chain.intervalAttrId
-      (step, metricId, windowId) <- windowGroupStep(grouping0, chain)
-      carried <- commutingPreds(chain.resolvedPreds, chain.leaf, step)
-      knownId <- countAggId(aggExprs, chain, intervalId)
-      (kernel, kernelId) <- matchKernelWindow(aggExprs, chain.relOut, intervalId, chain.resolve)
-      // output binding by role, not just name (cross-named agg outputs)
-      if agg.output(0).exprId == metricId && agg.output(1).exprId == windowId &&
-        agg.output(2).exprId == kernelId && agg.output(3).exprId == knownId
-      levelIdx <- matchedLevel(policy, step, kernel)
-      if exactCounts(levelIdx)
-      slots = step / policy.levels.head.secondsPerPoint
-      if gateMatches(cond, knownId, slots, policy.xff)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = true)
-      Project(windowOutputAliases(agg.output, rel, step),
-        applyCarried(rel, carried, chain.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-
-  /** The window struct a substituted window()-shape plan re-derives from
-    * the level's interval column (shared by every window-shape rewrite).
-    */
-  private def windowStructOf(iOut: Attribute, step: Int): Expression =
-    CreateNamedStruct(Seq(
-      Literal("start"), SecondsToTimestamp(iOut),
-      Literal("end"), SecondsToTimestamp(Add(iOut, Literal(step.toLong)))))
-
-  /** The PRUNED window() shape — [[rewritePruned]]'s grid-join spelling
-    * with window(ts, …) grouping: a parent (the dense fetch-grid join)
-    * reads only (window, value), so column pruning drops the metric
-    * grouping from the aggregate OUTPUT while the grouping keeps it.
-    * Outputs bind by exprId role in either order.
-    */
-  private def rewritePrunedWindow(agg: Aggregate, grouping0: Seq[Expression],
-                                  aggExprs: Seq[NamedExpression],
-                                  child: LogicalPlan): Option[LogicalPlan] = {
-    // the grid join usually reads window.start, so column pruning leaves
-    // `window#g.start AS _extract_start` in the agg list rather than the
-    // struct attribute itself — bind either spelling, rebuilding just
-    // the extracted field from the level's interval column
-    def isTimeOut(ne: NamedExpression, windowId: ExprId): Boolean = ne match {
-      case a: Attribute => a.exprId == windowId
-      case Alias(GetStructField(b: Attribute, _, _), _) => b.exprId == windowId
-      case _ => false
-    }
-    def timeOut(ne: NamedExpression, windowId: ExprId, step: Int,
-                iOut: Attribute): Option[Expression] = ne match {
-      case a: Attribute if a.exprId == windowId =>
-        Some(windowStructOf(iOut, step))
-      case Alias(GetStructField(b: Attribute, ord, _), _) if b.exprId == windowId =>
-        if (ord == 0) Some(SecondsToTimestamp(iOut))
-        else Some(SecondsToTimestamp(Add(iOut, Literal(step.toLong))))
-      case _ => None
-    }
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // rollup rows == plain window aggregates
-      if agg.output.size == 2
-      chain <- walkWindowChain(child)
-      intervalId <- chain.intervalAttrId
-      (step, metricId, windowId) <- windowGroupStep(grouping0, chain)
-      carried <- commutingPreds(chain.resolvedPreds, chain.leaf, step)
-      (kernel, kernelId) <- matchKernelWindow(aggExprs, chain.relOut, intervalId, chain.resolve)
-      // metric must be PRUNED from the output; the two outputs are
-      // exactly a window-derived column (struct or extracted edge) and
-      // the kernel, in either order
-      if !aggExprs.exists(_.references.exists(_.exprId == metricId))
-      if aggExprs.count(isTimeOut(_, windowId)) == 1
-      if agg.output.count(_.exprId == kernelId) == 1
-      levelIdx <- matchedLevel(policy, step, kernel)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = false)
-      val iOut = rel.output(1).asInstanceOf[Attribute]
-      val outs = aggExprs.map { ne =>
-        val e: Expression = timeOut(ne, windowId, step, iOut)
-          .getOrElse(rel.output(2))
-        Alias(e, ne.name)(exprId = ne.exprId)
-      }
-      Project(outs, applyCarried(rel, carried, chain.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-  }
-
-  /** The 4-output window() shape substituted at the AGGREGATE node —
-    * [[rewriteKnown]]'s window(ts, …) spelling: (metric, window, kernel,
-    * count(value)) on an xff=0 store with exact counts, so ANY parent
-    * (`HAVING known >= k`, `HAVING value > x`, a join, a sort) rides the
-    * substituted scan with its exprIds intact. xff>0 stores stay with
-    * [[rewriteGatedKnownWindow]]: their levels lack sub-gate rows, so an
-    * arbitrary HAVING would see a different input set.
-    */
-  private def rewriteKnownWindow(agg: Aggregate, grouping0: Seq[Expression],
-                                 aggExprs: Seq[NamedExpression],
-                                 child: LogicalPlan): Option[LogicalPlan] =
-    for {
-      policy <- policyFor(child)
-      if policy.xff == 0f // any parent predicate sees the same input set
-      if agg.output.size == 4
-      chain <- walkWindowChain(child)
-      intervalId <- chain.intervalAttrId
-      (step, metricId, windowId) <- windowGroupStep(grouping0, chain)
-      carried <- commutingPreds(chain.resolvedPreds, chain.leaf, step)
-      knownId <- countAggId(aggExprs, chain, intervalId)
-      (kernel, kernelId) <- matchKernelWindow(aggExprs, chain.relOut, intervalId, chain.resolve)
-      // all four roles present exactly once, in any output order
-      if agg.output.count(_.exprId == metricId) == 1
-      if agg.output.count(_.exprId == windowId) == 1
-      if agg.output.count(_.exprId == kernelId) == 1
-      if agg.output.count(_.exprId == knownId) == 1
-      levelIdx <- matchedLevel(policy, step, kernel)
-      if exactCounts(levelIdx)
-    } yield {
-      val rel = substitutedScan(levelIdx, kernel, withKnown = true)
-      val iOut = rel.output(1).asInstanceOf[Attribute]
-      val outs = agg.output.map { attr =>
-        val e: Expression =
-          if (attr.exprId == metricId) rel.output(0)
-          else if (attr.exprId == windowId) windowStructOf(iOut, step)
-          else if (attr.exprId == kernelId) rel.output(2)
-          else rel.output(3)
-        Alias(e, attr.name)(exprId = attr.exprId)
-      }
-      Project(outs, applyCarried(rel, carried, chain.leaf, store.bucketSeconds(policy.levels(levelIdx).secondsPerPoint)))
-    }
-
-  /** The count(value) aggregate's output id in a window()-shape agg list
-    * (value resolved through the chain to the scan's value column).
-    */
-  private def countAggId(aggExprs: Seq[NamedExpression], chain: WindowChain,
-                         intervalId: ExprId): Option[ExprId] = {
-    val ids = aggExprs.collect {
-      case a @ Alias(AggregateExpression(
-            org.apache.spark.sql.catalyst.expressions.aggregate.Count(Seq(v: Attribute)),
-            _, false, None, _), _)
-          if chain.relOut.exists(o => o.exprId == v.exprId && o.name == "value") =>
-        a.exprId
-    }
-    if (ids.size == 1) ids.headOption else None
-  }
-
-  /** An output like `round(avg(value), 2).as("value")` CONTAINS a kernel
-    * but is not one — substituting the raw rollup value would silently
-    * drop the wrapping arithmetic. So every output that contains an
-    * aggregate anywhere must BE a bare top-level
-    * Alias(AggregateExpression); kernel matchers then look only at those
-    * top-level aggregates.
-    */
-  private def allAggsTopLevel(aggExprs: Seq[NamedExpression]): Boolean =
-    aggExprs.forall { ne =>
-      !ne.exists(_.isInstanceOf[AggregateExpression]) || (ne match {
-        case Alias(_: AggregateExpression, _) => true
-        case _ => false
-      })
-    }
-
-  /** Kernel matcher for the window() shape: the aggregated value must be
-    * the SCAN's value column untransformed (attributes here may pass
-    * through ts-computing Projects, so name-matching alone is not
-    * enough), and `last` accepts max_by(value, ts) for ts =
-    * timestamp_seconds(interval) — monotone in interval, so
-    * chronologically-last is preserved.
-    */
-  private def matchKernelWindow(aggExprs: Seq[NamedExpression],
-                                relOut: Seq[Attribute], intervalAttrId: ExprId,
-                                resolve: Expression => Expression): Option[(AggregationMethod, ExprId)] = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
-    def isScanValue(v: Attribute): Boolean =
-      relOut.exists(o => o.exprId == v.exprId && o.name == "value")
-    def isIntervalTime(ord: Expression): Boolean = resolve(ord) match {
-      case SecondsToTimestamp(a: Attribute) => a.exprId == intervalAttrId
-      case a: Attribute => a.exprId == intervalAttrId
-      case _ => false
-    }
-    if (!allAggsTopLevel(aggExprs)) return None
-    val kernels = aggExprs.collect {
-      case al @ Alias(AggregateExpression(Average(v: Attribute, _), _, false, None, _), _)
-          if isScanValue(v) => (AggregationMethod.Average, al.exprId)
-      case al @ Alias(AggregateExpression(Sum(v: Attribute, _), _, false, None, _), _)
-          if isScanValue(v) => (AggregationMethod.Sum, al.exprId)
-      case al @ Alias(AggregateExpression(Max(v: Attribute), _, false, None, _), _)
-          if isScanValue(v) => (AggregationMethod.Max, al.exprId)
-      case al @ Alias(AggregateExpression(Min(v: Attribute), _, false, None, _), _)
-          if isScanValue(v) => (AggregationMethod.Min, al.exprId)
-      case al @ Alias(AggregateExpression(MaxBy(v: Attribute, ord), _, false, None, _), _)
-          if isScanValue(v) && isIntervalTime(ord) => (AggregationMethod.Last, al.exprId)
-    }
-    if (kernels.size == 1) kernels.headOption else None
-  }
-
   /** Extract the tumbling-window step (seconds) from the TimeWindowing
     * struct, or None if any part deviates from the zero-offset tumbling
     * form over `timestamp_seconds(interval)`.
@@ -1526,15 +856,6 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     case _ => None
   }
 
-  /** grouping must contain `metric` and a step-S alignment of `interval`. */
-  private def matchGrouping(grouping: Seq[Expression]): Option[(Expression, Int)] = {
-    val aligned = grouping.flatMap(alignStep).headOption
-    val metric = grouping.collectFirst {
-      case a: Attribute if a.name == "metric" => a: Expression
-    }
-    for (s <- aligned; m <- metric) yield (m, s.toInt)
-  }
-
   /** The exprId a pass-through output ultimately references (bare
     * attribute or single-attribute alias).
     */
@@ -1543,74 +864,64 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
     case Alias(a: Attribute, _) => Some(a.exprId)
     case _ => None
   }
-
-  /** Classify the Aggregate's result expressions by ROLE, returning the
-    * output exprIds carrying the metric grouping and the aligned-interval
-    * grouping. Output wiring is positional-by-name, so every rewrite must
-    * bind names to these ids before substituting — a cross-renaming
-    * Project (`select(col("interval").as("metric"),
-    * col("metric").as("interval"), col("value"))`) passes the bare name
-    * check but references the WRONG aggregate outputs (ADVICE r4).
-    */
-  private def groupingOutputIds(aggExprs: Seq[NamedExpression],
-                                child: LogicalPlan): (Seq[ExprId], Seq[ExprId]) = {
-    val metricIds = outputIdsWhere(aggExprs, child) {
-      case a: Attribute => a.name == "metric"
-      case _ => false
-    }
-    val alignIds = outputIdsWhere(aggExprs, child)(e => alignStep(e).nonEmpty)
-    (metricIds, alignIds)
-  }
-
-  /** Output exprIds of the agg result expressions whose core — resolved
-    * one step through child-Project aliases (Catalyst's pulled-out
-    * `_groupingexpression`s live there) — satisfies `pred`.
-    */
-  private def outputIdsWhere(aggExprs: Seq[NamedExpression], child: LogicalPlan)(
-      pred: Expression => Boolean): Seq[ExprId] = {
-    val aliasMap: Map[ExprId, Expression] = child
-      .collect { case p: Project => p.projectList }
-      .flatten
-      .collect { case a: Alias => a.exprId -> a.child }
-      .toMap
-    def core(ne: NamedExpression): Expression = ne match {
-      case Alias(c, _) => c
-      case o => o
-    }
-    def resolved(e: Expression): Expression = e match {
-      case attr: Attribute => aliasMap.getOrElse(attr.exprId, attr)
-      case other => other
-    }
-    aggExprs.collect { case ne if pred(resolved(core(ne))) => ne.exprId }
-  }
-
-  /** single value aggregate matching a policy kernel — top-level
-    * aliases only (see [[allAggsTopLevel]]); a Count(value) top (the
-    * gated shape's `known`) is permitted and simply matches no kernel.
-    * Returns the kernel AND its output exprId, for output binding.
-    */
-  private def matchKernel(aggExprs: Seq[NamedExpression]): Option[(AggregationMethod, ExprId)] = {
-    if (!allAggsTopLevel(aggExprs)) return None
-    val kernels = aggExprs.collect {
-      case al @ Alias(AggregateExpression(Average(v: Attribute, _), _, false, None, _), _)
-          if v.name == "value" => (AggregationMethod.Average, al.exprId)
-      case al @ Alias(AggregateExpression(Sum(v: Attribute, _), _, false, None, _), _)
-          if v.name == "value" => (AggregationMethod.Sum, al.exprId)
-      case al @ Alias(AggregateExpression(Max(v: Attribute), _, false, None, _), _)
-          if v.name == "value" => (AggregationMethod.Max, al.exprId)
-      case al @ Alias(AggregateExpression(Min(v: Attribute), _, false, None, _), _)
-          if v.name == "value" => (AggregationMethod.Min, al.exprId)
-      // whisper's `last` = chronologically last known → max_by(value, interval)
-      case al @ Alias(AggregateExpression(
-            org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy(
-              v: Attribute, ord: Attribute), _, false, None, _), _)
-          if v.name == "value" && ord.name == "interval" => (AggregationMethod.Last, al.exprId)
-    }
-    if (kernels.size == 1) kernels.headOption else None
-  }
 }
 
 object RollupSubstitution {
+  /** A node the rule substitutes at: the Aggregate itself (ungated), a
+    * `Filter(gate, Aggregate)` keeping every aggregate output, or a
+    * `Project(outs, Filter(gate, Aggregate))` that picks and renames
+    * them. Ungated shapes are replaced at the Aggregate, so any parent —
+    * an arbitrary HAVING included — rides the substituted scan; gated
+    * shapes are replaced at the gate node. `rebuild` puts a new plan
+    * under the Aggregate ([[rewriteMultiPolicy]]'s per-family branches).
+    */
+  private final case class Top(agg: Aggregate, gate: Option[Expression],
+                               outs: Seq[NamedExpression],
+                               rebuild: LogicalPlan => LogicalPlan)
+
+  /** The Project/Filter chain between an Aggregate and THIS store's
+    * level-0 scan: the leaf, the chain's Filter conjuncts resolved to leaf
+    * terms (for [[commutingPreds]] to judge: group-key metric predicates
+    * and window-edge-aligned interval bounds move onto the substituted
+    * scan, anything else — `WHERE value > 0`, unaligned bounds — vetoes),
+    * and the resolver that rewrites an expression over the chain's
+    * aliases into leaf terms. Every Project is walked, computed aliases
+    * included — the analyzer's TimeWindowing struct and `ts =
+    * timestamp_seconds(interval)` land there — so a role binds only by
+    * exprId AFTER resolving: a value-rewriting or column-swapping Project
+    * resolves to a term that is not the leaf's own column and matches no
+    * role. A join or any other node ends the walk without a match.
+    */
+  private final case class Chain(leaf: LogicalPlan, preds: Seq[Expression],
+                                 resolve: Expression => Expression) {
+    def col(name: String): Option[ExprId] =
+      leaf.output.find(_.name == name).map(_.exprId)
+    /** `e`, resolved to leaf terms, IS the leaf's own column `name`. */
+    def is(e: Expression, name: String): Boolean = resolve(e) match {
+      case a: Attribute => col(name).contains(a.exprId)
+      case _ => false
+    }
+  }
+
+  /** An aggregate output's role, and how the substituted level scan —
+    * columns (metric, interval, value[, known]) — rebuilds it.
+    */
+  private final case class Role(name: String, fromLevel: Seq[Attribute] => Expression)
+  private val MetricRole = Role("metric", _(0))
+  private val KernelRole = Role("kernel", _(2))
+  private val CountRole = Role("count", _(3))
+
+  /** Step 1's result: the level-0 leaf, the chain's predicates in leaf
+    * terms, the time key's step, the kernel, and every aggregate output's
+    * role by exprId.
+    */
+  private final case class KeyMatch(leaf: LogicalPlan, preds: Seq[Expression],
+                                    step: Int, kernel: AggregationMethod,
+                                    roles: Map[ExprId, Role]) {
+    def countId: Option[ExprId] =
+      roles.collectFirst { case (id, r) if r.name == "count" => id }
+  }
+
   /** Inject into an existing session's optimizer. Idempotent per
     * (session, store root), and meant to stay registered: every new
     * action on a returned Dataset builds a FRESH QueryExecution, and the

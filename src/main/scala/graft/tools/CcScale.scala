@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
 /** At-scale certification for the distributed connected-components path
-  * (large-star/small-star): the [[graft.tools.MixScale]] lesson applied
-  * to the other scale-adaptive operator — the distributed loop is
+  * (large-star/small-star): the prefixSums at-scale lesson (SCALE.md's
+  * mixing row: a scale-only failure that every fixture oracle missed)
+  * applied to the other scale-adaptive operator — the distributed loop is
   * spec-pinned against union-find on SMALL graphs, so this probe runs
   * both paths on the SAME multi-million-edge graph (driverThreshold = 0
   * forces the star loop; the default path solves it driver-side) and

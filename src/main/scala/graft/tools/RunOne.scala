@@ -30,6 +30,7 @@ object RunOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.ops.Frames.quietReleaseWarnings()
     val fn = graft.SparkEntry.queries(name)
     if (explain) fn(spark, sfDir).explain("formatted")
     fn(spark, sfDir).count() // warmup (codegen + JIT + parquet footers)

@@ -34,6 +34,28 @@ class WindowShapeSpec extends AnyFunSuite {
   private def hasAggregate(q: org.apache.spark.sql.DataFrame): Boolean =
     q.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.nonEmpty
 
+  private def readsLevel0(q: org.apache.spark.sql.DataFrame): Boolean =
+    q.inputFiles.exists(_.contains("/level_0/"))
+
+  /** Substituted with `store`'s rule registered: no level-0 leaf is left
+    * in the optimized plan, and the rows equal the same query planned
+    * with no rule registered (the level-0 recompute).
+    */
+  private def assertSubstitutedExact(store: MetricStore)(
+      query: => org.apache.spark.sql.DataFrame): Unit = {
+    RollupSubstitution.register(spark, store)
+    val got = try {
+      val q = query
+      assert(q.inputFiles.nonEmpty && !readsLevel0(q),
+        s"substitution did not fire:\n${q.queryExecution.optimizedPlan}")
+      q.collect().toSet
+    } finally spark.experimental.extraOptimizations = Nil
+    val recompute = query
+    assert(readsLevel0(recompute))
+    val want = recompute.collect().toSet
+    assert(got.nonEmpty && got == want, s"substituted $got != recomputed $want")
+  }
+
   test("window() tumbling grouping is rewritten to scan the rollup level") {
     val (store, w0) = mkStore()
     RollupSubstitution.register(spark, store)
@@ -412,5 +434,52 @@ class WindowShapeSpec extends AnyFunSuite {
         s"xff>0 HAVING-any window wrongly substituted:\n${q.queryExecution.optimizedPlan}")
       assert(q.collect().length == 2) // both windows, incl. the sub-gate one
     } finally spark.experimental.extraOptimizations = Nil
+  }
+
+  test("pruned date_trunc shape: grid join reading only (hour, value) substitutes") {
+    import spark.implicits._
+    val store = new MetricStore(
+      spark, Files.createTempDirectory("ms-truncgrid").toString, numBuckets = 4)
+    store.create("m",
+      RetentionPolicy(Seq(ArchiveInfo(60, 600), ArchiveInfo(3600, 48)), xff = 0f))
+    val h0 = (Now - 30000) / 3600 * 3600
+    val pts = (0 until 12).map(i => ("m", h0 + i * 600L, 10.0 + i, i.toLong))
+    store.updateMany(pts.toDF("metric", "ts", "value", "seq"), Now)
+    assertSubstitutedExact(store) {
+      val agg = store.levelData(0)
+        .select("metric", "interval", "value")
+        .groupBy(col("metric"),
+          date_trunc("hour", timestamp_seconds(col("interval"))).as("hour"))
+        .agg(avg(col("value")).as("value"))
+        .select(col("hour"), col("value")) // metric pruned by the reader
+      val grid = Seq(h0, h0 + 3600L, h0 + 7200L).toDF("slot")
+        .select(timestamp_seconds(col("slot")).as("start"))
+      grid.join(agg, grid("start") === agg("hour"), "left")
+        .select(col("start"), col("value"))
+    }
+  }
+
+  test("gated window() shape with renamed, reordered outputs substitutes on an xff>0 store") {
+    import spark.implicits._
+    val store = new MetricStore(
+      spark, Files.createTempDirectory("ms-wingateren").toString, numBuckets = 4)
+    store.create("m",
+      RetentionPolicy(Seq(ArchiveInfo(60, 300), ArchiveInfo(300, 300)), xff = 0.5f))
+    val base = Now - 3000
+    val w0 = base - base % 300
+    // 5 points in window w0 (passes 0.5), 1 point in w0+300 (1/5 fails)
+    val pts = ((0 until 5).map(i => ("m", w0 + i * 60L, 10.0 + i)) :+
+      ("m", w0 + 300L, 99.0)).zipWithIndex
+      .map { case ((m, t, v), i) => (m, t, v, i.toLong) }
+    store.updateMany(pts.toDF("metric", "ts", "value", "seq"), Now)
+    assertSubstitutedExact(store) {
+      store.levelData(0)
+        .select(col("metric"), timestamp_seconds(col("interval")).as("ts"), col("value"))
+        .groupBy(col("metric"), window(col("ts"), "300 seconds").as("w"))
+        .agg(avg(col("value")).as("v"), count(col("value")).as("n"))
+        .where(col("n") > 0 &&
+          col("n").cast("double") / lit(5.0) >= lit(0.5f.toDouble))
+        .select(col("v"), col("w"), col("metric").as("m"))
+    }
   }
 }
