@@ -308,7 +308,7 @@ object Bench {
     // size — the whisper write-cost model (BASELINE.md: ingest linear in
     // batch + touched rollup windows). Job counts per phase are recorded
     // so a fixed-cost-dominated measurement is attributable, SPLIT into
-    // write jobs (tagged by MetricStore.taggedWrite: the per-pb fan-out
+    // write jobs (tagged by MetricStore.writeLevel: the per-pb fan-out
     // commits) and the remainder (planning + cascade + mirror reads).
     // The x01 > x00 job-count asymmetry is a fixed-cost artifact, not
     // per-batch work growth: x00 lands every level FRESH (one fan-out

@@ -47,7 +47,7 @@ object Debug {
             writtenBytes.add(m.outputMetrics.bytesWritten)
           }
         }
-        // store writes tag their job description (MetricStore.taggedWrite)
+        // store writes tag their job description (MetricStore.writeLevel)
         override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
           jobCount.increment()
           val desc = Option(jobStart.properties)

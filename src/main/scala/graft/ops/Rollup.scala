@@ -15,13 +15,6 @@ import graft.model.{AggregationMethod, RetentionPolicy}
   */
 object Rollup {
 
-  /** One full rollup step: higher-resolution points → lower-resolution
-    * consolidated points.
-    *
-    * @param higher   (metric, interval, value) at `higherStep` resolution
-    * @return         (metric, interval, value) at `lowerStep` resolution;
-    *                 windows failing the xff gate produce no row
-    */
   /** A rollup group's row count is bounded by its slot capacity
     * (lowerStep/higherStep) — so aggregation skew is structural, not
     * data-dependent, and the two-stage salted path pays off exactly when
@@ -31,6 +24,13 @@ object Rollup {
     */
   val SaltSlotsThreshold = 4096
 
+  /** One full rollup step: higher-resolution points → lower-resolution
+    * consolidated points.
+    *
+    * @param higher   (metric, interval, value) at `higherStep` resolution
+    * @return         (metric, interval, value) at `lowerStep` resolution;
+    *                 windows failing the xff gate produce no row
+    */
   def propagate(higher: DataFrame,
                 higherStep: Int,
                 lowerStep: Int,

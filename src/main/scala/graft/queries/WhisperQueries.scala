@@ -78,153 +78,59 @@ object WhisperQueries {
           .select(col("metric"), col("interval"), col("value"))
           .cache())
 
-  /** Store for the substituted-read query (w23): full event history
-    * ingested ONCE per (session, dir) under a `last` policy — the read
-    * query is what w23 times/validates, not the (w20-covered) ingest.
+  /** A store holding the full event history under the given (metrics,
+    * policy) families, built ONCE per (session, dir) and reported to the
+    * warm ledger under `name`: the substituted-read rows (w23-w31) time
+    * and validate the read, not the ingest w20 already covers. Rollups
+    * use the `last` kernel, whose stored picks are raw event doubles, so
+    * the oracle compare is exact without rounding.
     */
-  private val w23memo =
-    new Memo[graft.store.MetricStore]("w23")
+  private final class HistoryStore(name: String,
+                                   families: (Seq[String], RetentionPolicy)*) {
+    private val memo = new Memo[graft.store.MetricStore](name)
 
-  private def w23Store(s: SparkSession, dir: String): graft.store.MetricStore =
-    w23memo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:$dir",
-      _ => {
-        val root = java.nio.file.Files.createTempDirectory("graft-w23").toString
-        val store = new graft.store.MetricStore(s, root, numBuckets = 8)
-        store.createAll(
-          Seq("click", "view", "signup", "error", "purchase"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000)), xff = Xff,
-            AggregationMethod.Last))
-        store.updateMany(
-          events(s, dir).select(col("metric"), col("tsec").as("ts"),
-            col("value"), col("seq")),
-          Now)
-        store
-      })
+    def apply(s: SparkSession, dir: String): graft.store.MetricStore =
+      memo.computeIfAbsent(
+        s"${System.identityHashCode(s)}:$dir",
+        _ => {
+          val root = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+          val store = new graft.store.MetricStore(s, root, numBuckets = 8)
+          families.foreach { case (metrics, policy) => store.createAll(metrics, policy) }
+          store.updateMany(
+            events(s, dir).select(col("metric"), col("tsec").as("ts"),
+              col("value"), col("seq")),
+            Now)
+          store
+        })
+  }
 
-  /** Store for the date_trunc substituted-read query (w24): an HOURLY
-    * rollup level (date_trunc only speaks fixed calendar units), xff=0,
-    * `last` kernel (stored picks are raw event doubles, so the oracle
-    * compare is exact without rounding — and rounding can't live in an
-    * outer Project anyway: CollapseProject would fold it into the
-    * Aggregate and change the matched shape). Ingested once per
-    * (session, dir) like w23.
-    */
-  private val w24memo =
-    new Memo[graft.store.MetricStore]("w24")
+  private val AllTypes = Seq("click", "view", "signup", "error", "purchase")
+  private def lastPolicy(xff: Float, archives: (Int, Int)*): RetentionPolicy =
+    RetentionPolicy(archives.map { case (s, n) => ArchiveInfo(s, n) }, xff,
+      AggregationMethod.Last)
 
-  private def w24Store(s: SparkSession, dir: String): graft.store.MetricStore =
-    w24memo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:$dir",
-      _ => {
-        val root = java.nio.file.Files.createTempDirectory("graft-w24").toString
-        val store = new graft.store.MetricStore(s, root, numBuckets = 8)
-        store.createAll(
-          Seq("click", "view", "signup", "error", "purchase"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(3600, 2000)), xff = 0f,
-            AggregationMethod.Last))
-        store.updateMany(
-          events(s, dir).select(col("metric"), col("tsec").as("ts"),
-            col("value"), col("seq")),
-          Now)
-        store
-      })
-
-  /** Store for the HETEROGENEOUS-policy substituted read (w30): two
-    * retention families on ONE store (whisper's storage-schemas.conf
-    * shape) — click/view roll up at 300s, signup/error/purchase at 600s,
-    * both xff=0 `last`. Ingested once per (session, dir) like w23/w24.
-    */
-  private val w30memo =
-    new Memo[graft.store.MetricStore]("w30")
-
-  private def w30Store(s: SparkSession, dir: String): graft.store.MetricStore =
-    w30memo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:$dir",
-      _ => {
-        val root = java.nio.file.Files.createTempDirectory("graft-w30").toString
-        val store = new graft.store.MetricStore(s, root, numBuckets = 8)
-        store.createAll(
-          Seq("click", "view"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000)), xff = 0f,
-            AggregationMethod.Last))
-        store.createAll(
-          Seq("signup", "error", "purchase"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(600, 20000)), xff = 0f,
-            AggregationMethod.Last))
-        store.updateMany(
-          events(s, dir).select(col("metric"), col("tsec").as("ts"),
-            col("value"), col("seq")),
-          Now)
-        store
-      })
-
-  /** Store for the MULTI-policy pinned substituted read (w31): two
-    * retention families that BOTH cover a 600s step at different level
-    * indexes — click/view @ (60 → 600) read it from level 1,
-    * signup/error/purchase @ (60 → 300 → 600) from level 2 — so a pin
-    * spanning the families must union two different level choices.
-    * xff=0 `last` (cascades exactly at any depth). Ingested once per
-    * (session, dir) like w23/w24.
-    */
-  private val w31memo =
-    new Memo[graft.store.MetricStore]("w31")
-
-  private def w31Store(s: SparkSession, dir: String): graft.store.MetricStore =
-    w31memo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:$dir",
-      _ => {
-        val root = java.nio.file.Files.createTempDirectory("graft-w31").toString
-        val store = new graft.store.MetricStore(s, root, numBuckets = 8)
-        store.createAll(
-          Seq("click", "view"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(600, 20000)), xff = 0f,
-            AggregationMethod.Last))
-        store.createAll(
-          Seq("signup", "error", "purchase"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000),
-              ArchiveInfo(600, 20000)), xff = 0f,
-            AggregationMethod.Last))
-        store.updateMany(
-          events(s, dir).select(col("metric"), col("tsec").as("ts"),
-            col("value"), col("seq")),
-          Now)
-        store
-      })
-
-  /** Store for the GATED date_trunc substituted read (w25): hourly level
-    * under xff = 0.05 (slots = 60; events fill ~3 minute-slots/hour, so
-    * the ≥3-known gate discriminates — some hours pass, some don't),
-    * `last` kernel for exact oracle values. Ingested once per
-    * (session, dir) like w23/w24.
-    */
+  // w23: a 300s rollup gated at xff 0.5, for the align/window spellings
+  private val w23Store =
+    new HistoryStore("w23", AllTypes -> lastPolicy(Xff, 60 -> 50000, 300 -> 20000))
+  // w24: an HOURLY rollup at xff 0 — date_trunc speaks only calendar units
+  private val w24Store =
+    new HistoryStore("w24", AllTypes -> lastPolicy(0f, 60 -> 50000, 3600 -> 2000))
+  // w25: the hourly rollup gated at xff 0.05 (≥ 3 of 60 slots; events fill
+  // ~3 minute-slots an hour, so some hours pass the gate and some don't)
   private val W25Xff = 0.05f
-  private val w25memo =
-    new Memo[graft.store.MetricStore]("w25")
-
-  private def w25Store(s: SparkSession, dir: String): graft.store.MetricStore =
-    w25memo.computeIfAbsent(
-      s"${System.identityHashCode(s)}:$dir",
-      _ => {
-        val root = java.nio.file.Files.createTempDirectory("graft-w25").toString
-        val store = new graft.store.MetricStore(s, root, numBuckets = 8)
-        store.createAll(
-          Seq("click", "view", "signup", "error", "purchase"),
-          RetentionPolicy(
-            Seq(ArchiveInfo(60, 50000), ArchiveInfo(3600, 2000)), xff = W25Xff,
-            AggregationMethod.Last))
-        store.updateMany(
-          events(s, dir).select(col("metric"), col("tsec").as("ts"),
-            col("value"), col("seq")),
-          Now)
-        store
-      })
+  private val w25Store =
+    new HistoryStore("w25", AllTypes -> lastPolicy(W25Xff, 60 -> 50000, 3600 -> 2000))
+  // w30: two retention families on one store (storage-schemas.conf shape),
+  // rolled up at 300s and at 600s — the heterogeneous-policy read
+  private val w30Store = new HistoryStore("w30",
+    Seq("click", "view") -> lastPolicy(0f, 60 -> 50000, 300 -> 20000),
+    Seq("signup", "error", "purchase") -> lastPolicy(0f, 60 -> 50000, 600 -> 20000))
+  // w31: both families cover 600s, at level 1 and at level 2, so a pin
+  // spanning them must union two level choices
+  private val w31Store = new HistoryStore("w31",
+    Seq("click", "view") -> lastPolicy(0f, 60 -> 50000, 600 -> 20000),
+    Seq("signup", "error", "purchase") ->
+      lastPolicy(0f, 60 -> 50000, 300 -> 20000, 600 -> 20000))
 
   /** Even/odd event split → two independent level-0 series (src, dst) for
     * merge/fill/diff.

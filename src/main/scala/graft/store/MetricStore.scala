@@ -65,14 +65,6 @@ final class MetricStore(val spark: SparkSession, val root: String,
     */
   def bucketSeconds(step: Int): Long = step.toLong * bucketSlots
 
-  /** Slots per time bucket, PERSISTED per store (`_layout`, stamped on
-    * first open): tb values are baked into every partition directory
-    * name, so a binary whose default differs from the store's layout
-    * would otherwise silently prune every fetch to empty and write
-    * duplicate rows under new tb dirs. A store predating the marker is
-    * probed — one partition dir name + one row's interval decide which
-    * historical layout produced it — and stamped with the result.
-    */
   /** `_layout` parsed as key=value lines. Legacy single-line files
     * (bucket_slots only) parse the same way.
     */
@@ -87,6 +79,14 @@ final class MetricStore(val spark: SparkSession, val root: String,
     }.toMap
   }
 
+  /** Slots per time bucket, PERSISTED per store (`_layout`, stamped on
+    * first open): tb values are baked into every partition directory
+    * name, so a binary whose default differs from the store's layout
+    * would otherwise silently prune every fetch to empty and write
+    * duplicate rows under new tb dirs. A store predating the marker is
+    * probed — one partition dir name + one row's interval decide which
+    * historical layout produced it — and stamped with the result.
+    */
   private lazy val bucketSlots: Long = {
     val f = java.nio.file.Paths.get(s"$root/_layout")
     def stamp(v: Long): Long = {
@@ -274,18 +274,17 @@ final class MetricStore(val spark: SparkSession, val root: String,
       catch { case _: org.apache.spark.sql.AnalysisException => emptyLevel(i) }
   }
 
-  /** Levels ≥ 1 additionally store contribution counts: `known` = number
-    * of level-0 points the row consolidates, `vsum` = their sum —
-    * maintained by the cascade (Rollup.propagateCounted), null when a
-    * writer cannot supply them (see [[countsExact]]). `value` is still
-    * whisper's kernel output; counts are extra derived columns, not a
-    * semantic change.
-    */
-  /** The level's full on-disk schema (data + partition columns). Every
-    * CURRENT writer emits these columns (count columns may hold nulls —
-    * see [[countsExact]]), so partition-dir reads can declare it and skip
-    * the schema-inference job a bare `spark.read.parquet` runs — at
-    * scale, footer sampling over a large touched set is pure waste.
+  /** The level's full on-disk schema (data + partition columns). Levels
+    * ≥ 1 additionally store contribution counts: `known` = number of
+    * level-0 points the row consolidates, `vsum` = their sum — maintained
+    * by the cascade (Rollup.propagateCounted), null when a writer cannot
+    * supply them (see [[countsExact]]). `value` is still whisper's kernel
+    * output; counts are extra derived columns, not a semantic change.
+    *
+    * Every CURRENT writer emits these columns, so partition-dir reads can
+    * declare the schema and skip the schema-inference job a bare
+    * `spark.read.parquet` runs — at scale, footer sampling over a large
+    * touched set is pure waste.
     *
     * Whether the count columns are declared follows a ONE-FILE footer
     * probe, not blind assumption: declaring known/vsum over a level
@@ -378,9 +377,12 @@ final class MetricStore(val spark: SparkSession, val root: String,
   def rollupsDerivedFromLevel0: Boolean = !divergedMarker.exists()
   private[graft] def markRollupsDiverged(): Unit = { divergedMarker.createNewFile(); () }
 
+  /** Adds the (pb, tb) partition columns, unless `df` already carries them. */
   private def withPartitionCols(df: DataFrame, step: Int): DataFrame =
-    df.withColumn("pb", pmod(hash(col("metric")), lit(effectiveBuckets)))
-      .withColumn("tb", expr(s"interval div ${bucketSeconds(step)}"))
+    if (df.columns.contains("pb")) df
+    else
+      df.withColumn("pb", pmod(hash(col("metric")), lit(effectiveBuckets)))
+        .withColumn("tb", expr(s"interval div ${bucketSeconds(step)}"))
 
   /** The metric's partition bucket computed on the driver: the one twin
     * of the writer's `pmod(hash(metric), effectiveBuckets)` above
@@ -416,35 +418,15 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * @param touchedPre the incoming frame's distinct (pb, tb) set when
     *        the caller already knows it (saves the discovery job)
     */
-  /** Run `body` with its Spark jobs tagged as store writes (restoring the
-    * caller's description after): the per-pb fan-out launches write jobs
-    * from pool threads interleaved with cascade jobs from the caller, and
-    * without a tag the two are indistinguishable in listener events — a
-    * bench artifact then can't say whether a job-count asymmetry is
-    * fan-out commits or cascade work. The tag rides the job-description
-    * local property, so it also labels the writes in the Spark UI.
-    */
-  private def taggedWrite[T](i: Int)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.store.write level=$i")
-    try body
-    finally sc.setJobDescription(prev)
-  }
-
   private def upsertLevel(i: Int, step: Int, incoming: DataFrame,
                           touchedPre: Option[Set[(Int, Long)]] = None): Unit = {
-    val newPts =
-      if (incoming.columns.contains("pb")) incoming
-      else withPartitionCols(incoming, step)
+    val newPts = withPartitionCols(incoming, step)
 
     // first write to a fresh level: incoming frames are already
-    // slot-unique (routed/propagated), so skip the merge aggregation.
-    // Cluster by the partition keys before writing — without it every
-    // task writes a file into every (pb, tb) directory and the file
-    // count explodes by the task count.
+    // slot-unique (routed/propagated), so skip the merge aggregation
     if (!new java.io.File(levelPath(i)).exists()) {
-      writeFresh(i, newPts.drop("prio"), touchedPre)
+      writeLevel(i, newPts.drop("prio"),
+        touchedPre.map(_.map(_._1)).getOrElse(Set.empty), clustered = false)
       return
     }
 
@@ -453,60 +435,94 @@ final class MetricStore(val spark: SparkSession, val root: String,
         .map(r => (r.getInt(0), r.getLong(1))).toSet)
     if (touched.isEmpty) return
 
-    // mergedTouched output is already clustered by (pb, tb) — one writer
-    // set per touched partition without a second exchange
-    writeMerged(i, mergedTouched(i, newPts, touched), touched.map(_._1))
+    writeLevel(i, mergedTouched(i, newPts, touched), touched.map(_._1), clustered = true)
   }
 
-  /** Land merged touched-partition rows over an EXISTING level. Same two
-    * regimes as [[writeFresh]] — the dynamic-overwrite commit walks
-    * touched dirs sequentially on the driver, so in the commit-bound
-    * small-batch regime one overwrite job per pb (separate output roots,
-    * overlapping commits) beats the single write. Unlike writeFresh the
-    * per-pb jobs need no shared cache: the `pb = p` filter is a partition
-    * predicate, so each job's touched-dir read PRUNES to its own pb's
-    * directories — the merge work partitions naturally across the jobs.
+  /** The one write of level data: land `rows` (the level's data columns
+    * plus pb, tb) in level i, replacing exactly the (pb, tb) partitions
+    * the rows touch (dynamic partition overwrite, set per write — NOT on
+    * the session, where it would silently change overwrite semantics for
+    * unrelated user writes sharing the SparkSession). `pbs` is the
+    * touched-pb set when the caller knows it (empty otherwise).
+    *
+    * Rows are clustered by (pb, tb) — without that every task writes a
+    * file into every partition directory and the file count explodes by
+    * the task count — unless `clustered` says they arrive so:
+    * [[mergedTouched]]'s merge shares its (pb, tb) exchange with the
+    * write, and its output usually reaches here through a local
+    * checkpoint, which reports no partitioning, so the planner could not
+    * elide a second exchange. Inside files rows are sorted by (metric,
+    * interval): the write planner's required ordering is the partition
+    * columns, which the sort satisfies (no second sort), and it lines
+    * parquet page/row-group min-max stats up with exactly the filters
+    * every read pushes, so a metric-pinned or time-bounded scan skips
+    * pages instead of decoding whole files.
+    *
+    * Two regimes, picked by the touched-pb count:
+    *
+    *  - **commit-bound** (2..[[MetricStore.MaxParallelPbWrites]] pbs:
+    *    small stores, small batches): the dynamic-partition commit walks
+    *    every (pb, tb) directory sequentially on the driver — for a ~2 MB
+    *    sf0.1 batch landing in ~130 dirs that was ~1.1 s of a 1.4 s write
+    *    (WriteProbe (deleted probe, last commit e6b2e65): flat 32-file
+    *    write 0.33 s, any partitionBy spelling 1.3–1.5 s regardless of
+    *    codec/buffer knobs). So ONE JOB PER pb writes `pb=<p>/` with
+    *    `partitionBy(tb)`: separate output roots mean separate staging and
+    *    separate commits that overlap across jobs (WriteProbe: 1.38 s →
+    *    0.64 s warm), with the same layout on disk. The `pb = p` filter is
+    *    a partition predicate, so each job's touched-dir read prunes to
+    *    its own pb.
+    *  - **data-bound** (one pb, or many = real scale): one clustered
+    *    write. Per-pb jobs would each re-scan their input to filter a
+    *    slice — linear in pb count, for no commit win once data volume
+    *    amortizes the commit.
+    *
+    * Fusing all fresh LEVELS into one commit instead lost ~1 s at sf0.1,
+    * because it serialized the cascade behind the write (LayoutExperiment
+    * (deleted probe, last commit 179af17): x00 2.0 s per-level vs 3.0 s
+    * fused) — level writes keep overlapping the cascade through
+    * [[MetricStore.writeEc]] futures, so the fan-out lives here, inside
+    * the per-level write.
+    *
+    * Every job is tagged `graft.store.write level=<i>` (the job
+    * description, restored after): fan-out writes run on pool threads
+    * interleaved with the caller's cascade jobs, and the tag is how
+    * listeners (Bench, perfbench, the Spark UI) tell the two apart.
     */
-  private def writeMerged(i: Int, merged: DataFrame, pbs: Set[Int]): Unit = {
-    if (pbs.size < 2 || pbs.size > MetricStore.MaxParallelPbWrites) {
-      taggedWrite(i) {
-        merged
-          // order INSIDE files by (metric, interval) — see writeFresh
-          .sortWithinPartitions("pb", "tb", "metric", "interval")
+  private def writeLevel(i: Int, rows: DataFrame, pbs: Set[Int],
+                         clustered: Boolean): Unit = {
+    def write(df: DataFrame, parts: Seq[String], path: String): Unit = {
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"graft.store.write level=$i")
+      try
+        df.sortWithinPartitions((parts ++ Seq("metric", "interval")).map(col): _*)
           .write
-          // per-write option, NOT session conf: mutating the session's
-          // partitionOverwriteMode would silently change overwrite
-          // semantics for unrelated user writes sharing the SparkSession
           .option("partitionOverwriteMode", "dynamic")
           .mode(SaveMode.Overwrite)
-          .partitionBy("pb", "tb")
-          .parquet(levelPath(i))
-      }
+          .partitionBy(parts: _*)
+          .parquet(path)
+      finally sc.setJobDescription(prev)
+    }
+    if (pbs.size < 2 || pbs.size > MaxParallelPbWrites) {
+      write(if (clustered) rows else rows.repartition(col("pb"), col("tb")),
+        Seq("pb", "tb"), levelPath(i))
       return
     }
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    // NOT writeEc — see writeFresh
+    // NOT writeEc: the caller may itself be a writeEc future — sub-jobs
+    // on the same fixed pool could starve behind parents awaiting them
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
+    // pb is encoded in the directory name; keeping the column in the data
+    // too would collide with partition discovery on read. The per-job
+    // re-cluster by tb matters: a filtered slice of an already-clustered
+    // frame can claim a stale ordering that makes the write planner elide
+    // its partition sort and collide staging files.
     val done = pbs.toSeq.sorted.map { p =>
-      Future {
-        taggedWrite(i) {
-          // re-cluster by tb inside the job: the filtered slice of the
-          // merged frame can claim a stale cached ordering that makes the
-          // write planner elide its partition sort and collide staging
-          // files — the fresh exchange (same shape as writeFresh) makes
-          // the required clustering explicit
-          merged.where(col("pb") === p).drop("pb")
-            .repartition(col("tb"))
-            .sortWithinPartitions("tb", "metric", "interval")
-            .write
-            .option("partitionOverwriteMode", "dynamic")
-            .mode(SaveMode.Overwrite)
-            .partitionBy("tb")
-            .parquet(s"${levelPath(i)}/pb=$p")
-        }
-      }
+      Future(write(rows.where(col("pb") === p).drop("pb").repartition(col("tb")),
+        Seq("tb"), s"${levelPath(i)}/pb=$p"))
     }
     done.foreach(Await.result(_, Duration.Inf))
     // the fan-out wrote SUBDIRECTORY roots (pb=<p>), so Spark's
@@ -518,90 +534,6 @@ final class MetricStore(val spark: SparkSession, val root: String,
     // writes don't need this: their own commit refreshes the root.
     spark.catalog.refreshByPath(levelPath(i))
   }
-
-  /** Bulk write into a nonexistent level. Two regimes, picked by the
-    * touched-pb count the caller already collected (no extra job):
-    *
-    *  - **commit-bound** (small stores / small SF): the dynamic-partition
-    *    commit walks every (pb, tb) directory sequentially on the driver
-    *    — for a ~2 MB sf0.1 batch landing in ~130 dirs that is ~1.1 s of
-    *    the 1.4 s write (`tools/WriteProbe`: flat 32-file write 0.33 s,
-    *    any partitionBy spelling 1.3–1.5 s regardless of codec/buffer
-    *    knobs). Fan out ONE JOB PER pb, each writing `pb=<p>/` with
-    *    `partitionBy(tb)`: separate output roots mean separate
-    *    `_temporary` staging and separate commits that overlap across
-    *    jobs (WriteProbe: 1.38 s → 0.64 s warm). Layout on disk is
-    *    byte-identical to the single write.
-    *  - **data-bound** (many pbs = real scale): one clustered shuffle
-    *    write. Per-pb jobs would each re-filter the routed cache — at
-    *    hundreds of pbs that is hundreds of cache scans for no commit
-    *    win, since the commit cost is amortized by data volume there.
-    *
-    * An earlier round-6 experiment fused all fresh LEVELS into one
-    * commit instead; it lost ~1 s at sf0.1 because it serialized the
-    * cascade behind the write (`LayoutExperiment`: x00 2.0 s pre-fuse
-    * vs 3.0 s fused) — level writes must keep overlapping the cascade
-    * via [[MetricStore.writeEc]] futures, so the fan-out lives HERE,
-    * inside the per-level write.
-    */
-  private def writeFresh(i: Int, pts: DataFrame,
-                         touchedPre: Option[Set[(Int, Long)]]): Unit = {
-    val pbs: Set[Int] = touchedPre.map(_.map(_._1)).getOrElse(Set.empty)
-    if (pbs.size < 2 || pbs.size > MetricStore.MaxParallelPbWrites) {
-      // sort INSIDE files by (metric, interval): the write planner's
-      // required ordering is the partition columns, so a
-      // (pb, tb, metric, interval) sortWithinPartitions satisfies it
-      // (no second sort) AND lines parquet page/row-group min-max stats
-      // up with exactly the filters every read pushes — at scale a
-      // metric-pinned or time-bounded scan skips pages instead of
-      // decoding whole files. Free at small SF (the writer sorted by
-      // (pb, tb) anyway); the win grows with rows per file.
-      taggedWrite(i) {
-        pts.repartition(col("pb"), col("tb"))
-          .sortWithinPartitions("pb", "tb", "metric", "interval")
-          .write
-          .mode(SaveMode.Overwrite)
-          .partitionBy("pb", "tb")
-          .parquet(levelPath(i))
-      }
-      return
-    }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // NOT writeEc: the caller may itself be a writeEc future — sub-jobs
-    // on the same fixed pool could starve behind parents awaiting them
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val done = pbs.toSeq.sorted.map { p =>
-      Future {
-        taggedWrite(i) {
-          // pb is encoded in the directory name; keeping the column in
-          // the data too would collide with partition discovery on read
-          pts.where(col("pb") === p).drop("pb")
-            .repartition(col("tb"))
-            .sortWithinPartitions("tb", "metric", "interval")
-            .write
-            .mode(SaveMode.Overwrite)
-            .partitionBy("tb")
-            .parquet(s"${levelPath(i)}/pb=$p")
-        }
-      }
-    }
-    done.foreach(Await.result(_, Duration.Inf))
-    // subdirectory-root fan-out: refresh the parent listing (see
-    // writeMerged — same stale-FileStatusCache hazard)
-    spark.catalog.refreshByPath(levelPath(i))
-  }
-
-  /** Land a precomputed post-upsert mirror of level i's touched
-    * partitions: no re-read/re-merge — the rows are [[mergedTouched]]'s
-    * output, usually already materialized into its cache by the
-    * cascade's deferred-write reader. Routes through [[writeMerged]] so
-    * the commit-bound regime fans out per pb like every other write.
-    */
-  private def overwriteTouched(i: Int, merged: DataFrame,
-                               pbs: Set[Int]): Unit =
-    writeMerged(i, merged, pbs)
 
   /** Current on-disk rows of level i's touched (pb, tb) partitions.
     * Reads ONLY those partition directories: going through the root path
@@ -634,33 +566,25 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * the deferred-write cascade, a mirror of the level's future state
     * computable BEFORE the write lands.
     *
-    * The merge is column-generic: the winner's WHOLE data row (value plus
-    * any count columns) moves together via one max_by(struct, prio), so a
-    * level with known/vsum never mixes one row's value with another's
-    * counts. A side missing the count columns contributes nulls — and
-    * flips the store to counts-approx, since those rows' counts are
-    * genuinely unknown from here on.
+    * A side missing the count columns contributes nulls — and flips the
+    * store to counts-approx, since those rows' counts are genuinely
+    * unknown from here on.
     */
   private def mergedTouched(i: Int, newPts: DataFrame,
                             touched: Set[(Int, Long)]): DataFrame = {
     val existing = existingTouched(i, touched).withColumn("prio", lit(-1L))
     if (i > 0 && existing.columns.contains("vsum") != newPts.columns.contains("vsum"))
       markCountsApprox()
-    val unioned = existing.unionByName(newPts, allowMissingColumns = true)
-    val keys = Set("metric", "interval", "pb", "tb", "prio")
-    val dataCols = unioned.columns.filterNot(keys)
     // Cluster by the PHYSICAL partition keys before merging: (metric,
     // interval) determine (pb, tb), so hash-partitioning on (pb, tb)
-    // already co-locates every merge group — the groupBy below then runs
+    // already co-locates every merge group — the merge then runs
     // without its own exchange AND the output arrives pre-clustered for
     // the partitionBy(pb, tb) write. Merge + write share ONE shuffle
     // where the merge-then-repartition order paid two.
-    unioned
-      .repartition(col("pb"), col("tb"))
-      .groupBy("metric", "interval", "pb", "tb")
-      .agg(max_by(struct(dataCols.map(col): _*), col("prio")).as("w"))
-      .select(Seq("metric", "interval", "pb", "tb").map(col) ++
-        dataCols.map(c => col(s"w.$c").as(c)): _*)
+    highestPrio(
+      existing.unionByName(newPts, allowMissingColumns = true)
+        .repartition(col("pb"), col("tb")),
+      Seq("metric", "interval", "pb", "tb"))
   }
 
   /** Explicit (pb, tb) directory candidates covering intervals [lo, hi)
@@ -671,9 +595,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
                                 lo: Long, hi: Long): Option[Seq[String]] = {
     val tbLo = lo / bucketSecs
     val tbHi = (hi - 1) / bucketSecs
-    if (tbHi < tbLo || (tbHi - tbLo + 1) * numBuckets > 4096) None
+    if (tbHi < tbLo || (tbHi - tbLo + 1) * effectiveBuckets > 4096) None
     else Some(for {
-      pb <- 0 until numBuckets
+      pb <- 0 until effectiveBuckets
       tb <- (tbLo to tbHi).toSeq
     } yield s"${levelPath(i)}/pb=$pb/tb=$tb")
   }
@@ -811,41 +735,35 @@ final class MetricStore(val spark: SparkSession, val root: String,
         }
         def flushDeferred(): Unit = { deferred.foreach(_()); deferred = None }
         def runUpsert(i: Int, step: Int, incoming: DataFrame,
-                      touchedPre: Option[Set[(Int, Long)]]): Unit =
+                      touched: Set[(Int, Long)]): Unit =
           if (freshLevels.contains(i))
             pendingWrites += scala.concurrent.Future(
-              upsertLevel(i, step, incoming, touchedPre))(MetricStore.writeEc)
-          else touchedPre match {
-            case Some(t) if t.nonEmpty =>
-              // build the post-upsert mirror ONCE and share it between the
-              // cascade's deferred-write reader and the write itself:
-              // upsertLevel would re-read and re-merge the same touched
-              // partitions the mirror already merged — the incremental
-              // path paid that twice per level.
-              //
-              // localCheckpoint, NOT cache: the mirror's lineage reads the
-              // level's pre-write partition directories, and every
-              // insert-overwrite commit auto-recaches (RE-EXECUTES,
-              // re-LISTS) cached plans matching the written path — with
-              // the per-pb write futures running concurrently, one pb
-              // job's post-commit recache could re-list a SIBLING pb's
-              // directory mid-overwrite and fail-stop the batch ("Invalid
-              // directory or I/O error", one-in-N under the full-surface
-              // run; w22's streaming ingest surfaced it). The eager
-              // checkpoint cuts the disk lineage on the main thread
-              // BEFORE any write launches, so no cached plan references
-              // level paths during the writes: the recache storm, the
-              // replaced-file recompute caveat, and the eviction-loss
-              // recompute all become structurally impossible.
-              val newPts =
-                if (incoming.columns.contains("pb")) incoming
-                else withPartitionCols(incoming, step)
-              val mirror = frames.hold(mergedTouched(i, newPts, t).localCheckpoint())
-              deferred = Some(() => overwriteTouched(i, mirror, t.map(_._1)))
-              deferredMirror = Some((i, mirror, t))
-            case _ =>
-              deferred = Some(() => upsertLevel(i, step, incoming, touchedPre))
-              deferredMirror = None
+              upsertLevel(i, step, incoming, Some(touched)))(MetricStore.writeEc)
+          else {
+            // build the post-upsert mirror ONCE and share it between the
+            // cascade's deferred-write reader and the write itself:
+            // upsertLevel would re-read and re-merge the same touched
+            // partitions the mirror already merged — the incremental
+            // path paid that twice per level.
+            //
+            // localCheckpoint, NOT cache: the mirror's lineage reads the
+            // level's pre-write partition directories, and every
+            // insert-overwrite commit auto-recaches (RE-EXECUTES,
+            // re-LISTS) cached plans matching the written path — with
+            // the per-pb write futures running concurrently, one pb
+            // job's post-commit recache could re-list a SIBLING pb's
+            // directory mid-overwrite and fail-stop the batch ("Invalid
+            // directory or I/O error", one-in-N under the full-surface
+            // run; w22's streaming ingest surfaced it). The eager
+            // checkpoint cuts the disk lineage on the main thread
+            // BEFORE any write launches, so no cached plan references
+            // level paths during the writes: the recache storm, the
+            // replaced-file recompute caveat, and the eviction-loss
+            // recompute all become structurally impossible.
+            val mirror = frames.hold(
+              mergedTouched(i, withPartitionCols(incoming, step), touched).localCheckpoint())
+            deferred = Some(() => writeLevel(i, mirror, touched.map(_._1), clustered = true))
+            deferredMirror = Some((i, mirror, touched))
           }
 
         // level-0 direct writes (no propagated input at the finest level);
@@ -856,7 +774,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
           runUpsert(0, steps(0),
             routed.where(col("level") === 0)
               .select(col("metric"), col("interval"), col("value"), lit(0L).as("prio")),
-            directTouched.get(0))
+            directTouched(0))
 
         // rollup cascade: recompute only touched lower windows from the
         // (post-upsert) higher level. The change set feeding level i+1 is
@@ -954,7 +872,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
           deferredMirror = None
           val propagatedAny = touchedP.nonEmpty
           val directN = directCounts.getOrElse(i, 0L)
-          // ONE upsert per level: direct writes (prio 2) fused with
+          // Level i's incoming rows: direct writes (prio 2) merged with
           // propagated windows (prio 1) — DIRECT BEATS PROPAGATED within a
           // batch: file_update_many commits archives finest-first, so by
           // the time archive i's own points are written, every
@@ -965,60 +883,36 @@ final class MetricStore(val spark: SparkSession, val root: String,
           // deep-direct points share a window with finer points; the
           // reference kept the raw point, graft kept the rollup.)
           // Pre-merged when both exist so the fresh-level fast path
-          // (which skips merging) never sees duplicate slots.
-          if (propagatedAny || directN > 0) {
-            // a direct-written point at level i IS a single raw observation:
-            // known=1, vsum=value
-            def directRows = routed.where(col("level") === i)
+          // (which skips merging) never sees duplicate slots. ONE upsert
+          // per level writes them, and on a fresh level their data
+          // columns are also the in-memory mirror the next step reads.
+          val incoming = {
+            val propagatedRows = propagated.withColumn("prio", lit(1L))
+            // a direct-written point at level i IS a single raw
+            // observation: known=1, vsum=value
+            def directRows = withPartitionCols(routed.where(col("level") === i)
               .select(col("metric"), col("interval"), col("value"),
-                lit(1L).as("known"), col("value").as("vsum"), lit(2L).as("prio"))
-            val incoming =
-              if (directN == 0L) propagated.withColumn("prio", lit(1L))
-              else if (!propagatedAny) directRows
-              else
-                withPartitionCols(directRows, steps(i))
-                  .unionByName(propagated.withColumn("prio", lit(1L)))
-                  .groupBy("metric", "interval", "pb", "tb")
-                  .agg(max_by(struct(col("value"), col("known"), col("vsum")),
-                    col("prio")).as("w"))
-                  .select(col("metric"), col("interval"), col("pb"), col("tb"),
-                    col("w.value").as("value"), col("w.known").as("known"),
-                    col("w.vsum").as("vsum"))
-                  .withColumn("prio", lit(1L))
-            runUpsert(i, steps(i), incoming,
-              Some(touchedP ++ directTouched.getOrElse(i, Set.empty)))
+                lit(1L).as("known"), col("value").as("vsum"), lit(2L).as("prio")), steps(i))
+            if (directN == 0L) propagatedRows
+            else if (!propagatedAny) directRows
+            else
+              highestPrio(directRows.unionByName(propagatedRows),
+                Seq("metric", "interval", "pb", "tb")).withColumn("prio", lit(1L))
           }
+          // no extra job: level i changed iff something propagated or it
+          // took direct writes (known from the counts pass)
+          changedNonEmpty = propagatedAny || directN > 0
+          if (changedNonEmpty)
+            runUpsert(i, steps(i), incoming, touchedP ++ directTouched.getOrElse(i, Set.empty))
           changed = propagated
             .select("metric", "interval")
             .unionByName(routed.where(col("level") === i).select("metric", "interval"))
-          // maintain the in-memory mirror of level i for the next step:
-          // direct writes merged with propagated windows, DIRECT wins —
-          // exactly what the fused upsert just materialized on disk
-          prevContent = {
-            def directMirror = routed.where(col("level") === i)
-              .select(col("metric"), col("interval"), col("value"),
-                lit(1L).as("known"), col("value").as("vsum"))
-            if (!freshLevels.contains(i)) None
-            else if (directCounts.getOrElse(i, 0L) == 0L)
-              Some(propagated.select("metric", "interval", "value", "known", "vsum"))
-            else if (!propagatedAny) Some(directMirror)
-            else
-              Some(
-                directMirror.withColumn("prio", lit(2L))
-                  .unionByName(propagated
-                    .select(col("metric"), col("interval"), col("value"),
-                      col("known"), col("vsum"))
-                    .withColumn("prio", lit(1L)))
-                  .groupBy("metric", "interval")
-                  .agg(max_by(struct(col("value"), col("known"), col("vsum")),
-                    col("prio")).as("w"))
-                  .select(col("metric"), col("interval"), col("w.value").as("value"),
-                    col("w.known").as("known"), col("w.vsum").as("vsum")))
-          }
-          // no extra job: nonempty iff something propagated or level i took
-          // direct writes (known from the counts pass); the hull advances
-          // to its alignment merged with level-i direct-write bounds
-          changedNonEmpty = propagatedAny || directCounts.getOrElse(i, 0L) > 0
+          prevContent =
+            if (freshLevels.contains(i))
+              Some(incoming.select("metric", "interval", "value", "known", "vsum"))
+            else None
+          // the hull advances to its alignment merged with level-i
+          // direct-write bounds
           bLo = math.min(lowerMin, directStats.get(i).map(_._2).getOrElse(Long.MaxValue))
           bHi = math.max(upper - steps(i), directStats.get(i).map(_._3).getOrElse(Long.MinValue))
           i += 1
@@ -1594,15 +1488,8 @@ final class MetricStore(val spark: SparkSession, val root: String,
             .localCheckpoint())
           val keptParts = kept.select("pb", "tb").distinct().collect()
             .map(r => (r.getInt(0), r.getAs[Number](1).longValue)).toSet
-          if (keptParts.nonEmpty) {
-            kept.repartition(col("pb"), col("tb"))
-              .sortWithinPartitions("pb", "tb", "metric", "interval")
-              .write
-              .option("partitionOverwriteMode", "dynamic")
-              .mode(SaveMode.Overwrite)
-              .partitionBy("pb", "tb")
-              .parquet(levelPath(i))
-          }
+          if (keptParts.nonEmpty)
+            writeLevel(i, kept, keptParts.map(_._1), clustered = false)
           // dynamic overwrite never touches now-empty partitions — drop them
           touched.filterNot(keptParts).foreach {
             case (p, t) =>
@@ -1630,18 +1517,16 @@ final class MetricStore(val spark: SparkSession, val root: String,
 
     // finest-available point per timestamp, tagged with its source step
     // (whisper-resize.py:147-163: higher-precision archives win)
-    val unioned = oldPolicy.levels.zipWithIndex
-      .map {
-        case (lvl, i) =>
-          levelData(i).select("metric", "interval", "value")
-            .withColumn("step", lit(lvl.secondsPerPoint.toLong))
-            .withColumn("lvlprio", lit(-i.toLong))
-      }
-      .reduce(_.unionByName(_))
-      .groupBy("metric", "interval")
-      .agg(max_by(struct(col("value"), col("step")), col("lvlprio")).as("vs"))
-      .select(col("metric"), col("interval"), col("vs.value").as("value"),
-        col("vs.step").as("step"))
+    val unioned = highestPrio(
+      oldPolicy.levels.zipWithIndex
+        .map {
+          case (lvl, i) =>
+            levelData(i).select("metric", "interval", "value")
+              .withColumn("step", lit(lvl.secondsPerPoint.toLong))
+              .withColumn("prio", lit(-i.toLong))
+        }
+        .reduce(_.unionByName(_)),
+      Seq("metric", "interval"))
 
     // re-bin into the new finest grid; slots = old slots per new window
     // (upsampling → 1 slot, a lone point passes any xff)
@@ -1681,12 +1566,25 @@ object MetricStore {
     */
   private[store] val DefaultBucketSlots: Long = 1024L
 
-  /** Fresh-level bulk writes fan out one job per pb up to this many pbs
-    * (see [[MetricStore.writeFresh]]); past it the batch is data-bound
-    * and a single clustered write wins (each per-pb job re-scans the
-    * routed cache to filter its slice — linear in pb count).
+  /** [[MetricStore.writeLevel]] fans out one job per pb up to this many
+    * pbs; past it the batch is data-bound and a single clustered write
+    * wins (each per-pb job re-scans its input to filter its slice —
+    * linear in pb count).
     */
   private[store] val MaxParallelPbWrites: Int = 16
+
+  /** The store's one last-write-wins rule: per `keys` group the row with
+    * the highest `prio` wins WHOLE — its data columns (all but the keys
+    * and prio: value plus any count columns) move together as one struct
+    * picked by max_by, so a level with known/vsum never mixes one row's
+    * value with another's counts. Output: keys, then data columns.
+    */
+  private def highestPrio(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val dataCols = rows.columns.toSeq.filterNot((keys :+ "prio").contains)
+    rows.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(dataCols.map(col): _*), col("prio")).as("w"))
+      .select(keys.map(col) ++ dataCols.map(c => col(s"w.$c").as(c)): _*)
+  }
 
   /** Shared pool for deferred fresh-level writes (daemon threads so a
     * forgotten store never blocks JVM exit). Sized small: each task is a

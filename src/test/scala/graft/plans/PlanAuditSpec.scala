@@ -73,20 +73,28 @@ class PlanAuditSpec extends AnyFunSuite {
   test("single-point fetch prunes on the metric hash bucket too") {
     val store = seededStore()
     // fetch() collects, so audit the plan its action ran, taken from a
-    // query-execution listener; the listener bus delivers in order, so
-    // the sentinel action's event means the fetch's has arrived
+    // query-execution listener. The listener bus delivers in order, so
+    // plans are recorded only between a begin sentinel action run after
+    // registering (events still queued from earlier actions arrive
+    // before it) and an end sentinel (the fetch's event has arrived)
+    val begin = "plan_audit_begin"
     val sentinel = "plan_audit_sentinel"
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new QueryExecutionListener {
+      @volatile private var recording = false
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.map(_.name) == Seq(sentinel)) drained.countDown()
-        else plans.add(qe.optimizedPlan)
+        qe.analyzed.output.map(_.name) match {
+          case Seq(`begin`) => recording = true
+          case Seq(`sentinel`) => drained.countDown()
+          case _ => if (recording) plans.add(qe.optimizedPlan)
+        }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     store.fetch("m", Now - 86400, Now, Now) // warm the count-column probe
     spark.listenerManager.register(listener)
     try {
+      spark.range(1).toDF(begin).collect()
       val Some(res) = store.fetch("m", Now - 36000, Now, Now)
       assert(res.values.flatten.size == 599)
       spark.range(1).toDF(sentinel).collect()

@@ -132,15 +132,11 @@ class StoreFormatSpec extends AnyFunSuite {
 
   test("level files are ordered by (metric, interval) on fresh AND merged writes") {
     import spark.implicits._
-    val root = Files.createTempDirectory("ms-fileorder").toString
-    val store = new MetricStore(spark, root, numBuckets = 4)
     val policy =
       RetentionPolicy(Seq(ArchiveInfo(60, 300), ArchiveInfo(300, 300)), xff = 0f)
-    val metrics = (0 until 8).map(i => s"m$i")
-    metrics.foreach(store.create(_, policy))
     val base = Now - 3000
     val w0 = base - base % 300
-    def assertFilesSorted(tag: String): Unit = {
+    def assertFilesSorted(root: String, tag: String): Unit = {
       val files = new java.io.File(root).listFiles
         .filter(f => f.getName.startsWith("level_"))
         .flatMap(l => l.listFiles.filter(_.getName.startsWith("pb=")))
@@ -157,15 +153,73 @@ class StoreFormatSpec extends AnyFunSuite {
           s"$tag: ${f.getPath} not (metric, interval)-ordered: $rows")
       }
     }
-    // fresh path (writeFresh, per-pb fan-out regime: 8 metrics / 4 pbs)
-    val pts = metrics.flatMap(m =>
-      (0 until 5).map(i => (m, w0 + i * 60L, 10.0 + i, i.toLong)))
+    // one store per writeLevel regime: the per-pb fan-out (8 metrics over
+    // 4 pbs) and the single clustered write (more touched pbs than the
+    // fan-out takes)
+    for ((numBuckets, numMetrics) <- Seq((4, 8), (32, 120))) {
+      val root = Files.createTempDirectory("ms-fileorder").toString
+      val store = new MetricStore(spark, root, numBuckets)
+      val metrics = (0 until numMetrics).map(i => s"m$i")
+      store.createAll(metrics, policy)
+      val pbs = metrics.map(store.pbOf).distinct.size
+      assert(pbs >= 2 &&
+        (pbs > MetricStore.MaxParallelPbWrites) == (numBuckets == 32), s"$pbs pbs")
+      // fresh level
+      val pts = metrics.flatMap(m =>
+        (0 until 5).map(i => (m, w0 + i * 60L, 10.0 + i, i.toLong)))
+      store.updateMany(pts.toDF("metric", "ts", "value", "seq"), Now)
+      assertFilesSorted(root, s"$pbs pbs, fresh")
+      // merged rows over the existing level, same dirs
+      val pts2 = metrics.flatMap(m =>
+        (0 until 5).map(i => (m, w0 + i * 60L + 60, 20.0 + i, 100L + i)))
+      store.updateMany(pts2.toDF("metric", "ts", "value", "seq"), Now)
+      assertFilesSorted(root, s"$pbs pbs, merged")
+    }
+    // a heterogeneous store: vacuum evicts row by row and rewrites the
+    // partitions that held expired rows
+    val root = Files.createTempDirectory("ms-fileorder-vacuum").toString
+    val store = new MetricStore(spark, root, numBuckets = 4)
+    store.createAll((0 until 4).map(i => s"a$i"), policy)
+    store.createAll((0 until 4).map(i => s"b$i"),
+      RetentionPolicy(Seq(ArchiveInfo(60, 400), ArchiveInfo(300, 300)), xff = 0f))
+    val t0 = Now - Now % 300 - 6000
+    val pts = store.policies().keys.toSeq.flatMap(m =>
+      (0 until 100).map(i => (m, t0 + i * 60L, i.toDouble, i.toLong)))
     store.updateMany(pts.toDF("metric", "ts", "value", "seq"), Now)
-    assertFilesSorted("fresh")
-    // merged path (writeMerged over the existing level, same dirs)
-    val pts2 = metrics.flatMap(m =>
-      (0 until 5).map(i => (m, w0 + i * 60L + 60, 20.0 + i, 100L + i)))
-    store.updateMany(pts2.toDF("metric", "ts", "value", "seq"), Now)
-    assertFilesSorted("merged")
+    val before = store.levelData(0).count()
+    store.vacuum(Now + 15000) // evicts the older "a" points only
+    assert(store.levelData(0).count() < before, "vacuum evicted nothing")
+    assertFilesSorted(root, "vacuumed")
+  }
+
+  test("incremental cascade reads the untouched hull under the persisted bucket count") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ms-hull-buckets").toString
+    val store = new MetricStore(spark, root, numBuckets = 32)
+    // a metric whose bucket lies past a 2-bucket layout's range
+    val m = (0 until 100).map(i => s"m$i").find(store.pbOf(_) >= 2).get
+    store.create(m, RetentionPolicy(
+      Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000)), xff = 0f,
+      AggregationMethod.Average))
+    val bs = store.bucketSeconds(60)
+    // a 300 s window that straddles a level-0 time-bucket boundary
+    val boundary = 27651L * bs
+    val w = boundary - boundary % 300
+    assert(w < boundary && boundary < w + 300)
+    val t = Seq.tabulate(5)(k => w + 60L * k)
+    val now = w + 3600
+    store.updateMany(t.take(4).zipWithIndex
+      .map { case (ts, k) => (m, ts, k + 1.0, k.toLong) }
+      .toDF("metric", "ts", "value", "seq"), now)
+    // reopen with another default: the persisted 32 buckets must win, so
+    // the window's level-0 rows left on the other side of the boundary
+    // are read back for the rollup
+    val reopened = new MetricStore(spark, root, numBuckets = 2)
+    reopened.updateMany(Seq((m, t(4), 10.0, 10L))
+      .toDF("metric", "ts", "value", "seq"), now)
+    val v = reopened.levelData(1)
+      .where(col("metric") === m && col("interval") === w)
+      .select("value").as[Double].collect().toSeq
+    assert(v == Seq(4.0), s"window $w: $v")
   }
 }
