@@ -115,22 +115,6 @@ final class BenchmarkRegistry private[ext] (val spark: SparkSession,
       .select(col(idCol), col("bench_set"), col("bench_version"),
         col("bench_id"), col("span"), col("nruns"))
   }
-
-  /** [[report]] reduced to the per-(doc, set) gate a pipeline
-    * thresholds on: the worst leaked span and total leaked runs per
-    * benchmark suite.
-    */
-  def reportBySet(batch: DataFrame, minShared: Long = 2,
-                  maxGramFreq: Long = 200, maxGap: Long = 64,
-                  minKeep: Long = 16, slack: Long = 64,
-                  idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame =
-    report(batch, minShared, maxGramFreq, maxGap, minKeep, slack,
-        idCol, textCol)
-      .groupBy(col(idCol), col("bench_set"), col("bench_version"))
-      .agg(max(col("span")).as("span"),
-        sum(col("nruns")).as("nruns"),
-        countDistinct(col("bench_id")).as("items"))
 }
 
 object BenchmarkRegistry {

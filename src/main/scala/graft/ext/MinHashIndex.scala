@@ -64,9 +64,7 @@ final class MinHashIndex private[ext] (val spark: SparkSession, val path: String
     */
   def prefilterMargin: Double = if (sigMode == "oph") 0.3 else 0.2
 
-  def shingleTable: DataFrame = table("shingles", Seq("id", "h"), None)
   def signatures: DataFrame = table("sigs", Seq("id", "sig"), None)
-  def bandBuckets: DataFrame = table("bands", Seq("id", "band", "bh"), None)
 
   /** One index table, optionally excluding a segment — the exclusion is
     * a partition filter on `seg`, so the skipped segment's files are

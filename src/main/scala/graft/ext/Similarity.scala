@@ -121,15 +121,9 @@ object Similarity {
     * column) — single-table sign-LSH recall at moderate cosine is low
     * (≈(1-θ/π)^planes), so candidates are unioned across tables:
     * recall = 1-(1-p)^tables. Each row fans out `tables`× — still linear
-    * in corpus size, never quadratic.
-    */
-  def hyperplaneBucket(emb: DataFrame, planes: Int, tables: Int = 8,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       dim: Int = 64): DataFrame =
-    bucketCorpus(corpus(emb, idCol, vecCol), planes, tables, dim)
-
-  /** Same, over a prepared (id, vec) corpus frame (e.g. normalized —
-    * signs are scale-invariant so buckets are identical).
+    * in corpus size, never quadratic. Takes a prepared (id, vec) corpus
+    * frame (e.g. normalized — signs are scale-invariant so buckets are
+    * identical).
     */
   def bucketCorpus(c: DataFrame, planes: Int, tables: Int = 8,
                    dim: Int = 64,

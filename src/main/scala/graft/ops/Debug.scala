@@ -82,13 +82,6 @@ object Debug {
   def jobs(): Long = jobCount.sum()
   def writeJobs(): Long = writeJobCount.sum()
 
-  /** whisper prints "%d woots" per op; we print a summary on demand. */
-  def printStats(): Unit = {
-    val s = stats()
-    println(s"[debug] read ${s.readRecords} records (${s.readBytes} B), " +
-      s"wrote ${s.writtenRecords} records (${s.writtenBytes} B)")
-  }
-
   /** Seconds per label, in first-recorded order. */
   final class Ledger {
     private val m = scala.collection.mutable.LinkedHashMap.empty[String, Double]

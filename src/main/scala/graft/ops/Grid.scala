@@ -21,13 +21,6 @@ object Grid {
   def align(epochSec: Column, step: Column): Column =
     epochSec - (epochSec % step)
 
-  /** Epoch seconds (floor) from a TimestampType column. Spark's
-    * timestamp→long cast truncates sub-second precision, which is a floor
-    * for post-epoch data — matching the reference's integer-second model
-    * (whisper.py:107 `!L` timestamps).
-    */
-  def epochSeconds(ts: Column): Column = ts.cast("long")
-
   /** Scalar version for driver-side range math. Python's `%` is a
     * floor-mod, so the reference's `int(t - (t % step))` floors for
     * negative t too (whisper.py:707); Scala's `%` truncates toward

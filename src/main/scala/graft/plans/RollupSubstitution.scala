@@ -221,7 +221,7 @@ final case class RollupSubstitution(spark: SparkSession, store: MetricStore)
   /** Level tables ≥ 1 carry (known, vsum) contribution counts unless the
     * store predates them or a writer couldn't supply them (wsp import,
     * external rollups without counts, value transforms) — MetricStore
-    * tracks that with a marker consulted here.
+    * tracks that with its manifest's `counts_exact` flag.
     */
   private def exactCounts(levelIdx: Int): Boolean =
     store.countsExact && store.levelData(levelIdx).columns.contains("vsum")

@@ -1,5 +1,8 @@
 package graft.store
 
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.functions._
@@ -19,9 +22,19 @@ final case class FetchResult(
     step: Long,
     values: Seq[Option[Double]])
 
-/** The Spark-native analog of a whisper database directory: a policy
-  * catalog plus one parquet table per resolution level, rows
+/** The Spark-native analog of a whisper database directory: one
+  * metadata record plus one parquet table per resolution level, rows
   * (metric, interval, value).
+  *
+  * The metadata record is `_store` — whisper's header (Metadata plus one
+  * ArchiveInfo per archive, whisper.py:18-26) for a whole store: a format
+  * version, the bucket layout, the `counts_exact` and
+  * `derived_from_level0` flags and the policy catalog. It is read through
+  * one cache and replaced atomically by one writer, [[commitMeta]].
+  * Ordering rule: every metadata change commits BEFORE the data change it
+  * covers, so after a crash at any point the record claims at most what
+  * the data supports — a cleared flag only makes consumers (rollup
+  * substitution) read level 0, which is exact while level 0 holds the rows.
   *
   * Scale design (the part that must survive 1000 executors / 100 TB):
   *   - level tables are partitioned by (pb, tb): pb = hash-bucket of the
@@ -47,11 +60,57 @@ final class MetricStore(val spark: SparkSession, val root: String,
 
   private val fs = new java.io.File(root)
   fs.mkdirs()
+  private val canonicalRoot = fs.getCanonicalPath
 
-  private def policiesPath = s"$root/policies.tsv"
   private def levelPath(i: Int) = s"$root/level_$i"
 
-  // ---- policy catalog -------------------------------------------------
+  // ---- store manifest -------------------------------------------------
+
+  private def metaPath = Paths.get(root, MetaFile)
+
+  /** The committed record, parsed once per `_store` file — whisper's
+    * header cache (whisper.py:276-328). Every commit renames a new file
+    * into place, so a changed (fileKey, lastModifiedTime) is the cache
+    * invalidation (whisper.py:385-386), and a `resize` swap shows too.
+    */
+  private def storedMeta(): Option[Meta] =
+    (try Some(Files.readAttributes(metaPath, classOf[BasicFileAttributes]))
+    catch { case _: NoSuchFileException => None }).map { a =>
+      val c = metaCache.get(canonicalRoot)
+      if (c != null && c._1 == a.fileKey && c._2 == a.lastModifiedTime) c._3
+      else {
+        val m = Meta.parse(Files.readString(metaPath).linesIterator.toSeq)
+        metaCache.put(canonicalRoot, (a.fileKey, a.lastModifiedTime, m))
+        m
+      }
+    }
+
+  /** The store's metadata; the first read of a store without `_store`
+    * commits one (migrating a pre-manifest store's files).
+    */
+  private def meta: Meta = storedMeta().getOrElse(commitMeta(identity))
+
+  /** The one writer of `_store`: replace it with `f(current)` through
+    * tmp + ATOMIC_MOVE, under a per-root lock shared by every handle —
+    * flags are cleared from write-pool threads (`mergedTouched`), and a
+    * lost read-modify-write could re-set a cleared flag. A pre-manifest
+    * store's legacy files are the current record of its first commit and
+    * are deleted only once `_store` covers them. Returns the new record.
+    */
+  private[store] def commitMeta(f: Meta => Meta): Meta =
+    metaLocks.computeIfAbsent(canonicalRoot, _ => new Object).synchronized {
+      val stored = storedMeta()
+      val next = f(stored.getOrElse(legacyMeta(root)))
+      val tmp = Paths.get(root, s"$MetaFile.tmp")
+      Files.writeString(tmp, next.render)
+      Files.move(tmp, metaPath,
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      val a = Files.readAttributes(metaPath, classOf[BasicFileAttributes])
+      metaCache.put(canonicalRoot, (a.fileKey, a.lastModifiedTime, next))
+      if (stored.isEmpty)
+        LegacyMetaFiles.foreach(n => Files.deleteIfExists(Paths.get(root, n)))
+      next
+    }
 
   /** Seconds of data per time-bucket partition at a given step:
     * `bucketSlots` slots per (metric, partition). The bucket is the
@@ -65,80 +124,47 @@ final class MetricStore(val spark: SparkSession, val root: String,
     */
   def bucketSeconds(step: Int): Long = step.toLong * bucketSlots
 
-  /** `_layout` parsed as key=value lines. Legacy single-line files
-    * (bucket_slots only) parse the same way.
+  /** The bucket layout, PERSISTED per store (`bucket_slots`,
+    * `num_buckets`, stamped on first use): tb and pb values are baked
+    * into every partition directory name, so a binary whose defaults
+    * differ would silently prune every fetch to empty and write duplicate
+    * rows under new dirs. A store predating the layout keys is probed.
     */
-  private lazy val layoutKv: Map[String, String] = {
-    val f = java.nio.file.Paths.get(s"$root/_layout")
-    if (!java.nio.file.Files.exists(f)) Map.empty
-    else java.nio.file.Files.readString(f).linesIterator.flatMap { l =>
-      l.trim.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => Some(k -> v)
-        case _ => None
-      }
-    }.toMap
-  }
-
-  /** Slots per time bucket, PERSISTED per store (`_layout`, stamped on
-    * first open): tb values are baked into every partition directory
-    * name, so a binary whose default differs from the store's layout
-    * would otherwise silently prune every fetch to empty and write
-    * duplicate rows under new tb dirs. A store predating the marker is
-    * probed — one partition dir name + one row's interval decide which
-    * historical layout produced it — and stamped with the result.
-    */
-  private lazy val bucketSlots: Long = {
-    val f = java.nio.file.Paths.get(s"$root/_layout")
-    def stamp(v: Long): Long = {
-      val tmp = java.nio.file.Paths.get(s"$root/_layout.tmp")
-      java.nio.file.Files.writeString(tmp,
-        s"bucket_slots=$v\nnum_buckets=$numBuckets\n")
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      v
-    }
-    layoutKv.get("bucket_slots").map(_.toLong).getOrElse {
-      if (!anyLevelDirExists) stamp(MetricStore.DefaultBucketSlots)
-      else stamp(probeBucketSlots())
+  private lazy val layout: Meta = {
+    val m = meta
+    if (m.bucketSlots.nonEmpty) m
+    else {
+      val slots = if (!anyLevelDirExists) DefaultBucketSlots else probeBucketSlots()
+      commitMeta(cur =>
+        if (cur.bucketSlots.nonEmpty) cur
+        else cur.copy(bucketSlots = Some(slots), numBuckets = Some(numBuckets)))
     }
   }
 
-  /** Effective partition-bucket count, PERSISTED like bucketSlots: pb
-    * values are baked into directory names as pmod(hash(metric), n), so
-    * opening an 8-bucket store with the 32-bucket constructor default
-    * would compute wrong buckets — silently mis-pruning every fetch,
-    * vacuum selector, and substituted read, and splitting new writes
-    * across two layouts. The persisted value wins; a legacy `_layout`
-    * without the key keeps the constructor value (pre-existing
-    * behavior, and those stores were always opened with their creating
-    * bucket count in-repo).
-    */
-  lazy val effectiveBuckets: Int =
-    layoutKv.get("num_buckets").map(_.toInt).getOrElse(numBuckets)
+  private def bucketSlots: Long = layout.bucketSlots.get
 
-  /** True when ANY `level_i` directory exists — a pre-marker store whose
+  /** Effective partition-bucket count: the persisted value wins over
+    * the constructor's, since pb = pmod(hash(metric), n) is baked into
+    * directory names. A legacy layout without the key keeps the
+    * constructor value (those stores were always opened with their
+    * creating bucket count in-repo).
+    */
+  lazy val effectiveBuckets: Int = layout.numBuckets.getOrElse(numBuckets)
+
+  /** True when ANY `level_i` directory exists — a pre-layout store whose
     * data lives only in coarse levels (e.g. a too-old backfill that never
     * touched level 0) must still be probed, not stamped with the default.
     */
-  private def anyLevelDirExists: Boolean = {
-    val dir = new java.io.File(root)
-    val kids = dir.listFiles()
-    kids != null && kids.exists(f => f.isDirectory && f.getName.startsWith("level_"))
-  }
+  private def anyLevelDirExists: Boolean =
+    Option(fs.listFiles()).exists(_.exists(f => f.isDirectory && f.getName.startsWith("level_")))
 
-  /** Infer a pre-marker store's bucket layout from its own directories:
-    * find one `level_i/pb=?/tb=N` partition (any level with data), read
-    * one row's (metric, interval), resolve THAT metric's level-i step
-    * from the catalog — per-metric policies can differ, so the sampled
-    * row's own policy is the only sound denominator — and pick the
-    * historical slot count whose `interval div (step·slots)` reproduces
-    * N. Epoch-scale intervals separate the candidates by construction
-    * (quotients coincide only near interval 0). A store with data whose
-    * layout matches NO candidate is refused loudly: guessing would
-    * silently mis-prune every fetch and double-write new dirs. A store
-    * with no data rows anywhere stamps the current default (no dirs to
-    * misread).
+  /** Infer a pre-layout store's bucket layout from its own directories:
+    * find one `level_i/pb=?/tb=N` partition, read one row's (metric,
+    * interval), take THAT metric's level-i step from the catalog, and
+    * pick the historical slot count whose `interval div (step·slots)`
+    * reproduces N (epoch-scale intervals separate the candidates). A
+    * store whose layout matches NO candidate is refused loudly; one with
+    * no data rows gets the current default.
     */
   private def probeBucketSlots(): Long = {
     val candidates = Seq(MetricStore.DefaultBucketSlots, 8192L)
@@ -146,9 +172,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
     val sample = ps.values.headOption.flatMap { _ =>
       (0 until ps.values.map(_.levels.size).max).view.flatMap { i =>
         for {
-          dir <- firstTbDir(levelPath(i))
+          dir <- firstUnder(Paths.get(levelPath(i)), 2)(_.getFileName.toString.startsWith("tb="))
           file <- firstParquetFile(dir)
-          row <- spark.read.parquet(file).select("metric", "interval")
+          row <- spark.read.parquet(file.toString).select("metric", "interval")
             .head(1).headOption
           policy <- ps.get(row.getString(0))
           if i < policy.levels.size
@@ -163,60 +189,31 @@ final class MetricStore(val spark: SparkSession, val root: String,
           throw new InvalidConfiguration(
             s"store $root: cannot infer bucket layout (tb=$tb, step=$step, " +
               s"interval=$interval matches none of ${candidates.mkString(",")}); " +
-              "write _layout with the store's bucket_slots to open it"))
+              s"add bucket_slots=<n> to $MetaFile to open it"))
     }
   }
 
-  /** First `tb=` partition directory under a level path, if any. */
-  private def firstTbDir(level: String): Option[java.nio.file.Path] = {
-    val root = java.nio.file.Paths.get(level)
-    if (!java.nio.file.Files.isDirectory(root)) None
+  /** First path at most `depth` levels under `dir` that passes `p`. */
+  private def firstUnder(dir: Path, depth: Int)(p: Path => Boolean): Option[Path] =
+    if (!Files.isDirectory(dir)) None
     else {
-      val s = java.nio.file.Files.walk(root, 2)
-      try {
-        val d = s.filter(p => p.getFileName.toString.startsWith("tb="))
-          .findFirst()
-        if (d.isPresent) Some(d.get) else None
-      } finally s.close()
+      val s = Files.walk(dir, depth)
+      try { val f = s.filter(x => p(x)).findFirst(); if (f.isPresent) Some(f.get) else None }
+      finally s.close()
     }
-  }
 
   /** First parquet data file under a directory, if any (shared by the
     * layout probe and the count-column probe).
     */
-  private def firstParquetFile(dir: java.nio.file.Path): Option[String] =
-    if (!java.nio.file.Files.isDirectory(dir)) None
-    else {
-      val s = java.nio.file.Files.walk(dir)
-      try {
-        val p = s.filter(_.toString.endsWith(".parquet")).findFirst()
-        if (p.isPresent) Some(p.get.toString) else None
-      } finally s.close()
-    }
+  private def firstParquetFile(dir: Path): Option[Path] =
+    firstUnder(dir, Int.MaxValue)(_.toString.endsWith(".parquet"))
 
-  def policies(): Map[String, RetentionPolicy] =
-    MetricStore.readCatalog(policiesPath).map {
-      case (m, spec, xff, agg) =>
-        m -> RetentionPolicy(
-          Retention.parseSchema(spec), xff, AggregationMethod.fromName(agg))
-    }.toMap
+  // ---- policy catalog -------------------------------------------------
 
   /** The catalog is small metadata, so it is plain-file IO (whisper reads
-    * headers directly too) — no Spark job per create/info/set. Writes are
-    * atomic via tmp+rename, the whisper-resize swap trick.
+    * headers directly too) — no Spark job per create/info/set.
     */
-  private def writePolicies(ps: Map[String, RetentionPolicy]): Unit = {
-    val rows = ps.toSeq.sortBy(_._1).map {
-      case (m, p) =>
-        val spec = p.levels.map(a => s"${a.secondsPerPoint}:${a.points}").mkString(",")
-        s"$m\t$spec\t${p.xff}\t${p.aggregation.name}"
-    }
-    val tmp = java.nio.file.Paths.get(policiesPath + ".tmp")
-    java.nio.file.Files.writeString(tmp, rows.mkString("\n"))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(policiesPath),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def policies(): Map[String, RetentionPolicy] = meta.policies
 
   /** whisper create(): register a metric. Fails if it already exists
     * (whisper.py:501-502).
@@ -224,14 +221,14 @@ final class MetricStore(val spark: SparkSession, val root: String,
   def create(metric: String, policy: RetentionPolicy): Unit =
     createAll(Seq(metric), policy)
 
-  /** Batch registration: one catalog write for many metrics. */
-  def createAll(metrics: Seq[String], policy: RetentionPolicy): Unit = {
-    val ps = policies()
-    metrics.find(ps.contains).foreach { m =>
-      throw new InvalidConfiguration(s"File $m already exists!")
+  /** Batch registration: one catalog commit for many metrics. */
+  def createAll(metrics: Seq[String], policy: RetentionPolicy): Unit =
+    commitMeta { m =>
+      metrics.find(m.catalog.contains).foreach { x =>
+        throw new InvalidConfiguration(s"File $x already exists!")
+      }
+      m.withPolicies(metrics.map(_ -> policy))
     }
-    writePolicies(ps ++ metrics.map(_ -> policy))
-  }
 
   /** whisper info() (whisper.py:878-889). */
   def info(metric: String): Option[(RetentionPolicy, Seq[Header.LevelInfo])] =
@@ -240,24 +237,31 @@ final class MetricStore(val spark: SparkSession, val root: String,
   /** setAggregationMethod/setXFilesFactor (whisper.py:331-388): policy
     * update returning the old value.
     */
-  def setAggregationMethod(metric: String, m: AggregationMethod): AggregationMethod = {
-    val ps = policies()
-    val old = ps.getOrElse(metric, throw new CorruptWhisperFile("Unknown metric", metric))
-    // whisper rewrites only the header: existing rollup rows keep the OLD
-    // kernel, so levels stop matching a cascade under the new policy
-    if (old.aggregation != m) markRollupsDiverged()
-    writePolicies(ps + (metric -> old.copy(aggregation = m)))
-    old.aggregation
-  }
+  def setAggregationMethod(metric: String, m: AggregationMethod): AggregationMethod =
+    updatePolicy(metric)(_.copy(aggregation = m)).aggregation
 
   def setXFilesFactor(metric: String, xff: Float): Float = {
     if (xff.isNaN || xff < 0 || xff > 1)
       throw new InvalidXFilesFactor(s"Invalid xFilesFactor $xff, not between 0 and 1")
-    val ps = policies()
-    val old = ps.getOrElse(metric, throw new CorruptWhisperFile("Unknown metric", metric))
-    if (old.xff != xff) markRollupsDiverged() // row set was gated with the old xff
-    writePolicies(ps + (metric -> old.copy(xff = xff)))
-    old.xff
+    updatePolicy(metric)(_.copy(xff = xff)).xff
+  }
+
+  /** One commit replaces a metric's policy and, when the policy changes,
+    * clears `derived_from_level0` with it: whisper rewrites only the
+    * header, so existing rollup rows keep the OLD kernel and xff gate and
+    * the levels stop matching a cascade under the new policy. Returns the
+    * old policy.
+    */
+  private def updatePolicy(metric: String)(
+      f: RetentionPolicy => RetentionPolicy): RetentionPolicy = {
+    var old: RetentionPolicy = null
+    commitMeta { m =>
+      old = policyIn(m.policies, metric)
+      val next = f(old)
+      m.withPolicies(Seq(metric -> next))
+        .copy(derivedFromLevel0 = m.derivedFromLevel0 && next == old)
+    }
+    old
   }
 
   // ---- level IO -------------------------------------------------------
@@ -279,27 +283,17 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * level-0 points the row consolidates, `vsum` = their sum — maintained
     * by the cascade (Rollup.propagateCounted), null when a writer cannot
     * supply them (see [[countsExact]]). `value` is still whisper's kernel
-    * output; counts are extra derived columns, not a semantic change.
-    *
-    * Every CURRENT writer emits these columns, so partition-dir reads can
-    * declare the schema and skip the schema-inference job a bare
-    * `spark.read.parquet` runs — at scale, footer sampling over a large
-    * touched set is pure waste.
+    * output. Reads declare the schema to skip the schema-inference job.
     *
     * Whether the count columns are declared follows a ONE-FILE footer
-    * probe, not blind assumption: declaring known/vsum over a level
-    * written before the columns existed would read fabricated nulls and
-    * defeat the legacy detection in [[withCountCols]] (which must see the
-    * columns genuinely absent to mark the store counts-approx — the gate
-    * RollupSubstitution.exactCounts relies on).
+    * probe: declaring known/vsum over a level written before the columns
+    * existed would read fabricated nulls and defeat the legacy detection
+    * in [[withCountCols]], which clears `counts_exact`.
     */
-  private def levelSchema(i: Int): org.apache.spark.sql.types.StructType =
-    levelSchema(i, i > 0 && levelHasCountCols(i))
-
-  private def levelSchema(i: Int, withCounts: Boolean): org.apache.spark.sql.types.StructType = {
+  private def levelSchema(i: Int): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     val counts =
-      if (!withCounts) Nil
+      if (i == 0 || !levelHasCountCols(i)) Nil
       else Seq(StructField("known", LongType), StructField("vsum", DoubleType))
     StructType(Seq(
       StructField("metric", StringType),
@@ -315,16 +309,16 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * every current writer emits the columns. A level that gains count
     * columns AFTER a false probe just reads conservatively (counts
     * dropped → [[withCountCols]] marks approx) until a fresh instance
-    * re-probes; the marker is already set in that scenario.
+    * re-probes; `counts_exact` is already cleared in that scenario.
     */
   private val levelCountsProbe =
     new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]()
 
   private def levelHasCountCols(i: Int): Boolean =
     levelCountsProbe.computeIfAbsent(i, _ => {
-      val firstFile = firstParquetFile(java.nio.file.Paths.get(levelPath(i)))
+      val firstFile = firstParquetFile(Paths.get(levelPath(i)))
       java.lang.Boolean.valueOf(firstFile.forall(f =>
-        spark.read.parquet(f).schema.fieldNames.contains("vsum")))
+        spark.read.parquet(f.toString).schema.fieldNames.contains("vsum")))
     }).booleanValue()
 
   private def emptyLevel(i: Int): DataFrame =
@@ -353,29 +347,28 @@ final class MetricStore(val spark: SparkSession, val root: String,
 
   // ---- contribution-count exactness ----------------------------------
 
-  /** Cleared (marker file) when any level ≥ 1 receives rows whose counts
-    * are unknown — external rollup upserts without counts, .wsp imports,
-    * value transforms — so consumers that require exact counts (deep
-    * Average substitution in RollupSubstitution) can tell. The store
-    * stays fully functional either way.
+  /** Cleared (`counts_exact`) when any level ≥ 1 receives rows whose
+    * counts are unknown — external rollup upserts without counts, .wsp
+    * imports, value transforms — so deep Average substitution in
+    * RollupSubstitution can tell. Store reads/writes are unaffected.
     */
-  private def approxMarker = new java.io.File(s"$root/_counts_approx")
-  def countsExact: Boolean = !approxMarker.exists()
-  private[graft] def markCountsApprox(): Unit = { approxMarker.createNewFile(); () }
+  def countsExact: Boolean = meta.countsExact
+  private[graft] def markCountsApprox(): Unit =
+    if (meta.countsExact) commitMeta(_.copy(countsExact = false))
 
-  /** Set once any level's content can no longer be assumed to be the
-    * pure cascade of the CURRENT level-0 table: points routed directly
-    * into coarser archives (too old for the finer retentions,
-    * whisper.py:767-784), external rollup upserts (which bypass the
-    * cascade at ANY level), and value transforms (per-level rewrites
-    * don't commute with the kernels). RollupSubstitution requires this
-    * unset — replacing a level-0 aggregation with a level scan is only
-    * sound while the level IS that aggregation. Store reads/writes are
-    * unaffected either way.
+  /** Cleared (`derived_from_level0`) once any level's content can no
+    * longer be assumed to be the pure cascade of the CURRENT level-0
+    * table: points routed directly into coarser archives (too old for
+    * the finer retentions, whisper.py:767-784), external rollup upserts
+    * (which bypass the cascade at ANY level), value transforms (per-level
+    * rewrites don't commute with the kernels) and level-0 eviction.
+    * RollupSubstitution requires it set — replacing a level-0
+    * aggregation with a level scan is only sound while the level IS that
+    * aggregation. Store reads/writes are unaffected either way.
     */
-  private def divergedMarker = new java.io.File(s"$root/_rollup_diverged")
-  def rollupsDerivedFromLevel0: Boolean = !divergedMarker.exists()
-  private[graft] def markRollupsDiverged(): Unit = { divergedMarker.createNewFile(); () }
+  def rollupsDerivedFromLevel0: Boolean = meta.derivedFromLevel0
+  private[graft] def markRollupsDiverged(): Unit =
+    if (meta.derivedFromLevel0) commitMeta(_.copy(derivedFromLevel0 = false))
 
   /** Adds the (pb, tb) partition columns, unless `df` already carries them. */
   private def withPartitionCols(df: DataFrame, step: Int): DataFrame =
@@ -462,27 +455,21 @@ final class MetricStore(val spark: SparkSession, val root: String,
     *
     *  - **commit-bound** (2..[[MetricStore.MaxParallelPbWrites]] pbs:
     *    small stores, small batches): the dynamic-partition commit walks
-    *    every (pb, tb) directory sequentially on the driver — for a ~2 MB
-    *    sf0.1 batch landing in ~130 dirs that was ~1.1 s of a 1.4 s write
-    *    (WriteProbe (deleted probe, last commit e6b2e65): flat 32-file
-    *    write 0.33 s, any partitionBy spelling 1.3–1.5 s regardless of
-    *    codec/buffer knobs). So ONE JOB PER pb writes `pb=<p>/` with
-    *    `partitionBy(tb)`: separate output roots mean separate staging and
-    *    separate commits that overlap across jobs (WriteProbe: 1.38 s →
-    *    0.64 s warm), with the same layout on disk. The `pb = p` filter is
-    *    a partition predicate, so each job's touched-dir read prunes to
-    *    its own pb.
+    *    every (pb, tb) directory sequentially on the driver (~1.1 s of a
+    *    1.4 s sf0.1 write into ~130 dirs, WriteProbe, last commit
+    *    e6b2e65). So ONE JOB PER pb writes `pb=<p>/` with
+    *    `partitionBy(tb)`: separate roots mean separate staging and
+    *    commits that overlap across jobs (1.38 s → 0.64 s warm), with the
+    *    same layout on disk; each job's `pb = p` filter prunes its read.
     *  - **data-bound** (one pb, or many = real scale): one clustered
-    *    write. Per-pb jobs would each re-scan their input to filter a
-    *    slice — linear in pb count, for no commit win once data volume
-    *    amortizes the commit.
+    *    write; per-pb jobs would each re-scan their input for a slice,
+    *    with no commit win once data volume amortizes the commit.
     *
-    * Fusing all fresh LEVELS into one commit instead lost ~1 s at sf0.1,
-    * because it serialized the cascade behind the write (LayoutExperiment
-    * (deleted probe, last commit 179af17): x00 2.0 s per-level vs 3.0 s
-    * fused) — level writes keep overlapping the cascade through
-    * [[MetricStore.writeEc]] futures, so the fan-out lives here, inside
-    * the per-level write.
+    * The fan-out lives inside the per-level write because fusing all
+    * fresh LEVELS into one commit serialized the cascade behind it (x00
+    * 2.0 s per-level vs 3.0 s fused at sf0.1, LayoutExperiment, last
+    * commit 179af17); level writes overlap the cascade through
+    * [[MetricStore.writeEc]] futures.
     *
     * Every job is tagged `graft.store.write level=<i>` (the job
     * description, restored after): fan-out writes run on pool threads
@@ -525,27 +512,21 @@ final class MetricStore(val spark: SparkSession, val root: String,
         Seq("tb"), s"${levelPath(i)}/pb=$p"))
     }
     done.foreach(Await.result(_, Duration.Inf))
-    // the fan-out wrote SUBDIRECTORY roots (pb=<p>), so Spark's
-    // post-insert refresh invalidated only those paths — the session's
-    // FileStatusCache can still hold the PARENT level listing from an
-    // earlier read, and a later scan built from it hits the replaced
-    // files (FAILED_READ_FILE.FILE_NOT_EXIST — surfaced intermittently
-    // by RoundTripPropertySpec's second incremental batch). Single-root
-    // writes don't need this: their own commit refreshes the root.
+    // the fan-out wrote SUBDIRECTORY roots (pb=<p>), whose post-insert
+    // refresh leaves the session's FileStatusCache holding the PARENT
+    // level listing; a later scan built from it hits the replaced files
+    // (FAILED_READ_FILE.FILE_NOT_EXIST, seen in RoundTripPropertySpec).
+    // A single-root write's own commit refreshes the root.
     spark.catalog.refreshByPath(levelPath(i))
   }
 
-  /** Current on-disk rows of level i's touched (pb, tb) partitions.
-    * Reads ONLY those partition directories: going through the root path
-    * would list the entire level (every pb/tb directory) just to prune
-    * it again — at scale that listing alone dwarfs the actual work of a
-    * small batch. basePath keeps pb/tb as partition columns.
-    *
-    * Past `parallelPartitionDiscovery.threshold` paths, one read lists
-    * them in a Spark job with a task per path — dearer than the scan
-    * itself on a local store — so the directories are read in groups of
-    * at most that many and unioned: the listing stays on the driver and
-    * the scans still run in one job.
+  /** Current on-disk rows of level i's touched (pb, tb) partitions,
+    * reading ONLY those directories: the root path would list the whole
+    * level just to prune it again. basePath keeps pb/tb as partition
+    * columns. Past `parallelPartitionDiscovery.threshold` paths one read
+    * lists them in a Spark job with a task per path (dearer than the
+    * scan on a local store), so the directories are read in groups of at
+    * most that many and unioned: listing on the driver, scans in one job.
     */
   private def existingTouched(i: Int, touched: Set[(Int, Long)]): DataFrame = {
     val dirs = touched.toSeq
@@ -566,9 +547,8 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * the deferred-write cascade, a mirror of the level's future state
     * computable BEFORE the write lands.
     *
-    * A side missing the count columns contributes nulls — and flips the
-    * store to counts-approx, since those rows' counts are genuinely
-    * unknown from here on.
+    * A side missing the count columns contributes nulls and clears
+    * `counts_exact`: those rows' counts are unknown from here on.
     */
   private def mergedTouched(i: Int, newPts: DataFrame,
                             touched: Set[(Int, Long)]): DataFrame = {
@@ -576,11 +556,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
     if (i > 0 && existing.columns.contains("vsum") != newPts.columns.contains("vsum"))
       markCountsApprox()
     // Cluster by the PHYSICAL partition keys before merging: (metric,
-    // interval) determine (pb, tb), so hash-partitioning on (pb, tb)
-    // already co-locates every merge group — the merge then runs
-    // without its own exchange AND the output arrives pre-clustered for
-    // the partitionBy(pb, tb) write. Merge + write share ONE shuffle
-    // where the merge-then-repartition order paid two.
+    // interval) determine (pb, tb), so this co-locates every merge group
+    // AND pre-clusters the partitionBy(pb, tb) write — merge and write
+    // share ONE shuffle.
     highestPrio(
       existing.unionByName(newPts, allowMissingColumns = true)
         .repartition(col("pb"), col("tb")),
@@ -620,14 +598,12 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * cascading here would re-derive the same windows a second time per
     * batch. Consequences the caller accepts:
     *
-    *   - rollups are marked DIVERGED (substitution refuses — the
-    *     externally-maintained levels are recomputes of the stream, not
-    *     the cascade of level 0, and the stateful watermark may drop
-    *     what the batch path would keep);
+    *   - `derived_from_level0` is cleared (substitution refuses: the
+    *     external levels are recomputes of the stream, not the cascade of
+    *     level 0, and the stateful watermark may drop what it keeps);
     *   - points too old for the finest archive FAIL-STOP instead of
-    *     routing to a coarser one (they would need exactly the skipped
-    *     cascade; they are also beyond any sane stateful watermark —
-    *     route ancient backfill through the cascade path instead).
+    *     routing to a coarser one: they would need the skipped cascade
+    *     (route ancient backfill through the cascade path instead).
     */
   def updateMany(batch: DataFrame, now: Long, cascade: Boolean): Unit = {
     val ps = policies()
@@ -651,22 +627,16 @@ final class MetricStore(val spark: SparkSession, val root: String,
                                   now: Long, cascade: Boolean = true): Unit =
     Frames.scoped { frames =>
       val routed = frames.hold(Ingest.routeAndDedup(batch, policy, now).cache())
-      // Writes are taken off the cascade's critical path:
-      //  - FRESH levels (bulk load): the cascade reads the in-memory
-      //    prevContent mirror, never the just-written files, so their
-      //    writes go straight to the background pool;
-      //  - NON-FRESH levels (incremental): the next step reads this
-      //    level's post-upsert state through a merged MIRROR (pre-write
-      //    disk rows LWW incoming) plus the untouched hull partitions, so
-      //    the write is deferred one cascade step and launched in the
-      //    background once that reader has materialized (it must see the
-      //    PRE-write files).
-      // Everything is awaited before updateMany returns.
+      // Writes are taken off the cascade's critical path: a FRESH level's
+      // (bulk load) goes straight to the background pool, since the
+      // cascade reads the in-memory prevContent, never the written files;
+      // a NON-FRESH level's next step reads a merged MIRROR (pre-write
+      // disk rows LWW incoming) plus the untouched hull partitions, so its
+      // write is deferred one step and launched once that reader has
+      // materialized. Everything is awaited before updateMany returns.
       val pendingWrites = scala.collection.mutable.Buffer.empty[scala.concurrent.Future[Unit]]
-      // deferred-write slot (at most one held back at a time — the previous
-      // level's); declared here so the finally block can land it even when
-      // the cascade throws mid-loop (otherwise that level's upsert would be
-      // silently dropped while earlier levels committed)
+      // deferred-write slot (at most one — the previous level's); the
+      // finally block lands it when the cascade throws mid-loop
       var deferred: Option[() => Unit] = None
       // (level, post-upsert mirror of touched partitions, touched set)
       var deferredMirror: Option[(Int, DataFrame, Set[(Int, Long)])] = None
@@ -674,12 +644,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
       try {
         val steps = policy.levels.map(_.secondsPerPoint)
 
-        // ONE pass over the routed cache, at (level, pb, tb) granularity,
-        // yields everything the whole ingest needs to plan: which levels
-        // have direct writes, their touched partitions (for the upsert
-        // reads), and their interval bounds (for the cascade's pruning) —
-        // one driver job where a naive version runs count/touched/isEmpty
-        // jobs per level.
+        // ONE pass over the routed cache at (level, pb, tb) granularity
+        // yields the whole plan: each level's direct writes, touched
+        // partitions and interval bounds — one job, not several per level.
         val tbForLevel: Column =
           steps.zipWithIndex.foldRight(lit(null).cast("long")) {
             case ((st, i), e) =>
@@ -699,28 +666,25 @@ final class MetricStore(val spark: SparkSession, val root: String,
           .map { case (lvl, rows) =>
             lvl -> ((rows.map(_._4).sum, rows.map(_._5).min, rows.map(_._6).max))
           }
-        // see the public overload's contract: coarse-routed points need the
-        // very cascade being skipped — fail-stop BEFORE any side effect
-        // (marking diverged for a batch that then writes nothing would
-        // permanently disable substitution on an untouched store)
-        if (!cascade && directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 })
+        val coarseDirect = directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 }
+        // see the public overload's contract — fail-stop BEFORE clearing
+        // the flag for a batch that then writes nothing
+        if (!cascade && coarseDirect)
           throw new IllegalArgumentException(
             "cascade=false but the batch contains points too old for the " +
               "finest archive; ingest them through the cascade path")
         // points landing directly in a coarser archive are invisible to
-        // level-0 aggregations — rollup substitution is no longer sound
-        if (directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 })
-          markRollupsDiverged()
-        if (!cascade && policy.levels.size > 1) markRollupsDiverged()
+        // level-0 aggregations, and without the cascade the coarse levels
+        // are maintained externally
+        if (coarseDirect || (!cascade && policy.levels.size > 1)) markRollupsDiverged()
         val directTouched: Map[Int, Set[(Int, Long)]] = partStats
           .groupBy(_._1)
           .map { case (lvl, rows) => lvl -> rows.map(r => (r._2, r._3)).toSet }
         val directCounts: Map[Int, Long] = directStats.map { case (k, v) => k -> v._1 }
 
-        // levels that did not exist before this batch: after their writes,
-        // the on-disk content IS the in-memory frame we are holding, so the
-        // cascade can skip the parquet round trip (the initial-bulk-load
-        // case — w20/x00 — where every level is fresh)
+        // levels that did not exist before this batch: their on-disk
+        // content will BE the in-memory frame, so the cascade skips the
+        // parquet round trip (the bulk-load case, w20/x00)
         val freshLevels: Set[Int] =
           steps.indices.filterNot(i => new java.io.File(levelPath(i)).exists()).toSet
 
@@ -740,26 +704,15 @@ final class MetricStore(val spark: SparkSession, val root: String,
             pendingWrites += scala.concurrent.Future(
               upsertLevel(i, step, incoming, Some(touched)))(MetricStore.writeEc)
           else {
-            // build the post-upsert mirror ONCE and share it between the
-            // cascade's deferred-write reader and the write itself:
-            // upsertLevel would re-read and re-merge the same touched
-            // partitions the mirror already merged — the incremental
-            // path paid that twice per level.
-            //
-            // localCheckpoint, NOT cache: the mirror's lineage reads the
-            // level's pre-write partition directories, and every
-            // insert-overwrite commit auto-recaches (RE-EXECUTES,
-            // re-LISTS) cached plans matching the written path — with
-            // the per-pb write futures running concurrently, one pb
-            // job's post-commit recache could re-list a SIBLING pb's
+            // the post-upsert mirror is built ONCE and shared by the
+            // cascade's reader and the write (upsertLevel would re-merge
+            // the same partitions). localCheckpoint, NOT cache: every
+            // insert-overwrite commit re-executes (re-lists) cached plans
+            // matching the written path, so with per-pb writes running
+            // concurrently one job's recache could re-list a SIBLING pb's
             // directory mid-overwrite and fail-stop the batch ("Invalid
-            // directory or I/O error", one-in-N under the full-surface
-            // run; w22's streaming ingest surfaced it). The eager
-            // checkpoint cuts the disk lineage on the main thread
-            // BEFORE any write launches, so no cached plan references
-            // level paths during the writes: the recache storm, the
-            // replaced-file recompute caveat, and the eviction-loss
-            // recompute all become structurally impossible.
+            // directory or I/O error", surfaced by w22). The eager
+            // checkpoint cuts the disk lineage BEFORE any write launches.
             val mirror = frames.hold(
               mergedTouched(i, withPartitionCols(incoming, step), touched).localCheckpoint())
             deferred = Some(() => writeLevel(i, mirror, touched.map(_._1), clustered = true))
@@ -779,11 +732,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
         // rollup cascade: recompute only touched lower windows from the
         // (post-upsert) higher level. The change set feeding level i+1 is
         // propagated windows at i PLUS the batch's DIRECT writes at i —
-        // whisper cascades from every archive that received points, not
-        // just archive 0 (each __archive_update_many call propagates its
-        // own points downward, whisper.py:858-875). Stops when a level
-        // neither propagates nor received direct writes (the bulk early
-        // exit, whisper.py:868-875).
+        // whisper cascades from every archive that received points
+        // (whisper.py:858-875). Stops when a level neither propagates nor
+        // received direct writes (the bulk early exit, whisper.py:868-875).
         var changed = routed.where(col("level") === 0).select("metric", "interval")
         var changedNonEmpty = directCounts.getOrElse(0, 0L) > 0
         // conservative hull of the change set's intervals, maintained
@@ -797,18 +748,14 @@ final class MetricStore(val spark: SparkSession, val root: String,
             Some(routed.where(col("level") === 0).select("metric", "interval", "value"))
           else None
         var i = 1
-        // keep cascading while the previous level changed OR any deeper
-        // level still holds unpropagated direct writes — whisper cascades
-        // from EVERY archive that received points (whisper.py:858-875), so
-        // a batch landing only in coarse archives must still roll up
+        // keep cascading while any deeper level holds unpropagated direct
+        // writes: a batch landing only in coarse archives must roll up too
         while (cascade && i < steps.length &&
           (changedNonEmpty || directStats.exists { case (l, (n, _, _)) => l >= i && n > 0 })) {
-          // Partition-prune the higher-level read down to the change hull
-          // BEFORE the semi join: an incremental batch reads only the time
-          // buckets it touches — at 100 TB the difference between scanning
-          // gigabytes and the whole table. The interval predicate
-          // additionally reaches parquet row-group min/max pruning inside
-          // each bucket.
+          // Partition-prune the higher-level read to the change hull BEFORE
+          // the semi join (an incremental batch reads only the time buckets
+          // it touches); the interval predicate also reaches parquet
+          // row-group min/max pruning inside each bucket.
           val lowerMin = bLo - bLo % steps(i)
           val upper = bHi - bHi % steps(i) + steps(i)
           val bsHi = bucketSeconds(steps(i - 1))
@@ -848,13 +795,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
                 .where(col("tb") >= lowerMin / bsHi && col("tb") <= (upper - 1) / bsHi &&
                   col("interval") >= lowerMin && col("interval") < upper), i - 1)
           }
-          // localCheckpoint, NOT cache — the mirror's reasoning verbatim:
-          // propagated's lineage reads level i-1's pre-write files, and a
-          // cached plan with that lineage is re-executed (re-listed) by
-          // every concurrent write commit's auto-recache and re-read by
-          // any block-loss recompute AFTER the write replaced those files.
-          // The eager checkpoint severs the disk lineage here, on the main
-          // thread, before the deferred write launches.
+          // localCheckpoint, NOT cache — the mirror's reasoning: the
+          // lineage reads level i-1's pre-write files, which the deferred
+          // write is about to replace.
           val propagated = frames.hold(withPartitionCols(
             Rollup
               .propagateTouchedCounted(higher,
@@ -864,28 +807,20 @@ final class MetricStore(val spark: SparkSession, val root: String,
           // upsert would otherwise rediscover with its own job
           val touchedP = propagated.select("pb", "tb").distinct().collect()
             .map(r => (r.getInt(0), r.getLong(1))).toSet
-          // the propagate (and its read of level i-1's pre-write files) is
-          // materialized in the checkpoint — the deferred write can now
-          // land in the background with nothing left able to re-read the
-          // files it replaces.
+          // the propagate is materialized: nothing left re-reads the files
+          // the deferred write replaces
           launchDeferred()
           deferredMirror = None
           val propagatedAny = touchedP.nonEmpty
           val directN = directCounts.getOrElse(i, 0L)
           // Level i's incoming rows: direct writes (prio 2) merged with
-          // propagated windows (prio 1) — DIRECT BEATS PROPAGATED within a
-          // batch: file_update_many commits archives finest-first, so by
-          // the time archive i's own points are written, every
-          // propagation INTO archive i (the finer archives' chains,
-          // whisper.py:858-875) has already landed, and the direct write
-          // physically overwrites the shared slot. (The pre-r13 spelling
-          // had this backwards — caught by tools/DiffFuzz on batches whose
-          // deep-direct points share a window with finer points; the
-          // reference kept the raw point, graft kept the rollup.)
-          // Pre-merged when both exist so the fresh-level fast path
-          // (which skips merging) never sees duplicate slots. ONE upsert
-          // per level writes them, and on a fresh level their data
-          // columns are also the in-memory mirror the next step reads.
+          // propagated windows (prio 1) — DIRECT BEATS PROPAGATED:
+          // file_update_many commits archives finest-first, so every
+          // propagation INTO archive i (whisper.py:858-875) has landed when
+          // archive i's own points overwrite the shared slot (pinned by
+          // tools/DiffFuzz). Pre-merged so the fresh-level fast path never
+          // sees duplicate slots; on a fresh level these rows are also the
+          // in-memory mirror the next step reads.
           val incoming = {
             val propagatedRows = propagated.withColumn("prio", lit(1L))
             // a direct-written point at level i IS a single raw
@@ -923,10 +858,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
       } catch {
         case t: Throwable => bodyFailure = t; throw t
       } finally {
-        // a write still held back when the cascade threw must land (its
-        // level's data is otherwise lost). All failures below are COLLECTED,
-        // never thrown mid-finally: an Await that throws would mask the
-        // body's exception and skip the remaining awaits.
+        // a write still held back when the cascade threw must land. All
+        // failures below are COLLECTED, never thrown mid-finally (that
+        // would mask the body's exception and skip the remaining awaits).
         val flushFailure =
           deferred.flatMap(t => scala.util.Try(t()).failed.toOption)
         deferred = None
@@ -951,8 +885,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
     */
   def update(metric: String, value: Double, timestamp: Long, now: Long): Unit = {
     import spark.implicits._
-    val policy = policies().getOrElse(
-      metric, throw new CorruptWhisperFile("Unknown metric", metric))
+    val policy = policyIn(policies(), metric)
     val diff = now - timestamp
     if (!(diff < policy.maxRetention && diff >= 0))
       throw new TimestampNotCovered(
@@ -972,8 +905,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
     */
   def fetch(metric: String, fromTime: Long, untilTime: Long, now: Long,
             archiveToSelect: Option[Int] = None): Option[FetchResult] = {
-    val policy = policies().getOrElse(
-      metric, throw new CorruptWhisperFile("Unknown metric", metric))
+    val policy = policyIn(policies(), metric)
     Fetch.planFetch(policy, fromTime, untilTime, now, archiveToSelect).map {
       case (level, from, until) =>
         val step = policy.levels(level).secondsPerPoint
@@ -1000,9 +932,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
 
   private def requireSameConfig(a: String, b: String): RetentionPolicy = {
     val ps = policies()
-    val (pa, pb) = (
-      ps.getOrElse(a, throw new CorruptWhisperFile("Unknown metric", a)),
-      ps.getOrElse(b, throw new CorruptWhisperFile("Unknown metric", b)))
+    val (pa, pb) = (policyIn(ps, a), policyIn(ps, b))
     if (pa.levels != pb.levels)
       throw new UnsupportedOperationException(
         "db files must have the same archive configuration") // whisper.py:1054-1057
@@ -1051,11 +981,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
             .withColumn("metric", lit(dst))
             .withColumn("prio", lit(1L))
           // materialize the copied intervals BEFORE the upsert rewrites
-          // this level's partitions (a post-upsert plan over the pre-
-          // upsert file listing reads deleted files). Driver-sized: the
-          // set is bounded by the archive's ring capacity — the same
-          // bound the reference's in-memory pointsToWrite list has
-          // (whisper.py:1087-1093).
+          // this level's partitions (a post-upsert plan over the pre-upsert
+          // listing reads deleted files); bounded by the archive's ring
+          // capacity, like the reference's pointsToWrite (whisper.py:1087-1093)
           val srcIntervals = levelData(i).where(clamped)
             .select("interval").distinct().collect().map(_.getLong(0))
           if (srcIntervals.nonEmpty) {
@@ -1065,15 +993,10 @@ final class MetricStore(val spark: SparkSession, val root: String,
             // (whisper.py:1095 -> __archive_update_many:859-875): every
             // window of the MERGED dst content touched by the copied
             // points is re-consolidated with dst's kernel + xff, stopping
-            // at the first level where no window passes. The next outer
-            // iteration's direct copy then overwrites these propagated
-            // slots wherever src holds deep rows (later upsert wins,
-            // prio 1 over existing -1) — the same write order as the
-            // reference. Touched windows for EVERY depth are re-fit from
-            // the ORIGINAL copied intervals (whisper.py:866-869).
-            // Pinned against the executing reference by tools/DiffFuzz:
-            // the pre-r13 copy-only merge left merged-but-uncascaded
-            // windows stale on the deep archives.
+            // at the first level where no window passes; the next archive's
+            // copy then overwrites these slots where src holds deep rows.
+            // Touched windows at EVERY depth are re-fit from the ORIGINAL
+            // copied intervals (whisper.py:866-869). Pinned by tools/DiffFuzz.
             val touched = spark
               .createDataset(srcIntervals.toSeq)(
                 org.apache.spark.sql.Encoders.scalaLong)
@@ -1146,8 +1069,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * [[mergeMetric]]'s copied-interval set).
     */
   def fillArchives(src: String, dst: String, startFrom0: Long, now: Long): Unit = {
-    val pDst = policies().getOrElse(dst,
-      throw new CorruptWhisperFile("Unknown metric", dst))
+    val pDst = policyIn(policies(), dst)
     var startFrom = startFrom0
     pDst.levels.foreach { lvl => // validated finest-first = retention asc
       val fromTime = now - lvl.retention
@@ -1179,8 +1101,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
     */
   private def fillRange(src: String, dst: String, tstart: Long,
                         tstop0: Long, now: Long): Unit = {
-    val pSrc = policies().getOrElse(src,
-      throw new CorruptWhisperFile("Unknown metric", src))
+    val pSrc = policyIn(policies(), src)
     val srcTime = now - pSrc.maxRetention
     if (tstart < srcTime && tstop0 < srcTime) return
     var tstop = tstop0
@@ -1282,43 +1203,37 @@ final class MetricStore(val spark: SparkSession, val root: String,
   /** find-corrupt-whisper-files analog: validate every policy row,
     * returning (metric, error) for unparseable/invalid ones.
     */
-  def validateAll(): Seq[(String, String)] = {
-    MetricStore.readCatalog(policiesPath).flatMap {
-      case (m, spec, xff, agg) =>
-        try {
-          RetentionPolicy(Retention.parseSchema(spec), xff,
-            AggregationMethod.fromName(agg))
-          None
-        } catch { case e: Throwable => Some(m -> e.getMessage) }
+  def validateAll(): Seq[(String, String)] =
+    meta.catalog.toSeq.sortBy(_._1).flatMap { case (m, row) =>
+      scala.util.Try(Meta.policyOf(row)).failed.toOption.map(e => m -> e.getMessage)
     }
-  }
 
   /** contrib/whisper-auto-update analog: read-transform-write every slot
     * of a metric through a value expression (e.g. `_ * 2`).
     */
   def transformValues(metric: String, f: Column => Column): Unit = {
-    val p = policies().getOrElse(
-      metric, throw new CorruptWhisperFile("Unknown metric", metric))
+    val p = policyIn(policies(), metric)
     // per-level rewrites don't commute with the kernels (f(kernel(xs)) !=
-    // kernel(f(xs)) in general), so levels stop being the level-0 cascade
-    markRollupsDiverged()
+    // kernel(f(xs)) in general), so levels stop being the level-0
+    // cascade; and once level 0 is rewritten a deeper level's vsum is no
+    // longer the sum of its level-0 points — one commit records both
+    // before the first level is rewritten
+    commitMeta(m => m.copy(derivedFromLevel0 = false,
+      countsExact = m.countsExact && p.levels.size == 1))
     p.levels.zipWithIndex.foreach {
       case (lvl, i) =>
         val base = levelData(i).where(col("metric") === metric)
         // known survives (the transform moves values, not points) but
         // vsum is no longer the sum of the transformed level-0 points
-        // unless f is linear — null it and drop exactness
+        // unless f is linear — null it
         val rows =
           if (i == 0)
             base.select(col("metric"), col("interval"),
               f(col("value")).cast("double").as("value"), lit(1L).as("prio"))
-          else {
-            markCountsApprox()
-            withCountCols(base, i)
-              .select(col("metric"), col("interval"),
-                f(col("value")).cast("double").as("value"),
-                col("known"), lit(null).cast("double").as("vsum"), lit(1L).as("prio"))
-          }
+          else
+            withCountCols(base, i).select(col("metric"), col("interval"),
+              f(col("value")).cast("double").as("value"),
+              col("known"), lit(null).cast("double").as("vsum"), lit(1L).as("prio"))
         if (!rows.isEmpty) upsertLevel(i, lvl.secondsPerPoint, rows)
     }
   }
@@ -1359,8 +1274,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
   def fetchFrame(metrics: Seq[String], fromTime: Long, untilTime: Long,
                  now: Long, archiveToSelect: Option[Int] = None): Option[DataFrame] = {
     val ps = policies()
-    val pols = metrics.map(m =>
-      ps.getOrElse(m, throw new CorruptWhisperFile("Unknown metric", m)))
+    val pols = metrics.map(policyIn(ps, _))
     if (pols.distinct.size > 1)
       throw new UnsupportedOperationException(
         "db files must have the same archive configuration") // whisper.py:1054-1057
@@ -1390,11 +1304,8 @@ final class MetricStore(val spark: SparkSession, val root: String,
         .createOrReplaceTempView(s"${prefix}_level_$i")
     }
     import spark.implicits._
-    ps.toSeq.sortBy(_._1)
-      .map { case (m, p) =>
-        (m, p.levels.map(a => s"${a.secondsPerPoint}:${a.points}").mkString(","),
-          p.xff, p.aggregation.name)
-      }
+    meta.catalog.toSeq.sortBy(_._1)
+      .map { case (m, (spec, xff, agg)) => (m, spec, xff, agg) }
       .toDF("metric", "spec", "xff", "aggregation")
       .createOrReplaceTempView(s"${prefix}_policies")
   }
@@ -1407,39 +1318,42 @@ final class MetricStore(val spark: SparkSession, val root: String,
     * eviction: rewrite ONLY partitions that contain expired rows, with
     * per-metric cutoffs broadcast into the filter.
     *
-    * Evicting LEVEL-0 buckets on a multi-level store marks rollups
-    * diverged: whisper's archive invariant (coarser archives retain
-    * LONGER, whisper.py:100-113) means every evicted level-0 window is
-    * still covered by some coarse level — a substituted level scan would
-    * return windows a level-0 re-aggregation can no longer produce.
-    * That is correct FETCH behavior (serving old ranges from coarse
-    * archives is the point of retention tiers) but breaks the
-    * substitution rule's claimed query-equivalence, so the rule must
-    * refuse from then on.
+    * Evicting LEVEL-0 buckets on a multi-level store clears
+    * `derived_from_level0`: coarser archives retain LONGER
+    * (whisper.py:100-113), so a substituted level scan would return
+    * windows a level-0 re-aggregation can no longer produce — correct
+    * FETCH behavior, but not the substitution rule's query-equivalence.
+    * The flag is committed once, after the expired buckets are collected
+    * and before the first is deleted, so an interrupted vacuum never
+    * leaves the record claiming evicted rows.
     */
   def vacuum(now: Long): Unit = {
     val ps = policies()
     if (ps.isEmpty) return
     if (ps.values.toSeq.distinct.size == 1) {
       val policy = ps.values.head
-      policy.levels.zipWithIndex.foreach {
+      val expired = policy.levels.zipWithIndex.flatMap {
         case (lvl, i) =>
           val dir = new java.io.File(levelPath(i))
-          if (dir.exists()) {
-            val cutoffTb = (now - lvl.retention) / bucketSeconds(lvl.secondsPerPoint) - 1
-            dir.listFiles().filter(_.getName.startsWith("pb=")).foreach { pbDir =>
-              pbDir.listFiles().filter(_.getName.startsWith("tb=")).foreach { tbDir =>
-                val tb = tbDir.getName.stripPrefix("tb=").toLong
-                if (tb < cutoffTb) {
-                  deleteRecursively(tbDir)
-                  if (i == 0 && policy.levels.size > 1) markRollupsDiverged()
-                }
-              }
-            }
-          }
+          val cutoffTb = (now - lvl.retention) / bucketSeconds(lvl.secondsPerPoint) - 1
+          for {
+            pbDir <- Option(dir.listFiles()).toSeq.flatten if pbDir.getName.startsWith("pb=")
+            tbDir <- pbDir.listFiles().toSeq if tbDir.getName.startsWith("tb=")
+            if tbDir.getName.stripPrefix("tb=").toLong < cutoffTb
+          } yield (i, tbDir)
+      }
+      if (policy.levels.size > 1 && expired.exists(_._1 == 0)) markRollupsDiverged()
+      expired.foreach { case (_, tbDir) =>
+        deleteRecursively(tbDir)
+        afterEviction(tbDir)
       }
     } else rowLevelVacuum(ps, now)
   }
+
+  /** Test seam: runs after each bucket directory the uniform [[vacuum]]
+    * deletes, so a spec can interrupt it mid-eviction.
+    */
+  private[graft] var afterEviction: java.io.File => Unit = _ => ()
 
   /** Heterogeneous-policy eviction (ROADMAP #4): per-metric retention
     * cutoffs joined (broadcast — the catalog is tiny) against each level;
@@ -1468,7 +1382,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
         if (touched.nonEmpty) Frames.scoped { frames =>
           // same reasoning as the uniform path: evicted level-0 windows
           // survive in coarser archives (defensive — substitution already
-          // refuses heterogeneous stores, but the marker is the record)
+          // refuses heterogeneous stores, but the flag is the record)
           if (i == 0 && ps.values.exists(_.levels.size > 1))
             markRollupsDiverged()
           val touchedFilter = touched
@@ -1476,11 +1390,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
             .reduce(_ || _)
           // localCheckpoint, NOT cache — the updateMany mirror's
           // reasoning: kept's lineage reads the very files the dynamic
-          // overwrite below replaces, and the commit's auto-recache
-          // re-executes any cached plan matching the written path
-          // against the replaced files. The eager checkpoint severs the
-          // disk lineage before the write; the scope releases its
-          // blocks once the overwrite has landed.
+          // overwrite below replaces
           val kept = frames.hold(data.where(touchedFilter)
             .join(cutoffDf, Seq("metric"))
             .where(col("interval") > col("cutoff"))
@@ -1545,11 +1455,10 @@ final class MetricStore(val spark: SparkSession, val root: String,
     val tmpRoot = s"$root.tmp"
     MetricStore.deleteRecursively(new java.io.File(tmpRoot))
     val tmp = new MetricStore(spark, tmpRoot, effectiveBuckets)
-    old.keys.foreach(m => tmp.create(m, newPolicy))
+    tmp.createAll(old.keys.toSeq, newPolicy)
     Rollup.cascade(level0, newPolicy).zip(newPolicy.levels).zipWithIndex.foreach {
       case ((df, lvl), i) =>
-        tmp.upsertLevel(i, lvl.secondsPerPoint,
-          df.withColumn("prio", lit(0L)))
+        tmp.upsertLevel(i, lvl.secondsPerPoint, df.withColumn("prio", lit(0L)))
     }
 
     val bak = new java.io.File(s"$root.bak")
@@ -1561,8 +1470,8 @@ final class MetricStore(val spark: SparkSession, val root: String,
 }
 
 object MetricStore {
-  /** Current bucket layout for NEW stores; existing stores read theirs
-    * from the persisted `_layout` marker (see [[MetricStore.bucketSlots]]).
+  /** Bucket layout for NEW stores; existing stores keep theirs in the
+    * manifest (see [[MetricStore.layout]]).
     */
   private[store] val DefaultBucketSlots: Long = 1024L
 
@@ -1603,15 +1512,92 @@ object MetricStore {
           }
         }))
 
-  /** Raw catalog rows (metric, spec, xff, aggregation). */
-  private[store] def readCatalog(path: String): Seq[(String, String, Float, String)] = {
-    val f = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(f)) Nil
-    else
-      java.nio.file.Files.readString(f).split("\n").toSeq.filter(_.nonEmpty).map { line =>
-        val Array(m, spec, xff, agg) = line.split("\t", 4)
-        (m, spec, xff.toFloat, agg)
+  private val MetaFile = "_store"
+  private val MetaVersion = 1
+
+  /** The store's one metadata record (`_store`): key=value lines, then
+    * one `metric\tspec\txff\taggregation` catalog row per metric.
+    * Catalog rows stay raw so [[MetricStore.validateAll]] can report one
+    * that does not parse; `policies` parses them once per record. An
+    * absent layout key is stamped on first use ([[MetricStore.layout]]).
+    */
+  private[store] final case class Meta(
+      bucketSlots: Option[Long], numBuckets: Option[Int],
+      countsExact: Boolean, derivedFromLevel0: Boolean,
+      catalog: Map[String, (String, Float, String)]) {
+    lazy val policies: Map[String, RetentionPolicy] =
+      catalog.map { case (m, row) => m -> Meta.policyOf(row) }
+
+    def withPolicies(ps: Seq[(String, RetentionPolicy)]): Meta =
+      copy(catalog = catalog ++ ps.map { case (m, p) =>
+        m -> ((p.levels.map(a => s"${a.secondsPerPoint}:${a.points}").mkString(","),
+          p.xff, p.aggregation.name))
+      })
+
+    def render: String =
+      (Seq(s"version=$MetaVersion") ++ bucketSlots.map(v => s"bucket_slots=$v") ++
+        numBuckets.map(v => s"num_buckets=$v") ++
+        Seq(s"counts_exact=$countsExact", s"derived_from_level0=$derivedFromLevel0") ++
+        catalog.toSeq.sortBy(_._1).map { case (m, (spec, xff, agg)) => s"$m\t$spec\t$xff\t$agg" }
+      ).mkString("", "\n", "\n")
+  }
+
+  private[store] object Meta {
+    def policyOf(row: (String, Float, String)): RetentionPolicy =
+      RetentionPolicy(Retention.parseSchema(row._1), row._2, AggregationMethod.fromName(row._3))
+
+    def parse(lines: Seq[String]): Meta = {
+      val (rows, kvLines) = lines.partition(_.contains('\t'))
+      val kv = parseKv(kvLines)
+      if (kv.get("version").exists(_.toInt > MetaVersion))
+        throw new InvalidConfiguration(
+          s"$MetaFile version ${kv("version")} is newer than this reader's $MetaVersion")
+      Meta(kv.get("bucket_slots").map(_.toLong), kv.get("num_buckets").map(_.toInt),
+        kv.get("counts_exact").forall(_.toBoolean),
+        kv.get("derived_from_level0").forall(_.toBoolean), parseCatalog(rows))
+    }
+  }
+
+  // parsed records, keyed on `_store`'s (fileKey, mtime), and commit
+  // locks, both per canonical store root
+  private val metaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (AnyRef, FileTime, Meta)]()
+  private val metaLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** A metric's policy; whisper's error for a missing file otherwise. */
+  private def policyIn(ps: Map[String, RetentionPolicy], metric: String): RetentionPolicy =
+    ps.getOrElse(metric, throw new CorruptWhisperFile("Unknown metric", metric))
+
+  private def parseKv(lines: Seq[String]): Map[String, String] =
+    lines.flatMap { l =>
+      l.trim.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => Some(k -> v)
+        case _ => None
       }
+    }.toMap
+
+  private def parseCatalog(lines: Seq[String]): Map[String, (String, Float, String)] =
+    lines.filter(_.nonEmpty).map { line =>
+      val Array(m, spec, xff, agg) = line.split("\t", 4)
+      m -> ((spec, xff.toFloat, agg))
+    }.toMap
+
+  // ---- migration from the pre-manifest metadata files ------------------
+
+  private val LegacyMetaFiles =
+    Seq("policies.tsv", "_layout", "_counts_approx", "_rollup_diverged")
+
+  /** A pre-manifest store's record (empty when it has no legacy files):
+    * its key=value layout lines and catalog rows are manifest lines
+    * already, and each marker file is a cleared flag.
+    */
+  private def legacyMeta(root: String): Meta = {
+    def path(n: String) = Paths.get(root, n)
+    def lines(n: String): Seq[String] =
+      if (Files.exists(path(n))) Files.readString(path(n)).linesIterator.toSeq else Nil
+    Meta.parse(lines("_layout") ++ lines("policies.tsv") ++ Seq(
+      s"counts_exact=${!Files.exists(path("_counts_approx"))}",
+      s"derived_from_level0=${!Files.exists(path("_rollup_diverged"))}"))
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -225,18 +225,6 @@ object StreamingIngest {
       .start()
   }
 
-  /** Convenience: stream rollups for every level of a policy (each level
-    * its own query; level i aggregates the raw stream at level-i
-    * granularity — streaming recompute, not cascade, so each window is
-    * exact over the raw points it has seen).
-    */
-  def rollupStreams(points: DataFrame, policy: RetentionPolicy,
-                    maxLatenessSec: Long): Seq[DataFrame] =
-    policy.levels.map { lvl =>
-      rollupStream(points, policy.levels.head.secondsPerPoint,
-        lvl.secondsPerPoint, policy.aggregation, policy.xff, maxLatenessSec)
-    }
-
   /** Multi-level refinement: one stateful rollup query per level ≥ 1,
     * each upserting its own level (checkpoints under
     * `checkpointRoot/level_i`). Every level aggregates the RAW stream at

@@ -15,14 +15,24 @@ import graft.model._
   *     (counts-approx marker, exact-count substitution gate) relies on
   *     the columns being genuinely absent;
   *   - the bucket layout (slots per tb directory) is baked into every
-  *     partition path, so it is persisted per store (`_layout`) and
-  *     probed for pre-marker stores — a binary with a different default
-  *     must not silently mis-prune an existing store's directories.
+  *     partition path, so it is persisted per store (in the `_store`
+  *     manifest) and probed for pre-marker stores — a binary with a
+  *     different default must not silently mis-prune an existing store's
+  *     directories;
+  *   - the manifest is the store's one metadata file: stores written
+  *     before it migrate once, and concurrent commits lose nothing.
   */
 class StoreFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   private val Now = 1706659200L
+
+  /** The manifest's persisted (bucket_slots, num_buckets). */
+  private def layoutOf(root: String): (Option[Long], Option[Int]) = {
+    val m = MetricStore.Meta.parse(
+      Files.readString(java.nio.file.Paths.get(root, "_store")).linesIterator.toSeq)
+    (m.bucketSlots, m.numBuckets)
+  }
 
   test("level without count columns reads without them; update marks counts approx") {
     import spark.implicits._
@@ -59,9 +69,7 @@ class StoreFormatSpec extends AnyFunSuite {
     val t0 = Now - Now % 60 - 600
     store.updateMany(
       Seq(("m", t0, 1.5, 0L)).toDF("metric", "ts", "value", "seq"), Now)
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/_layout")).trim ==
-      "bucket_slots=1024\nnum_buckets=4")
+    assert(layoutOf(root) == ((Some(1024L), Some(4))))
 
     // hand-build a PRE-MARKER store whose level_0 dirs follow the old
     // 8192-slot layout; opening it must probe 8192 and still fetch
@@ -79,9 +87,7 @@ class StoreFormatSpec extends AnyFunSuite {
     val vals = reopened.fetch("m", t0 - 60, t0 + 60, Now).get.values
     assert(vals.flatten.contains(7.5), s"old-layout point lost: $vals")
     // and the probe result is now stamped for future opens
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root2/_layout")).trim ==
-      "bucket_slots=8192\nnum_buckets=4")
+    assert(layoutOf(root2) == ((Some(8192L), Some(4))))
   }
 
   test("a pre-marker store matching no known layout is refused, not guessed") {
@@ -221,5 +227,62 @@ class StoreFormatSpec extends AnyFunSuite {
       .where(col("metric") === m && col("interval") === w)
       .select("value").as[Double].collect().toSeq
     assert(v == Seq(4.0), s"window $w: $v")
+  }
+
+  test("a pre-manifest store migrates its four metadata files into _store once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("ms-legacy-meta").toString
+    def put(name: String, text: String): Unit =
+      Files.writeString(java.nio.file.Paths.get(root, name), text)
+    put("policies.tsv", "a\t60:50000,300:20000\t0.5\taverage\nb\t60:50000\t0.0\tmax")
+    put("_layout", "bucket_slots=8192\nnum_buckets=4\n")
+    put("_counts_approx", "")
+    put("_rollup_diverged", "")
+    val t0 = Now - Now % 60 - 600
+    Seq(("a", t0, 7.5)).toDF("metric", "interval", "value")
+      .withColumn("pb", pmod(hash(col("metric")), lit(4)))
+      .withColumn("tb", expr(s"interval div ${60L * 8192L}"))
+      .write.partitionBy("pb", "tb").parquet(s"$root/level_0")
+
+    val expected = Map(
+      "a" -> RetentionPolicy(Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000)),
+        0.5f, AggregationMethod.Average),
+      "b" -> RetentionPolicy(Seq(ArchiveInfo(60, 50000)), 0f, AggregationMethod.Max))
+    // opened with the constructor default (32 buckets): the legacy layout wins
+    for (store <- Seq(new MetricStore(spark, root), new MetricStore(spark, root))) {
+      assert(store.policies() == expected)
+      assert(!store.countsExact && !store.rollupsDerivedFromLevel0)
+      assert(store.effectiveBuckets == 4)
+      assert(store.bucketSeconds(60) == 60L * 8192L)
+      assert(store.fetch("a", t0 - 60, t0 + 60, Now).get.values.flatten == Seq(7.5))
+      assert(new java.io.File(root).list().sorted.toSeq == Seq("_store", "level_0"))
+    }
+  }
+
+  test("concurrent commits through two handles on one root lose nothing") {
+    val root = Files.createTempDirectory("ms-meta-concurrent").toString
+    val handles = Seq(new MetricStore(spark, root, numBuckets = 4),
+      new MetricStore(spark, root, numBuckets = 4))
+    val policy = RetentionPolicy(Seq(ArchiveInfo(60, 300)), xff = 0f)
+    def names(t: Int, k: Int) = (0 until 5).map(j => s"t$t.k$k.m$j")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      (0 until 8).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 10).foreach { k =>
+            val h = handles(t % 2)
+            h.createAll(names(t, k), policy)
+            if (k == 5 && t % 4 == 1) h.markCountsApprox()
+            if (k == 5 && t % 4 == 3) h.markRollupsDiverged()
+          }
+        })
+      }.foreach(_.get())
+    } finally pool.shutdown()
+    val all = (for (t <- 0 until 8; k <- 0 until 10) yield names(t, k)).flatten.toSet
+    handles.foreach { h =>
+      assert(h.policies().keySet == all,
+        s"lost: ${(all -- h.policies().keySet).size} of ${all.size}")
+      assert(!h.countsExact && !h.rollupsDerivedFromLevel0)
+    }
   }
 }
