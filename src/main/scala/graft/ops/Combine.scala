@@ -36,13 +36,11 @@ object Combine {
   /** Slots where the two series disagree. Reference semantics keep any slot
     * where either side is non-null and the values differ
     * (whisper.py:1140-1147); `ignoreEmpty=true` keeps only slots where
-    * BOTH sides are non-null (whisper.py:1140-1143). `pythonNaN=true`
-    * reproduces the reference's Python `!=` where NaN != NaN (two NaNs
-    * count as different); default follows Spark/SQL NaN-equality so the
-    * result is oracle-comparable.
+    * BOTH sides are non-null (whisper.py:1140-1143). Two NaNs compare
+    * EQUAL (Spark/SQL NaN-equality, so the result is oracle-comparable),
+    * where the reference's Python `!=` would report them as different.
     */
-  def diff(a: DataFrame, b: DataFrame, pythonNaN: Boolean = false,
-           ignoreEmpty: Boolean = false): DataFrame = {
+  def diff(a: DataFrame, b: DataFrame, ignoreEmpty: Boolean = false): DataFrame = {
     val joined = a
       .select(col("metric"), col("interval"), col("value").as("value_a"))
       .join(
@@ -52,9 +50,7 @@ object Combine {
     val va = col("value_a")
     val vb = col("value_b")
     val bothNull = va.isNull && vb.isNull
-    val differ =
-      if (pythonNaN) !(va === vb) || (isnan(va) && isnan(vb)) || (va.isNull =!= vb.isNull)
-      else !(va === vb) || (va.isNull =!= vb.isNull)
+    val differ = !(va === vb) || (va.isNull =!= vb.isNull)
     val scope =
       if (ignoreEmpty) va.isNotNull && vb.isNotNull
       else !bothNull

@@ -15,15 +15,6 @@ import graft.model.{AggregationMethod, RetentionPolicy}
   */
 object Rollup {
 
-  /** A rollup group's row count is bounded by its slot capacity
-    * (lowerStep/higherStep) — so aggregation skew is structural, not
-    * data-dependent, and the two-stage salted path pays off exactly when
-    * capacity is large (e.g. a 1s→1d consolidation: 86400 rows per
-    * (metric, window) key on ONE reducer). Above this threshold
-    * `propagate` delegates to `propagateSalted` automatically.
-    */
-  val SaltSlotsThreshold = 4096
-
   /** One full rollup step: higher-resolution points → lower-resolution
     * consolidated points.
     *
@@ -65,6 +56,11 @@ object Rollup {
     * known/vsum make the true level-0 average (vsum/known) recoverable at
     * ANY depth — what RollupSubstitution needs to substitute deep levels
     * for Average queries exactly.
+    *
+    * Every kernel and count here is a partial aggregate, so Spark combines
+    * each window map-side: even a 1s→1d window (86400 rows per key)
+    * reaches its reducer as one partial row per input partition, and no
+    * salted two-stage plan is needed (SCALE.md, rollup kernels row).
     */
   def propagateCounted(higher: DataFrame,
                        higherStep: Int,
@@ -73,8 +69,6 @@ object Rollup {
                        xff: Float): DataFrame = {
     require(lowerStep % higherStep == 0, s"$higherStep does not divide $lowerStep")
     val slots = lowerStep / higherStep
-    if (slots >= SaltSlotsThreshold)
-      return propagateSalted(higher, higherStep, lowerStep, method, xff)
     val (kn, vs) = countCols(higher)
     higher
       .groupBy(col("metric"), Grid.align(col("interval"), lowerStep).as("interval"))
@@ -90,93 +84,6 @@ object Rollup {
       .select(col("metric"), col("interval"), col("value"),
         when(col("kcnt") === col("rows"), col("ksum")).as("known"),
         when(col("vcnt") === col("rows"), col("vssum")).as("vsum"))
-  }
-
-  /** Skew-safe variant of propagate: two-stage aggregation with a salt on
-    * the higher-resolution interval. A hot metric whose window has
-    * pathologically many points first combines within
-    * (metric, window, salt) partitions — spreading one hot key over
-    * `salts` reducers — then the small per-salt partials combine exactly.
-    * Every kernel decomposes: sums/counts directly; last/absmax/absmin by
-    * carrying the winning (value, interval) pair and re-comparing with
-    * the same ordering in the final stage. Bit-equal to `propagate` for
-    * sum/min/max/last/absmax/absmin; avg re-associates the sum (same
-    * value up to FP reassociation).
-    */
-  def propagateSalted(higher: DataFrame,
-                      higherStep: Int,
-                      lowerStep: Int,
-                      method: AggregationMethod,
-                      xff: Float,
-                      salts: Int = 16): DataFrame = {
-    require(lowerStep % higherStep == 0, s"$higherStep does not divide $lowerStep")
-    val slots = lowerStep / higherStep
-    import AggregationMethod._
-    val (kn, vs) = countCols(higher)
-    val keyed = higher.groupBy(
-      col("metric"),
-      Grid.align(col("interval"), lowerStep).as("interval"),
-      pmod(hash(col("interval")), lit(salts)).as("salt"))
-    // contribution counts decompose as plain sums in both stages; the
-    // non-null tallies ride along so the final stage can null out any
-    // window with an unknown child (sum() alone would skip the nulls)
-    val countAggs = Seq(
-      count(kn).as("kc"), sum(kn).as("k"),
-      count(vs).as("vc"), sum(vs).as("vssum"))
-    val countFin = Seq(
-      sum(col("kc")).as("kcnt"), sum(col("k")).as("ksum"),
-      sum(col("vc")).as("vcnt"), sum(col("vssum")).as("vssum2"))
-
-    val finished = method match {
-      case Average | Sum | AvgZero =>
-        val partial = keyed.agg(sum(col("value")).as("s"),
-          (count(col("value")).as("c") +: countAggs): _*)
-        val fin = partial.groupBy("metric", "interval")
-          .agg(sum(col("s")).as("s"), (sum(col("c")).as("rows") +: countFin): _*)
-        val v = method match {
-          case Average => col("s") / col("rows")
-          case Sum     => col("s")
-          case _       => col("s") / lit(slots)
-        }
-        fin.select(col("metric"), col("interval"), v.as("value"),
-          col("rows"), col("kcnt"), col("ksum"), col("vcnt"), col("vssum2"))
-      case Max | Min =>
-        val agg0 = if (method == Max) max(col("value")) else min(col("value"))
-        val partial = keyed.agg(agg0.as("v"),
-          (count(col("value")).as("c") +: countAggs): _*)
-        val agg1 = if (method == Max) max(col("v")) else min(col("v"))
-        partial.groupBy("metric", "interval")
-          .agg(agg1.as("value"), (sum(col("c")).as("rows") +: countFin): _*)
-      case Last =>
-        val partial = keyed.agg(
-          max_by(col("value"), col("interval")).as("v"),
-          (Seq(max(col("interval")).as("mi"), count(col("value")).as("c")) ++ countAggs): _*)
-        partial.groupBy("metric", "interval")
-          .agg(max_by(col("v"), col("mi")).as("value"),
-            (sum(col("c")).as("rows") +: countFin): _*)
-      case AbsMax | AbsMin =>
-        // carry the winner's (value, interval) so the final stage applies
-        // the SAME tie-break ordering as the single-stage kernel
-        val ord = (v: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =>
-          if (method == AbsMax) struct(abs(v), -i) else struct(abs(v), i)
-        val pick = (vi: org.apache.spark.sql.Column, o: org.apache.spark.sql.Column) =>
-          if (method == AbsMax) max_by(vi, o) else min_by(vi, o)
-        val partial = keyed.agg(
-          pick(struct(col("value").as("v"), col("interval").as("i")),
-            ord(col("value"), col("interval"))).as("vi"),
-          (count(col("value")).as("c") +: countAggs): _*)
-        partial.groupBy("metric", "interval")
-          .agg(
-            pick(col("vi"), ord(col("vi.v"), col("vi.i"))).as("vi"),
-            (sum(col("c")).as("rows") +: countFin): _*)
-          .select(col("metric"), col("interval"), col("vi.v").as("value"),
-            col("rows"), col("kcnt"), col("ksum"), col("vcnt"), col("vssum2"))
-    }
-    finished
-      .where(Kernels.xffGate(col("rows"), lit(slots), xff))
-      .select(col("metric"), col("interval"), col("value"),
-        when(col("kcnt") === col("rows"), col("ksum")).as("known"),
-        when(col("vcnt") === col("rows"), col("vssum2")).as("vsum"))
   }
 
   /** Incremental variant: recompute ONLY the lower windows touched by a

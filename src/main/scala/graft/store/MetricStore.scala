@@ -588,35 +588,18 @@ final class MetricStore(val spark: SparkSession, val root: String,
     *
     * @param batch (metric, ts: epoch-sec long, value, seq: arrival order)
     */
-  def updateMany(batch: DataFrame, now: Long): Unit =
-    updateMany(batch, now, cascade = true)
-
-  /** `cascade = false` writes ONLY the finest level — for deployments
-    * whose coarse levels are maintained externally, i.e. the streaming
-    * refinement path ([[graft.streaming.StreamingIngest.startMixed]]):
-    * stateful queries upsert every coarse level from the raw stream, so
-    * cascading here would re-derive the same windows a second time per
-    * batch. Consequences the caller accepts:
-    *
-    *   - `derived_from_level0` is cleared (substitution refuses: the
-    *     external levels are recomputes of the stream, not the cascade of
-    *     level 0, and the stateful watermark may drop what it keeps);
-    *   - points too old for the finest archive FAIL-STOP instead of
-    *     routing to a coarser one: they would need the skipped cascade
-    *     (route ancient backfill through the cascade path instead).
-    */
-  def updateMany(batch: DataFrame, now: Long, cascade: Boolean): Unit = {
+  def updateMany(batch: DataFrame, now: Long): Unit = {
     val ps = policies()
     require(ps.nonEmpty, "no metrics created")
     // heterogeneous policies: one routed ingest per distinct policy shape
     // (policy count is small; each group's cascade is its own job chain)
     ps.values.toSeq.distinct match {
-      case Seq(single) => updateManyForPolicy(batch, single, now, cascade)
+      case Seq(single) => updateManyForPolicy(batch, single, now)
       case multiple =>
         multiple.foreach { policy =>
           val metrics = ps.collect { case (m, p) if p == policy => m }.toSeq
           updateManyForPolicy(
-            batch.where(col("metric").isin(metrics: _*)), policy, now, cascade)
+            batch.where(col("metric").isin(metrics: _*)), policy, now)
         }
     }
   }
@@ -624,7 +607,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
   // The routed cache and the mirror/propagated cuts are released
   // ([[Frames]]) after the finally below has awaited every write.
   private def updateManyForPolicy(batch: DataFrame, policy: RetentionPolicy,
-                                  now: Long, cascade: Boolean = true): Unit =
+                                  now: Long): Unit =
     Frames.scoped { frames =>
       val routed = frames.hold(Ingest.routeAndDedup(batch, policy, now).cache())
       // Writes are taken off the cascade's critical path: a FRESH level's
@@ -667,16 +650,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
             lvl -> ((rows.map(_._4).sum, rows.map(_._5).min, rows.map(_._6).max))
           }
         val coarseDirect = directStats.exists { case (l, (n, _, _)) => l >= 1 && n > 0 }
-        // see the public overload's contract — fail-stop BEFORE clearing
-        // the flag for a batch that then writes nothing
-        if (!cascade && coarseDirect)
-          throw new IllegalArgumentException(
-            "cascade=false but the batch contains points too old for the " +
-              "finest archive; ingest them through the cascade path")
         // points landing directly in a coarser archive are invisible to
-        // level-0 aggregations, and without the cascade the coarse levels
-        // are maintained externally
-        if (coarseDirect || (!cascade && policy.levels.size > 1)) markRollupsDiverged()
+        // level-0 aggregations
+        if (coarseDirect) markRollupsDiverged()
         val directTouched: Map[Int, Set[(Int, Long)]] = partStats
           .groupBy(_._1)
           .map { case (lvl, rows) => lvl -> rows.map(r => (r._2, r._3)).toSet }
@@ -750,7 +726,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
         var i = 1
         // keep cascading while any deeper level holds unpropagated direct
         // writes: a batch landing only in coarse archives must roll up too
-        while (cascade && i < steps.length &&
+        while (i < steps.length &&
           (changedNonEmpty || directStats.exists { case (l, (n, _, _)) => l >= i && n > 0 })) {
           // Partition-prune the higher-level read to the change hull BEFORE
           // the semi join (an incremental batch reads only the time buckets
@@ -1025,22 +1001,6 @@ final class MetricStore(val spark: SparkSession, val root: String,
     }
   }
 
-  /** whisper-fill: src fills ONLY dst's empty slots, never overwrites
-    * (bin/whisper-fill.py:52-92). Same upsert with prio BELOW existing
-    * rows (-2 < -1): last-write-wins keeps dst wherever it has data.
-    */
-  def fillMetric(dst: String, src: String): Unit = {
-    val p = requireSameConfig(src, dst)
-    markRollupsDiverged() // per-level copy, same reason as mergeMetric
-    p.levels.zipWithIndex.foreach {
-      case (lvl, i) =>
-        val srcRows = withCountCols(levelData(i).where(col("metric") === src), i)
-          .withColumn("metric", lit(dst))
-          .withColumn("prio", lit(-2L))
-        if (!srcRows.isEmpty) upsertLevel(i, lvl.secondsPerPoint, srcRows)
-    }
-  }
-
   /** bin/whisper-fill.py's whole-file reconciliation (`fill_archives` +
     * `fill`, bin/whisper-fill.py:52-121) re-expressed over graft's own
     * fetch/updateMany primitives — both differential-fuzz-pinned to the
@@ -1060,8 +1020,7 @@ final class MetricStore(val spark: SparkSession, val root: String,
     *     lost", bin/whisper-fill.py:108-110), but a gap running to the
     *     window's last slot fills regardless of length;
     *   - copies go through update_many, so fills CASCADE into dst's
-    *     coarser archives like any other ingest — unlike [[fillMetric]]'s
-    *     per-level store copy, which never re-aggregates.
+    *     coarser archives like any other ingest.
     *
     * The per-window gap walk collects one dense fetch per dst archive —
     * driver-sized, bounded by that archive's ring capacity, the same
@@ -1133,26 +1092,11 @@ final class MetricStore(val spark: SparkSession, val root: String,
   }
 
   /** whisper-diff: per-level slots where two metrics disagree
-    * (whisper.py:1098-1149). Returns (level, interval, value_a, value_b).
-    */
-  def diffMetrics(a: String, b: String): DataFrame = {
-    val p = requireSameConfig(a, b)
-    p.levels.indices
-      .map { i =>
-        val va = levelData(i).where(col("metric") === a)
-          .select(lit(a).as("metric"), col("interval"), col("value"))
-        val vb = levelData(i).where(col("metric") === b)
-          .select(lit(a).as("metric"), col("interval"), col("value"))
-        Combine.diff(va, vb).select(lit(i).as("level"), col("interval"),
-          col("value_a"), col("value_b"))
-      }
-      .reduce(_.unionByName(_))
-  }
-
-  /** [[diffMetrics]] with the reference CLI's envelope (whisper.py:
-    * 1105-1149): each archive compares its fetch grid over
-    * [now − retention, untilTime], where untilTime starts at the caller's
-    * until (or `now` — NOT clamped to now, whisper.py:1120-1124) and
+    * (whisper.py:1098-1149), returned as (level, interval, value_a,
+    * value_b) under the reference CLI's envelope: each archive compares
+    * its fetch grid over [now − retention, untilTime], where untilTime
+    * starts at the caller's until (or `now` — NOT clamped to now,
+    * whisper.py:1120-1124) and
     * SHRINKS per archive to min(previous archive's startTime, untilTime)
     * (whisper.py:1148) — deeper archives only compare the range the finer
     * ones did not cover. The per-level `total` is the number of compared
@@ -1238,10 +1182,10 @@ final class MetricStore(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Streaming-sink surface: upsert externally-computed rollup rows
-    * (metric, interval, value) into level `i` — the foreachBatch target
-    * for `StreamingIngest.startStateful`, where provisional window values
-    * refine in place as slots arrive (repeated upserts, LWW).
+  /** Upsert externally-computed rollup rows (metric, interval, value,
+    * optionally known/vsum) into level `level`, LWW over what is there —
+    * the import surface for archives consolidated outside the store
+    * (`WspSource` loads a .wsp file's coarse archives through it).
     */
   def upsertRollups(level: Int, rows: DataFrame): Unit = {
     val ps = policies()
@@ -1251,9 +1195,9 @@ final class MetricStore(val spark: SparkSession, val root: String,
     val step = ps.values.head.levels(level).secondsPerPoint
     // external rows bypass the cascade: levels and level-0 can disagree
     markRollupsDiverged()
-    // externally-computed rollups may carry their contribution counts
-    // (StreamingIngest does); without them a deep level's counts become
-    // unknown for good — record that
+    // externally-computed rollups may carry their contribution counts;
+    // without them a deep level's counts become unknown for good — record
+    // that
     val withC =
       if (level == 0) rows.select(col("metric"), col("interval"), col("value"))
       else if (rows.columns.contains("known") && rows.columns.contains("vsum"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.model.{AggregationMethod, RetentionPolicy}
+import graft.model.AggregationMethod
 import graft.ops.Kernels
 import graft.store.MetricStore
 
@@ -14,15 +14,19 @@ import graft.store.MetricStore
   * (watermark), last-write-wins on duplicate slots, tumbling-window
   * rollups continuously maintained.
   *
-  * Two modes:
+  * One stream writes a store:
   *   - `start`: micro-batch upsert into a MetricStore via foreachBatch —
   *     each batch runs the full update_many path (routing, LWW, cascade),
-  *     so batch and streaming ingest share one code path;
-  *   - `rollupStream`: pure Structured Streaming tumbling-window
-  *     aggregation with watermark + xff gate, for pipelines that sink
-  *     rollups elsewhere. State stays bounded: tumbling windows only
-  *     (whisper has no sliding/session windows) and the watermark caps
-  *     retained state.
+  *     so batch and streaming ingest share one code path and every coarse
+  *     level stays the cascade of level 0.
+  *
+  * Two operators emit rollups for sinks OUTSIDE the store; neither writes
+  * it. State stays bounded: tumbling windows only (whisper has no
+  * sliding/session windows) and the watermark caps retained state.
+  *   - `rollupStream`: append-mode watermarked window aggregate with the
+  *     xff gate — one final row per window once lateness expires;
+  *   - `rollupStateful`: update-mode refinement — provisional rows as
+  *     slots arrive, the final row at the watermark timeout.
   */
 object StreamingIngest {
 
@@ -194,106 +198,5 @@ object StreamingIngest {
             consolidated(key, slots, finalized = false)
           }
       }
-  }
-
-  /** Wire the stateful rollup into a store: provisional window values
-    * land in level `levelIdx` as soon as the xff gate passes and refine
-    * in place batch by batch (upsert LWW); the watermark-finalized value
-    * is the last write. Downstream readers see rollups at micro-batch
-    * latency instead of watermark latency.
-    */
-  def startStateful(points: DataFrame, store: MetricStore, levelIdx: Int,
-                    checkpoint: String, maxLatenessSec: Long): StreamingQuery = {
-    val policy = store.policies().values.headOption.getOrElse(
-      throw new IllegalArgumentException("no metrics created"))
-    val sourceStep = policy.levels.head.secondsPerPoint
-    val step = policy.levels(levelIdx).secondsPerPoint
-    rollupStateful(points, sourceStep, step, policy.aggregation, policy.xff,
-      maxLatenessSec)
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // counts travel with the rollup rows: known/vsum here are over the
-        // RAW stream slots, so the store's level keeps exact counts
-        if (!batch.isEmpty)
-          store.upsertRollups(levelIdx,
-            batch.select("metric", "interval", "value", "known", "vsum"))
-      }
-      .start()
-  }
-
-  /** Multi-level refinement: one stateful rollup query per level ≥ 1,
-    * each upserting its own level (checkpoints under
-    * `checkpointRoot/level_i`). Every level aggregates the RAW stream at
-    * its own granularity — streaming recompute, not cascade — so each
-    * window is exact over the points seen and carries exact counts, and
-    * downstream readers see EVERY level at micro-batch latency (the
-    * batch cascade refreshes coarse levels only when a batch lands;
-    * STREAMING.md quantifies the visibility gap). State across queries
-    * is Σ_levels O(open windows × slots), each bounded by the watermark.
-    */
-  def startStatefulAll(points: DataFrame, store: MetricStore,
-                       checkpointRoot: String,
-                       maxLatenessSec: Long): Seq[StreamingQuery] = {
-    val policy = store.policies().values.headOption.getOrElse(
-      throw new IllegalArgumentException("no metrics created"))
-    (1 until policy.levels.size).map { i =>
-      startStateful(points, store, i, s"$checkpointRoot/level_$i", maxLatenessSec)
-    }
-  }
-
-  /** MIXED deployment — cascade backfill, stateful live tail, one store:
-    * level 0 is written by a cascade-FREE micro-batch upsert
-    * (`updateMany(…, cascade = false)` — routing, LWW, retention checks,
-    * no coarse rewrites), while one stateful query per coarse level
-    * refines that level from the raw stream at micro-batch latency.
-    * Returns the level-0 query followed by the coarse-level queries.
-    *
-    * Handoff contract: backfill (plain `updateMany` of the history)
-    * must end on a COARSEST-level window boundary, and the stream must
-    * carry everything from that boundary on. Each coarse window is then
-    * wholly owned by one side — the backfilled windows were cascaded
-    * exactly once, the live windows are exact recomputes over the raw
-    * stream — so the mixed store holds the same bytes the full cascade
-    * would (StreamingSpec pins the equality). A handoff inside a coarse
-    * window would leave that window's stateful recompute blind to the
-    * backfilled slots: the xff gate and the aggregate would both be
-    * computed over the tail alone.
-    *
-    * Duplicate slots resolve identically on both paths: the stream's
-    * `seq` flows into the stateful queries, whose per-slot LWW keys on
-    * it exactly like level 0's `updateMany` (whisper.py:806-808) — a
-    * contested slot has ONE winner store-wide regardless of row order
-    * inside a micro-batch.
-    *
-    * No in-line `vacuumEvery` here, deliberately: the level-0 query and
-    * the stateful queries write the SAME store from separate threads, so
-    * a sweep running on one while an `upsertRollups` read-merges a
-    * retention-edge partition on another could delete the directory
-    * under the read (or have an in-flight upsert resurrect a
-    * just-evicted one). Vacuum a mixed store between sessions, or from
-    * `cli vacuum`, when no queries are active. (`start`'s in-line sweep
-    * is safe — one query, one thread, writes serialized.)
-    *
-    * `stream` columns: (metric, ts: timestamp, value, seq: long).
-    */
-  def startMixed(stream: DataFrame, store: MetricStore, checkpointRoot: String,
-                 now: () => Long, maxLatenessSec: Long): Seq[StreamingQuery] = {
-    val q0 = stream
-      .select(col("metric"), col("ts").cast("long").as("ts"), col("value"), col("seq"))
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", s"$checkpointRoot/level_0")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.updateMany(batch, now(), cascade = false)
-      }
-      .start()
-    q0 +: startStatefulAll(
-      stream.select(col("metric"), col("ts"), col("value"), col("seq")),
-      store, checkpointRoot, maxLatenessSec)
   }
 }

@@ -278,25 +278,33 @@ class PlanAuditSpec extends AnyFunSuite {
       s"non-equi join in cluster-global span removal:\n$global")
   }
 
-  test("high-slot-count rollup auto-selects the two-stage salted plan") {
+  test("high-slot-count rollup: one aggregate, combined map-side below the exchange") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val higher = (0 until 1000).map(i => ("m", i.toLong, i.toDouble))
-      .toDF("metric", "interval", "value")
-    // 1s → 1d: 86400 slots per window ≥ threshold → salted (3 aggregates:
-    // partial per salt, final merge, each with its own partial/final split)
-    val salted = Rollup.propagate(higher, 1, 86400, AggregationMethod.Sum, 0f)
-    val nAggs = salted.queryExecution.optimizedPlan.collect {
+      .toDF("metric", "interval", "value").repartition(4)
+    // 1s → 1d: 86400 slots per window, the whole input on ONE (metric,
+    // window) key — one aggregate, whose partial stage combines each
+    // input partition before the shuffle, so the hot key reaches its
+    // reducer as one row per partition
+    val rolled = Rollup.propagate(higher, 1, 86400, AggregationMethod.Sum, 0f)
+    val nAggs = rolled.queryExecution.optimizedPlan.collect {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
     }.size
-    assert(nAggs == 2, s"expected salted two-stage aggregation, got $nAggs stages")
-    // below threshold: single aggregate
-    val plain = Rollup.propagate(higher, 60, 300, AggregationMethod.Sum, 0f)
-    val nPlain = plain.queryExecution.optimizedPlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }.size
-    assert(nPlain == 1)
-    // and the salted result equals brute force
-    val brute = (0 until 1000).map(_.toDouble).sum
-    assert(salted.collect().map(_.getDouble(2)).sum == brute)
+    assert(nAggs == 1, s"expected one aggregation, got $nAggs")
+    val got = rolled.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    val exchanges = Plans.collect(rolled.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.child.exists(_.isInstanceOf[HashAggregateExec]) => e
+    }
+    assert(exchanges.size == 1, s"expected one aggregate exchange:\n${rolled.queryExecution.executedPlan}")
+    val below = exchanges.head.child.collect { case a: HashAggregateExec => a }
+    assert(below.nonEmpty && below.forall(_.aggregateExpressions.forall(_.mode == Partial)),
+      s"no partial aggregate below the exchange:\n${exchanges.head}")
+    // and the result equals brute force
+    assert(got.map(_.getDouble(2)).sum == (0 until 1000).map(_.toDouble).sum)
   }
 
   test("importance weighting: one token scan (ReusedExchange), ratio broadcast, no SMJ") {

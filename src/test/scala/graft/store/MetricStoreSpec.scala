@@ -119,7 +119,7 @@ class MetricStoreSpec extends AnyFunSuite {
     assert(res.values.flatten == Seq(2.0, 7.0))
   }
 
-  test("mergeMetric/fillMetric precedence; diffMetrics reports disagreements") {
+  test("mergeMetric/fillArchives precedence; diffMetricsDetail reports disagreements") {
     val store = freshStore()
     val p = RetentionPolicy(Seq(ArchiveInfo(60, 120)))
     Seq("src", "dst", "dst2").foreach(store.create(_, p))
@@ -135,11 +135,15 @@ class MetricStoreSpec extends AnyFunSuite {
     assert(merged == Map(
       Now - 300 -> 1.0, Now - 240 -> 2.0, Now - 180 -> 3.0))
 
-    store.fillMetric("dst2", "src") // dst2 keeps 9.0 at Now-240, gains Now-300
+    // whisper-fill (bin/whisper-fill.py:52-121): dst2's leading gap ends
+    // at its 9.0 at Now-240, and the gap copy includes the slot that
+    // closed it — so dst2 gains Now-300 AND takes src's 2.0 at Now-240;
+    // its trailing gap (Now-120..Now) has no src points to copy
+    store.fillArchives("src", "dst2", Now, Now)
     val filled = store.levelData(0).where($"metric" === "dst2").collect()
       .map(r => r.getAs[Long]("interval") -> r.getAs[Double]("value")).toMap
     assert(filled == Map(
-      Now - 300 -> 1.0, Now - 240 -> 9.0, Now - 180 -> 3.0))
+      Now - 300 -> 1.0, Now - 240 -> 2.0, Now - 180 -> 3.0))
 
     // time-clamped merge copies only the in-range slot
     store.create("dst3", p)
@@ -151,10 +155,18 @@ class MetricStoreSpec extends AnyFunSuite {
       .map(r => r.getAs[Long]("interval") -> r.getAs[Double]("value")).toMap
     assert(clamped == Map(Now - 240 -> 2.0, Now - 180 -> 7.0)) // Now-300 excluded
 
-    val d = store.diffMetrics("src", "dst2").collect()
-    // src: (-300,1),( -240,2); dst2: (-300,1),(-240,9),(-180,3)
-    // differ at -240 (2 vs 9) and -180 (null vs 3); agree at -300
-    assert(d.length == 2)
+    // src: (-300,1),(-240,2); dst2: (-300,1),(-240,2),(-180,3) — they
+    // differ only at -180 (null vs 3), out of 3 slots where either side
+    // holds a value (whisper.py:1140-1147)
+    val (d, totals) = store.diffMetricsDetail("src", "dst2", now = Now)
+    val rows = d.collect().map(r =>
+      (r.getInt(0), r.getLong(1), Option(r.get(2)), Option(r.get(3))))
+    assert(rows.toSeq == Seq((0, Now - 180, None, Some(3.0))))
+    assert(totals == Seq(3L))
+    // ignore_empty compares only slots both sides hold: none differ
+    val (dStrict, totalsStrict) =
+      store.diffMetricsDetail("src", "dst2", ignoreEmpty = true, now = Now)
+    assert(dStrict.isEmpty && totalsStrict == Seq(2L))
 
     // mismatched configs refuse (whisper.py:1054-1057)
     store.create("other", RetentionPolicy(Seq(ArchiveInfo(30, 120))))
@@ -392,11 +404,14 @@ class MetricStoreSpec extends AnyFunSuite {
   }
 
   test("fetch == grid reference: missing level directory, vacuumed buckets, pre-epoch store") {
-    // cascade = false writes level 0 only; levels 1-2 have no directory
+    // levels 1-2 lose their directories on disk after the cascade
     val flat = freshStore()
     flat.createAll(eqMetrics, eqPolicy)
     val rnd = new scala.util.Random(11)
-    flat.updateMany(randomPoints(rnd, 500, Now, 86400L, 0L), Now, cascade = false)
+    flat.updateMany(randomPoints(rnd, 500, Now, 86400L, 0L), Now)
+    Seq(1, 2).foreach { i =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"${flat.root}/level_$i"))
+    }
     assert(!new java.io.File(s"${flat.root}/level_1").exists())
     val Some(none) = assertFetchAgrees(flat, "web.b", Now - 86400, Now, Now,
       Some(60), "absent level")

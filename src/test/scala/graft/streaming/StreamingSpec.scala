@@ -119,7 +119,7 @@ class StreamingSpec extends AnyFunSuite {
       s"expired bucket not swept by vacuumEvery: $left")
   }
 
-  test("mixed deployment: cascade backfill + stateful live tail equals the full cascade") {
+  test("cascade backfill + streamed live tail equals the full cascade") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
@@ -144,9 +144,8 @@ class StreamingSpec extends AnyFunSuite {
     ref.updateMany(
       (0 until 20).flatMap(waveRows).toDF("metric", "ts", "value", "seq"), Now)
 
-    // mixed: backfill waves 0..11 by cascade — the handoff at wave 12
-    // (t0 + 3600) is a COARSEST-level (1800s) window boundary — then the
-    // live tail, waves 12..19, through startMixed
+    // mixed: backfill waves 0..11 by batch cascade, then the live tail,
+    // waves 12..19, through the stream's per-batch cascade
     val mixed = mkStore("ms-mixed")
     mixed.updateMany(
       (0 until 12).flatMap(waveRows).toDF("metric", "ts", "value", "seq"), Now)
@@ -154,10 +153,8 @@ class StreamingSpec extends AnyFunSuite {
     val stream = mem.toDF().toDF("metric", "tsec", "value", "seq")
       .selectExpr("metric", "timestamp_seconds(tsec) AS ts", "value", "seq")
     mem.addData((12 until 20).flatMap(waveRows): _*)
-    val qs = StreamingIngest.startMixed(
-      stream, mixed, Files.createTempDirectory("ckpt-mixed").toString,
-      () => Now, maxLatenessSec = 900)
-    qs.foreach(drain(_))
+    drain(StreamingIngest.start(
+      stream, mixed, Files.createTempDirectory("ckpt-mixed").toString, () => Now))
 
     (0 until 3).foreach { i =>
       val cols = if (i == 0) Seq("metric", "interval", "value")
@@ -176,57 +173,7 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("mixed deployment restart: stateful state resumes, a window split across runs converges") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
-    val policy = RetentionPolicy(
-      Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000), ArchiveInfo(1800, 5000)),
-      xff = 0.5f)
-    val t0 = Now - 86400L // 1800-aligned
-    def waveRows(w: Int): Seq[(String, Long, Double, Long)] =
-      for { m <- Seq("a", "b"); s <- 0 until 5 } yield {
-        val t = t0 + w * 300L + s * 60L
-        (m, t, (w * 5 + s).toDouble + (if (m == "a") 0 else 100), t)
-      }
-    val mixed = new MetricStore(
-      spark, Files.createTempDirectory("ms-mixed-restart").toString, numBuckets = 4)
-    mixed.createAll(Seq("a", "b"), policy)
-    // backfill waves 0..5 — handoff at t0+1800, a coarsest boundary
-    mixed.updateMany(
-      (0 until 6).flatMap(waveRows).toDF("metric", "ts", "value", "seq"), Now)
-
-    val ckpt = Files.createTempDirectory("ckpt-mixed-restart").toString // SHARED
-    val mem = MemoryStream[(String, Long, Double, Long)]
-    def stream = mem.toDF().toDF("metric", "tsec", "value", "seq")
-      .selectExpr("metric", "timestamp_seconds(tsec) AS ts", "value", "seq")
-
-    // run A: waves 6..8 — the 1800s window [t0+1800, t0+3600) is only
-    // HALF fed when the queries drain and stop ("crash")
-    mem.addData((6 until 9).flatMap(waveRows): _*)
-    StreamingIngest.startMixed(stream, mixed, ckpt, () => Now, maxLatenessSec = 900)
-      .foreach(drain(_))
-    // run B against the SAME checkpoints: waves 9..11 complete it — the
-    // recovered state must consolidate run A's slots with run B's
-    mem.addData((9 until 12).flatMap(waveRows): _*)
-    StreamingIngest.startMixed(stream, mixed, ckpt, () => Now, maxLatenessSec = 900)
-      .foreach(drain(_))
-
-    val ref = new MetricStore(
-      spark, Files.createTempDirectory("ms-mixed-restart-ref").toString, numBuckets = 4)
-    ref.createAll(Seq("a", "b"), policy)
-    ref.updateMany(
-      (0 until 12).flatMap(waveRows).toDF("metric", "ts", "value", "seq"), Now)
-    (0 until 3).foreach { i =>
-      def dump(s: MetricStore) = s.levelData(i)
-        .select("metric", "interval", "value").collect()
-        .map(r => (r.getString(0), r.getLong(1),
-          math.rint(r.getDouble(2) * 1e9) / 1e9)).toSet
-      assert(dump(mixed) == dump(ref), s"level $i diverged after restart")
-    }
-  }
-
-  test("stateful LWW keys on seq: a contested slot has one winner on every level") {
+  test("streamed LWW keys on seq: a contested slot has one winner on every level") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
@@ -252,34 +199,17 @@ class StreamingSpec extends AnyFunSuite {
     val stream = mem.toDF().toDF("metric", "tsec", "value", "seq")
       .selectExpr("metric", "timestamp_seconds(tsec) AS ts", "value", "seq")
     mem.addData(rows: _*)
-    StreamingIngest.startMixed(
-      stream, store, Files.createTempDirectory("ckpt-seq-lww").toString,
-      () => Now, maxLatenessSec = 900)
-      .foreach(drain(_))
+    drain(StreamingIngest.start(
+      stream, store, Files.createTempDirectory("ckpt-seq-lww").toString, () => Now))
 
     val l0 = store.levelData(0).select("interval", "value").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(l0(t0) == 11.0, s"level 0 kept the wrong duplicate: ${l0(t0)}")
     val l1 = store.levelData(1).select("interval", "value").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // avg(11, 2, 3) — the stateful level agrees with level 0's winner
+    // avg(11, 2, 3) — the cascaded level agrees with level 0's winner
     assert(math.abs(l1(t0) - (11.0 + 2.0 + 3.0) / 3.0) < 1e-9,
-      s"stateful level disagrees with level-0 LWW: ${l1(t0)}")
-  }
-
-  test("cascade=false with a too-old point fails fast instead of dropping it") {
-    import spark.implicits._
-    val store = new MetricStore(
-      spark, Files.createTempDirectory("ms-nocascade-old").toString, numBuckets = 4)
-    store.create("m",
-      RetentionPolicy(Seq(ArchiveInfo(60, 10), ArchiveInfo(300, 300)), xff = 0f))
-    // 60s × 10 slots = 600s of finest retention; this point is older and
-    // would route to the 300s archive — exactly the cascade being skipped
-    val batch = Seq(("m", Now - 1200L, 1.0, 0L)).toDF("metric", "ts", "value", "seq")
-    val e = intercept[IllegalArgumentException] {
-      store.updateMany(batch, Now, cascade = false)
-    }
-    assert(e.getMessage.contains("cascade=false"))
+      s"cascaded level disagrees with level-0 LWW: ${l1(t0)}")
   }
 
   test("dedupStream: streaming exact dedup with bounded state") {
@@ -413,6 +343,48 @@ class StreamingSpec extends AnyFunSuite {
           r.getAs[Double]("value"))).toSet
       assert(dump(store) == dump(oracle), s"level $lvl diverged after restart")
     }
+
+    // three levels with an xff gate, after a batch backfill: run A feeds
+    // HALF of the 1800s window [t0+1800, t0+3600) and stops, run B
+    // completes it against the same checkpoint — the window is gated and
+    // consolidated over both runs' slots, as in one cascade
+    val policy3 = RetentionPolicy(
+      Seq(ArchiveInfo(60, 50000), ArchiveInfo(300, 20000), ArchiveInfo(1800, 5000)),
+      xff = 0.5f)
+    val t0 = Now - 86400L // 1800-aligned
+    def waveRows(w: Int): Seq[(String, Long, Double, Long)] =
+      for { m <- Seq("a", "b"); s <- 0 until 5 } yield {
+        val t = t0 + w * 300L + s * 60L
+        (m, t, (w * 5 + s).toDouble + (if (m == "a") 0 else 100), t)
+      }
+    def store3(tag: String) = {
+      val st = new MetricStore(
+        spark, Files.createTempDirectory(tag).toString, numBuckets = 4)
+      st.createAll(Seq("a", "b"), policy3)
+      st
+    }
+    val split = store3("ms-split-restart")
+    split.updateMany(
+      (0 until 6).flatMap(waveRows).toDF("metric", "ts", "value", "seq"), Now)
+    val ckpt3 = Files.createTempDirectory("ckpt-split-restart").toString // SHARED
+    val mem3 = MemoryStream[(String, Long, Double, Long)]
+    def stream3 = mem3.toDF().toDF("metric", "tsec", "value", "seq")
+      .selectExpr("metric", "timestamp_seconds(tsec) AS ts", "value", "seq")
+    mem3.addData((6 until 9).flatMap(waveRows): _*)
+    drain(StreamingIngest.start(stream3, split, ckpt3, () => Now))
+    mem3.addData((9 until 12).flatMap(waveRows): _*)
+    drain(StreamingIngest.start(stream3, split, ckpt3, () => Now))
+
+    val ref3 = store3("ms-split-restart-ref")
+    ref3.updateMany(
+      (0 until 12).flatMap(waveRows).toDF("metric", "ts", "value", "seq"), Now)
+    (0 until 3).foreach { i =>
+      def dump(s: MetricStore) = s.levelData(i)
+        .select("metric", "interval", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1),
+          math.rint(r.getDouble(2) * 1e9) / 1e9)).toSet
+      assert(dump(split) == dump(ref3), s"level $i diverged after a split-window restart")
+    }
   }
 
   test("stateful rollup soak: state rows bounded by open windows, not stream length") {
@@ -458,69 +430,5 @@ class StreamingSpec extends AnyFunSuite {
     val emitted = spark.table("rollup_soak")
       .select("metric", "interval").distinct().count()
     assert(emitted == totalWindows)
-  }
-
-  test("startStateful sinks provisional rollups into the store and refines them") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val store = new MetricStore(
-      spark, Files.createTempDirectory("ms-stateful").toString, numBuckets = 4)
-    store.create("m",
-      RetentionPolicy(Seq(ArchiveInfo(60, 300), ArchiveInfo(300, 300)), xff = 0.5f))
-    val ckpt = Files.createTempDirectory("ckpt-stateful").toString
-
-    val mem = MemoryStream[(String, Long, Double)]
-    def stream = mem.toDF().toDF("metric", "tsec", "value")
-      .selectExpr("metric", "timestamp_seconds(tsec) AS ts", "value")
-
-    // batch 1: 3 of 5 slots → provisional avg 2.0 lands in level 1
-    mem.addData(("m", 600L, 1.0), ("m", 660L, 2.0), ("m", 720L, 3.0))
-    val q1 = StreamingIngest.startStateful(stream, store, levelIdx = 1, ckpt, 60)
-    drain(q1)
-    def l1() = store.levelData(1).collect()
-      .map(r => r.getAs[Long]("interval") -> r.getAs[Double]("value")).toMap
-    assert(l1() == Map(600L -> 2.0))
-
-    // batch 2: 4th slot → the SAME row refines to 2.5 (upsert, not append)
-    mem.addData(("m", 780L, 4.0))
-    val q2 = StreamingIngest.startStateful(stream, store, levelIdx = 1, ckpt, 60)
-    drain(q2)
-    assert(l1() == Map(600L -> 2.5))
-  }
-
-  test("startStatefulAll refines every coarse level at micro-batch latency") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val store = new MetricStore(
-      spark, Files.createTempDirectory("ms-stateful-all").toString, numBuckets = 4)
-    // three levels: 60s raw, 300s, 1800s (xff 0 so every touched window emits)
-    store.create("m",
-      RetentionPolicy(
-        Seq(ArchiveInfo(60, 3000), ArchiveInfo(300, 1000), ArchiveInfo(1800, 400)),
-        xff = 0f))
-    val ckpt = Files.createTempDirectory("ckpt-stateful-all").toString
-
-    val mem = MemoryStream[(String, Long, Double)]
-    def stream = mem.toDF().toDF("metric", "tsec", "value")
-      .selectExpr("metric", "timestamp_seconds(tsec) AS ts", "value")
-
-    // one 300s window's worth of slots: both coarse levels see it at once
-    mem.addData((0 until 5).map(i => ("m", 3600L + i * 60L, 10.0 + i)): _*)
-    val qs = StreamingIngest.startStatefulAll(stream, store, ckpt, 60)
-    assert(qs.size == 2)
-    qs.foreach(drain(_))
-
-    def lvl(i: Int) = store.levelData(i).collect()
-      .map(r => r.getAs[Long]("interval") -> r.getAs[Double]("value")).toMap
-    assert(lvl(1) == Map(3600L -> 12.0)) // avg(10..14) in the 300s window
-    assert(lvl(2) == Map(3600L -> 12.0)) // same points, 1800s window
-
-    // second batch extends into the next 300s window; BOTH levels refine:
-    // level 1 gains a window, level 2's single window re-averages
-    mem.addData(("m", 3900L, 20.0))
-    val qs2 = StreamingIngest.startStatefulAll(stream, store, ckpt, 60)
-    qs2.foreach(drain(_))
-    assert(lvl(1) == Map(3600L -> 12.0, 3900L -> 20.0))
-    assert(lvl(2) == Map(3600L -> (60.0 + 20.0) / 6))
   }
 }
